@@ -14,10 +14,13 @@ import org.apache.spark.sql.functions._
   * can compute, so the flagship output stays oracle-checked end to end
   * (SURVEY.md §7.1).
   *
-  * Everything here is built from Spark's higher-order array functions
-  * (`aggregate`, `transform`, `filter`) — codegen'd built-ins, no Scala
-  * UDFs — so the expressions stay inside whole-stage codegen and scale
-  * linearly with input bytes; there is no per-row JVM boxing.
+  * Nothing here is a Scala UDF. The functions compose Spark built-ins
+  * and higher-order array functions (`aggregate`, `transform`); where a
+  * lambda would run per corpus token (the token hash, the tokenizer)
+  * the function dispatches to a native [[graft.plans]] expression
+  * instead, because Spark evaluates HOF lambdas interpreted, row by row.
+  * Each native kernel's HOF form is its executable spec and lives in
+  * test (`HofSpecs`, checked by `KernelParitySpec`).
   */
 object Portable {
   /** Modulus keeps the fold inside Long range: acc < P, so
@@ -25,22 +28,11 @@ object Portable {
     * DuckDB oracle SQL. */
   val P: Long = 1000000007L
 
-  /** Characters of a string column as array<string>, no empties.
-    * (Spark `split(s, "")` keeps a trailing "" at limit -1; filter it.) */
-  def chars(c: Column): Column =
-    filter(split(c, ""), ch => ch =!= lit(""))
-
   /** word -> Long token id: fold (acc*31 + codepoint) % P over characters.
     * Stands in for the reference's first-BPE-token encode (R6).
     * Dispatches to the native codegen'd expression
-    * ([[graft.plans.TokenId]]); [[tokenIdHof]] is the pure-built-ins
-    * twin kept as the executable spec. */
+    * ([[graft.plans.TokenId]]). */
   def tokenId(c: Column): Column = graft.plans.TokenId.tokenId(c)
-
-  /** HOF reference implementation of [[tokenId]] (identical values,
-    * asserted in tests). */
-  def tokenIdHof(c: Column): Column =
-    aggregate(chars(c), lit(0L), (acc, ch) => (acc * lit(31L) + ascii(ch)) % lit(P))
 
   /** Order-sensitive document fingerprint: fold (acc*131 + tokenId(word)) % P
     * over a word array — a rolling polynomial hash over the token stream,
@@ -50,9 +42,11 @@ object Portable {
 
   /** The same tokenizer the reference applies (R4+R5,
     * `MapRedWord2Vec.scala:101-102`): lowercase, split on non-word runs,
-    * keep purely alphabetic tokens. */
+    * keep purely alphabetic tokens — Spark's `lower()`, then the native
+    * split-and-keep scan ([[graft.plans.ReferenceTokens]]), identical to
+    * `filter(split(lower(text), "\\W+"), w -> w rlike "^[a-z]+$")`. */
   def tokenize(text: Column): Column =
-    filter(split(lower(text), "\\W+"), w => w.rlike("^[a-z]+$"))
+    graft.plans.ReferenceTokens.referenceTokens(lower(text))
 
   /** Word n-gram shingles: array of space-joined n-grams of `words`.
     * Docs shorter than n shingle to their full text (slice clamps at the

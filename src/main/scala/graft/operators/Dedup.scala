@@ -624,11 +624,13 @@ object Dedup {
     // every corpus token — run it ONCE and cache the per-doc hash
     // arrays (round 14): the inverted-index explode and the set-size
     // projection otherwise each re-tokenize and re-hash the whole
-    // corpus in their own subtrees. LAZY checkpoint: it materializes
-    // inside the first consuming action (no serial pre-action) and the
-    // second consumer reads the cache.
+    // corpus in their own subtrees. EAGER checkpoint: a lazy one
+    // materialized inside the consuming action, where the size
+    // broadcast and the shuffle map stage computed the same partition
+    // concurrently, and the slower job's tasks then reported metrics
+    // of a plan the checkpoint had already released.
     val base = docs.select(col("doc_id"), hashes.as("hs"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val sh = base.select(col("doc_id"), explode(col("hs")).as("shingle"))
     val pairs = sh.groupBy("shingle")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))

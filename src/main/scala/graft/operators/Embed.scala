@@ -50,35 +50,40 @@ object Embed {
         m
       }
     }
-    perSession.getOrElseUpdate(s"$dir|$cfg",
-      fitWordVectorsFromTokens(spark, tokensDF(spark, dir)))
+    perSession.getOrElseUpdate(s"$dir|$cfg", {
+      val vectors = fitWordVectorsFromTokens(spark, tokensDF(spark, dir)).cache()
+      vectors.count()
+      vectors
+    })
   }
 
-  /** Train on any token-array DataFrame (column `words`). */
+  /** Train on any token-array DataFrame (column `words`) → (word,
+    * vector: array<double>). Not cached: the table is the model's local
+    * word list, cheap to read directly; the [[fitWordVectors]] memo
+    * caches its own copy for the many lookups it serves. */
   def fitWordVectorsFromTokens(spark: SparkSession, tokensIn: DataFrame): DataFrame = {
     val cfg = graft.GraftConfig.from(spark)
     // Word2Vec makes several passes (vocab build + per-iteration
-    // training); cache the tokenized corpus so the regexp tokenize
-    // runs once, then release it after fit.
+    // training); cache the tokenized corpus so the tokenizer runs
+    // once, then release it after fit.
     val tokens = tokensIn.persist()
     val w2v = new Word2Vec()
       .setInputCol("words").setOutputCol("vec")
       .setVectorSize(cfg.layerSize).setWindowSize(cfg.windowSize)
       .setMaxIter(cfg.iterations).setMinCount(cfg.minWordFrequency)
       .setSeed(cfg.seed).setNumPartitions(cfg.numPartitions)
-    val model = w2v.fit(tokens)
-    val vectors = model.getVectors // (word: String, vector: ml.linalg.Vector)
-      .select(col("word"), vector_to_array(col("vector")).as("vector"))
-      .cache()
-    vectors.count() // materialize before releasing the token cache
-    tokens.unpersist()
-    vectors
+    try {
+      w2v.fit(tokens).getVectors // (word: String, vector: ml.linalg.Vector)
+        .select(col("word"), vector_to_array(col("vector")).as("vector"))
+    } finally tokens.unpersist()
   }
 
   /** The full reference pipeline over an arbitrary text corpus (column
     * `text`): word counts ⋈ one global model → (word, token, count,
     * vector). The corpus-general core behind [[flagship]] and the
-    * [[graft.Word2VecDriver]] CLI. */
+    * [[graft.Word2VecDriver]] CLI. Leaves nothing persisted: the fit is
+    * one-off, so its vector table is not cached (callers cache the
+    * result if they read it more than once). */
   def flagshipFromText(spark: SparkSession, texts: DataFrame): DataFrame = {
     val counts = Parity.wordCounts(texts.select("text"))
     val vectors = fitWordVectorsFromTokens(spark,

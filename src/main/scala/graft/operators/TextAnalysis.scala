@@ -1616,25 +1616,19 @@ object TextAnalysis {
     * (doc_id, gh: array&lt;long&gt;), position-ordered so a window min can
     * select over it. The q38 fingerprint chain windowed; shared by the
     * q250 sweep and the q264 winnowed dedup mode so both speak the
-    * same gram universe. One per-row kernel, no shuffle. */
-  def winnowGrams(docs: DataFrame): DataFrame = {
-    val k = WinnowK
-    val ghCol = transform(
-      sequence(lit(1), greatest(size(col("ws")) - lit(k - 1), lit(1))),
-      i => aggregate(slice(col("ws"), i, lit(k)), lit(0L),
-        (acc, wd) => (acc * lit(131L) + Portable.tokenId(wd)) % lit(Portable.P)))
+    * same gram universe. One native per-row kernel
+    * ([[graft.plans.GramHashes]]), no shuffle. */
+  def winnowGrams(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), ghCol.as("gh"))
-  }
+      .select(col("doc_id"),
+        graft.plans.GramHashes.gramHashes(split(col("text"), " "), WinnowK).as("gh"))
 
   /** The winnowing selection over a position-ordered `gh` column: the
     * distinct w-window minima (Schleimer et al. 2003) — a ~2/(w+1)
     * deterministic sample that still catches any match of length ≥
-    * w+[[WinnowK]]−1 words. Per-row kernel, no shuffle. */
-  def winnowSig(w: Int): Column = array_distinct(transform(
-    sequence(lit(1), greatest(size(col("gh")) - lit(w - 1), lit(1))),
-    j => array_min(slice(col("gh"), j, lit(w)))))
+    * w+[[WinnowK]]−1 words. One native per-row kernel
+    * ([[graft.plans.WinnowMinima]]), no shuffle. */
+  def winnowSig(w: Int): Column = graft.plans.WinnowMinima.winnowMinima(col("gh"), w)
 
   def q250WinnowFingerprint(spark: SparkSession, dir: String): DataFrame = {
     // Materialization discipline (round 14): through round 13 this body

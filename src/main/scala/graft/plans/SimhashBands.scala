@@ -66,7 +66,7 @@ case class SimhashBands(child: Expression, bands: Int)
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     new GenericArrayData(
-      SimhashBands.eval(arr, flatPlanes, bands, bandBits, planeDim))
+      SimhashBands.compute(arr, flatPlanes, bands, bandBits, planeDim))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -74,7 +74,7 @@ case class SimhashBands(child: Expression, bands: Int)
     nullSafeCodeGen(ctx, ev, a => {
       val vals = ctx.freshName("vals")
       s"""
-         |final long[] $vals = graft.plans.SimhashBands.eval(
+         |final long[] $vals = graft.plans.SimhashBands.compute(
          |  $a, $planesRef, $bands, $bandBits, $planeDim);
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($vals);
        """.stripMargin
@@ -89,8 +89,10 @@ object SimhashBands {
   /** The shared kernel — called from both the interpreted path and the
     * generated code (one static call per row keeps the codegen body
     * tiny while the loop itself JITs hot; the same shape Spark's own
-    * complex expressions use). */
-  def eval(arr: ArrayData, planes: Array[Double],
+    * complex expressions use). Not named `eval`: the case class
+    * inherits `Expression.eval`, so Scala would emit no static
+    * forwarder for it and the generated call would not compile. */
+  def compute(arr: ArrayData, planes: Array[Double],
            bands: Int, bandBits: Int, planeDim: Int): Array[Long] = {
     val vals = new Array[Long](bands)
     val n = arr.numElements()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.SqlBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native form of the portable polynomial token hash
@@ -41,12 +42,29 @@ case class TokenId(child: Expression) extends UnaryExpression {
 }
 
 object TokenId {
-  private val P = 1000000007L
+  private[plans] val P = 1000000007L
 
   /** Shared by interpreted eval and generated code. Iterates code
-    * points (matching `ascii()` per split-"" character for all BMP
-    * input, the engine's tokenizer output domain). */
+    * points (matching `ascii()` per split-"" character, the HOF form).
+    * All-ASCII input, the tokenizer's whole output domain, folds its
+    * bytes in place; any byte >= 0x80 (a multi-byte character, or a
+    * stray continuation byte) falls back to the code-point walk. */
   def compute(s: UTF8String): Long = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (b < 0) return computeCodePoints(s)
+      acc = (acc * 31L + b) % P
+      i += 1
+    }
+    acc
+  }
+
+  private def computeCodePoints(s: UTF8String): Long = {
     var acc = 0L
     val str = s.toString
     var i = 0

@@ -304,20 +304,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
         (103L, Seq.tabulate(Dedup.planeDim)(j =>
           java.lang.Double.valueOf(if (j == 3) Double.NaN else 1.0)))) // NaN
     val e = fixtures.toDF("vec_id", "v")
-    // the replaced HOF form, reconstructed verbatim as the reference
-    val planesLit = array(Dedup.simhashPlanes.take(Dedup.nBands * Dedup.bandBits)
-      .map(p => array(p.map(lit): _*)): _*)
-    val dots = transform(planesLit, p =>
-      aggregate(zip_with(slice(col("v"), 1, Dedup.planeDim), p, (x, w) => x * w),
-        lit(0.0), (acc, y) => acc + y))
-    val hofBands = (0 until Dedup.nBands).map { k =>
-      (0 until Dedup.bandBits)
-        .map(t => when(element_at(col("dots"), k * Dedup.bandBits + t + 1) >= 0,
-          lit(1L << t)).otherwise(0L))
-        .reduce(_ + _)
-    }
-    val want = e.withColumn("dots", dots)
-      .select(col("vec_id"), array(hofBands: _*).as("b"))
+    // the replaced HOF form, kept verbatim as the reference
+    val want = HofSpecs.simhashBands(e, "v", Dedup.nBands, "b")
+      .select(col("vec_id"), col("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
     val got = e.select(col("vec_id"),
         graft.plans.SimhashBands.bands(col("v"), Dedup.nBands).as("b"))

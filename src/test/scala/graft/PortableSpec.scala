@@ -36,7 +36,7 @@ class PortableSpec extends AnyFunSuite {
   test("native TokenId expression equals the HOF spec, incl. non-ASCII") {
     val words = Seq("", "a", "hello", "zzzzzzzzzzzzzzzzzzzz", "héllo", "日本語", "a b,c")
     val got = words.toDF("w")
-      .select(Portable.tokenId(col("w")).as("native"), Portable.tokenIdHof(col("w")).as("hof"))
+      .select(Portable.tokenId(col("w")).as("native"), HofSpecs.tokenId(col("w")).as("hof"))
       .as[(Long, Long)].collect()
     got.zip(words).foreach { case ((n, h), w) => assert(n == h, s"mismatch for '$w'") }
     assert(got(1)._1 == 97L)

@@ -93,11 +93,15 @@ class SourcesSpec extends AnyFunSuite {
     // drive the REAL CLI path (parse → forward), not run() directly: a
     // parsed-but-dropped flag must fail this test, not only code review
     val stdout = new java.io.ByteArrayOutputStream()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val n = Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8")) {
       Word2VecDriver.execute(spark,
         Array(in.toString, out, "--synonyms", "hello,3"))
     }
     assert(n > 0)
+    // the CLI releases everything it persisted (result, tokens, vectors)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"CLI left persistent RDDs behind: $leaked")
     val printed = stdout.toString("UTF-8").linesIterator
       .filter(_.startsWith("[synonyms] ")).map(_.stripPrefix("[synonyms] ")).toSeq
     assert(printed.length == 3,
