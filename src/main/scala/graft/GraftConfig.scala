@@ -14,14 +14,17 @@ case class GraftConfig(
     iterations: Int = 1,
     minWordFrequency: Int = 1,
     seed: Long = 42L,
-    /** MLlib's distributed-training knob: the corpus is split into this
-      * many partitions whose gradient updates merge per iteration.
-      * Default 1 = exactly sequential skip-gram (reference parity, and
-      * the single-node bench optimum); a 100 TB corpus sets this to
-      * O(executors) and accepts MLlib's documented accuracy/speed
-      * trade, which is principled model averaging WITHIN one training
-      * run — not the reference's geometrically meaningless averaging of
-      * independently trained embedding spaces (SURVEY.md §4.1). */
+    /** The trainer's distributed knob ([[graft.operators.SkipGram]],
+      * as MLlib's): the corpus is split into this many partitions, each
+      * trains its own copy of the model for one iteration, and every row
+      * a partition modified becomes the mean of that row over the
+      * partitions that modified it (rows no partition touched keep their
+      * value). Default 1 = exactly sequential skip-gram, the reference's
+      * semantics and bit-identical to MLlib. Larger values trade
+      * accuracy for parallel training; this is model averaging WITHIN
+      * one training run, not the reference's geometrically meaningless
+      * averaging of independently trained embedding spaces
+      * (SURVEY.md §4.1). */
     numPartitions: Int = 1)
 
 object GraftConfig {

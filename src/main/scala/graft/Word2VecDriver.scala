@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Embed
@@ -8,9 +8,9 @@ import graft.sources.TextCorpus
 
 /** The reference's CLI, re-expressed: `sbt "runMain graft.Word2VecDriver
   * <inputDir> <outputDir>"` scans a directory of text files, runs the
-  * full pipeline (tokenize → count → train one global Word2Vec → join →
-  * encode), and writes the reference's exact output line format
-  * `word,token,count,[v1,...,vN]` plus a `_SUCCESS` marker (reference
+  * full pipeline (tokenize → count → train one global skip-gram model
+  * on that count → encode), and writes the reference's exact output
+  * line format `word,token,count,[v1,...,vN]` plus a `_SUCCESS` marker (reference
   * `Word2VecDriver.main`, `MapRedWord2Vec.scala:246-282`; line format
   * `README.md:22-23`). Hyperparameters tune via `--conf graft.w2v.*`
   * (see [[GraftConfig]]). */
@@ -20,7 +20,7 @@ object Word2VecDriver {
     * one `word,cos_sim` line each — the cosine capability the reference
     * lost a point for (feedback.md:5), surfaced at its own entry point.
     * Locale-pinned fixed-point so the line grammar never varies. */
-  def synonymLines(vocab: org.apache.spark.sql.DataFrame,
+  def synonymLines(vocab: DataFrame,
                    word: String, k: Int): Seq[String] =
     Embed.synonyms(vocab.select("word", "vector"), word, k)
       .collect()
@@ -28,26 +28,31 @@ object Word2VecDriver {
         r.getString(0), r.getDouble(1): java.lang.Double))
       .toSeq
 
+  /** The reference-format sink frame over a (word, token, count,
+    * vector) table: one `word,token,count,[v1,...,vN]` line per row, in
+    * the table's order. */
+  def sinkLines(table: DataFrame): DataFrame =
+    table.select(concat(
+      col("word"), lit(","), col("token"), lit(","), col("count"),
+      lit(",["), array_join(col("vector"), ","), lit("]")).as("value"))
+
   /** The driver's whole pipeline, session-agnostic (so the e2e test can
     * run it on the shared test session without the CLI's stop()):
     * text dir in → reference-format text sink out, plus the optional
     * synonyms report over the same fitted model (no refit). Returns the
-    * vocabulary row count. */
+    * vocabulary size, read off the driver-side model. */
   def run(spark: SparkSession, in: String, out: String,
           synonyms: Option[(String, Int)] = None): Long = {
     val corpus = TextCorpus.read(spark, in).select(col("value").as("text"))
-    val result = Embed.flagshipFromText(spark, corpus).cache()
-    try {
-      result
-        .select(concat(
-          col("word"), lit(","), col("token"), lit(","), col("count"),
-          lit(",["), array_join(col("vector"), ","), lit("]")).as("value"))
-        .write.mode("overwrite").text(out)
-      synonyms.foreach { case (word, k) =>
+    val model = Embed.fitText(spark, corpus)
+    val result = Embed.table(spark, model)
+    sinkLines(result).write.mode("overwrite").text(out)
+    synonyms.foreach { case (word, k) =>
+      if (model.contains(word))
         synonymLines(result, word, k).foreach(l => println(s"[synonyms] $l"))
-      }
-      result.count()
-    } finally result.unpersist()
+      else println(s"[synonyms] '$word' is not in the vocabulary")
+    }
+    model.size.toLong
   }
 
   /** CLI grammar, separated from `main` so the parse → forward path is

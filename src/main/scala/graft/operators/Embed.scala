@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.feature.Word2Vec
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,19 +8,24 @@ import graft.functions.{Portable, VectorOps}
 import graft.plans.CosineSim
 
 /** The reference's ML macro-operator rebuilt Spark-first: one GLOBAL
-  * distributed `ml.feature.Word2Vec` model instead of one DL4J model per
-  * mapper (the reference's per-mapper models live in unaligned embedding
-  * spaces, so averaging them is geometrically meaningless — SURVEY.md §4
-  * quirk 1; reference `MapRedWord2Vec.scala:132-174`).
+  * skip-gram model ([[SkipGram]], a port of MLlib's Word2Vec fit)
+  * instead of one DL4J model per mapper (the reference's per-mapper
+  * models live in unaligned embedding spaces, so averaging them is
+  * geometrically meaningless — SURVEY.md §4 quirk 1; reference
+  * `MapRedWord2Vec.scala:132-174`).
+  *
+  * The trainer's vocabulary IS the job's word count, so the flagship
+  * table (word, token, count, vector) is built straight from the
+  * driver-side model, already in word order.
   *
   * Hyperparameters mirror the reference config
   * (`application.conf:3-7`): vectorSize=100, windowSize=5, maxIter=1,
   * minCount=1, seed=42.
   *
-  * Outputs are never golden-compared on vector VALUES (multithreaded
-  * training is run-dependent — SURVEY.md §4 quirk 2); flagship queries
-  * expose invariants (dims, norms, vocab, counts) and the relational
-  * join shape instead.
+  * Outputs are never golden-compared on vector VALUES (the reference's
+  * are run-dependent and this trainer's depend on its partitioning —
+  * SURVEY.md §4 quirk 2); flagship queries expose invariants (dims,
+  * norms, vocab, counts) and the relational shape instead.
   */
 object Embed {
 
@@ -30,88 +33,59 @@ object Embed {
     Tables.documents(spark, dir)
       .select(col("doc_id"), Portable.tokenize(col("text")).as("words"))
 
-  /** Fitted vector tables memoized per (corpus dir, hyperparams):
-    * several queries (flagship, q40, q41) share one training run per
-    * process, the same way a production pipeline trains once and serves
-    * many lookups. Hyperparameters come from [[graft.GraftConfig]] (the
-    * reference's application.conf values by default, R3). */
+  /** Fitted models memoized per (corpus dir, hyperparams): several
+    * queries (flagship, q40, q41) share one training run per process,
+    * the same way a production pipeline trains once and serves many
+    * lookups. The memo keeps the driver-side model, not a cached frame,
+    * so nothing stays persisted. Hyperparameters come from
+    * [[graft.GraftConfig]] (the reference's application.conf values by
+    * default, R3). */
   private val fitted =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]())
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, SkipGram.Model]]()
 
-  def fitWordVectors(spark: SparkSession, dir: String): DataFrame = {
+  /** The memoized model over a documents corpus. */
+  def model(spark: SparkSession, dir: String): SkipGram.Model = {
     val cfg = graft.GraftConfig.from(spark)
-    // weak-keyed by session: cached DataFrames are bound to the session
-    // that built them, must not outlive it, and must not pin it
-    val perSession = fitted.synchronized {
-      Option(fitted.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        fitted.put(spark, m)
-        m
-      }
+    // weak-keyed by session: a model must not outlive, or pin, the
+    // session whose configuration trained it; the lock makes queries
+    // that ask concurrently (Verify) share one fit
+    fitted.synchronized {
+      fitted.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
+        .getOrElseUpdate(s"$dir|$cfg", SkipGram.fit(tokensDF(spark, dir), cfg))
     }
-    perSession.getOrElseUpdate(s"$dir|$cfg", {
-      val vectors = fitWordVectorsFromTokens(spark, tokensDF(spark, dir)).cache()
-      vectors.count()
-      vectors
-    })
   }
 
-  /** Train on any token-array DataFrame (column `words`) → (word,
-    * vector: array<double>). Not cached: the table is the model's local
-    * word list, cheap to read directly; the [[fitWordVectors]] memo
-    * caches its own copy for the many lookups it serves. */
-  def fitWordVectorsFromTokens(spark: SparkSession, tokensIn: DataFrame): DataFrame = {
-    val cfg = graft.GraftConfig.from(spark)
-    // Word2Vec makes several passes (vocab build + per-iteration
-    // training); cache the tokenized corpus so the tokenizer runs
-    // once, then release it after fit.
-    val tokens = tokensIn.persist()
-    val w2v = new Word2Vec()
-      .setInputCol("words").setOutputCol("vec")
-      .setVectorSize(cfg.layerSize).setWindowSize(cfg.windowSize)
-      .setMaxIter(cfg.iterations).setMinCount(cfg.minWordFrequency)
-      .setSeed(cfg.seed).setNumPartitions(cfg.numPartitions)
-    try {
-      w2v.fit(tokens).getVectors // (word: String, vector: ml.linalg.Vector)
-        .select(col("word"), vector_to_array(col("vector")).as("vector"))
-    } finally tokens.unpersist()
-  }
+  /** (word, vector: array<double>) of the memoized model. */
+  def fitWordVectors(spark: SparkSession, dir: String): DataFrame =
+    model(spark, dir).toDF(spark).select("word", "vector")
+
+  /** Train on an arbitrary text corpus (column `text`). */
+  def fitText(spark: SparkSession, texts: DataFrame): SkipGram.Model =
+    SkipGram.fit(texts.select(Portable.tokenize(col("text")).as("words")),
+      graft.GraftConfig.from(spark))
+
+  /** The reference output table (word, token, count, vector) of a
+    * model, in word order. */
+  def table(spark: SparkSession, model: SkipGram.Model): DataFrame =
+    model.toDF(spark).select(
+      col("word"),
+      Portable.tokenId(col("word")).as("token"),
+      col("count"),
+      col("vector"))
 
   /** The full reference pipeline over an arbitrary text corpus (column
-    * `text`): word counts ⋈ one global model → (word, token, count,
-    * vector). The corpus-general core behind [[flagship]] and the
-    * [[graft.Word2VecDriver]] CLI. Leaves nothing persisted: the fit is
-    * one-off, so its vector table is not cached (callers cache the
-    * result if they read it more than once). */
-  def flagshipFromText(spark: SparkSession, texts: DataFrame): DataFrame = {
-    val counts = Parity.wordCounts(texts.select("text"))
-    val vectors = fitWordVectorsFromTokens(spark,
-      texts.select(Portable.tokenize(col("text")).as("words")))
-    counts.join(vectors, "word")
-      .select(
-        col("word"),
-        Portable.tokenId(col("word")).as("token"),
-        col("cnt").as("count"),
-        col("vector"))
-      .orderBy("word")
-  }
+    * `text`) → (word, token, count, vector) in word order. The
+    * corpus-general core behind [[flagship]] and the
+    * [[graft.Word2VecDriver]] CLI. Leaves nothing persisted. */
+  def flagshipFromText(spark: SparkSession, texts: DataFrame): DataFrame =
+    table(spark, fitText(spark, texts))
 
   /** The flagship parity pipeline (reference output shape
-    * `word,token,count,[v1..v100]` — `README.md:22-23`): global word
-    * counts ⋈ model vectors (inner join = the reference's null-vector
-    * drop, R8), plus the token id. */
-  def flagship(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Parity.wordCounts(Tables.documents(spark, dir).select("text"))
-    val vectors = fitWordVectors(spark, dir)
-    counts.join(vectors, "word")
-      .select(
-        col("word"),
-        Portable.tokenId(col("word")).as("token"),
-        col("cnt").as("count"),
-        col("vector"))
-      .orderBy("word")
-  }
+    * `word,token,count,[v1..v100]` — `README.md:22-23`) over the
+    * memoized model: every vocabulary word (count >= minCount, the
+    * reference's null-vector drop, R8) with its count and token id. */
+  def flagship(spark: SparkSession, dir: String): DataFrame =
+    table(spark, model(spark, dir))
 
   /** q40 (rows-only): flagship invariants — vector dim must equal the
     * configured layer size and norms must be positive finite. */

@@ -1,5 +1,6 @@
-// Declared inside org.apache.spark.sql.* solely to reach two
-// private[sql] helpers (Expression <-> Column conversion). This is the
+// Declared inside org.apache.spark.sql.* solely to reach private[sql]
+// helpers (Expression <-> Column conversion, the function registry) and
+// Spark's private[spark] XORShiftRandom. This is the
 // standard seam Spark extension libraries use; everything else in this
 // repo lives under the graft package.
 package org.apache.spark.sql.graftbridge
@@ -22,4 +23,10 @@ object SqlBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Spark's `XORShiftRandom` (private[spark]): the generator MLlib's
+    * Word2Vec seeds its initial vectors and window draws from, so
+    * [[graft.operators.SkipGram]] reproduces its draws exactly. */
+  def xorShiftRandom(seed: Long): java.util.Random =
+    new org.apache.spark.util.random.XORShiftRandom(seed)
 }
