@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Queries run CONCURRENTLY on one session (Spark job submission is
-  * thread-safe; jobs time-share the local[*] cores) — the dump is
-  * wall-clock-bound by the slowest queries, not the sum. Session-global
-  * read configs (the nanos flag) are set at construction, BEFORE any
-  * concurrent reader, so no query observes a config flip mid-flight. */
+  * Queries run CONCURRENTLY on one session, eight at a time through
+  * [[Exec.overlap]] (Spark job submission is thread-safe; jobs
+  * time-share the local[*] cores) — the dump is wall-clock-bound by
+  * the slowest queries, not the sum. Session-global read configs (the
+  * nanos flag) are set at construction, BEFORE any concurrent reader,
+  * so no query observes a config flip mid-flight. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -24,23 +25,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val dumps = SparkEntry.queries.toSeq
+    Exec.overlap(SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      scala.concurrent.Future {
+      .map { case (name, fn) => name -> { () =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-      }
-    }
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(dumps), scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+      } }, inFlight = 8)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -730,24 +730,17 @@ object Dedup {
     * than its inputs. */
   def q86HybridDedup(spark: SparkSession, dir: String): DataFrame = {
     // the two edge generators are independent — build them concurrently
-    // (the Profile §2.6 overlap pattern): the text side's eager
-    // checkpoint otherwise serializes ahead of the embedding side's
-    // banding+rescore
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val (text, emb) = try {
-      val fText = Future {
-        spark.sparkContext.setJobDescription("q86 text near-dup edges")
+    // ([[graft.Exec.overlap]]): the text side's eager checkpoint
+    // otherwise serializes ahead of the embedding side's banding+rescore
+    val Seq(text, emb) = graft.Exec.overlap(Seq(
+      "q86 text near-dup edges" -> { () =>
         textNearDupEdges(
           Tables.documents(spark, dir).select("doc_id", "text"),
           k = 4, dfCap = 50, minJaccard = 0.5)
           .select(col("id_a"), col("id_b"),
             lit(1L).as("sig_text"), lit(0L).as("sig_emb"))
-      }
-      val fEmb = Future {
-        spark.sparkContext.setJobDescription("q86 embedding near-dup edges")
+      },
+      "q86 embedding near-dup edges" -> { () =>
         blockedEmbeddingNearDup(
           Tables.embeddings(spark, dir)
             .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
@@ -755,9 +748,7 @@ object Dedup {
           .select(col("id_a"), col("id_b"),
             lit(0L).as("sig_text"), lit(1L).as("sig_emb"))
           .localCheckpoint(true)
-      }
-      (Await.result(fText, Duration.Inf), Await.result(fEmb, Duration.Inf))
-    } finally pool.shutdown()
+      }))
     // Materialize the union once: CC's iterative rounds and the flags
     // join both consume it, and without the checkpoint each consumer
     // would re-run BOTH edge generators (measured 6.5 s -> 5.3 s at
@@ -1189,25 +1180,17 @@ object Dedup {
       .select("id_a", "id_b", "cos_sim").localCheckpoint()
     val pairs60 = pairs45.filter(col("cos_sim") >= 0.6)
     // the two closures are independent round loops over the one edge
-    // checkpoint — overlap them (the Profile §2.6 pattern): each CC's
-    // per-round job fills the other's driver gaps
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val (c45, c60) = try {
-      val f45 = Future {
-        spark.sparkContext.setJobDescription("q223 components at 0.45")
+    // checkpoint — overlap them: each CC's per-round job fills the
+    // other's driver gaps
+    val Seq(c45, c60) = graft.Exec.overlap(Seq(
+      "q223 components at 0.45" -> { () =>
         Graph.connectedComponents(pairs45.select("id_a", "id_b"))
           .select(col("id"), col("label").as("c45"))
-      }
-      val f60 = Future {
-        spark.sparkContext.setJobDescription("q223 components at 0.60")
+      },
+      "q223 components at 0.60" -> { () =>
         Graph.connectedComponents(pairs60.select("id_a", "id_b"))
           .select(col("id"), col("label").as("c60"))
-      }
-      (Await.result(f45, Duration.Inf), Await.result(f60, Duration.Inf))
-    } finally pool.shutdown()
+      }))
     val assigned = c45.join(c60, Seq("id"), "left")
       .select(col("id"), col("c45"), coalesce(col("c60"), col("id")).as("c60"))
     val cells = assigned.groupBy("c45", "c60").agg(count(lit(1)).as("nij"))

@@ -23,9 +23,11 @@ import graft.plans.CosineSim
   * minCount=1, seed=42.
   *
   * Outputs are never golden-compared on vector VALUES (the reference's
-  * are run-dependent and this trainer's depend on its partitioning —
-  * SURVEY.md §4 quirk 2); flagship queries expose invariants (dims,
-  * norms, vocab, counts) and the relational shape instead.
+  * are run-dependent and this trainer's depend on its `numPartitions`
+  * — SURVEY.md §4 quirk 2; at the default of 1, EmbedSpec pins
+  * byte-identical CLI output under 1, 4 and 16 shuffle partitions);
+  * flagship queries expose invariants (dims, norms, vocab, counts)
+  * and the relational shape instead.
   */
 object Embed {
 
@@ -97,11 +99,11 @@ object Embed {
         round(VectorOps.l2Norm(col("vector")), 4).as("norm"))
       .orderBy("word")
 
-  /** Diagnostic for the flagship join's silent drop: the reference LOGS
-    * words that got no vector before discarding them
-    * (`MapRedWord2Vec.scala:160-164`); the engine's inner join drops
-    * them silently. This left-anti twin restores the observability —
-    * run it next to [[flagship]] to see exactly what the join lost.
+  /** Diagnostic for words that got no vector: the reference LOGS them
+    * before discarding them (`MapRedWord2Vec.scala:160-164`). The
+    * flagship table is built straight from the model's vocabulary, so
+    * the only drop left is the trainer's `minCount` filter. This
+    * left-anti twin names what it dropped.
     * @param counts (word, …) corpus word counts
     * @param vocab  (word, …) the vocabulary that DID get vectors */
   def droppedVocabulary(counts: DataFrame, vocab: DataFrame): DataFrame =

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph primitives for dedup cluster resolution. A pair
   * generator (q33/q42/q49) emits near-duplicate EDGES; an actual dedup
@@ -42,6 +47,43 @@ object Graph {
       x.asInstanceOf[Comparable[Any]].compareTo(y.asInstanceOf[AnyRef]) < 0
   }
 
+  /** The undirected `(id_a, id_b)` edge list as distinct directed
+    * (src, dst) pairs, checkpointed: the upstream pair plan (e.g. the
+    * whole simhash-band candidate chain) runs ONCE, not per round. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .distinct()
+      .localCheckpoint()
+
+  /** The keyed-RDD round scaffold over one edge list, whose first
+    * column's type is the id type. Every keyed table of a primitive
+    * shares one hash partitioner sized like a SQL shuffle, so per-round
+    * joins against the cached tables are narrow. */
+  private final class Rounds(edges: DataFrame) {
+    val spark: SparkSession = edges.sparkSession
+    val idType = edges.schema.head.dataType
+    val p = new org.apache.spark.HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
+    /** Partitioned once and kept across rounds. */
+    def cached[V: ClassTag](r: RDD[(Any, V)]): RDD[(Any, V)] =
+      r.partitionBy(p).persist(StorageLevel.MEMORY_AND_DISK)
+
+    /** `sym` keyed by dst (the neighbor lists a label round joins
+      * against) and every src labeled with itself — the start of
+      * [[connectedComponents]] and [[labelPropagation]]. */
+    def selfLabeled(sym: DataFrame): (RDD[(Any, Any)], RDD[(Any, Any)]) =
+      (cached(sym.select("dst", "src").rdd.map(r => (r.get(0), r.get(1)))),
+        cached(sym.select("src").distinct().rdd.map(r => (r.get(0), r.get(0)))))
+
+    /** A keyed round result as a frame: column `key` keeps the edge
+      * list's id type; `value` names and types the value column. */
+    def toFrame[V](rows: RDD[(Any, V)], key: String, value: StructField): DataFrame =
+      spark.createDataFrame(rows.map { case (k, v) => Row(k, v) },
+        StructType(Seq(StructField(key, idType), value)))
+  }
+
   /** Connected components of an undirected edge list.
     *
     * @param edges  DataFrame with two long columns `id_a`, `id_b`
@@ -51,14 +93,6 @@ object Graph {
     * @return (id, component) — `component` is the minimum id reachable
     *         from `id`; only ids that appear in some edge are labeled */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
-    val idType = edges.schema.head.dataType
-    // symmetrize once and checkpoint: the upstream pair plan (e.g. the
-    // whole simhash-band candidate chain) must run ONCE, not per round
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint()
     // rounds as one keyed-RDD chain (the [[pageRank]] shape), but
     // convergence-gated: each round's single action is the count that
     // materializes the persisted label table, and "did anything move"
@@ -68,35 +102,26 @@ object Graph {
     // only over-count, costing one extra converged round, never a
     // wrong labeling. min-label and the final table are exact integer/
     // binary-string comparisons — bit-identical to the DataFrame form.
-    val p = new org.apache.spark.HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val byDst = sym.select("dst", "src").rdd.map(r => (r.get(0), r.get(1)))
-      .partitionBy(p).persist(lvl)
-    var labels = sym.select("src").distinct().rdd
-      .map(r => (r.get(0), r.get(0))).partitionBy(p).persist(lvl)
+    val k = new Rounds(edges)
+    val (byDst, labels0) = k.selfLabeled(symmetric(edges))
+    var labels = labels0
     var round = 0
     while (round < maxIter) {
-      val acc = spark.sparkContext.longAccumulator("cc-label-moves")
+      val acc = k.spark.sparkContext.longAccumulator("cc-label-moves")
       val nbrMin = byDst.join(labels)
         .map { case (_, (src, lab)) => (src, lab) }
-        .reduceByKey(p, (a: Any, b: Any) => if (anyLess(b, a)) b else a)
+        .reduceByKey(k.p, (a: Any, b: Any) => if (anyLess(b, a)) b else a)
       val next = labels.leftOuterJoin(nbrMin).mapValues {
         case (l, Some(m)) if anyLess(m, l) => acc.add(1L); m
         case (l, _) => l
-      }.persist(lvl)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
       next.count() // materializes the round; acc is final after this
       val prev = labels
       labels = next
       prev.unpersist(false)
       round += 1
-      if (acc.value == 0L) {
-        import org.apache.spark.sql.types._
-        return spark.createDataFrame(
-          labels.map { case (id, l) => org.apache.spark.sql.Row(id, l) },
-          StructType(Seq(StructField("id", idType),
-            StructField("label", idType))))
-      }
+      if (acc.value == 0L)
+        return k.toFrame(labels, "id", StructField("label", k.idType))
     }
     throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
@@ -166,9 +191,8 @@ object Graph {
 
   /** Fixed-iteration PageRank over an undirected edge list — the second
     * iterative-graph primitive after connected components, and the same
-    * per-round plan shape: one O(E) join + partial-aggregated groupBy,
-    * lineage reset by `localCheckpoint` so round k never re-optimizes
-    * round k-1's tree. Iteration count is FIXED (not convergence-gated)
+    * per-round shape: one narrow join + one O(E) reduceByKey shuffle
+    * (the [[walk]] rounds). Iteration count is FIXED (not convergence-gated)
     * so the output is a pure function of the edge list — that is what
     * makes it oracle-checkable, unlike tolerance-stopped variants whose
     * round count can differ across engines.
@@ -182,52 +206,55 @@ object Graph {
     * @return (id, r) — unnormalized-by-rounding PageRank after `iters`
     *         full rounds, full precision (callers round for contracts) */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
-    val idType = edges.schema.head.dataType
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    val deg = sym.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      .localCheckpoint()
+    val sym = symmetric(edges)
+    val deg = degrees(sym)
     val nV = deg.count()
     if (nV == 0) return deg.select(col("src").as("id"), lit(0.0).as("r"))
-    // ROUNDS AS ONE RDD LINEAGE (round 14, guide §2.1/§2.6): the
-    // DataFrame loop paid a localCheckpoint job + Catalyst planning +
-    // AQE stage scheduling PER ROUND (the per-round plan tree must be
-    // cut, because pr appears twice in it). Keyed RDDs share lineage
-    // as a DAG instead: the degree-folded edge list and the node set
-    // are hash-partitioned ONCE and cached, every per-round join is
-    // narrow (same partitioner), and the only shuffle per round is the
-    // contribution reduceByKey — the whole 10-round walk is ONE job.
-    // Numerics are the exact per-edge r/deg and teleport expressions
-    // the DataFrame form evaluated; reduceByKey reassociates the sum,
-    // which the callers' round-6 contract absorbs (the q110 scaladoc
-    // argument — ~1e-15 against a 1e-6 grain).
-    val p = new org.apache.spark.HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edgesR = sym.join(deg, "src").select("src", "dst", "deg").rdd
-      .map(r => (r.get(0), (r.get(1), r.getDouble(2))))
-      .partitionBy(p).persist(lvl)
-    val nodes = deg.select("src").rdd.map(r => (r.get(0), ()))
-      .partitionBy(p).persist(lvl)
-    var pr = nodes.mapValues(_ => 1.0 / nV)
-    var round = 0
-    while (round < iters) {
+    // the uniform walk: every node starts at 1/|V| and teleports the
+    // same (1−d)/|V| each round, computed once as the DataFrame form did
+    val teleport = (1.0 - damping) / nV
+    walk(sym, deg, deg.select(col("src").as("id"), lit(1.0 / nV).as("t")),
+      iters, damping, _ => teleport)
+  }
+
+  /** Out-degree per src of a [[symmetric]] edge list, as a double. */
+  private def degrees(sym: DataFrame): DataFrame =
+    sym.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
+      .localCheckpoint()
+
+  /** The fixed-round random walk behind [[pageRank]] and
+    * [[personalizedPageRank]]. `nodes` is (id, t): every node of `deg`
+    * with its start mass t; each round a node's rank becomes
+    * `teleport(t) + d·Σ r/deg` over its in-edges.
+    *
+    * ROUNDS AS ONE RDD LINEAGE (round 14): the DataFrame loop paid a
+    * localCheckpoint job + Catalyst planning + AQE stage scheduling PER
+    * ROUND (the per-round plan tree must be cut, because pr appears
+    * twice in it). Keyed RDDs share lineage as a DAG instead: the
+    * degree-folded edge list and the node table are hash-partitioned
+    * ONCE and cached, every per-round join is narrow (same
+    * partitioner), and the only shuffle per round is the contribution
+    * reduceByKey — the whole 10-round walk is ONE job. Numerics are the
+    * exact per-edge r/deg and teleport expressions the DataFrame form
+    * evaluated; reduceByKey reassociates the sum, which the callers'
+    * round-6 contract absorbs (the q110 scaladoc argument — ~1e-15
+    * against a 1e-6 grain). */
+  private def walk(sym: DataFrame, deg: DataFrame, nodes: DataFrame, iters: Int,
+                   damping: Double, teleport: Double => Double): DataFrame = {
+    val k = new Rounds(sym)
+    val nodesT = k.cached(nodes.rdd.map(r => (r.get(0), r.getDouble(1))))
+    val edgesR = k.cached(sym.join(deg, "src").select("src", "dst", "deg").rdd
+      .map(r => (r.get(0), (r.get(1), r.getDouble(2)))))
+    var pr = nodesT
+    (1 to iters).foreach { _ =>
       val contrib = edgesR.join(pr)
         .map { case (_, ((dst, dg), r)) => (dst, r / dg) }
-        .reduceByKey(p, _ + _)
-      pr = nodes.leftOuterJoin(contrib).mapValues { case (_, c) =>
-        (1.0 - damping) / nV + damping * c.getOrElse(0.0)
+        .reduceByKey(k.p, _ + _)
+      pr = nodesT.leftOuterJoin(contrib).mapValues { case (t, c) =>
+        teleport(t) + damping * c.getOrElse(0.0)
       }
-      round += 1
     }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      pr.map { case (id, r) => org.apache.spark.sql.Row(id, r) },
-      StructType(Seq(StructField("id", idType),
-        StructField("r", DoubleType, nullable = false))))
+    k.toFrame(pr, "id", StructField("r", DoubleType, nullable = false))
   }
 
   /** q110: TextRank keyword extraction (Mihalcea &amp; Tarau '04) — PageRank
@@ -300,57 +327,25 @@ object Graph {
     * not uniformly) — the "related nodes" primitive behind query
     * expansion and graph-based recommendation: rank mass concentrates
     * around the seeds instead of spreading to global hubs. Same
-    * fixed-iteration join+groupBy rounds as [[pageRank]] (each round
-    * one O(E) shuffle, localCheckpoint lineage cut); the only changes
-    * are the start vector (1/|S| on seeds) and the teleport term
-    * ((1−d)/|S| on seeds, 0 elsewhere). Seeds outside the graph are
+    * fixed-iteration [[walk]] rounds as [[pageRank]] (each round one
+    * O(E) shuffle); the only changes are the start vector (1/|S| on
+    * seeds) and the teleport term ((1−d)·t: (1−d)/|S| on seeds, 0
+    * elsewhere). Seeds outside the graph are
     * ignored; an empty effective seed set returns the empty frame. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
-    val idType = edges.schema.head.dataType
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    val deg = sym.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      .localCheckpoint()
+    val sym = symmetric(edges)
+    val deg = degrees(sym)
     val seedIds = seeds.select(col("id")).distinct()
       .join(deg.select(col("src").as("id")), Seq("id"))
       .localCheckpoint()
     val nS = seedIds.count()
     if (nS == 0) return deg.limit(0).select(col("src").as("id"), lit(0.0).as("r"))
-    // same single-lineage RDD rounds as [[pageRank]] (see its scaladoc
-    // note); the static per-node teleport term rides in the cached node
-    // table, so each round is one narrow join + one reduceByKey shuffle
-    val p = new org.apache.spark.HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val tele = seedIds.select(col("id"), (lit(1.0) / lit(nS)).as("t"))
-    val nodesT = deg.select(col("src").as("id"))
+    val nodes = deg.select(col("src").as("id"))
       .join(tele, Seq("id"), "left")
-      .select(col("id"), coalesce(col("t"), lit(0.0)).as("t")).rdd
-      .map(r => (r.get(0), r.getDouble(1)))
-      .partitionBy(p).persist(lvl)
-    val edgesR = sym.join(deg, "src").select("src", "dst", "deg").rdd
-      .map(r => (r.get(0), (r.get(1), r.getDouble(2))))
-      .partitionBy(p).persist(lvl)
-    var pr: org.apache.spark.rdd.RDD[(Any, Double)] = nodesT
-    var round = 0
-    while (round < iters) {
-      val contrib = edgesR.join(pr)
-        .map { case (_, ((dst, dg), r)) => (dst, r / dg) }
-        .reduceByKey(p, _ + _)
-      pr = nodesT.leftOuterJoin(contrib).mapValues { case (t, c) =>
-        (1.0 - damping) * t + damping * c.getOrElse(0.0)
-      }
-      round += 1
-    }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      pr.map { case (id, r) => org.apache.spark.sql.Row(id, r) },
-      StructType(Seq(StructField("id", idType),
-        StructField("r", DoubleType, nullable = false))))
+      .select(col("id"), coalesce(col("t"), lit(0.0)).as("t"))
+    walk(sym, deg, nodes, iters, damping, t => (1.0 - damping) * t)
   }
 
   /** q132: words related to the lexicographically smallest vocabulary
@@ -380,20 +375,10 @@ object Graph {
     * DENSE communities — a bridge edge between two cliques doesn't
     * merge them, because one vote loses to the clique majority.
     *
-    * Per round: one join of the O(E) symmetric edge list against the
-    * O(V) label table, a (node, label) partial-aggregated count, and a
-    * per-node top-1 window — all key-partitioned; localCheckpoint per
-    * round cuts the recursive lineage (the [[connectedComponents]]
-    * rule). */
+    * Per round: one narrow join of the O(V) label table against the
+    * cached O(E) symmetric edge list and one vote-folding shuffle. */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val idType = edges.schema.head.dataType
-    val sym = edges
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    // single-lineage RDD rounds (the [[pageRank]] note): edges keyed by
+    // single-lineage RDD rounds (the [[walk]] note): edges keyed by
     // dst once and cached; each round joins labels narrowly on dst and
     // folds votes per src in ONE aggregateByKey shuffle (map-side
     // HashMap combine — the old form paid a (node, label) exchange AND
@@ -401,18 +386,14 @@ object Graph {
     // integers and the (votes desc, label asc) winner is an
     // order-independent argmax, so rounds stay bit-identical; string
     // labels compare in UTF8 binary order, exactly Catalyst's asc().
-    val p = new org.apache.spark.HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val byDst = sym.select("dst", "src").rdd.map(r => (r.get(0), r.get(1)))
-      .partitionBy(p).persist(lvl)
-    var labels = sym.select("src").distinct().rdd.map(r => (r.get(0), r.get(0)))
-      .partitionBy(p).persist(lvl)
+    val k = new Rounds(edges)
+    val (byDst, labels0) = k.selfLabeled(symmetric(edges))
+    var labels = labels0
     (1 to iters).foreach { _ =>
       labels = byDst.join(labels)
         .map { case (_, (src, label)) => (src, label) }
         .aggregateByKey(
-          scala.collection.mutable.HashMap.empty[Any, Long], p)(
+          scala.collection.mutable.HashMap.empty[Any, Long], k.p)(
           (m, lab) => { m.update(lab, m.getOrElse(lab, 0L) + 1L); m },
           (m1, m2) => {
             m2.foreach { case (lab, n) =>
@@ -430,11 +411,7 @@ object Graph {
           bestLab
         }
     }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      labels.map { case (n, l) => org.apache.spark.sql.Row(n, l) },
-      StructType(Seq(StructField("node", idType),
-        StructField("label", idType))))
+    k.toFrame(labels, "node", StructField("label", k.idType))
   }
 
   /** q128: communities of the q110 word co-occurrence graph via 3
@@ -475,16 +452,13 @@ object Graph {
     * distance rounds at 6 dp so both engines relax identical doubles
     * (the q113 convention).
     *
-    * Per round: one join of the O(V) frontier against the edge list +
-    * one min-groupBy — both key-partitioned; localCheckpoint cuts the
-    * recursive lineage. At 100 TB the graph table is the small side
+    * Per round: one narrow cogroup of the O(V) frontier against the
+    * cached edge list + one min-reduce shuffle. At 100 TB the graph table is the small side
     * (vocabulary-capped, the q110 argument); rounds never touch the
     * corpus. */
   def shortestPaths(wedges: DataFrame, source: DataFrame,
                     iters: Int): DataFrame = {
-    val spark = wedges.sparkSession
-    val idType = wedges.schema.head.dataType
-    // single-lineage RDD rounds (the [[pageRank]] note). The edge list
+    // single-lineage RDD rounds (the [[walk]] note). The edge list
     // is partitioned once and cached — its lineage reaches back through
     // the corpus scan, and un-cached rounds would re-scan the corpus
     // per round (measured 44 s → 6 s at 100× docs when this was first
@@ -493,16 +467,12 @@ object Graph {
     // round to 6 dp per relaxation exactly as Catalyst's round() did
     // (same BigDecimal HALF_UP kernel), and min() is order-independent,
     // so the table stays bit-identical round for round.
-    val p = new org.apache.spark.HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val e = wedges.select("src", "dst", "w").rdd
-      .map(r => (r.get(0), (r.get(1), r.getDouble(2))))
-      .partitionBy(p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val k = new Rounds(wedges)
+    val e = k.cached(wedges.select("src", "dst", "w").rdd
+      .map(r => (r.get(0), (r.get(1), r.getDouble(2)))))
     var dist = source.select(col("id")).rdd.map(r => (r.get(0), 0.0))
-      .partitionBy(p)
-    var round = 0
-    while (round < iters) {
+      .partitionBy(k.p)
+    (1 to iters).foreach { _ =>
       dist = dist.cogroup(e)
         .flatMap { case (id, (ds, es)) =>
           ds.headOption match {
@@ -513,14 +483,9 @@ object Graph {
               }
           }
         }
-        .reduceByKey(p, (a: Double, b: Double) => math.min(a, b))
-      round += 1
+        .reduceByKey(k.p, (a: Double, b: Double) => math.min(a, b))
     }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      dist.map { case (id, d) => org.apache.spark.sql.Row(id, d) },
-      StructType(Seq(StructField("id", idType),
-        StructField("d", DoubleType, nullable = false))))
+    k.toFrame(dist, "id", StructField("d", DoubleType, nullable = false))
   }
 
   /** q147: cheapest association paths from the seed word over the
@@ -753,15 +718,9 @@ object Graph {
       .distinct()
       .localCheckpoint()
     // the per-k peels are independent round loops over the shared edge
-    // checkpoint — run them concurrently (the Profile §2.6 overlap
-    // pattern) so one k's checkpoint/count jobs fill the other's
-    // driver gaps
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(CoreKs.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val perK = CoreKs.map { k => Future {
-      spark.sparkContext.setJobDescription(s"q234 $k-core peel")
+    // checkpoint — run them concurrently so one k's checkpoint/count
+    // jobs fill the other's driver gaps
+    graft.Exec.overlap(CoreKs.map { k => s"q234 $k-core peel" -> { () =>
       var ed = ed0
       var edCount = -1L // unknown until the first peel's checkpoint
       var r = 0
@@ -797,9 +756,6 @@ object Graph {
         .crossJoin(nodes).crossJoin(maxDeg)
         .select(lit(k.toLong).as("k"), col("n_nodes"), col("n_edges"),
           col("max_core_degree"))
-    } }
-    try Await.result(Future.sequence(perK), Duration.Inf)
-      .reduce(_ unionAll _).orderBy("k")
-    finally pool.shutdown()
+    } }).reduce(_ unionAll _).orderBy("k")
   }
 }

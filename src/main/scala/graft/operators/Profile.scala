@@ -15,14 +15,13 @@ object Profile {
   /** One row per profiled column: (column, n_rows, n_null, n_distinct).
     *
     * One INDEPENDENT single-column aggregation per profiled column,
-    * submitted concurrently (the overlap-independent-jobs pattern —
-    * optimization guide §2.6) and assembled into the O(columns) local
-    * result. Through round 13 this was ONE Aggregate with N exact
-    * count-distincts, which Spark plans as an Expand: every input row
-    * fans out N+1 ways into a hash agg whose grouping key is ALL N
-    * columns + gid — the full table crosses the exchange once per
-    * column (measured 5.3 s at sf0.1; the r14 plan audit). The
-    * per-column form is strictly less work at ANY scale: each job
+    * submitted concurrently ([[graft.Exec.overlap]]) and assembled
+    * into the O(columns) local result. Through round 13 this was ONE
+    * Aggregate with N exact count-distincts, which Spark plans as an
+    * Expand: every input row fans out N+1 ways into a hash agg whose
+    * grouping key is ALL N columns + gid — the full table crosses the
+    * exchange once per column (measured 5.3 s at sf0.1; the r14 plan
+    * audit). The per-column form is strictly less work at ANY scale: each job
     * scans ONLY its own column (parquet column pruning — the same
     * total bytes as one all-column scan, split N ways), its single
     * distinct aggregate plans Expand-free as a two-phase partial
@@ -41,37 +40,25 @@ object Profile {
                           distinctName: String,
                           distinctAgg: String => org.apache.spark.sql.Column): DataFrame = {
     val spark = df.sparkSession
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // bounded pool: enough in-flight jobs to fill stage tails, not so
-    // many that they fight (guide §2.6 "2-3 in flight is plenty" scaled
-    // to the wider profile fan-out)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(columns.size, 4).max(1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = columns.map { c =>
-        Future {
-          spark.sparkContext.setJobDescription(s"profile: $c")
-          val r = df.agg(count(lit(1)).as("n"), count(col(c)).as("nn"),
-            distinctAgg(c).as("nd")).head()
-          org.apache.spark.sql.Row(c, r.getLong(0), r.getLong(0) - r.getLong(1),
-            r.getLong(2))
-        }
+    val rows = graft.Exec.overlap(columns.map { c =>
+      s"profile: $c" -> { () =>
+        val r = df.agg(count(lit(1)).as("n"), count(col(c)).as("nn"),
+          distinctAgg(c).as("nd")).head()
+        org.apache.spark.sql.Row(c, r.getLong(0), r.getLong(0) - r.getLong(1),
+          r.getLong(2))
       }
-      val rows = Await.result(Future.sequence(futs), Duration.Inf)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("column_name",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_rows",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_null",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField(distinctName,
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("column_name")
-    } finally pool.shutdown()
+    })
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("column_name",
+        org.apache.spark.sql.types.StringType, nullable = false),
+      org.apache.spark.sql.types.StructField("n_rows",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("n_null",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField(distinctName,
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .orderBy("column_name")
   }
 
   /** q130: profile every lineitem column — the widest table in the

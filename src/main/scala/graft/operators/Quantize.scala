@@ -583,10 +583,8 @@ object Quantize {
 
   /** Stage 1 of the q244 query path: probe the Nprobe nearest cells
     * per query, return the candidate pairs (q_id, n_id) — self
-    * excluded. `queries` is (q_id, qv), broadcast-sized by contract. */
-  def ivfAdcCandidates(idx: IvfAdcIndex, queries: DataFrame): DataFrame =
-    ivfAdcCandidatesFrom(idx, collectQueryRows(queries))
-
+    * excluded. `qRows` are the collected (q_id, qv) queries,
+    * broadcast-sized by contract. */
   private[graft] def ivfAdcCandidatesFrom(idx: IvfAdcIndex,
                                           qRows: Array[QRow]): DataFrame = {
     val spark = idx.members.sparkSession
@@ -618,13 +616,8 @@ object Quantize {
 
   /** Stages 2+3 of the q244 query path over a prepared candidate set:
     * ADC-rank via PqM code-table lookups (zero float reads), then
-    * exact-rescore the top-[[RefineR]] — (q_id, rank, n_id, l2sq). */
-  def ivfAdcTop10(idx: IvfAdcIndex, queries: DataFrame,
-                  cand: DataFrame): DataFrame =
-    ivfAdcTop10From(idx, collectQueryRows(queries), cand)
-
-  /** [[ivfAdcTop10]] over already-collected query rows. The per-query
-    * ADC LUT — O(|q|·PqM·PqK) rows, bounded by construction (query
+    * exact-rescore the top-[[RefineR]] — (q_id, rank, n_id, l2sq),
+    * over already-collected query rows. The per-query ADC LUT — O(|q|·PqM·PqK) rows, bounded by construction (query
     * block × codebook metadata) — is built on the DRIVER with the exact
     * [[L2Dist]] fold + round-6 the `pqFlat × broadcast(codebook)` form
     * computed (round 14): same slice-clip semantics, same null lanes,

@@ -133,8 +133,8 @@ object Skew {
     // (the r14 plan audit). Now each side's count table materializes
     // ONCE (eager localCheckpoint) and its bounded statistics — (n,
     // ndv, Σc²) and the top-[[CardEstHH]] shortlist — collect to the
-    // driver in the same concurrent wave (the Profile §2.6 overlap
-    // pattern; O(1)+O(20) rows per side, bounded by construction). The
+    // driver in the same concurrent wave ([[graft.Exec.overlap]];
+    // O(1)+O(20) rows per side, bounded by construction). The
     // only distributed consumers left are the two FK true-size joins
     // over checkpointed count tables; a self-join's true size IS its
     // Σ ca² statistic (exact integers), so it needs no join at all.
@@ -147,53 +147,45 @@ object Skew {
     // Catalyst expressions did (the empty-corpus degradation lane)
     case class Side(na: Option[Long], da: Long, sumSq: Option[Long],
                     hh: Seq[(Any, Long)])
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    def sideF(desc: String, df: DataFrame): Future[(DataFrame, Side)] = Future {
-      spark.sparkContext.setJobDescription(s"q170 counts: $desc")
-      val ct = df.filter(col("k").isNotNull).groupBy("k")
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
-      val st = ct.agg(sum(col("cnt").cast(d38)).cast("long"),
-        count(lit(1)),
-        sum((col("cnt") * col("cnt")).cast(d38)).cast("long")).head()
-      val hh = ct.orderBy(col("cnt").desc, col("k").asc).limit(CardEstHH)
-        .collect().map(r => (r.get(0), r.getLong(1))).toSeq
-      (ct, Side(if (st.isNullAt(0)) None else Some(st.getLong(0)),
-        st.getLong(1),
-        if (st.isNullAt(2)) None else Some(st.getLong(2)), hh))
-    }
-    def actualF(a: Future[(DataFrame, Side)],
-                b: Future[(DataFrame, Side)]): Future[Option[Long]] =
-      a.zip(b).map { case ((ca, _), (cb, _)) =>
-        spark.sparkContext.setJobDescription("q170 true join size")
-        val r = ca.join(cb.withColumnRenamed("cnt", "cntb"), "k")
+    def side(desc: String, df: DataFrame): (String, () => (DataFrame, Side)) =
+      s"q170 counts: $desc" -> { () =>
+        val ct = df.filter(col("k").isNotNull).groupBy("k")
+          .agg(count(lit(1)).as("cnt"))
+          .localCheckpoint(true)
+        val st = ct.agg(sum(col("cnt").cast(d38)).cast("long"),
+          count(lit(1)),
+          sum((col("cnt") * col("cnt")).cast(d38)).cast("long")).head()
+        val hh = ct.orderBy(col("cnt").desc, col("k").asc).limit(CardEstHH)
+          .collect().map(r => (r.get(0), r.getLong(1))).toSeq
+        (ct, Side(if (st.isNullAt(0)) None else Some(st.getLong(0)),
+          st.getLong(1),
+          if (st.isNullAt(2)) None else Some(st.getLong(2)), hh))
+      }
+    def actual(a: DataFrame, b: DataFrame): (String, () => Option[Long]) =
+      "q170 true join size" -> { () =>
+        val r = a.join(b.withColumnRenamed("cnt", "cntb"), "k")
           .agg(sum((col("cnt") * col("cntb")).cast(d38)).cast("long"))
           .head()
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
     val li = Tables.lineitem(spark, dir)
-    val (fEvType, fEvUser, fOrders, fLiOrd, fPart, fLiPart) = (
-      sideF("events.event_type",
+    // wave 1: the six count tables; wave 2: the two FK true-size joins
+    // over the checkpointed tables wave 1 returned
+    val counted = graft.Exec.overlap(Seq(
+      side("events.event_type",
         Tables.events(spark, dir).select(col("event_type").as("k"))),
-      sideF("events.user_id",
+      side("events.user_id",
         Tables.events(spark, dir).select(col("user_id").as("k"))),
-      sideF("orders.o_orderkey",
+      side("orders.o_orderkey",
         Tables.orders(spark, dir).select(col("o_orderkey").as("k"))),
-      sideF("lineitem.l_orderkey", li.select(col("l_orderkey").as("k"))),
-      sideF("part.p_partkey",
+      side("lineitem.l_orderkey", li.select(col("l_orderkey").as("k"))),
+      side("part.p_partkey",
         Tables.part(spark, dir).select(col("p_partkey").as("k"))),
-      sideF("lineitem.l_partkey", li.select(col("l_partkey").as("k"))))
-    val (evType, evUser, ordersS, liOrd, partS, liPart, actOrd, actPart) =
-      try Await.result(
-        for {
-          a <- fEvType; b <- fEvUser; c <- fOrders; d <- fLiOrd
-          e <- fPart; f <- fLiPart
-          ao <- actualF(fOrders, fLiOrd); ap <- actualF(fPart, fLiPart)
-        } yield (a._2, b._2, c._2, d._2, e._2, f._2, ao, ap), Duration.Inf)
-      finally pool.shutdown()
+      side("lineitem.l_partkey", li.select(col("l_partkey").as("k")))))
+    val Seq(evType, evUser, ordersS, liOrd, partS, liPart) = counted.map(_._2)
+    val ct = counted.map(_._1)
+    val Seq(actOrd, actPart) =
+      graft.Exec.overlap(Seq(actual(ct(2), ct(3)), actual(ct(4), ct(5))))
     import graft.plans.ArgminKernels.roundAt // Spark round(x, n), exactly
     def rowOf(name: String, a: Side, b: Side,
               actual: Option[Long]): org.apache.spark.sql.Row = {

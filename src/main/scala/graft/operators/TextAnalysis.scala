@@ -1637,74 +1637,60 @@ object TextAnalysis {
     // plan, zero ReusedExchange) and each window's sig kernel ran twice
     // (size bill + pair explode). Now every frame that feeds ≥2
     // consumers materializes ONCE (eager localCheckpoint), the
-    // independent ones concurrently (the Profile §2.6 overlap pattern):
+    // independent ones concurrently, in two [[graft.Exec.overlap]] waves:
     // gram pass → {rare cap, per-w sig tables} → {capped gram table,
     // per-w capped selections} → one action for the pair joins + bills.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val base = winnowGrams(Tables.documents(spark, dir))
-        .localCheckpoint(true) // one gram pass feeds truth + all three w
-      val full = base.select(col("doc_id"),
-        explode(array_distinct(col("gh"))).as("h"))
-      // frequency cap from the FULL gram table (the q33 df <= 50 rarity
-      // rule) applied to BOTH sides, keeping winnowed pairs a subset
-      val fRare = Future {
-        spark.sparkContext.setJobDescription("q250 df cap")
+    val base = winnowGrams(Tables.documents(spark, dir))
+      .localCheckpoint(true) // one gram pass feeds truth + all three w
+    val full = base.select(col("doc_id"),
+      explode(array_distinct(col("gh"))).as("h"))
+    // frequency cap from the FULL gram table (the q33 df <= 50 rarity
+    // rule) applied to BOTH sides, keeping winnowed pairs a subset
+    val rare +: sigWs = graft.Exec.overlap(
+      ("q250 df cap" -> { () =>
         full.groupBy("h").agg(count(lit(1)).as("df"))
           .filter(col("df") <= 50).select("h")
           .localCheckpoint(true)
-      }
-      val fSigs = WinnowWindows.map { w => Future {
-        spark.sparkContext.setJobDescription(s"q250 sig w=$w")
+      }) +: WinnowWindows.map { w => s"q250 sig w=$w" -> { () =>
         base.select(col("doc_id"),
             size(array_distinct(col("gh"))).cast("long").as("ng"),
             winnowSig(w).as("sig"))
           .localCheckpoint(true)
-      } }
-      val rare = Await.result(fRare, Duration.Inf)
-      val fFullRare = Future {
-        spark.sparkContext.setJobDescription("q250 capped gram table")
+      } })
+    val fullRare +: wps = graft.Exec.overlap(
+      ("q250 capped gram table" -> { () =>
         full.join(rare, "h").localCheckpoint(true)
-      }
-      val fWps = fSigs.map(_.map { sigW =>
-        spark.sparkContext.setJobDescription("q250 capped selection")
+      }) +: sigWs.map { sigW => "q250 capped selection" -> { () =>
         sigW.select(col("doc_id"), explode(col("sig")).as("h"))
           .join(rare, "h").localCheckpoint(true)
-      })
-      val fullRare = Await.result(fFullRare, Duration.Inf)
-      val sigWs = fSigs.map(Await.result(_, Duration.Inf))
-      val wps = fWps.map(Await.result(_, Duration.Inf))
-      val truth = fullRare.as("a").join(fullRare.as("b"), col("a.h") === col("b.h")
+      } })
+    val truth = fullRare.as("a").join(fullRare.as("b"), col("a.h") === col("b.h")
+        && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+      .agg(count(lit(1)).as("n_truth_pairs"))
+    val perW = WinnowWindows.zipWithIndex.map { case (w, wi) =>
+      val counts = sigWs(wi)
+        .select(col("ng"), size(col("sig")).cast("long").as("ns"))
+        .agg(count(lit(1)).as("n_docs"), sum("ng").as("n_gram_hashes"),
+          sum("ns").as("n_selected"))
+      val wp = wps(wi)
+      val wpairs = wp.as("a").join(wp.as("b"), col("a.h") === col("b.h")
           && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .distinct()
-        .agg(count(lit(1)).as("n_truth_pairs"))
-      val perW = WinnowWindows.zipWithIndex.map { case (w, wi) =>
-        val counts = sigWs(wi)
-          .select(col("ng"), size(col("sig")).cast("long").as("ns"))
-          .agg(count(lit(1)).as("n_docs"), sum("ng").as("n_gram_hashes"),
-            sum("ns").as("n_selected"))
-        val wp = wps(wi)
-        val wpairs = wp.as("a").join(wp.as("b"), col("a.h") === col("b.h")
-            && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-          .agg(count(lit(1)).as("n_winnow_pairs"))
-        counts.crossJoin(wpairs).crossJoin(truth)
-          .select(lit(w.toLong).as("w"), col("n_docs"), col("n_gram_hashes"),
-            col("n_selected"),
-            round(col("n_selected").cast("double") / col("n_gram_hashes"), 6)
-              .as("keep_ratio"),
-            col("n_truth_pairs"), col("n_winnow_pairs"),
-            when(col("n_truth_pairs") > 0,
-              round(col("n_winnow_pairs").cast("double") / col("n_truth_pairs"), 6))
-              .as("pair_recall"))
-      }
-      perW.reduce(_.union(_)).orderBy("w")
-    } finally pool.shutdown()
+        .agg(count(lit(1)).as("n_winnow_pairs"))
+      counts.crossJoin(wpairs).crossJoin(truth)
+        .select(lit(w.toLong).as("w"), col("n_docs"), col("n_gram_hashes"),
+          col("n_selected"),
+          round(col("n_selected").cast("double") / col("n_gram_hashes"), 6)
+            .as("keep_ratio"),
+          col("n_truth_pairs"), col("n_winnow_pairs"),
+          when(col("n_truth_pairs") > 0,
+            round(col("n_winnow_pairs").cast("double") / col("n_truth_pairs"), 6))
+            .as("pair_recall"))
+    }
+    perW.reduce(_.union(_)).orderBy("w")
   }
 
   /** q142: sliding-window chunker with overlap — the RAG/embedding

@@ -55,7 +55,7 @@ import graft.operators.{KMeans, Quantize}
   * are BIT-EQUAL to the in-memory path: parquet round-trips doubles
   * and longs exactly, the codes array is sub-ordered so its posexplode
   * reproduces the (n_id, sub, code) frame verbatim, and the serve
-  * below reuses the very same [[Quantize.ivfAdcTop10]] stage code over
+  * below reuses the very same [[Quantize.ivfAdcTop10From]] stage code over
   * the pruned frames.
   *
   * ==Maintenance durability contract==
@@ -489,22 +489,21 @@ object IvfStore {
 
   /** The three tree writes are INDEPENDENT jobs (lists is the
     * corpus-sized one; cents/codebook are O(K)/O(PqM·PqK) sidecars) —
-    * submitted concurrently (guide §2.6) so the sidecar writes ride
-    * inside the lists write's tail instead of serializing three
-    * write-commit rounds. */
+    * submitted concurrently ([[graft.Exec.overlap]]) so the sidecar
+    * writes ride inside the lists write's tail instead of serializing
+    * three write-commit rounds. */
   private def writeTree(posts: DataFrame, cents: DataFrame,
                         codebook: DataFrame, path: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val side = Future {
-      cents.write.mode("overwrite").parquet(s"$path/cents")
-      codebook.write.mode("overwrite").parquet(s"$path/codebook")
-    }
-    posts
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/lists")
-    Await.result(side, Duration.Inf)
+    graft.Exec.overlap(Seq(
+      "ivf write sidecars" -> { () =>
+        cents.write.mode("overwrite").parquet(s"$path/cents")
+        codebook.write.mode("overwrite").parquet(s"$path/codebook")
+      },
+      "ivf write lists" -> { () =>
+        posts
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(s"$path/lists")
+      }))
   }
 
   /** Fit-and-persist: seeded-Lloyd centroids + seeded PQ codebook on
@@ -825,15 +824,12 @@ object IvfStore {
     val cells = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
     // per-cell rewrites are INDEPENDENT (each touches only its own
-    // directory and temp twin) — run them concurrently from a bounded
-    // pool (guide §2.6) so one cell's write-commit latency back-fills
-    // with the next cell's read instead of serializing O(cells)
-    // commit rounds. Rename/rollback semantics per cell are unchanged.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val done = cells.map { c => Future {
+    // directory and temp twin) — run them concurrently so one cell's
+    // write-commit latency back-fills with the next cell's read instead
+    // of serializing O(cells) commit rounds. Rename/rollback semantics
+    // per cell are unchanged, and a failing cell surfaces only after
+    // every other cell's swap has finished, inside the lock.
+    graft.Exec.overlap(cells.toSeq.map { c => s"ivf compact ${c.getPath.getName}" -> { () =>
       val dir = c.getPath
       def parts = fs.listStatus(dir).map(_.getPath.getName)
         .filter(n => n.endsWith(".parquet") || n.startsWith("part-"))
@@ -859,10 +855,7 @@ object IvfStore {
         fs.delete(old, true)
         Some((cellId, before, parts.length))
       }
-    } }
-    try Await.result(Future.sequence(done.toSeq), Duration.Inf)
-      .flatten.sortBy(_._1).toVector
-    finally pool.shutdown()
+    } }).flatten.sortBy(_._1).toVector
     }
   }
 

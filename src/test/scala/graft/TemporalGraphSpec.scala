@@ -47,6 +47,25 @@ class TemporalGraphSpec extends AnyFunSuite {
     assert(got("d") > got("a") && got("d") > got("f"))
   }
 
+  test("shortestPaths relaxes exact round6 distances within iters hops on a hand graph") {
+    import spark.implicits._
+    // s-a-b beats the direct s-b hop; c and d hang off b; e is 4 hops
+    // out; x-y never touches the source
+    val und = Seq(("s", "a", 0.1), ("a", "b", 0.2), ("s", "b", 0.5),
+      ("b", "c", 0.4), ("c", "d", 1.0), ("d", "e", 1.0), ("x", "y", 1.0))
+    val wedges = und.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
+      .toDF("src", "dst", "w")
+    val got = Graph.shortestPaths(wedges, Seq("s").toDF("id"), iters = 3)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // 0.1 + 0.2 is 0.30000000000000004 in doubles: round6 lands on 0.3.
+    // d is 1.9 (s-b-c-d, 3 hops), not the 4-hop 1.7: after r rounds a
+    // node holds its best path of at most r hops.
+    assert(got == Map("s" -> 0.0, "a" -> 0.1, "b" -> 0.3, "c" -> 0.7,
+      "d" -> 1.9), s"$got")
+    assert(!got.contains("e"), "e is 4 hops out, beyond iters = 3")
+    assert(!got.contains("x") && !got.contains("y"), "x-y is disconnected")
+  }
+
   test("q110 textrank: executes, conserves rank mass, orders desc") {
     val rows = SparkEntry.queries("q110_textrank")(spark, sf0001).collect()
     assert(rows.nonEmpty)
