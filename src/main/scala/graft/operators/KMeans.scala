@@ -575,13 +575,9 @@ object KMeans {
     * more probe-frame column. fit_dist_evals = n·K·rounds is reported
     * closed-form per K — the number whose growth caps how large a K
     * the build budget allows. */
-  def q242KSweep(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val nv = e.agg(count(lit(1)).as("n_vectors"))
-    val q = e.filter(col("vec_id") < EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val probes = array(ProbeSweep.map(p => lit(p.toLong)): _*)
+  /** q242's per-K centroid tables: every K in [[KSweep]] fit from its
+    * k lowest-id seeds in one tagged Lloyd stream, (kk, table). */
+  private[graft] def kSweepCentroids(e: DataFrame): Seq[(Long, Array[(Long, Seq[Double])])] = {
     // all four seeded centroid tables, disjoint-tagged by kk — held as
     // O(Σk) driver state across the rounds (the fit() shape): each
     // round is ONE corpus scan whose per-kk argmin is a projection
@@ -592,20 +588,6 @@ object KMeans {
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Double](1)))
     var cents: Seq[(Long, Array[(Long, Seq[Double])])] =
       KSweep.map(k => (k.toLong, seedRows.filter(_._1 < k)))
-    def assignTagged(cm: Seq[(Long, Array[(Long, Seq[Double])])]): DataFrame = {
-      val tagged = cm.filter(_._2.nonEmpty).map { case (kk, arr) =>
-        struct(lit(kk).as("kk"), bestCentroid(arr, col("v")).as("b"))
-      }
-      if (tagged.isEmpty)
-        e.select(lit(null).cast("long").as("kk"), col("vec_id"), col("v"),
-          lit(null).cast("long").as("cluster"),
-          lit(null).cast("double").as("dist")).limit(0)
-      else
-        e.select(col("vec_id"), col("v"),
-            explode(array(tagged: _*)).as("p"))
-          .select(col("p.kk").as("kk"), col("vec_id"), col("v"),
-            col("p.b.id").as("cluster"), col("p.b.dist").as("dist"))
-    }
     // one fused corpus pass per round across ALL kk tables at once —
     // the fit() round-14 shape applied to the sweep: each row runs the
     // per-kk NearestL2 argmin kernels (the exact kernels the tagged
@@ -692,6 +674,31 @@ object KMeans {
         }
       }
       r += 1
+    }
+    cents
+  }
+
+  def q242KSweep(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val nv = e.agg(count(lit(1)).as("n_vectors"))
+    val q = e.filter(col("vec_id") < EvalBlock)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val probes = array(ProbeSweep.map(p => lit(p.toLong)): _*)
+    val cents = kSweepCentroids(e)
+    def assignTagged(cm: Seq[(Long, Array[(Long, Seq[Double])])]): DataFrame = {
+      val tagged = cm.filter(_._2.nonEmpty).map { case (kk, arr) =>
+        struct(lit(kk).as("kk"), bestCentroid(arr, col("v")).as("b"))
+      }
+      if (tagged.isEmpty)
+        e.select(lit(null).cast("long").as("kk"), col("vec_id"), col("v"),
+          lit(null).cast("long").as("cluster"),
+          lit(null).cast("double").as("dist")).limit(0)
+      else
+        e.select(col("vec_id"), col("v"),
+            explode(array(tagged: _*)).as("p"))
+          .select(col("p.kk").as("kk"), col("vec_id"), col("v"),
+            col("p.b.id").as("cluster"), col("p.b.dist").as("dist"))
     }
     val centsDf = {
       val schema = org.apache.spark.sql.types.StructType(Seq(

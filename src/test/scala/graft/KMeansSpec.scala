@@ -94,4 +94,24 @@ class KMeansSpec extends AnyFunSuite {
     // somewhere, or the fixture can't distinguish IVF from brute force
     assert(rows.exists(_._2 < 10) || mean == 1.0)
   }
+
+  test("q242 per-K centroids are bit-identical to independent seeded fits") {
+    // the K sweep shares one Lloyd stream across its four seed tables;
+    // each table must still land exactly where fit(e, k) lands alone
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    def bits(cv: Seq[Double]): Seq[Option[Long]] =
+      if (cv == null) null
+      else cv.asInstanceOf[Seq[java.lang.Double]]
+        .map(x => Option(x).map(d => java.lang.Double.doubleToLongBits(d)))
+    val swept = KMeans.kSweepCentroids(e).toMap
+    assert(swept.keySet == KMeans.KSweep.map(_.toLong).toSet)
+    KMeans.KSweep.foreach { k =>
+      val alone = KMeans.fit(e, k).collect()
+        .map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).toMap
+      val inSweep = swept(k.toLong).map { case (cl, cv) => cl -> bits(cv) }.toMap
+      assert(alone.size == k, s"K=$k: the fixture must seed all $k cells")
+      assert(inSweep == alone, s"K=$k: swept centroids differ from fit(e, $k)")
+    }
+  }
 }
