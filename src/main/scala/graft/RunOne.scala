@@ -88,8 +88,7 @@ object RunOne {
       import org.apache.spark.sql.functions._
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = e.filter(col("vec_id") < operators.KMeans.EvalBlock)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val q = operators.KMeans.evalQueries(e)
         .localCheckpoint(true)
       val path = Scratch.dir("runone-ivf-serve")
       val t0 = System.nanoTime()
@@ -140,8 +139,7 @@ object RunOne {
         println(s"[runone]   audit dirty cells: $bad")
       }
       timed("retrain") { sources.IvfStore.retrain(spark, path); () }
-      val q = e.filter(col("vec_id") < operators.KMeans.EvalBlock)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val q = operators.KMeans.evalQueries(e)
       (1 to iters).foreach { i =>
         timed(s"serve iter $i") {
           sources.IvfStore.servedTop10(spark, path, q)

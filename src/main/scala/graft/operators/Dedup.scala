@@ -246,7 +246,7 @@ object Dedup {
     * (band, value) with `bucketCap` bounding per-bucket pair fanout, a
     * distinct on candidate pairs, and two key joins to rescore. No
     * doc × doc join anywhere — the plan the O(N²/2) theta-join version
-    * (now [[exactEmbeddingNearDupAllPairs]], test-only) could never be.
+    * (now DedupSimilaritySpec's brute-force reference) could never be.
     *
     * Recall is geometry-dependent: ~0.99 for true near-dups (cos ≥ 0.95)
     * but low in the isotropic-noise tail near the threshold — measured
@@ -269,8 +269,8 @@ object Dedup {
     * candidate generation + exact cosine rescoring) at threshold 0.45.
     * Replaced the all-pairs theta-join form, which planned as a
     * BroadcastNestedLoopJoin with O(N²/2) cosine evaluations (measured:
-    * 212 s at 20k vectors) — that form survives as the test-only recall
-    * baseline [[exactEmbeddingNearDupAllPairs]]. */
+    * 212 s at 20k vectors) — that form survives as the brute-force
+    * reference in DedupSimilaritySpec. */
   def q49EmbeddingNearDup(spark: SparkSession, dir: String): DataFrame =
     blockedEmbeddingNearDup(
       Tables.embeddings(spark, dir)
@@ -408,50 +408,6 @@ object Dedup {
       .select(col("vec_id"), col("cluster"), col("n_members"),
         (col("vec_id") === col("cluster")).cast("long").as("is_canonical"))
       .orderBy("cluster", "vec_id")
-  }
-
-  /** TEST-ONLY exact baseline: every pair above the cosine threshold via
-    * an all-pairs theta-join — O(N²/2), BroadcastNestedLoopJoin. Kept off
-    * the declared query surface (it cannot survive 100× scale) as the
-    * ground truth that DedupSimilaritySpec measures blocking recall
-    * against. The fused [[graft.plans.CosineSim]] expression keeps the
-    * inner loop allocation-free. */
-  def exactEmbeddingNearDupAllPairs(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.CosineSim
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        round(CosineSim.cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= 0.45)
-      .orderBy(desc("cos_sim"), asc("id_a"), asc("id_b"))
-  }
-
-  /** Library API: LSH-blocked embedding near-dup — the scale path for
-    * what q49 does exactly. Vectors are L2-normalized so squared
-    * euclidean distance maps to cosine (d² = 2 − 2·cos); random-
-    * projection buckets generate candidates, and the join compares only
-    * within-bucket pairs. Measured: exact all-pairs at 20k vectors is
-    * ~200M cosine evaluations (212s on 32 threads) and grows
-    * quadratically; the blocked join's cost follows bucket occupancy.
-    *
-    * @param embeddings (vec_id, embedding)
-    * @param minCosine  cosine similarity threshold */
-  def approxEmbeddingNearDup(embeddings: DataFrame, minCosine: Double): DataFrame = {
-    import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, Normalizer}
-    import org.apache.spark.ml.functions.array_to_vector
-    val vecs = new Normalizer().setInputCol("raw").setOutputCol("features").setP(2.0)
-      .transform(embeddings.select(col("vec_id"),
-        array_to_vector(col("embedding").cast("array<double>")).as("raw")))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(1.0).setNumHashTables(4).setSeed(42L)
-    val model = lsh.fit(vecs)
-    val maxDist = math.sqrt(math.max(0.0, 2.0 - 2.0 * minCosine))
-    model.approxSimilarityJoin(vecs, vecs, maxDist, "dist")
-      .select(col("datasetA.vec_id").as("id_a"), col("datasetB.vec_id").as("id_b"),
-        round(lit(1.0) - col("dist") * col("dist") / 2.0, 6).as("cos_sim"))
-      .filter(col("id_a") < col("id_b"))
   }
 
   /** q73: INCREMENTAL ingest dedup — the shape a production pipeline

@@ -19,14 +19,14 @@ import graft.Tables
   * reassociation noise). Iteration count is FIXED — convergence-gated
   * loops can stop at different rounds across engines (the q110 rule).
   *
-  * Scale shape per round: one corpus scan against a BROADCAST k-row
-  * centroid table (k×N candidate rows, per-vector rank window), then
-  * one (cluster, dim)-keyed partial-aggregated mean — no shuffle grows
-  * with k·corpus, and the driver only ever holds the k centroids via
-  * localCheckpoint lineage cuts. This is exactly how MLlib's own
-  * k-means iterates (broadcast centers + tree-aggregated sums); the
-  * declarative form trades its fused distance kernel for an
-  * oracle-checkable plan. */
+  * Scale shape per round: ONE fused corpus pass — each row runs the
+  * native NearestL2 argmin against the k collected centroids (O(k)
+  * driver state) and folds into per-partition (sum, count)
+  * accumulators per (cluster, dim), merged by treeReduce. Nothing
+  * shuffles and nothing is checkpointed. This is how MLlib's own
+  * k-means iterates (broadcast centers + tree-aggregated sums); q242's
+  * K sweep runs the same [[lloyd]] loop over four tagged seed tables.
+  */
 object KMeans {
 
   /** Cluster count (seeded from vec_id < K, the q45b rule). */
@@ -84,105 +84,136 @@ object KMeans {
     * members (empty clusters keep their previous centroid — the
     * standard Lloyd fallback, and the branch the oracle reproduces
     * with a left join + coalesce on absent means). Returns
-    * (cluster, cv). The centroids live as an O(k) driver array across
-    * rounds (bounded by construction): each round is ONE corpus scan —
-    * the argmin projection feeding the (cluster, pos) partial-agg mean
-    * — where the window form paid an Exchange+Sort of k×corpus rows
-    * plus a localCheckpoint materialization per round. */
+    * (cluster, cv). */
   def fit(e: DataFrame, k: Int = K, iters: Int = Iters): DataFrame = {
-    val spark = e.sparkSession
-    var cents: Array[(Long, Seq[Double])] = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("v").as("cv"))
+    centroidFrame(e.sparkSession, lloyd(e, Seq(0L -> seedRows(e, k)), iters)).drop("kk")
+  }
+
+  /** The k lowest-id vectors as (cluster, cv) seeds (the q45b rule). */
+  private def seedRows(e: DataFrame, k: Int): Array[(Long, Seq[Double])] =
+    e.filter(col("vec_id") < k)
+      .select(col("vec_id"), col("v"))
       .collect() // O(k) bounded: the seed rows
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Double](1)))
-    // one fused corpus pass per round (round 14): the same NearestL2
-    // argmin kernel the assignment projection runs, feeding
-    // per-partition (sum, count) accumulators per (cluster, dim) that
-    // treeReduce to the O(k×dim) driver state — replaces the
-    // posexplode ×dim fan-out + two groupBy exchanges + collect the
-    // old round paid. avg reassociates under the merge exactly as the
-    // partial-agg mean did; the 6-dp round absorbs it (the q103b
-    // argument, unchanged). Null vectors still assign (and contribute
-    // nothing), null elements are skipped like avg's null-skipping,
-    // and a dimension with no observations stays absent from the
-    // centroid — all the posexplode edge lanes, replayed.
+
+  /** The Lloyd loop over several disjoint-tagged centroid tables at
+    * once: [[fit]] runs it with one tag, q242 with one per K. Each
+    * round is ONE corpus pass: every row runs each live tag's
+    * NearestL2 argmin kernel and feeds per-(tag, cluster, dim)
+    * (sum, count) accumulators that treeReduce to the O(Σk×dim)
+    * driver state. avg reassociates under the merge exactly as a
+    * partial-agg mean would; the 6-dp round absorbs it (the q103b
+    * argument). Null vectors still assign (and contribute nothing),
+    * null elements are skipped like avg's null-skipping, and a
+    * dimension with no observations stays absent from the centroid.
+    *
+    * A tag whose table comes back EXACTLY unchanged has reached its
+    * Lloyd fixed point: unchanged centroids ⇒ unchanged assignment ⇒
+    * unchanged means in every later round, so it leaves the live set
+    * and later rounds skip it with the same answer. (A NaN mean never
+    * compares equal, so a pathological fit still runs all rounds.)
+    * Per-tag arithmetic never mixes with another tag's, so a tag's
+    * result is bit-identical to running it alone. */
+  private[graft] def lloyd(e: DataFrame, seeds: Seq[(Long, Array[(Long, Seq[Double])])],
+                           iters: Int): Seq[(Long, Array[(Long, Seq[Double])])] = {
+    var cents = seeds
+    var live = seeds.filter(_._2.nonEmpty).map(_._1).toSet
     val vOnly = e.select(col("v"))
+    def grown(a: Array[Double], n: Int) =
+      if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
+    def grownL(a: Array[Long], n: Int) =
+      if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
     var r = 0
-    while (r < iters && cents.nonEmpty) {
-      val ker = graft.plans.NearestL2.kernelFor(cents.toSeq)
-      val ids = ker.ids
-      val idIdx = ids.zipWithIndex.toMap
-      val kk = ids.length
-      def grown(a: Array[Double], n: Int) =
-        if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
-      def grownL(a: Array[Long], n: Int) =
-        if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
+    while (r < iters && live.nonEmpty) {
+      val kers = cents.filter(t => live(t._1)).map { case (kk, arr) =>
+        (kk, graft.plans.NearestL2.kernelFor(arr.toSeq))
+      }.toArray
+      val idIdxs = kers.map { case (_, ker) => ker.ids.zipWithIndex.toMap }
+      val kSizes = kers.map(_._2.ids.length)
+      val nKer = kers.length
       val rdd = vOnly.queryExecution.toRdd.mapPartitions { rows =>
-        val sums = Array.fill(kk)(Array.emptyDoubleArray)
-        val cnts = Array.fill(kk)(Array.emptyLongArray)
+        val sums = Array.tabulate(nKer)(t => Array.fill(kSizes(t))(Array.emptyDoubleArray))
+        val cnts = Array.tabulate(nKer)(t => Array.fill(kSizes(t))(Array.emptyLongArray))
         rows.foreach { row =>
           val v = if (row.isNullAt(0)) null else row.getArray(0)
-          val ci = idIdx(ker.kernel(v).getLong(1))
-          if (v != null) {
-            val n = v.numElements()
-            if (sums(ci).length < n) {
-              sums(ci) = grown(sums(ci), n); cnts(ci) = grownL(cnts(ci), n)
-            }
-            var i = 0
-            while (i < n) {
-              if (!v.isNullAt(i)) {
-                sums(ci)(i) += v.getDouble(i); cnts(ci)(i) += 1L
+          var t = 0
+          while (t < nKer) {
+            val ci = idIdxs(t)(kers(t)._2.kernel(v).getLong(1))
+            if (v != null) {
+              val n = v.numElements()
+              if (sums(t)(ci).length < n) {
+                sums(t)(ci) = grown(sums(t)(ci), n)
+                cnts(t)(ci) = grownL(cnts(t)(ci), n)
               }
-              i += 1
+              var i = 0
+              while (i < n) {
+                if (!v.isNullAt(i)) {
+                  sums(t)(ci)(i) += v.getDouble(i); cnts(t)(ci)(i) += 1L
+                }
+                i += 1
+              }
             }
+            t += 1
           }
         }
         Iterator.single((sums, cnts))
       }
-      if (rdd.getNumPartitions > 0) {
+      if (rdd.getNumPartitions == 0) live = Set.empty // no rows: nothing moves
+      else {
         val (sums, cnts) = rdd.treeReduce { case ((s1, c1), (s2, c2)) =>
-          var ci = 0
-          while (ci < s1.length) {
-            val n = math.max(s1(ci).length, s2(ci).length)
-            s1(ci) = grown(s1(ci), n); c1(ci) = grownL(c1(ci), n)
-            var i = 0
-            while (i < s2(ci).length) {
-              s1(ci)(i) += s2(ci)(i); c1(ci)(i) += c2(ci)(i); i += 1
+          var t = 0
+          while (t < s1.length) {
+            var ci = 0
+            while (ci < s1(t).length) {
+              val n = math.max(s1(t)(ci).length, s2(t)(ci).length)
+              s1(t)(ci) = grown(s1(t)(ci), n); c1(t)(ci) = grownL(c1(t)(ci), n)
+              var i = 0
+              while (i < s2(t)(ci).length) {
+                s1(t)(ci)(i) += s2(t)(ci)(i); c1(t)(ci)(i) += c2(t)(ci)(i)
+                i += 1
+              }
+              ci += 1
             }
-            ci += 1
+            t += 1
           }
           (s1, c1)
         }
-        val means: Map[Long, Seq[Double]] =
-          ids.zipWithIndex.flatMap { case (id, ci) =>
-            val present = (0 until cnts(ci).length).filter(cnts(ci)(_) > 0L)
-            if (present.isEmpty) None
-            else Some(id -> present.map(i =>
-              graft.plans.ArgminKernels.round6(sums(ci)(i) / cnts(ci)(i))))
+        val means: Map[(Long, Long), Seq[Double]] =
+          kers.zipWithIndex.flatMap { case ((kk, ker), t) =>
+            ker.ids.zipWithIndex.flatMap { case (id, ci) =>
+              val present = (0 until cnts(t)(ci).length).filter(cnts(t)(ci)(_) > 0L)
+              if (present.isEmpty) None
+              else Some((kk, id) -> (present.map(i =>
+                graft.plans.ArgminKernels.round6(
+                  sums(t)(ci)(i) / cnts(t)(ci)(i))): Seq[Double]))
+            }
           }.toMap
-        val next = cents.map { case (cl, cv) => (cl, means.getOrElse(cl, cv)) }
-        // Lloyd fixed point (round 14): EXACTLY unchanged centroids ⇒
-        // unchanged assignment ⇒ unchanged means in every later round —
-        // the remaining rounds are the identity, so exiting returns the
-        // same centroids at fewer corpus passes. (A NaN mean never
-        // compares equal, so a pathological fit still runs all rounds.)
-        val fixed = next.sameElements(cents)
+        val next = cents.map { case (kk, arr) =>
+          if (!live(kk)) (kk, arr)
+          else (kk, arr.map { case (cl, cv) => (cl, means.getOrElse((kk, cl), cv)) })
+        }
+        live = cents.zip(next).collect {
+          case ((kk, was), (_, now)) if live(kk) && !now.sameElements(was) => kk
+        }.toSet
         cents = next
-        if (fixed) r = iters
       }
       r += 1
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cluster",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = true),
-        nullable = true)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(cents.map { case (cl, cv) =>
-        org.apache.spark.sql.Row(cl, cv)
-      }: _*), schema)
+    cents
+  }
+
+  /** Tagged centroid tables as a local frame: (kk, cluster, cv). */
+  private def centroidFrame(spark: SparkSession,
+                            tables: Seq[(Long, Array[(Long, Seq[Double])])]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("kk", LongType, nullable = true),
+      StructField("cluster", LongType, nullable = true),
+      StructField("cv", ArrayType(DoubleType, containsNull = true), nullable = true)))
+    val rows = tables.flatMap { case (kk, arr) =>
+      arr.map { case (cl, cv) => org.apache.spark.sql.Row(kk, cl, cv) }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** k-center exemplar count (q255). */
@@ -283,34 +314,20 @@ object KMeans {
   def q261IndexStaleness(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val mx = e.agg(max("vec_id").as("m")).head() // 1 row by construction
-    val empty = e.select(lit(0L).as("cell"), lit(0L).as("n_stale"),
-      lit(0.0).as("mean_dist_stale"), lit(0L).as("n_fresh"),
-      lit(0.0).as("mean_dist_fresh"), lit(0L).as("n_churned"),
-      lit(0.0).as("churn_share"), lit(0.0).as("dist_delta")).limit(0)
-    if (mx.isNullAt(0)) return empty
-    val cutoff = Math.floorDiv(mx.getLong(0), 2L)
-    val old = e.filter(col("vec_id") <= cutoff)
-    val stale = assign(e, fit(old))
-      .select(col("vec_id"), col("cluster").as("sc"), col("dist").as("sd"))
-    val fresh = assign(e, fit(e))
-      .select(col("vec_id"), col("cluster").as("fc"), col("dist").as("fd"))
-    val j = stale.join(fresh, "vec_id")
-      .filter(col("sd").isNotNull && col("fd").isNotNull
-        && !isnan(col("sd")) && !isnan(col("fd")))
-      .localCheckpoint(true) // feeds the churn fold + both cell aggs
-    def grid(c: Column) = round(c * 1000000, 0).cast("long").cast("decimal(38,0)")
+    val j = staleFreshAudit(e) match {
+      case Some(j) => j
+      case None => return e.select(lit(0L).as("cell"), lit(0L).as("n_stale"),
+        lit(0.0).as("mean_dist_stale"), lit(0L).as("n_fresh"),
+        lit(0.0).as("mean_dist_fresh"), lit(0L).as("n_churned"),
+        lit(0.0).as("churn_share"), lit(0.0).as("dist_delta")).limit(0)
+    }
     val g = j.agg(count(lit(1)).as("nv"),
       sum((col("sc") =!= col("fc")).cast("long")).as("n_churned"),
-      sum(grid(col("sd"))).as("ssd"), sum(grid(col("fd"))).as("sfd"))
+      sum(grid6(col("sd"))).as("ssd"), sum(grid6(col("fd"))).as("sfd"))
     val scx = j.groupBy(col("sc").as("cell"))
-      .agg(count(lit(1)).as("n_stale"),
-        round(sum(grid(col("sd"))).cast("double") / count(lit(1)) / 1000000.0, 6)
-          .as("mean_dist_stale"))
+      .agg(count(lit(1)).as("n_stale"), gridMean(col("sd")).as("mean_dist_stale"))
     val fcx = j.groupBy(col("fc").as("cell"))
-      .agg(count(lit(1)).as("n_fresh"),
-        round(sum(grid(col("fd"))).cast("double") / count(lit(1)) / 1000000.0, 6)
-          .as("mean_dist_fresh"))
+      .agg(count(lit(1)).as("n_fresh"), gridMean(col("fd")).as("mean_dist_fresh"))
     scx.join(fcx, Seq("cell"), "full_outer")
       .crossJoin(broadcast(g))
       .select(col("cell"),
@@ -324,6 +341,35 @@ object KMeans {
           - col("sfd").cast("double") / col("nv")) / 1000000.0, 6).as("dist_delta"))
       .orderBy("cell")
   }
+
+  /** The audit frame q261 and q266 share: centroids fit on the old
+    * snapshot (vec_id ≤ max/2) and on the full corpus each assign the
+    * FULL corpus, joined on vec_id — (vec_id, sc, sd, fc, fd), rows with
+    * a null/NaN distance on either side dropped. None on an empty
+    * corpus. Checkpointed: the churn fold and the cell reports all
+    * read it. */
+  private def staleFreshAudit(e: DataFrame): Option[DataFrame] = {
+    val mx = e.agg(max("vec_id").as("m")).head() // 1 row by construction
+    if (mx.isNullAt(0)) return None
+    val cutoff = Math.floorDiv(mx.getLong(0), 2L)
+    val stale = assign(e, fit(e.filter(col("vec_id") <= cutoff)))
+      .select(col("vec_id"), col("cluster").as("sc"), col("dist").as("sd"))
+    val fresh = assign(e, fit(e))
+      .select(col("vec_id"), col("cluster").as("fc"), col("dist").as("fd"))
+    Some(stale.join(fresh, "vec_id")
+      .filter(col("sd").isNotNull && col("fd").isNotNull
+        && !isnan(col("sd")) && !isnan(col("fd")))
+      .localCheckpoint(true))
+  }
+
+  /** A 6-dp-rounded value on the exact ×10⁶ integer grid, summable in
+    * any order (the q155 fixed-point rule). */
+  private[graft] def grid6(c: Column): Column =
+    round(c * 1000000, 0).cast("long").cast("decimal(38,0)")
+
+  /** The group's mean of 6-dp-rounded values, summed on [[grid6]]. */
+  private[graft] def gridMean(c: Column): Column =
+    round(sum(grid6(c)).cast("double") / count(lit(1)) / 1000000.0, 6)
 
   /** Churn share above which [[q266MaintenancePolicy]] retrains +
     * re-encodes instead of appending under the stale artifacts — the
@@ -354,22 +400,10 @@ object KMeans {
   def q266MaintenancePolicy(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val mx = e.agg(max("vec_id").as("m")).head() // 1 row by construction
     val empty = e.select(lit("append").as("decision"),
       lit(0.0).as("churn_share"), lit(0L).as("cell"),
       lit(0L).as("n_members"), lit(0.0).as("mean_dist")).limit(0)
-    if (mx.isNullAt(0)) return empty
-    val cutoff = Math.floorDiv(mx.getLong(0), 2L)
-    val old = e.filter(col("vec_id") <= cutoff)
-    val stale = assign(e, fit(old))
-      .select(col("vec_id"), col("cluster").as("sc"), col("dist").as("sd"))
-    val fresh = assign(e, fit(e))
-      .select(col("vec_id"), col("cluster").as("fc"), col("dist").as("fd"))
-    val j = stale.join(fresh, "vec_id")
-      .filter(col("sd").isNotNull && col("fd").isNotNull
-        && !isnan(col("sd")) && !isnan(col("fd")))
-      .localCheckpoint(true) // feeds the churn fold + the chosen report
-    def grid(c: Column) = round(c * 1000000, 0).cast("long").cast("decimal(38,0)")
+    val j = staleFreshAudit(e).getOrElse(return empty)
     val churnRow = j.agg((sum((col("sc") =!= col("fc")).cast("long"))
         .cast("double") / count(lit(1))).as("churn")).head()
     if (churnRow.isNullAt(0)) return empty
@@ -379,9 +413,7 @@ object KMeans {
       if (retrain) j.select(col("fc").as("cell"), col("fd").as("d"))
       else j.select(col("sc").as("cell"), col("sd").as("d"))
     chosen.groupBy("cell")
-      .agg(count(lit(1)).as("n_members"),
-        round(sum(grid(col("d"))).cast("double") / count(lit(1)) / 1000000.0, 6)
-          .as("mean_dist"))
+      .agg(count(lit(1)).as("n_members"), gridMean(col("d")).as("mean_dist"))
       .select(lit(if (retrain) "retrain" else "append").as("decision"),
         round(lit(churn), 6).as("churn_share"),
         col("cell"), col("n_members"), col("mean_dist"))
@@ -390,6 +422,91 @@ object KMeans {
 
   /** Cells probed per query in q119 (of K = 16). */
   val Nprobe = 4
+
+  /** Probe counts swept by q224 (of K = 16 cells). */
+  val ProbeSweep: Seq[Int] = Seq(1, 2, 4, 8)
+
+  /** Recall eval block for the sweeps: queries are `vec_id <
+    * EvalBlock` (q224/q242/q244 share it, and the oracle SQL
+    * interpolates it — a hardcoded copy desyncs silently). */
+  val EvalBlock = 10
+
+  /** The eval query block (q_id, qv): the [[EvalBlock]] lowest ids of a
+    * (vec_id, v) table — broadcast-sized at any corpus size. */
+  private[graft] def evalQueries(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < EvalBlock)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** Exact ground truth for the recall family: per query, the 10
+    * nearest OTHER vectors by 6-dp-rounded squared L2, id tie-break —
+    * (q_id, n_id). The q34 shape: the corpus streams past the broadcast
+    * query block, the only exchange is the per-query rank window over
+    * |q|×N candidate rows. It is the calibration cost; a production
+    * query path never runs it. */
+  private[graft] def exactTop10(e: DataFrame, q: DataFrame): DataFrame = {
+    val wt = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
+    e.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"),
+        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
+      .withColumn("rank", row_number().over(wt))
+      .filter(col("rank") <= 10)
+      .select("q_id", "n_id")
+  }
+
+  /** Probe ranking: every query (q_id, qv) against the broadcast
+    * centroid table (`tags`…, cluster, cv), ranked per (`tags`…, q_id)
+    * by (round-6 dist ASC, cluster ASC) as `crk`, the `depth` nearest
+    * kept. Both sides are bounded by construction (query block × K
+    * index metadata). */
+  private[graft] def rankedCells(q: DataFrame, cents: DataFrame, depth: Int,
+                                 tags: String*): DataFrame = {
+    val wq = Window.partitionBy((tags :+ "q_id").map(col): _*)
+      .orderBy(asc("cdist"), asc("cluster"))
+    q.crossJoin(broadcast(cents))
+      .withColumn("cdist", round(sqDist(col("qv"), col("cv")), 6))
+      .withColumn("crk", row_number().over(wq))
+      .filter(col("crk") <= depth)
+  }
+
+  /** The probed members' exact top-10 per (`tags`…, q_id): members
+    * (n_id, nv, `on`…) stream past the broadcast probe frame (`tags`…,
+    * q_id, qv, `on`…), self excluded — (`tags`…, q_id, n_id, l2sq,
+    * rank). */
+  private def probedTop10(members: DataFrame, qcells: DataFrame, on: Seq[String],
+                          tags: String*): DataFrame = {
+    val wx = Window.partitionBy((tags :+ "q_id").map(col): _*)
+      .orderBy(asc("l2sq"), asc("n_id"))
+    members.join(broadcast(qcells), on)
+      .filter(col("n_id") =!= col("q_id"))
+      .select((tags.map(col) ++ Seq(col("q_id"), col("n_id"),
+        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))): _*)
+      .withColumn("rank", row_number().over(wx).cast("long"))
+      .filter(col("rank") <= 10)
+  }
+
+  /** Recall overlap: how many of each group's truth pairs the search
+    * returned — the truth (`by`…, q_id, n_id) left-joined to the
+    * broadcast hit pairs, `n_overlap` per `by` group. */
+  private[graft] def overlapCount(truth: DataFrame, hits: DataFrame,
+                                  by: String*): DataFrame = {
+    val keys = (by ++ Seq("q_id", "n_id")).distinct
+    truth.join(broadcast(hits.select(keys.map(col): _*).withColumn("hit", lit(1L))),
+        keys, "left")
+      .groupBy(by.map(col): _*)
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+  }
+
+  /** The q119 IVF pipeline up to its ranked top-10 — shared with the
+    * q148 recall evaluation. */
+  private def ivfTop10(e: DataFrame): DataFrame = {
+    val cents = fit(e)
+    val members = assign(e, cents)
+      .select(col("vec_id").as("n_id"), col("v").as("nv"), col("cluster"))
+    probedTop10(members,
+      rankedCells(evalQueries(e), cents, Nprobe).select("q_id", "qv", "cluster"),
+      Seq("cluster"))
+  }
 
   /** q119: IVF search over the q116 cells — the classic inverted-file
     * ANN query path, here END-TO-END deterministic and oracle-checked
@@ -403,30 +520,6 @@ object KMeans {
     * and nothing ever shuffles. Completes the declared ANN ladder:
     * q34 brute → q61 blocked → q84 binary-quantized → q119 IVF →
     * q114b/q115 PQ. */
-  /** The q119 IVF pipeline up to its ranked top-10 — shared with the
-    * q148 recall evaluation. */
-  private def ivfTop10(e: DataFrame): DataFrame = {
-    val cents = fit(e)
-    val members = assign(e, cents)
-      .select(col("vec_id").as("n_id"), col("v").as("nv"), col("cluster"))
-    val q = e.filter(col("vec_id") < EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wq = Window.partitionBy("q_id").orderBy(asc("cdist"), asc("cluster"))
-    val qcells = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("cluster"),
-        round(sqDist(col("qv"), col("cv")), 6).as("cdist"))
-      .withColumn("crk", row_number().over(wq))
-      .filter(col("crk") <= Nprobe)
-      .select("q_id", "qv", "cluster")
-    val wx = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    members.join(broadcast(qcells), "cluster")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wx).cast("long"))
-      .filter(col("rank") <= 10)
-  }
-
   def q119IvfSearch(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -439,41 +532,20 @@ object KMeans {
     * ground truth — the number an ANN deployment is actually judged
     * by (the q119 scaladoc promises pruning; this measures what the
     * pruning costs in answer quality, per query). Ground truth is the
-    * exact L2 top-10 over the whole corpus (the q34 broadcast-block
-    * shape — affordable for the 10-query eval block; production runs
-    * this on a sampled query set for exactly that reason); overlap
-    * counts via one left join on (q_id, n_id). A cell-probe miss shows
-    * up as recall < 1 on the specific query whose true neighbors sat
-    * in unprobed cells — the signal that tunes Nprobe. */
+    * exact L2 top-10 over the whole corpus ([[exactTop10]] —
+    * affordable for the 10-query eval block; production runs this on
+    * a sampled query set for exactly that reason); overlap counts via
+    * one left join on (q_id, n_id). A cell-probe miss shows up as
+    * recall < 1 on the specific query whose true neighbors sat in
+    * unprobed cells — the signal that tunes Nprobe. */
   def q148IvfRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val ivf = ivfTop10(e).select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    val q = e.filter(col("vec_id") < EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wx = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val truth = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wx))
-      .filter(col("rank") <= 10)
-      .select("q_id", "n_id")
-    truth.join(ivf, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+    overlapCount(exactTop10(e, evalQueries(e)), ivfTop10(e), "q_id")
       .select(col("q_id"), col("n_overlap"),
         round(col("n_overlap") / lit(10.0), 4).as("recall_at_10"))
       .orderBy("q_id")
   }
-
-  /** Probe counts swept by q224 (of K = 16 cells). */
-  val ProbeSweep: Seq[Int] = Seq(1, 2, 4, 8)
-
-  /** Recall eval block for the sweeps: queries are `vec_id <
-    * EvalBlock` (q224/q242/q244 share it, and the oracle SQL
-    * interpolates it — a hardcoded copy desyncs silently). */
-  val EvalBlock = 10
 
   /** q224: IVF nprobe sweep — recall@10 AND vectors-scanned per query
     * at nprobe ∈ {1, 2, 4, 8}: the cost/quality TRADEOFF CURVE behind
@@ -498,42 +570,19 @@ object KMeans {
       // assignment — without the cut each re-runs the K×corpus argmin
       // (this IS the stored index artifact a deployment materializes)
     val cellSizes = members.groupBy("cluster").agg(count(lit(1)).as("csz"))
-    val q = e.filter(col("vec_id") < EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wq = Window.partitionBy("q_id").orderBy(asc("cdist"), asc("cluster"))
+    val q = evalQueries(e)
     val probes = array(ProbeSweep.map(p => lit(p.toLong)): _*)
-    val qcells = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("cluster"),
-        round(sqDist(col("qv"), col("cv")), 6).as("cdist"))
-      .withColumn("crk", row_number().over(wq))
-      .filter(col("crk") <= ProbeSweep.max)
+    val qcells = rankedCells(q, cents, ProbeSweep.max)
       .withColumn("np", explode(probes))
       .filter(col("crk") <= col("np"))
       .select("np", "q_id", "qv", "cluster")
-    val wx = Window.partitionBy("np", "q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val ivf = members.join(broadcast(qcells), "cluster")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("np"), col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wx))
-      .filter(col("rank") <= 10)
-      .select(col("np"), col("q_id"), col("n_id"), lit(1L).as("hit"))
-    val wt = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val truth = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wt))
-      .filter(col("rank") <= 10)
-      .select("q_id", "n_id")
-      .withColumn("np", explode(probes))
+    val ivf = probedTop10(members, qcells, Seq("cluster"), "np")
+    val truth = exactTop10(e, q).withColumn("np", explode(probes))
     // ivf (≤ sweep × queries × 10 rows) and overlap (≤ sweep × queries)
     // are probe-block-bounded at ANY corpus size — broadcast both so
     // the tail of the plan stays exchange-light (the bare joins planned
     // as SortMergeJoins of 40-row frames)
-    val overlap = truth.join(broadcast(ivf), Seq("np", "q_id", "n_id"), "left")
-      .groupBy("np", "q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+    val overlap = overlapCount(truth, ivf, "np", "q_id")
     val scanned = qcells.join(broadcast(cellSizes), "cluster")
       .groupBy("np", "q_id")
       .agg(sum("csz").as("n_raw"))
@@ -547,6 +596,13 @@ object KMeans {
   /** Cell counts swept by q242. */
   val KSweep: Seq[Int] = Seq(8, 16, 32, 64)
 
+  /** q242's per-K centroid tables, tagged by K: every K in [[KSweep]]
+    * seeded from its k lowest ids and fit by ONE [[lloyd]] stream. */
+  private[graft] def kSweepCentroids(e: DataFrame): Seq[(Long, Array[(Long, Seq[Double])])] = {
+    val seeds = seedRows(e, KSweep.max)
+    lloyd(e, KSweep.map(k => (k.toLong, seeds.filter(_._1 < k))), Iters)
+  }
+
   /** q242: IVF cell-count sweep — recall@10, vectors scanned, and fit
     * cost at K ∈ {8, 16, 32, 64} × nprobe ∈ {1, 2, 4, 8}: the OTHER
     * knob a 100 TB deployment tunes (q224 answers "how many cells do I
@@ -558,200 +614,54 @@ object KMeans {
     * are summed over the 10-query eval block: scanned counts exact
     * integers, recall from exact overlap integers (Σoverlap / 100).
     *
-    * Scale shape: the four fits run as ONE Lloyd iteration stream —
-    * each K's centroid table carries a disjoint `kk` tag, the tagged
-    * tables broadcast TOGETHER, and every round is a SINGLE corpus
-    * scan whose argmin windows partition by (kk, vec_id); per-K math
-    * is bit-identical to four independent seeded fits (seeds = the k
+    * Scale shape: the four fits run as ONE [[lloyd]] stream — each K's
+    * centroid table carries a disjoint `kk` tag and every round is a
+    * SINGLE corpus pass over all live tags; per-K math is
+    * bit-identical to four independent seeded fits (seeds = the k
     * lowest ids, the q45b rule; the oracle runs four independent
-    * chains and hash-matches). At 100 TB the corpus scan is the fit's
-    * dominant cost, so sharing it across K divides the sweep's IO by
-    * |sweep| — and at bench scale it divides the job count the same
-    * way (22 s → ~7 s at sf0.1 vs per-K fits). ONE final tagged
-    * assignment (localCheckpointed — the q224 cut; it IS the index
-    * artifact) feeds cell sizes and the probe join; the exact truth
-    * pass runs once, K- and nprobe-independent; probe sets nest, so
-    * the whole sweep is the q224 broadcast-side explode with kk as one
-    * more probe-frame column. fit_dist_evals = n·K·rounds is reported
+    * chains and hash-matches; KMeansSpec pins it). At 100 TB the
+    * corpus scan is the fit's dominant cost, so sharing it across K
+    * divides the sweep's IO by |sweep|. ONE final tagged assignment
+    * (localCheckpointed — the q224 cut; it IS the index artifact)
+    * feeds cell sizes and the probe join; the exact truth pass runs
+    * once, K- and nprobe-independent; probe sets nest, so the whole
+    * sweep is the q224 broadcast-side explode with kk as one more
+    * probe-frame column. fit_dist_evals = n·K·rounds is reported
     * closed-form per K — the number whose growth caps how large a K
     * the build budget allows. */
-  /** q242's per-K centroid tables: every K in [[KSweep]] fit from its
-    * k lowest-id seeds in one tagged Lloyd stream, (kk, table). */
-  private[graft] def kSweepCentroids(e: DataFrame): Seq[(Long, Array[(Long, Seq[Double])])] = {
-    // all four seeded centroid tables, disjoint-tagged by kk — held as
-    // O(Σk) driver state across the rounds (the fit() shape): each
-    // round is ONE corpus scan whose per-kk argmin is a projection
-    // (see bestCentroid), where the window form shuffled Σk×corpus
-    // candidate rows per round
-    val seedRows = e.filter(col("vec_id") < KSweep.max)
-      .select(col("vec_id"), col("v")).collect() // O(max k) bounded
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Double](1)))
-    var cents: Seq[(Long, Array[(Long, Seq[Double])])] =
-      KSweep.map(k => (k.toLong, seedRows.filter(_._1 < k)))
-    // one fused corpus pass per round across ALL kk tables at once —
-    // the fit() round-14 shape applied to the sweep: each row runs the
-    // per-kk NearestL2 argmin kernels (the exact kernels the tagged
-    // explode evaluated) feeding per-(kk, cluster, dim) sum/count
-    // accumulators that treeReduce to the O(Σk×dim) driver state. The
-    // old round exploded |sweep| tagged rows per vector, posexploded
-    // ×dim, and paid two groupBy exchanges + a collect per round;
-    // round(avg, 6) reassociates under the merge exactly as the
-    // partial-agg mean did (the q103b argument — see fit()).
-    val vOnly = e.select(col("v"))
-    var r = 0
-    while (r < Iters) {
-      val live = cents.filter(_._2.nonEmpty)
-      if (live.nonEmpty) {
-        val kers = live.map { case (kk, arr) =>
-          (kk, graft.plans.NearestL2.kernelFor(arr.toSeq))
-        }.toArray
-        val idIdxs = kers.map { case (_, ker) => ker.ids.zipWithIndex.toMap }
-        val kSizes = kers.map(_._2.ids.length)
-        val nKer = kers.length
-        def grown(a: Array[Double], n: Int) =
-          if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
-        def grownL(a: Array[Long], n: Int) =
-          if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
-        val rdd = vOnly.queryExecution.toRdd.mapPartitions { rows =>
-          val sums = Array.tabulate(nKer)(t => Array.fill(kSizes(t))(Array.emptyDoubleArray))
-          val cnts = Array.tabulate(nKer)(t => Array.fill(kSizes(t))(Array.emptyLongArray))
-          rows.foreach { row =>
-            val v = if (row.isNullAt(0)) null else row.getArray(0)
-            var t = 0
-            while (t < nKer) {
-              val ci = idIdxs(t)(kers(t)._2.kernel(v).getLong(1))
-              if (v != null) {
-                val n = v.numElements()
-                if (sums(t)(ci).length < n) {
-                  sums(t)(ci) = grown(sums(t)(ci), n)
-                  cnts(t)(ci) = grownL(cnts(t)(ci), n)
-                }
-                var i = 0
-                while (i < n) {
-                  if (!v.isNullAt(i)) {
-                    sums(t)(ci)(i) += v.getDouble(i); cnts(t)(ci)(i) += 1L
-                  }
-                  i += 1
-                }
-              }
-              t += 1
-            }
-          }
-          Iterator.single((sums, cnts))
-        }
-        if (rdd.getNumPartitions > 0) {
-          val (sums, cnts) = rdd.treeReduce { case ((s1, c1), (s2, c2)) =>
-            var t = 0
-            while (t < s1.length) {
-              var ci = 0
-              while (ci < s1(t).length) {
-                val n = math.max(s1(t)(ci).length, s2(t)(ci).length)
-                s1(t)(ci) = grown(s1(t)(ci), n); c1(t)(ci) = grownL(c1(t)(ci), n)
-                var i = 0
-                while (i < s2(t)(ci).length) {
-                  s1(t)(ci)(i) += s2(t)(ci)(i); c1(t)(ci)(i) += c2(t)(ci)(i)
-                  i += 1
-                }
-                ci += 1
-              }
-              t += 1
-            }
-            (s1, c1)
-          }
-          val means: Map[(Long, Long), Seq[Double]] =
-            kers.zipWithIndex.flatMap { case ((kk, ker), t) =>
-              ker.ids.zipWithIndex.flatMap { case (id, ci) =>
-                val present = (0 until cnts(t)(ci).length).filter(cnts(t)(ci)(_) > 0L)
-                if (present.isEmpty) None
-                else Some((kk, id) -> (present.map(i =>
-                  graft.plans.ArgminKernels.round6(
-                    sums(t)(ci)(i) / cnts(t)(ci)(i))): Seq[Double]))
-              }
-            }.toMap
-          cents = cents.map { case (kk, arr) =>
-            (kk, arr.map { case (cl, cv) => (cl, means.getOrElse((kk, cl), cv)) })
-          }
-        }
-      }
-      r += 1
-    }
-    cents
-  }
-
   def q242KSweep(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val nv = e.agg(count(lit(1)).as("n_vectors"))
-    val q = e.filter(col("vec_id") < EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = evalQueries(e)
     val probes = array(ProbeSweep.map(p => lit(p.toLong)): _*)
     val cents = kSweepCentroids(e)
-    def assignTagged(cm: Seq[(Long, Array[(Long, Seq[Double])])]): DataFrame = {
-      val tagged = cm.filter(_._2.nonEmpty).map { case (kk, arr) =>
-        struct(lit(kk).as("kk"), bestCentroid(arr, col("v")).as("b"))
-      }
+    // one tagged assignment: each vector's per-kk argmin, exploded
+    val tagged = cents.filter(_._2.nonEmpty).map { case (kk, arr) =>
+      struct(lit(kk).as("kk"), bestCentroid(arr, col("v")).as("b"))
+    }
+    val members = (
       if (tagged.isEmpty)
-        e.select(lit(null).cast("long").as("kk"), col("vec_id"), col("v"),
-          lit(null).cast("long").as("cluster"),
-          lit(null).cast("double").as("dist")).limit(0)
+        e.select(lit(null).cast("long").as("kk"), col("vec_id").as("n_id"),
+          col("v").as("nv"), lit(null).cast("long").as("cluster")).limit(0)
       else
-        e.select(col("vec_id"), col("v"),
-            explode(array(tagged: _*)).as("p"))
-          .select(col("p.kk").as("kk"), col("vec_id"), col("v"),
-            col("p.b.id").as("cluster"), col("p.b.dist").as("dist"))
-    }
-    val centsDf = {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("kk",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("cluster",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("cv",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = true),
-          nullable = true)))
-      e.sparkSession.createDataFrame(
-        java.util.Arrays.asList(cents.flatMap { case (kk, arr) =>
-          arr.map { case (cl, cv) => org.apache.spark.sql.Row(kk, cl, cv) }
-        }: _*), schema)
-    }
-    val members = assignTagged(cents)
-      .select(col("kk"), col("vec_id").as("n_id"), col("v").as("nv"),
-        col("cluster"))
-      .localCheckpoint() // one tagged assignment, two consumers (q224)
+        e.select(col("vec_id"), col("v"), explode(array(tagged: _*)).as("p"))
+          .select(col("p.kk").as("kk"), col("vec_id").as("n_id"),
+            col("v").as("nv"), col("p.b.id").as("cluster"))
+      ).localCheckpoint() // one tagged assignment, two consumers (q224)
     val cellSizes = members.groupBy("kk", "cluster").agg(count(lit(1)).as("csz"))
-    val wq = Window.partitionBy("kk", "q_id").orderBy(asc("cdist"), asc("cluster"))
-    val qcells = q.crossJoin(broadcast(centsDf))
-      .select(col("kk"), col("q_id"), col("qv"), col("cluster"),
-        round(sqDist(col("qv"), col("cv")), 6).as("cdist"))
-      .withColumn("crk", row_number().over(wq))
-      .filter(col("crk") <= ProbeSweep.max)
+    val qcells = rankedCells(q, centroidFrame(spark, cents),
+        ProbeSweep.max, "kk")
       .withColumn("np", explode(probes))
       .filter(col("crk") <= col("np"))
       .select("kk", "np", "q_id", "qv", "cluster")
-    val wx = Window.partitionBy("kk", "np", "q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val ivf = members.join(broadcast(qcells), Seq("kk", "cluster"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("kk"), col("np"), col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wx))
-      .filter(col("rank") <= 10)
-      .select(col("kk"), col("np"), col("q_id"), col("n_id"), lit(1L).as("hit"))
+    val ivf = probedTop10(members, qcells, Seq("kk", "cluster"), "kk", "np")
     // exact ground truth: K- and nprobe-independent, enumerated across
     // both sweep axes for the overlap join (still ≤ |K|·|np|·100 rows)
-    val wt = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val truth = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wt))
-      .filter(col("rank") <= 10)
-      .select("q_id", "n_id")
+    val truth = exactTop10(e, q)
       .withColumn("np", explode(probes))
       .withColumn("kk", explode(array(KSweep.map(k => lit(k.toLong)): _*)))
-    val overlap = truth.join(broadcast(ivf), Seq("kk", "np", "q_id", "n_id"), "left")
-      .groupBy("kk", "np")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+    val overlap = overlapCount(truth, ivf, "kk", "np")
     val scanned = qcells.join(broadcast(cellSizes), Seq("kk", "cluster"))
       .groupBy("kk", "np")
       // each query's own cell is its crk = 1 probe and self is never

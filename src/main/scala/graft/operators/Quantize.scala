@@ -190,8 +190,7 @@ object Quantize {
     val dq = quantized(e)
       .select(col("vec_id").as("n_id"),
         transform(col("qvec"), q => q.cast("double") * col("scale")).as("dq"))
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = KMeans.evalQueries(e)
     val wq = Window.partitionBy("q_id").orderBy(asc("l2q"), asc("n_id"))
     val approx = dq.crossJoin(broadcast(q))
       .filter(col("n_id") =!= col("q_id"))
@@ -199,16 +198,9 @@ object Quantize {
         round(sqDist(col("qv"), col("dq")), 6).as("l2q"))
       .withColumn("rank", row_number().over(wq).cast("long"))
       .filter(col("rank") <= 10)
-    // truth: exact float top-10 (the q244 truth pass) — the calibration
-    // cost; a production SQ8 query path runs only the quantized scan
-    val wt = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val truth = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
-      .withColumn("trank", row_number().over(wt))
-      .filter(col("trank") <= 10)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
+    // truth: exact float top-10 — the calibration cost; a production
+    // SQ8 query path runs only the quantized scan
+    val truth = KMeans.exactTop10(e, q).withColumn("hit", lit(1L))
     approx.join(broadcast(truth), Seq("q_id", "n_id"), "left")
       .select(col("q_id"), col("rank"), col("n_id"), col("l2q"),
         coalesce(col("hit"), lit(0L)).as("in_exact_topk"))
@@ -411,23 +403,22 @@ object Quantize {
   def q225PqDistortion(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    pqCodes(e)
-      // a NaN dim makes the whole subvector's dist NaN — drop it from
-      // the report (the q177/q199 NaN-vector rule) instead of ANSI-
-      // throwing on the exact-grid cast; mirrored in the oracle
-      .filter(!isnan(col("dist")))
-      .groupBy("sub")
-      .agg(count(lit(1)).as("n_vectors"),
-        sum(round(col("dist") * 1000000, 0).cast("long").cast("decimal(38,0)"))
-          .as("s6"),
-        max("dist").as("max_sqdist"),
-        countDistinct("code").as("n_codes_used"))
-      .select(col("sub"), col("n_vectors"),
-        round(col("s6").cast("double") / col("n_vectors") / 1000000.0, 6)
-          .as("mean_sqdist"),
-        col("max_sqdist"), col("n_codes_used"))
+    mseBySub(pqCodes(e), "n_vectors", "mean_sqdist",
+        max("dist").as("max_sqdist"), countDistinct("code").as("n_codes_used"))
       .orderBy("sub")
   }
+
+  /** The per-subspace distortion fold of q225, q247 and q251: over a
+    * (sub, code, dist) table, per sub the row count `n`, the mean
+    * squared distance `mse` on the exact ×10⁶ grid, then `extra`. A NaN
+    * dim makes the whole subvector's dist NaN — such rows drop from the
+    * report (the q177/q199 NaN-vector rule) instead of ANSI-throwing on
+    * the grid cast; mirrored in the oracle. */
+  private def mseBySub(codes: DataFrame, n: String, mse: String,
+                       extra: Column*): DataFrame =
+    codes.filter(!isnan(col("dist")))
+      .groupBy("sub")
+      .agg(count(lit(1)).as(n), (KMeans.gridMean(col("dist")).as(mse) +: extra): _*)
 
   /** Exact-rescore depth for [[q244IvfAdc]] (the q84 shortlist size). */
   val RefineR = 30
@@ -686,28 +677,24 @@ object Quantize {
   }
 
   def q244IvfAdc(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val idx = buildIvfAdcIndex(e)
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = KMeans.evalQueries(e)
     val qRows = collectQueryRows(q) // O(|q|): feeds both serve stages
     val cand = ivfAdcCandidatesFrom(idx, qRows)
       .localCheckpoint(true) // ADC chain + the candidate bill both read it
-    val res10 = ivfAdcTop10From(idx, qRows, cand)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    val wt = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val truth = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wt))
-      .filter(col("rank") <= 10)
-      .select("q_id", "n_id")
-    val ov = truth.join(broadcast(res10), Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+    candidateBill(e, q, cand, ivfAdcTop10From(idx, qRows, cand))
+  }
+
+  /** The report q244 and q245 share, per query: the candidate BILL
+    * (n_candidates, codes_scanned = candidates × PqM lookups,
+    * n_shortlist, floats_scanned = (shortlist + K centroids) × dim)
+    * beside recall@10 of the served top-10 `res10` (q_id, n_id)
+    * against the exact truth pass. */
+  private def candidateBill(e: DataFrame, q: DataFrame, cand: DataFrame,
+                            res10: DataFrame): DataFrame = {
+    val ov = KMeans.overlapCount(KMeans.exactTop10(e, q), res10, "q_id")
     val dim = PqM * subDim
     cand.groupBy("q_id").agg(count(lit(1)).as("n_candidates"))
       .join(broadcast(ov), "q_id")
@@ -743,19 +730,10 @@ object Quantize {
       .localCheckpoint(true)
     // codebook = the vec_id < PqK slice of the same frame, so this is
     // exactly the shared zero-exchange coder over the sliced form
-    def codesWithDist(t: DataFrame): DataFrame =
-      seededCodesFromFlat(pqFlat(t))
-    def mseBySub(codes: DataFrame, name: String): DataFrame =
-      codes.filter(!isnan(col("dist")))
-        .groupBy("sub")
-        .agg(count(lit(1)).as(s"n_$name"),
-          sum(round(col("dist") * 1000000, 0).cast("long").cast("decimal(38,0)"))
-            .as("s6"))
-        .select(col("sub"), col(s"n_$name"),
-          round(col("s6").cast("double") / col(s"n_$name") / 1000000.0, 6)
-            .as(s"${name}_mse"))
-    val raw = mseBySub(codesWithDist(e), "raw")
-    val rr = mseBySub(codesWithDist(res.select(col("vec_id"), col("r").as("v"))), "res")
+    def mse(t: DataFrame, name: String): DataFrame =
+      mseBySub(seededCodesFromFlat(pqFlat(t)), s"n_$name", s"${name}_mse")
+    val raw = mse(e, "raw")
+    val rr = mse(res.select(col("vec_id"), col("r").as("v")), "res")
     raw.join(rr, "sub")
       .select(col("sub"), col("n_raw").as("n_vectors"),
         col("raw_mse"), col("res_mse"),
@@ -862,17 +840,8 @@ object Quantize {
         array((0 until subDim).map(t => col("v").getItem(perm(s)(t))): _*)
       }: _*)).as(Seq("sub", "sv")))
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("sv"))
-    def mseBySub(codes: DataFrame, name: String): DataFrame =
-      codes.filter(!isnan(col("dist")))
-        .groupBy("sub")
-        .agg(count(lit(1)).as(s"n_$name"),
-          sum(round(col("dist") * 1000000, 0).cast("long").cast("decimal(38,0)"))
-            .as("s6"))
-        .select(col("sub"), col(s"n_$name"),
-          round(col("s6").cast("double") / col(s"n_$name") / 1000000.0, 6)
-            .as(s"${name}_mse"))
-    val nat = mseBySub(seededCodesFromFlat(pqFlat(e)), "nat")
-    val bal = mseBySub(seededCodesFromFlat(bflat), "bal")
+    val nat = mseBySub(seededCodesFromFlat(pqFlat(e)), "n_nat", "nat_mse")
+    val bal = mseBySub(seededCodesFromFlat(bflat), "n_bal", "bal_mse")
     val wj = Window.partitionBy("sub").orderBy("j")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     def varSum(subCol: Column, name: String): DataFrame =
@@ -1117,14 +1086,8 @@ object Quantize {
     // shared zero-exchange coder
     val rcodes = pqCodesWith(rcb, res.select(col("vec_id"), col("r").as("v")))
       .select("vec_id", "sub", "code")
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wq = Window.partitionBy("q_id").orderBy(asc("cdist"), asc("cluster"))
-    val qcells = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("cluster"), col("cv"),
-        round(sqDist(col("qv"), col("cv")), 6).as("cdist"))
-      .withColumn("crk", row_number().over(wq))
-      .filter(col("crk") <= KMeans.Nprobe)
+    val q = KMeans.evalQueries(e)
+    val qcells = KMeans.rankedCells(q, cents, KMeans.Nprobe)
       .select(col("q_id"), col("cluster"),
         expr("zip_with(qv, cv, (x, y) -> x - y)").as("qrv"))
     // per-(query, probed cell) residual ADC table — |q|·Nprobe·PqM·PqK
@@ -1158,28 +1121,6 @@ object Quantize {
         round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= 10)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    val wt = Window.partitionBy("q_id").orderBy(asc("l2sq"), asc("n_id"))
-    val truth = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
-      .withColumn("rank", row_number().over(wt))
-      .filter(col("rank") <= 10)
-      .select("q_id", "n_id")
-    val ov = truth.join(broadcast(res10), Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
-    val dim = PqM * subDim
-    cand.groupBy("q_id").agg(count(lit(1)).as("n_candidates"))
-      .join(broadcast(ov), "q_id")
-      .select(col("q_id"), col("n_candidates"),
-        (col("n_candidates") * PqM).as("codes_scanned"),
-        least(col("n_candidates"), lit(RefineR.toLong)).as("n_shortlist"),
-        ((least(col("n_candidates"), lit(RefineR.toLong)) + KMeans.K) * dim)
-          .as("floats_scanned"),
-        col("n_overlap"),
-        round(col("n_overlap") / lit(10.0), 4).as("recall_at_10"))
-      .orderBy("q_id")
+    candidateBill(e, q, cand, res10)
   }
 }

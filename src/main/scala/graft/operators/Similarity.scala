@@ -333,10 +333,10 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF-style ANN index: k-means centroids + per-vector cell
-    * assignment. At corpus scale the assigned table is written
-    * partitioned by cell, so a query scans only `nprobe` cells —
-    * the cluster-prune path that replaces N-scan brute force. */
+  /** q45's IVF cells under MLlib's seeded k-means: (centroids,
+    * per-vector cell assignment). The declared, deterministic IVF
+    * probe path is the seeded Lloyd fit in [[KMeans]] and its stored
+    * index (IvfStore). */
   def ivfIndex(spark: SparkSession, dir: String, k: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
@@ -352,23 +352,6 @@ object Similarity {
       .map { case (c, i) => (i.toLong, c.toArray) }.toSeq
       .toDF("cell", "centroid")
     (centroids, assigned)
-  }
-
-  /** Query the IVF index: rank cells by query-to-centroid cosine, scan
-    * the top `nprobe` cells, exact cosine within. The centroid table is
-    * index metadata (k rows) — driver-side by design. */
-  def ivfTopK(assigned: DataFrame, centroids: DataFrame, query: Array[Double],
-              k: Int, nprobe: Int): DataFrame = {
-    val qv = array(query.map(lit): _*)
-    val probeCells = centroids
-      .select(col("cell"), CosineSim.cosine(col("centroid").cast("array<double>"), qv).as("sim"))
-      .orderBy(desc("sim")).limit(nprobe)
-      .select("cell").collect().map(_.getLong(0))
-    assigned
-      .filter(col("cell").isin(probeCells.toSeq: _*))
-      .select(col("vec_id"), CosineSim.cosine(col("v"), qv).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(k)
   }
 
   /** q45 (rows-only): IVF cell histogram — index build + assignment

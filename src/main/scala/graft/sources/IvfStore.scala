@@ -1083,8 +1083,7 @@ object IvfStore {
     if (e.agg(max("vec_id")).head().isNullAt(0))
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("q_id", "rank", "n_id", "l2sq")
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = KMeans.evalQueries(e)
     val path = graft.Scratch.dir("q262-ivf-store")
     // writeFitted persists the exact buildIvfAdcIndex artifacts (same
     // fit, same codebook, same argmin contracts) as one fused posting
@@ -1170,8 +1169,7 @@ object IvfStore {
     writeFitted(e.filter(col("vec_id") <= cutoff), path)
     append(spark, path, e.filter(col("vec_id") > cutoff))
     retrain(spark, path)
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = KMeans.evalQueries(e)
     servedTop10(spark, path, q).orderBy("q_id", "rank")
   }
 
@@ -1216,8 +1214,7 @@ object IvfStore {
     if (path.isEmpty)
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("q_id", "rank", "n_id", "l2sq")
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = KMeans.evalQueries(e)
     servedTop10(spark, path, q).orderBy("q_id", "rank")
   }
 }

@@ -156,31 +156,6 @@ class ScaleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("IVF assigned table written partitionBy(cell) prunes to exactly nprobe cells") {
-    import graft.operators.Similarity
-    val (centroids, assigned) = Similarity.ivfIndex(spark, sf0001, k = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft-ivf").resolve("assigned").toString
-    // one task per cell => one file per cell directory
-    assigned.repartition(8, col("cell")).write.mode("overwrite").partitionBy("cell").parquet(out)
-    val onDisk = spark.read.parquet(out)
-    val query = Tables.embeddings(spark, sf0001).filter(col("vec_id") === 3)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val nprobe = 3
-      val top = Similarity.ivfTopK(onDisk, centroids, query, k = 5, nprobe = nprobe)
-      assert(top.collect().length == 5)
-      val scan = top.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-      // the cluster-prune claim (SCALING.md): a probe scans nprobe cells,
-      // not the corpus — exactly nprobe of the 8 per-cell files
-      assert(scan.metrics("numFiles").value == nprobe.toLong,
-        s"expected $nprobe files scanned, got ${scan.metrics("numFiles").value}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
   test("runtime bloom filter from a selective dimension side prunes the fact scan") {
     // at 100 TB the single biggest join lever after broadcast is the
     // runtime (bloom) filter: the selective side's keys are sketched and
