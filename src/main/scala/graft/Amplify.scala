@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: build the amplified corpora behind SCALING.md's "Measured
@@ -16,22 +15,15 @@ object Amplify {
   def main(args: Array[String]): Unit = {
     val Array(src, dest, docCopiesS, vecCopiesS) = args.take(4)
     val (docCopies, vecCopies) = (docCopiesS.toInt, vecCopiesS.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     val slot = 1000000L
     // repartition before every write: the base sf tables are single
     // small files, so the crossJoin output inherits ONE partition and
     // lands as ONE compressed file — which then feeds every
     // explode-heavy first stage as a single scan task and serializes
-    // the very measurements this corpus exists for. cpus splittable
-    // files restore honest scan parallelism.
-    val splits = cpus.toInt
+    // the very measurements this corpus exists for. One splittable
+    // file per core restores honest scan parallelism.
+    val splits = spark.sparkContext.defaultParallelism
 
     Tables.documents(spark, src)
       .crossJoin(spark.range(docCopies).toDF("copy"))

@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4)
+    val cpus = spark.sparkContext.defaultParallelism
     // Execute the FULL plan: under count() Catalyst prunes unreferenced
     // projections and EliminateSorts drops final sorts, so projection-
     // heavy queries would be partially un-measured. The noop sink pulls
@@ -84,7 +77,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         // pmod keeps the ANSI-mode sum bounded (128M x 1e9 << Long.Max)
-        spark.range(0L, 128000000L, 1L, cpus.toInt)
+        spark.range(0L, 128000000L, 1L, cpus)
           .select(pmod(xxhash64(col("id")), lit(1000000007L)).as("h"))
           .agg(sum("h"))
           .write.format("noop").mode("overwrite").save()
@@ -109,7 +102,7 @@ object Bench {
       def once(i: Int): Double = {
         val dir = Scratch.dir(s"bench-io-anchor-$i")
         val t0 = System.nanoTime()
-        spark.range(0L, 4000000L, 1L, cpus.toInt)
+        spark.range(0L, 4000000L, 1L, cpus)
           .select(col("id"), xxhash64(col("id")).as("h"))
           .write.mode("overwrite").parquet(dir)
         spark.read.parquet(dir)

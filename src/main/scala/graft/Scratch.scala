@@ -1,7 +1,7 @@
 package graft
 
 /** Driver-local scratch directories for queries that persist an
-  * intermediate store (q262/q263/q268, RunOne's ivf_serve probe).
+  * intermediate store (q262/q263/q268).
   *
   * Two leaks this exists to close (ADVICE r12): a fresh
   * `Files.createTempDirectory` per invocation accumulates one

@@ -922,7 +922,7 @@ object SparkEntry {
 
     "q114b_pq_adc_topk" ->
       s"""WITH $pqCodesCte,
-         |qf AS (SELECT vec_id AS q_id, sub, sv AS qsv FROM flat WHERE vec_id < 10),
+         |qf AS (SELECT vec_id AS q_id, sub, sv AS qsv FROM flat WHERE vec_id < ${operators.KMeans.EvalBlock}),
          |lut AS (SELECT q.q_id, q.sub, cb.code,
          |          round(${sqDistSql("q.qsv", "cb.cv")}, 6) AS d
          |        FROM qf q JOIN cb ON q.sub = cb.sub),
@@ -938,7 +938,7 @@ object SparkEntry {
 
     "q115_pq_rerank" ->
       s"""WITH $pqCodesCte,
-         |qf AS (SELECT vec_id AS q_id, sub, sv AS qsv FROM flat WHERE vec_id < 10),
+         |qf AS (SELECT vec_id AS q_id, sub, sv AS qsv FROM flat WHERE vec_id < ${operators.KMeans.EvalBlock}),
          |lut AS (SELECT q.q_id, q.sub, cb.code,
          |          round(${sqDistSql("q.qsv", "cb.cv")}, 6) AS d
          |        FROM qf q JOIN cb ON q.sub = cb.sub),
@@ -982,7 +982,7 @@ object SparkEntry {
       s"""WITH $kmeansCte,
          |mem AS (SELECT a.vec_id AS n_id, a.cluster, e.v AS nv
          |        FROM af a JOIN e ON e.vec_id = a.vec_id),
-         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${operators.KMeans.EvalBlock}),
          |qc AS (SELECT q_id, qv, cluster FROM (
          |    SELECT q_id, qv, cluster, row_number() OVER
          |      (PARTITION BY q_id ORDER BY cdist, cluster) AS crk
@@ -1006,7 +1006,7 @@ object SparkEntry {
       s"""WITH $kmeansCte,
          |mem AS (SELECT a.vec_id AS n_id, a.cluster, e.v AS nv
          |        FROM af a JOIN e ON e.vec_id = a.vec_id),
-         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${operators.KMeans.EvalBlock}),
          |qc AS (SELECT q_id, qv, cluster FROM (
          |    SELECT q_id, qv, cluster, row_number() OVER
          |      (PARTITION BY q_id ORDER BY cdist, cluster) AS crk
@@ -1497,8 +1497,8 @@ object SparkEntry {
 
     // truncated-dim cosine via list slices; truth = the width-64 rank
     "q152_mrl_recall" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${operators.KMeans.EvalBlock}),
         |wd AS (SELECT unnest([8, 16, 32, 64]) AS width),
         |sims AS (SELECT w.width, q.q_id, c.vec_id,
         |    round(list_cosine_similarity(q.qv[1:w.width], c.v[1:w.width]), 6) AS cos_sim
@@ -1933,7 +1933,7 @@ object SparkEntry {
           .stripMargin
       }.mkString(",\n")
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${operators.KMeans.EvalBlock}),
          |sims AS (SELECT q_id, e.vec_id, e.v,
          |           round(list_cosine_similarity(qv, v), 6) AS rel
          |         FROM e CROSS JOIN q WHERE e.vec_id <> q_id),
@@ -2652,7 +2652,7 @@ object SparkEntry {
     // bit_count(xor), all rank ties broken on vec_id, cosines rounded
     // before ranking.
     "q84_binary_quant_knn" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |sig AS (SELECT vec_id, v,
         |  list_reduce(list_prepend(0::BIGINT, list_transform(v[1:16],  x -> CASE WHEN x > 0 THEN 1::BIGINT ELSE 0::BIGINT END)), (a, b) -> a*2 + b) AS b0,
         |  list_reduce(list_prepend(0::BIGINT, list_transform(v[17:32], x -> CASE WHEN x > 0 THEN 1::BIGINT ELSE 0::BIGINT END)), (a, b) -> a*2 + b) AS b1,
@@ -2660,7 +2660,7 @@ object SparkEntry {
         |  list_reduce(list_prepend(0::BIGINT, list_transform(v[49:64], x -> CASE WHEN x > 0 THEN 1::BIGINT ELSE 0::BIGINT END)), (a, b) -> a*2 + b) AS b3
         |  FROM e),
         |q AS (SELECT vec_id AS q_id, v AS qv, b0 AS qb0, b1 AS qb1, b2 AS qb2, b3 AS qb3
-        |      FROM sig WHERE vec_id < 10),
+        |      FROM sig WHERE vec_id < ${operators.KMeans.EvalBlock}),
         |ham AS (SELECT q_id, s.vec_id AS n_id, qv, s.v,
         |          CAST(bit_count(xor(qb0, b0)) + bit_count(xor(qb1, b1))
         |             + bit_count(xor(qb2, b2)) + bit_count(xor(qb3, b3)) AS BIGINT) AS hamming
@@ -3194,8 +3194,8 @@ object SparkEntry {
          |FROM r GROUP BY source ORDER BY source""".stripMargin,
 
     "q34_knn_cosine" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${operators.KMeans.EvalBlock}),
         |scored AS (SELECT q_id, e.vec_id AS n_id,
         |                  round(list_cosine_similarity(qv, v), 6) + 0.0 AS cos_sim
         |           FROM e CROSS JOIN q WHERE e.vec_id <> q_id),

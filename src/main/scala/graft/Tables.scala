@@ -190,44 +190,15 @@ object Tables {
     * bounds into DIRECTORY pruning — a day-bounded scan lists days, not
     * history. The pre-write shuffle hash-partitions on the date so each
     * day is written by few tasks → few files per day directory
-    * (small-file hygiene).
-    *
-    * `filesPerDay` is the hot-day straggler control: with the default 1
-    * a whole day funnels through ONE write task — fine at test scale,
-    * a straggler when one day holds TBs. `filesPerDay = N` adds a salt
-    * (`hash(event_id) mod N`, the Skew.scala salting precedent) as a
-    * second repartition key so a hot day spreads over up to N parallel
-    * writers while still landing in its one `event_date=` directory —
-    * readers and pruning are layout-identical, there are just N files
-    * inside the hot directories. */
+    * (small-file hygiene). */
   def writeEventsPartitionedByDay(spark: SparkSession, srcDir: String,
-                                  path: String, filesPerDay: Int = 1): Unit =
-    writeEventsPartitionedByDay(events(spark, srcDir), path, filesPerDay)
-
-  /** Same, from an already-normalized events DataFrame. */
-  def writeEventsPartitionedByDay(events: DataFrame, path: String): Unit =
-    writeEventsPartitionedByDay(events, path, 1)
-
-  /** Same, with the hot-day salt width explicit. */
-  def writeEventsPartitionedByDay(events: DataFrame, path: String,
-                                  filesPerDay: Int): Unit = {
-    require(filesPerDay >= 1, s"filesPerDay must be >= 1, got $filesPerDay")
-    val dated = events.withColumn("event_date", to_date(col("ts")))
-    val spread =
-      if (filesPerDay == 1) dated.repartition(col("event_date"))
-      // salt on event_id (unique, uniform under hash) — the salt is a
-      // repartition EXPRESSION only, never a written column. The count
-      // is pinned explicitly: an un-sized repartition lets AQE coalesce
-      // the small shuffle back into few tasks, which silently re-merges
-      // every day's salt buckets into one file (observed at test scale).
-      else dated.repartition(
-        dated.sparkSession.sessionState.conf.numShufflePartitions,
-        col("event_date"), pmod(hash(col("event_id")), lit(filesPerDay)))
-    spread
+                                  path: String): Unit =
+    events(spark, srcDir)
+      .withColumn("event_date", to_date(col("ts")))
+      .repartition(col("event_date"))
       .write.mode("overwrite")
       .partitionBy("event_date")
       .parquet(path)
-  }
 
   /** Day-bounded events scan, `fromDay` inclusive to `untilDay`
     * exclusive (ISO dates). The bound is applied BOTH as a partition

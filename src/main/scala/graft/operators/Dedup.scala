@@ -122,28 +122,6 @@ object Dedup {
       .limit(20)
   }
 
-  /** Library API: approximate near-duplicate pairs via MinHashLSH over
-    * word sets. Returns (id_a, id_b, jaccard_dist) with id_a < id_b and
-    * Jaccard distance ≤ `maxDistance`. LSH bounds candidate generation to
-    * bucket collisions — the N²-free path at corpus scale.
-    *
-    * @param docs   (id: long, text: string)
-    * @param maxDistance Jaccard distance threshold (0 = identical sets) */
-  def approxNearDupPairs(docs: DataFrame, maxDistance: Double): DataFrame = {
-    import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
-    val tokens = docs.select(col("id"), Portable.tokenize(col("text")).as("words"))
-      .filter(size(col("words")) > 0)
-    val cv = new CountVectorizer().setInputCol("words").setOutputCol("features")
-      .setBinary(true).setMinDF(1.0)
-    val vecs = cv.fit(tokens).transform(tokens)
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(5).setSeed(42L)
-    val model = lsh.fit(vecs)
-    model.approxSimilarityJoin(vecs, vecs, maxDistance, "jaccard_dist")
-      .select(col("datasetA.id").as("id_a"), col("datasetB.id").as("id_b"), col("jaccard_dist"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
   /** Embedding-simhash blocking constants. `nBands` bands of `bandBits`
     * sign bits each; bit j is the sign of the dot product with a fixed
     * ±1 hyperplane over the first `planeDim` dimensions. Wider bands

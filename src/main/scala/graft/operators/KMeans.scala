@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.L2Dist
 
 /** Seeded fixed-iteration Lloyd k-means over the embedding corpus — the
   * trainable half the IVF (q45) and PQ (q114) indexes were missing from
@@ -33,16 +34,6 @@ object KMeans {
   val K = 16
   /** Fixed Lloyd rounds. */
   val Iters = 3
-
-  /** Codegen'd squared-L2 (graft.plans.L2Dist) — same sequential left
-    * fold as the HOF `aggregate(zip_with(...))` form it replaced
-    * (bit-identical doubles, verified by exceptAll in round 10), but
-    * one allocation-free generated loop: the assignment kernel runs it
-    * corpus × K times per Lloyd round, and the HOF's per-row zipped
-    * array + interpreted lambdas were 3× the whole pass's cost
-    * (2.2 s → 0.75 s per tagged q242 pass at sf0.1). */
-  private def sqDist(a: Column, b: Column): Column =
-    graft.plans.L2Dist.sqDist(a, b)
 
   /** The k collected centroids as literal candidate structs and the
     * argmin as `array_min` — a pure per-row projection. Struct ordering
@@ -264,7 +255,7 @@ object KMeans {
     var chosen = Vector((0L, Option(seed), Option.empty[Double]))
     var cur = e.crossJoin(centerOf(seed))
       .select(col("vec_id"), col("v"),
-        round(sqDist(col("v"), col("cv")), 6).as("cover"))
+        round(L2Dist.sqDist(col("v"), col("cv")), 6).as("cover"))
       .localCheckpoint(true)
     var r = 1L
     var exhausted = false
@@ -280,7 +271,7 @@ object KMeans {
         if (r < KCenterK - 1)
           cur = cur.crossJoin(centerOf(id))
             .select(col("vec_id"), col("v"),
-              least(col("cover"), round(sqDist(col("v"), col("cv")), 6))
+              least(col("cover"), round(L2Dist.sqDist(col("v"), col("cv")), 6))
                 .as("cover"))
             .localCheckpoint(true)
         r += 1
@@ -448,7 +439,7 @@ object KMeans {
     e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(sqDist(col("qv"), col("v")), 6).as("l2sq"))
+        round(L2Dist.sqDist(col("qv"), col("v")), 6).as("l2sq"))
       .withColumn("rank", row_number().over(wt))
       .filter(col("rank") <= 10)
       .select("q_id", "n_id")
@@ -464,7 +455,7 @@ object KMeans {
     val wq = Window.partitionBy((tags :+ "q_id").map(col): _*)
       .orderBy(asc("cdist"), asc("cluster"))
     q.crossJoin(broadcast(cents))
-      .withColumn("cdist", round(sqDist(col("qv"), col("cv")), 6))
+      .withColumn("cdist", round(L2Dist.sqDist(col("qv"), col("cv")), 6))
       .withColumn("crk", row_number().over(wq))
       .filter(col("crk") <= depth)
   }
@@ -480,7 +471,7 @@ object KMeans {
     members.join(broadcast(qcells), on)
       .filter(col("n_id") =!= col("q_id"))
       .select((tags.map(col) ++ Seq(col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))): _*)
+        round(L2Dist.sqDist(col("qv"), col("nv")), 6).as("l2sq"))): _*)
       .withColumn("rank", row_number().over(wx).cast("long"))
       .filter(col("rank") <= 10)
   }

@@ -32,9 +32,8 @@ object Linkage {
     * on within-block pairs of the DISTINCT dictionary — O(Σ blockᵢ²)
     * with blocks bounded by the adjective vocabulary, independent of
     * row count; the dictionary build is one partial-aggregated
-    * distinct. A pathological mega-block would take the Skew.scala
-    * salting route (sub-block on a second cheap key, e.g. name
-    * length band). */
+    * distinct. A pathological mega-block would sub-block on a second
+    * cheap key (e.g. name length band). */
   def q123FuzzyNames(spark: SparkSession, dir: String): DataFrame = {
     val names = Tables.part(spark, dir)
       .select(col("p_name").as("name"))

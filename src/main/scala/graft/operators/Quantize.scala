@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.L2Dist
 
 /** Embedding quantization — the storage/bandwidth half of a similarity
   * system. A 100 TB float32 embedding store drops to 25 TB as int8 with
@@ -138,7 +139,7 @@ object Quantize {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val sig = binarySignatures(e)
-    val queries = asQueryBlock(e.filter(col("vec_id") < 10))
+    val queries = asQueryBlock(e.filter(col("vec_id") < KMeans.EvalBlock))
     val shortlist = bqTopK(sig, queries)
     // truth: exact brute-force cosine top-10 (the q34 plan) — flags which
     // shortlist hits the float-precision search would have returned
@@ -195,7 +196,7 @@ object Quantize {
     val approx = dq.crossJoin(broadcast(q))
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("dq")), 6).as("l2q"))
+        round(L2Dist.sqDist(col("qv"), col("dq")), 6).as("l2q"))
       .withColumn("rank", row_number().over(wq).cast("long"))
       .filter(col("rank") <= 10)
     // truth: exact float top-10 — the calibration cost; a production
@@ -224,15 +225,6 @@ object Quantize {
   /** Centroids per subspace; codes fit one byte with room to spare. */
   val PqK = 16
   private val subDim = 8
-
-  /** Sequential squared-L2 fold over two equal-length arrays — same
-    * left-fold order as the oracle's `list_reduce`, so unrounded values
-    * already agree bit-for-bit (the q76 contract). Since round 10 this
-    * is the codegen'd [[graft.plans.L2Dist]] expression (bit-identical
-    * to the HOF form, 3× faster in the corpus × M × K PQ coding pass —
-    * see the expression's scaladoc). */
-  private def sqDist(a: Column, b: Column): Column =
-    graft.plans.L2Dist.sqDist(a, b)
 
   /** One row per (vector, subspace): (vec_id, sub, sv) — a per-row
     * generate, no shuffle. */
@@ -313,7 +305,7 @@ object Quantize {
   }
 
   /** The ADC scoring core shared by q114b/q115: every corpus vector's
-    * approximate distance to every query (the FIXED vec_id &lt; 10 block —
+    * approximate distance to every query (the FIXED [[KMeans.EvalBlock]] —
     * the q34/q84 bounded-query-block contract, so the ADC fanout is
     * 10×N at any corpus size instead of growing with it) is the SUM
     * of its PqM code lookups in the query's PqM×PqK distance table.
@@ -322,11 +314,11 @@ object Quantize {
     * Fully deterministic (seeded codebook, rounded lookups, vec_id
     * tie-breaks downstream) → oracle-checkable end to end. */
   private def pqAdc(e: DataFrame): DataFrame = {
-    val lut = pqFlat(e.filter(col("vec_id") < 10))
+    val lut = pqFlat(e.filter(col("vec_id") < KMeans.EvalBlock))
       .select(col("vec_id").as("q_id"), col("sub"), col("sv").as("qsv"))
       .join(broadcast(pqCodebook(e)), "sub")
       .select(col("q_id"), col("sub"), col("code"),
-        round(sqDist(col("qsv"), col("cv")), 6).as("d"))
+        round(L2Dist.sqDist(col("qsv"), col("cv")), 6).as("d"))
     pqCodes(e).join(broadcast(lut), Seq("sub", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id").as("n_id"))
@@ -378,7 +370,7 @@ object Quantize {
     e.select(col("vec_id").as("n_id"), col("v").as("nv"))
       .join(broadcast(withQ), "n_id")
       .select(col("q_id"), col("n_id"), col("adc"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
+        round(L2Dist.sqDist(col("qv"), col("nv")), 6).as("l2sq"))
       .withColumn("rank", row_number().over(byExact).cast("long"))
       .filter(col("rank") <= 10)
       .select(col("q_id"), col("rank"), col("n_id"), col("l2sq"), col("adc"))
@@ -499,7 +491,7 @@ object Quantize {
           else raw.map(x => if (x == null) 0.0 else x.doubleValue()).toArray)
       }
 
-  /** `round(sqDist(a, b), 6)` on the driver — the exact [[L2Dist]]
+  /** `round(L2Dist.sqDist(a, b), 6)` on the driver — the exact [[L2Dist]]
     * sequential fold + Spark round semantics ([[graft.plans
     * .ArgminKernels]]); null (boxed) on a null side or length
     * mismatch, matching the expression's null lanes. */
@@ -661,7 +653,7 @@ object Quantize {
       .join(broadcast(short), "n_id")
       .join(broadcast(localQueries), "q_id")
       .select(col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
+        round(L2Dist.sqDist(col("qv"), col("nv")), 6).as("l2sq"))
       .withColumn("rank", row_number().over(wr).cast("long"))
       .filter(col("rank") <= 10)
       .select("q_id", "rank", "n_id", "l2sq")
@@ -1098,7 +1090,7 @@ object Quantize {
       .select(col("q_id"), col("cluster"), col("p.sub").as("sub"), col("p.qsv").as("qsv"))
       .join(broadcast(rcb), "sub")
       .select(col("q_id"), col("cluster"), col("sub"), col("code"),
-        round(sqDist(col("qsv"), col("cv")), 6).as("d"))
+        round(L2Dist.sqDist(col("qsv"), col("cv")), 6).as("d"))
     val cand = res.select(col("vec_id").as("n_id"), col("cluster"))
       .join(broadcast(qcells.select("q_id", "cluster")), "cluster")
       .filter(col("n_id") =!= col("q_id"))
@@ -1118,7 +1110,7 @@ object Quantize {
     val res10 = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
       .join(broadcast(withQ), "n_id")
       .select(col("q_id"), col("n_id"),
-        round(sqDist(col("qv"), col("nv")), 6).as("l2sq"))
+        round(L2Dist.sqDist(col("qv"), col("nv")), 6).as("l2sq"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= 10)
     candidateBill(e, q, cand, res10)

@@ -27,8 +27,7 @@ object Similarity {
   def q34KnnCosine(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = broadcast(e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
+    val queries = broadcast(KMeans.evalQueries(e))
     val scored = e.crossJoin(queries)
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
@@ -167,8 +166,7 @@ object Similarity {
   def q152MrlRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = broadcast(e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
+    val queries = broadcast(KMeans.evalQueries(e))
     val widths = Seq(8, 16, 32, 64)
     val nw = Window.partitionBy("width", "q_id").orderBy(desc("cos_sim"), asc("vec_id"))
     val top = e.crossJoin(queries)
@@ -244,8 +242,7 @@ object Similarity {
   def q161MmrRerank(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = broadcast(e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
+    val queries = broadcast(KMeans.evalQueries(e))
     val relW = Window.partitionBy("q_id").orderBy(desc("rel"), asc("vec_id"))
     val cand = e.crossJoin(queries)
       .filter(col("vec_id") =!= col("q_id"))
@@ -319,18 +316,6 @@ object Similarity {
       .withColumn("rk", row_number().over(nw).cast("long"))
       .filter(col("rk") <= 5)
       .orderBy("q_id", "rk")
-  }
-
-  /** Library API: exact cosine top-k neighbors of an arbitrary query
-    * vector against an embeddings table (vec_id, embedding). The corpus
-    * streams past the broadcast query; one TakeOrderedAndProject. */
-  def topKCosine(embeddings: DataFrame, query: Array[Double], k: Int): DataFrame = {
-    val qv = array(query.map(lit): _*)
-    embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(col("vec_id"), CosineSim.cosine(col("v"), qv).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(k)
   }
 
   /** q45's IVF cells under MLlib's seeded k-means: (centroids,

@@ -5,37 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Skew mitigation for shuffle joins: salting. AQE's skew-join handling
-  * (on by default) splits oversized partitions at runtime and is the
-  * first line of defense; explicit salting is the deterministic fallback
-  * when one join key dominates so heavily that even split partitions
-  * overwhelm a task (the classic null-key / power-law-entity case at
-  * 100 TB).
-  *
-  * Shape: the skewed (big) side gets a salt in [0, factor) derived by
-  * hashing the whole row — deterministic, so retries/speculation see the
-  * same salt; the small side is replicated `factor` times. The join key
-  * becomes (key, salt): one hot key now spreads over `factor` tasks at
-  * the cost of `factor`× the small side's shuffle volume.
+/** Key-distribution reports: how keys spread over shards and joins.
+  * Skewed joins themselves are left to AQE's skew-join handling (on by
+  * default), which splits oversized partitions at runtime; these
+  * queries measure the distributions that decide placement and join
+  * plans, on the real key population:
+  *   - q164: keys moved on a re-shard, modulo vs rendezvous placement;
+  *   - q170: estimated vs true join sizes, System-R vs heavy hitters.
   */
 object Skew {
-
-  /** Deterministic per-row salt in [0, factor). */
-  def salt(allCols: Seq[Column], factor: Int): Column =
-    pmod(xxhash64(allCols: _*), lit(factor.toLong)).cast("int")
-
-  /** Inner equi-join `big ⋈ small` on big(key) == small(key), salted.
-    * Result equals the plain join (verified in tests); only the physical
-    * distribution changes. */
-  def saltedJoin(big: DataFrame, small: DataFrame, bigKey: String,
-                 smallKey: String, factor: Int): DataFrame = {
-    val salted = big.withColumn("__salt", salt(big.columns.map(col).toSeq, factor))
-    val replicated = small.withColumn("__salt",
-      explode(array((0 until factor).map(i => lit(i)): _*)))
-    salted.join(replicated,
-        salted(bigKey) === replicated(smallKey) && salted("__salt") === replicated("__salt"))
-      .drop("__salt")
-  }
 
   /** Old and new shard counts for [[q164ShardMoves]]. */
   val ShardsBefore = 8

@@ -157,8 +157,7 @@ object Stats {
     * histogram (top-10, never a global sort) and the entropy from one
     * more O(1)-state agg — so the report costs O(distinct keys)
     * intermediate rows, not O(corpus). This is the measurement that
-    * justifies Skew.scala's salting and the hot-day `filesPerDay`
-    * split. */
+    * decides whether a key needs more than AQE's skew-join split. */
   def q138SkewReport(spark: SparkSession, dir: String): DataFrame = {
     def report(df: DataFrame, rel: String, key: String): DataFrame = {
       val hist = df.groupBy(col(key).cast("string").as("k"))

@@ -12,8 +12,8 @@ import graft.Tables
   * the series key (user_id / event_type), so each executor sorts only
   * its own keys' rows — the per-key window is the 100 TB shape as long
   * as no single key dominates (users and event types are both
-  * high-cardinality/bounded-fanout here; a hot key would take the
-  * Skew.scala salting route). */
+  * high-cardinality/bounded-fanout here; a hot key would need AQE's
+  * skew split or a salted sub-key). */
 object Temporal {
 
   /** q111: SCD-type-2 interval build — collapse each user's event

@@ -500,7 +500,7 @@ object TextAnalysis {
     * set. Priority within a source is the content hash (tie-broken by
     * doc_id), so which docs survive is again independent of ingest
     * order. One rank window partitioned by source (shuffle keyed on
-    * source — salting applies if one domain dominates, see Skew), one
+    * source — a salted sub-key applies if one domain dominates), one
     * partial-aggregated rollup. */
   def q67SourceCap(spark: SparkSession, dir: String): DataFrame = {
     val cap = 15

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table support: the co-located-join path for repeated big
   * joins. Writing both fact tables bucketed+sorted by the join key means
@@ -12,68 +11,13 @@ import org.apache.spark.sql.functions._
   * uses (bucket pruning, exchange elision). */
 object Bucketing {
 
-  /** Write `df` as a bucketed, per-bucket-sorted managed table. */
+  /** Write `df` as a bucketed, per-bucket-sorted managed table. Two
+    * tables written with the same bucket count on their join keys join
+    * with NO shuffle exchange on either side. */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     df.write.mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Join two tables previously written with [[writeBucketed]] on their
-    * bucket key: with matching bucket counts Catalyst plans a sort-merge
-    * join with NO shuffle exchange on either side. */
-  def cojoin(spark: SparkSession, left: String, right: String,
-             leftKey: String, rightKey: String): DataFrame =
-    spark.table(left).join(spark.table(right),
-      spark.table(left)(leftKey) === spark.table(right)(rightKey))
-
-  /** Morton (Z-order) value of two dimension columns: each is quantized
-    * to `bits` bits against its [lo, hi] range, then the bits are
-    * interleaved, so rows close in BOTH dimensions get close z values.
-    * Sorting the layout by z therefore clusters every 2-D box into few
-    * row groups — the multi-dimensional generalization of sorting by one
-    * key, and the same layout trick Delta/Iceberg expose as `ZORDER BY`.
-    * Pure column arithmetic (quantize, mask, shift) — codegen'd, no UDF. */
-  def zorderValue(x: Column, y: Column,
-                  xLo: Double, xHi: Double, yLo: Double, yHi: Double,
-                  bits: Int = 12): Column = {
-    require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
-    val n = (1L << bits).toDouble
-    def quant(c: Column, lo: Double, hi: Double): Column =
-      least(greatest(floor((c.cast("double") - lo) / (hi - lo) * n), lit(0.0)),
-        lit(n - 1)).cast("long")
-    val xq = quant(x, xLo, xHi)
-    val yq = quant(y, yLo, yHi)
-    (0 until bits).map { b =>
-      shiftleft(shiftright(xq, b).bitwiseAND(lit(1L)), 2 * b + 1) +
-        shiftleft(shiftright(yq, b).bitwiseAND(lit(1L)), 2 * b)
-    }.reduce(_ + _)
-  }
-
-  /** Write `df` clustered by the Z-order of two dimension columns.
-    * Ranges come from one tiny min/max aggregate (4 scalars — index
-    * metadata, driver-safe at any scale); the data is range-partitioned
-    * and sorted by z so parquet row-group (and page-index) min/max stats
-    * become selective for 2-D box predicates — the reader skips row
-    * groups a single-column sort could never skip. `rowGroupBytes`
-    * controls pruning granularity: production keeps the parquet default
-    * (~128 MB); the ScaleSpec demonstration shrinks it so the effect is
-    * visible at test scale. */
-  def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
-                    files: Int = 8, bits: Int = 12,
-                    rowGroupBytes: Long = 128L * 1024 * 1024): Unit = {
-    val r = df.agg(
-      min(col(xCol)).cast("double"), max(col(xCol)).cast("double"),
-      min(col(yCol)).cast("double"), max(col(yCol)).cast("double")).head()
-    val z = zorderValue(col(xCol), col(yCol),
-      r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite")
-      .option("parquet.block.size", rowGroupBytes.toString)
-      .parquet(path)
-  }
 }

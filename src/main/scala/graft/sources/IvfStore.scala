@@ -688,38 +688,6 @@ object IvfStore {
   private def batchPrefix(tag: String, batchId: Long): String =
     s"b-$tag-$batchId-"
 
-  /** One-time migration of pre-lineage (round-13-and-earlier) flat
-    * commit markers (`_batches/<batchId>` files) into `lineage`'s
-    * scoped directory, so replaying THAT query's existing checkpoint
-    * against an old store no-ops on its already-committed batches
-    * instead of re-filing them as duplicate postings (ADVICE r13).
-    *
-    * Deliberately NOT automatic inside [[commitBatch]]: a flat marker
-    * carries no lineage, so only the operator knows which query wrote
-    * it — honoring it for every lineage would resurrect the exact
-    * new-query data-loss bug the scoped layout fixed. Call once, for
-    * the original query's lineage, before restarting it; any OTHER
-    * lineage (fresh checkpoint) correctly ignores flat markers and
-    * re-files from offset zero. Returns the number migrated. */
-  def migrateLegacyMarkers(spark: SparkSession, path: String,
-                           lineage: String): Int = {
-    val p = new Path(path)
-    val fs = fsOf(spark, p)
-    val batches = new Path(p, "_batches")
-    if (!fs.exists(batches)) return 0
-    val tag = lineageTag(lineage)
-    val flat = fs.listStatus(batches).filter(s =>
-      s.isFile && s.getPath.getName.nonEmpty &&
-        s.getPath.getName.forall(_.isDigit))
-    flat.foreach { s =>
-      val scoped = new Path(batches, s"$tag/${s.getPath.getName}")
-      fs.mkdirs(scoped.getParent)
-      fs.create(scoped, true).close()
-      fs.delete(s.getPath, false)
-    }
-    flat.length
-  }
-
   /** Serve the q244 query path (probe → ADC → refine, top-10 per
     * query) from a stored index, reading ONLY the probed cells'
     * directories. `queries` is (q_id, qv), broadcast-sized by the
@@ -840,7 +808,7 @@ object IvfStore {
         val tmp = new Path(root, s".compact-${dir.getName}")
         // one task writes the merged cell (a cell is one task's worth
         // by the write() contract; a TB-scale hot cell would raise
-        // the coalesce count the way filesPerDay salts q108's days)
+        // the coalesce count)
         spark.read.parquet(dir.toString)
           .coalesce(1)
           .write.mode("overwrite").parquet(tmp.toString)

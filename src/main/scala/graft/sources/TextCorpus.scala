@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Output (R2): the reference writes "key,value" text via
   * `TextOutputFormat` with separator "," plus a `_SUCCESS` marker
-  * (`MapRedWord2Vec.scala:249-251,272`). `df.write.csv` goes through the
-  * same Hadoop committer and emits `_SUCCESS` identically; formatting
-  * stays a sink concern (SURVEY.md §1).
+  * (`MapRedWord2Vec.scala:249-251,272`). The CLI's sink is
+  * [[graft.Word2VecDriver.sinkLines]] written with `write.text`, which
+  * goes through the same Hadoop committer and emits `_SUCCESS`
+  * identically; formatting stays a sink concern (SURVEY.md §1).
   */
 object TextCorpus {
 
@@ -24,26 +25,4 @@ object TextCorpus {
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.textFile(dir).toDF("value")
       .withColumn("file", input_file_name())
-
-  /** Reference-format sink: writes (word, token, count[, ...]) rows as
-    * comma-separated text + _SUCCESS, one part file per partition. For a
-    * 100 TB run you'd keep parquet; this sink exists for byte-level
-    * parity with the reference's output contract. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("sep", ",").csv(path)
-
-  /** JSON-lines sink — the interchange format LLM-data pipelines expect
-    * (one JSON document per line, splittable when uncompressed, same
-    * Hadoop committer semantics as the CSV sink). */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** JSON-lines source with an EXPLICIT schema. Never rely on inference
-    * at scale: `spark.read.json` without a schema runs a full extra pass
-    * over the data just to infer one, and silently widens mixed types.
-    * With the schema supplied the scan is single-pass and malformed rows
-    * land in PERMISSIVE-mode nulls rather than killing the job. */
-  def readJsonl(spark: SparkSession, path: String,
-                schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).json(path)
 }

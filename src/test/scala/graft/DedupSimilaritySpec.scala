@@ -38,34 +38,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("approxNearDupPairs finds planted exact and near duplicates, not distinct docs") {
-    val docs = Seq(
-      (0L, base),
-      (1L, base),                                   // exact duplicate of 0
-      (2L, base.replace("today", "tomorrow")),      // near duplicate
-      (3L, "completely different words about spark catalyst optimizer plans and shuffles"),
-    ).toDF("id", "text")
-    val pairs = Dedup.approxNearDupPairs(docs, maxDistance = 0.4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(pairs.contains((0L, 2L)) || pairs.contains((1L, 2L)))
-    assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
-  }
-
-  test("topKCosine ranks a duplicate vector first") {
-    val target = Array(1.0, 2.0, 3.0, 4.0)
-    val emb = Seq(
-      (0L, target),
-      (1L, Array(4.0, 3.0, 2.0, 1.0)),
-      (2L, Array(1.0, 2.0, 3.0, 4.1)),   // near-identical direction
-      (3L, Array(-1.0, -2.0, -3.0, -4.0)),
-    ).toDF("vec_id", "embedding")
-    val top = Similarity.topKCosine(emb, target, 2)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(top.head == 0L)     // exact duplicate: cosine 1
-    assert(top(1) == 2L)       // then the near-identical one
-  }
-
   test("blocked-exact q49 is a subset of brute force with identical scores and no nested-loop join") {
     val blocked = Dedup.q49EmbeddingNearDup(spark, TestSpark.sf0001)
     val plan = blocked.queryExecution.executedPlan.toString

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Skew
 import graft.sources.Bucketing
 
 /** Scale-path mechanics: bucketed joins must plan without shuffle
-  * exchanges; salted joins must return exactly the plain join's rows. */
+  * exchanges; layouts and guards must prune or degrade without
+  * changing answers. */
 class ScaleSpec extends AnyFunSuite {
   import TestSpark.{spark, sf0001}
 
@@ -19,7 +19,8 @@ class ScaleSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Bucketing.cojoin(spark, "b_lineitem", "b_orders", "l_orderkey", "o_orderkey")
+      val joined = spark.table("b_lineitem")
+        .join(spark.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
@@ -121,41 +122,6 @@ class ScaleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("filesPerDay salt spreads a hot day over parallel writers, pruning intact") {
-    // VERDICT r05 task 4: one-task-per-day is a straggler when a day is
-    // hot; the salted writer must produce multiple files inside a hot
-    // day's directory while keeping one-directory-per-day pruning
-    val hot = Tables.events(spark, sf0001) // all 1000 rows in 30 days; make day 02 hot
-    val dir = java.nio.file.Files.createTempDirectory("graft-salt").toString
-    Tables.writeEventsPartitionedByDay(hot, s"$dir/events.parquet", filesPerDay = 4)
-    val dayDirs = new java.io.File(s"$dir/events.parquet").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
-    assert(dayDirs.length == 30, s"expected 30 day dirs, got ${dayDirs.length}")
-    val fileCounts = dayDirs.map(_.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(fileCounts.exists(_ > 1),
-      s"salted write must spread at least one day over >1 file, got ${fileCounts.toSeq}")
-    assert(fileCounts.forall(_ <= 4), "no day may exceed filesPerDay files")
-    // layout-identical to readers: same rows, and pruning still works
-    val flat = Tables.events(spark, sf0001)
-    val part = Tables.events(spark, dir)
-    assert(part.exceptAll(flat).isEmpty && flat.exceptAll(part).isEmpty,
-      "salted layout must decode to identical rows")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val bounded = Tables.eventsBetween(spark, dir, "2024-01-02", "2024-01-03")
-      val scan = bounded.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-      bounded.collect()
-      val expected = fileCounts(dayDirs.indexWhere(_.getName == "event_date=2024-01-02"))
-      assert(scan.partitionFilters.nonEmpty &&
-        scan.metrics("numFiles").value == expected.toLong,
-        s"pruned scan must read only day 02's $expected salted files, " +
-          s"got ${scan.metrics("numFiles").value}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
   test("runtime bloom filter from a selective dimension side prunes the fact scan") {
     // at 100 TB the single biggest join lever after broadcast is the
     // runtime (bloom) filter: the selective side's keys are sketched and
@@ -207,50 +173,6 @@ class ScaleSpec extends AnyFunSuite {
     val rankErr = math.abs(rank - 0.9 * n)
     assert(rankErr <= 2.0 * n / accuracy,
       s"approx p90 rank off by $rankErr of $n rows (bound ${2.0 * n / accuracy})")
-  }
-
-  test("z-ordered layout prunes row groups for 2-D box predicates") {
-    // The multi-dim layout lever: a 100 TB fact table queried by two
-    // independent dimensions can't be sorted by both, but it CAN be
-    // z-ordered. Write the same rows (a) in natural order and (b)
-    // z-ordered by (l_partkey, l_suppkey), with small row groups so the
-    // effect is visible at test scale, then run the same 2-D box filter
-    // against both and compare how many rows the parquet reader actually
-    // surfaced after row-group/page-stat skipping.
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder")
-    val cols = Seq("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
-    val df = Tables.lineitem(spark, "/root/testdata/sf0.01").select(cols.map(col): _*)
-    val natural = dir.resolve("natural").toString
-    val zordered = dir.resolve("zordered").toString
-    df.repartition(1)
-      .write.option("parquet.block.size", "65536").parquet(natural)
-    Bucketing.writeZOrdered(df, zordered, "l_partkey", "l_suppkey",
-      files = 1, rowGroupBytes = 65536L)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      def scannedRows(path: String): (Long, Long) = {
-        val q = spark.read.parquet(path)
-          .filter(col("l_partkey").between(100, 300) && col("l_suppkey").between(10, 40))
-        // execute THIS plan (collect), then read its scan metrics —
-        // count() would build and run a different plan, leaving these at 0
-        val kept = q.collect().length.toLong
-        val scan = q.queryExecution.executedPlan.collectLeaves().collectFirst {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.get
-        (scan.metrics("numOutputRows").value, kept)
-      }
-      val (naturalScanned, naturalKept) = scannedRows(natural)
-      val (zScanned, zKept) = scannedRows(zordered)
-      assert(zKept == naturalKept, "layouts must agree on the answer")
-      assert(naturalKept > 0, "box predicate should match something")
-      // natural order is uncorrelated with the box, so its row-group
-      // stats prune nothing; the z-ordered layout concentrates the box
-      info(s"scan rows surfaced: natural=$naturalScanned z-ordered=$zScanned " +
-        f"(${naturalScanned.toDouble / zScanned}%.1f× pruning)")
-      assert(zScanned * 4 <= naturalScanned,
-        s"expected ≥4× row-group pruning: z-ordered scanned $zScanned, natural $naturalScanned")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
   test("model broadcast guard: web-scale vocab degrades to a shuffle join, same result") {
@@ -561,16 +483,6 @@ class ScaleSpec extends AnyFunSuite {
       val want = SparkEntry.queries("q106_snapshot_delta")(spark, sf0001).collect().toSeq
       assert(delta.collect().toSeq == want, "bucketed path must return the same delta")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("salted join returns exactly the plain join result") {
-    val lineitem = Tables.lineitem(spark, sf0001).select("l_orderkey", "l_quantity", "l_partkey")
-    val orders = Tables.orders(spark, sf0001).select("o_orderkey", "o_orderpriority")
-    val plain = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
-    val salted = Skew.saltedJoin(lineitem, orders, "l_orderkey", "o_orderkey", 8)
-    assert(salted.count() == plain.count())
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
   }
 
   test("retention fold plans one user-keyed pass over sightings, no self-join") {

@@ -3395,47 +3395,6 @@ class StreamingSpec extends AnyFunSuite {
       "the replayed batch must file after the lock clears")
   }
 
-  test("migrateLegacyMarkers honors pre-lineage flat markers for the original lineage only") {
-    // ADVICE r13: the lineage-scoped marker layout does not recognize
-    // the earlier flat _batches/<batchId> files, so replaying an old
-    // checkpoint against a pre-round-13 store would re-file its
-    // committed batches. The migration is explicit and operator-driven
-    // because a flat marker names no lineage — only the operator knows
-    // which query wrote it, and honoring it for EVERY lineage would
-    // reintroduce the new-query data-loss bug the scoping fixed.
-    import spark.implicits._
-    import graft.sources.IvfStore
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val maxId = e.agg(max("vec_id")).head().getLong(0)
-    val old = e.filter(col("vec_id") <= maxId - 4)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-legacy").toString
-    IvfStore.writeFitted(old, path)
-    val arrivals = e.filter(col("vec_id") > maxId - 4)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    // a pre-round-13 store: batch 0 was committed under the flat layout
-    val batches = new java.io.File(s"$path/_batches")
-    assert(batches.mkdirs())
-    assert(new java.io.File(batches, "0").createNewFile())
-    assert(IvfStore.migrateLegacyMarkers(spark, path, "orig-query") == 1)
-    assert(!new java.io.File(batches, "0").exists(),
-      "the flat marker must be consumed by the migration")
-    // the original query's checkpoint replays batch 0: now a no-op
-    val before = spark.read.parquet(s"$path/lists").count()
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.toSeq.toDF("vec_id", "embedding"), 0L, "orig-query")
-    assert(spark.read.parquet(s"$path/lists").count() == before,
-      "the migrated marker must short-circuit the original lineage's replay")
-    // a NEW query's batch 0 must still file — flat markers must never
-    // leak into other lineages
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.toSeq.toDF("vec_id", "embedding"), 0L, "fresh-query")
-    assert(spark.read.parquet(s"$path/lists").count() == before + arrivals.length,
-      "a fresh lineage must be unaffected by migrated legacy markers")
-    // idempotent: nothing left to migrate
-    assert(IvfStore.migrateLegacyMarkers(spark, path, "orig-query") == 0)
-  }
-
   test("streaming daily totals fold to batch q239 under arbitrary delivery") {
     import spark.implicits._
     // the live deseasonalized-anomaly monitor's contract: running
