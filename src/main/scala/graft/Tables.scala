@@ -74,22 +74,6 @@ object Tables {
     }.nextOption()
   }
 
-  /** [[tsEncodingAt]] that answers None when `path` is absent or holds
-    * no parquet files yet (the canonical empty landing dir) — the
-    * STRUCTURAL form of that contract, so callers with a default
-    * encoding don't have to pattern-match exception messages. A probe
-    * that positively fails (the bare-INT64 loud-fail, IO errors) still
-    * throws. */
-  def tsEncodingIfPresent(spark: SparkSession, path: String): Option[TsEncoding] = {
-    val root = new Path(path)
-    val exists =
-      try {
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        firstParquetFile(fs, root).isDefined
-      } catch { case _: java.io.FileNotFoundException => false }
-    if (exists) Some(tsEncodingAt(spark, path)) else None
-  }
-
   def tsEncodingAt(spark: SparkSession, path: String): TsEncoding = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
@@ -166,8 +150,8 @@ object Tables {
     * present (the conf is session-global — Spark exposes no per-read
     * option — but for every other encoding it is a no-op, so flipping it
     * lazily here is safe), then normalize `ts`. Reads BOTH layouts —
-    * flat part files and the day-partitioned `event_date=...` tree
-    * ([[writeEventsPartitionedByDay]]) — to the same logical schema
+    * flat part files and the day-partitioned `event_date=...` tree —
+    * to the same logical schema
     * (the partition column is dropped after the read). */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = eventsRaw(spark, s"$dir/events.parquet")
@@ -182,23 +166,6 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(spark.read.parquet(path))
   }
-
-  /** Rewrite the events table at `srcDir` (either layout) into a
-    * day-partitioned tree at `path`: `event_date=YYYY-MM-DD/` from the
-    * normalized ts. At 100 TB events is the one table that grows without
-    * bound and every event query bounds `ts`; this layout turns those
-    * bounds into DIRECTORY pruning — a day-bounded scan lists days, not
-    * history. The pre-write shuffle hash-partitions on the date so each
-    * day is written by few tasks → few files per day directory
-    * (small-file hygiene). */
-  def writeEventsPartitionedByDay(spark: SparkSession, srcDir: String,
-                                  path: String): Unit =
-    events(spark, srcDir)
-      .withColumn("event_date", to_date(col("ts")))
-      .repartition(col("event_date"))
-      .write.mode("overwrite")
-      .partitionBy("event_date")
-      .parquet(path)
 
   /** Day-bounded events scan, `fromDay` inclusive to `untilDay`
     * exclusive (ISO dates). The bound is applied BOTH as a partition

@@ -56,8 +56,8 @@ object Associations {
         typedlit[Map[String, Int]](idxOf).apply(col("p_brand")).as("idx")))
     // ONE heavy pass total: the order-keyed bit_or (the only
     // corpus-sized exchange — unavoidable for any per-basket operator
-    // unless the fact table is bucketed by order key, Bucketing.scala's
-    // layout) immediately collapses to the DISTINCT basket-pattern
+    // unless the fact table is bucketed by order key) immediately
+    // collapses to the DISTINCT basket-pattern
     // histogram (mask, n). Every rollup below — item counts, pair
     // counts, the order total — runs over that tiny weighted table, so
     // it never re-reads or re-shuffles the corpus; the pattern

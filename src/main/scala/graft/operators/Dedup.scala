@@ -169,18 +169,7 @@ object Dedup {
     * bucket 0). Vectors SHORTER than planeDim still degenerate that
     * way and are a contract violation; the DuckDB twin assumes exactly
     * planeDim. */
-  def simhashBandTable(e: DataFrame, bands: Int = nBands): DataFrame =
-    bandTable(e, bands, keepV = false)
-
-  /** [[simhashBandTable]] carrying the vector through the explode —
-    * for consumers that need per-member vectors AT the bucket (the
-    * streaming cluster-maintenance twin scores exact cosine inside the
-    * bucket state instead of re-joining the corpus). Same band values,
-    * same row multiplicity. */
-  def simhashBandTableWithV(e: DataFrame, bands: Int = nBands): DataFrame =
-    bandTable(e, bands, keepV = true)
-
-  private def bandTable(e: DataFrame, bands: Int, keepV: Boolean): DataFrame = {
+  def simhashBandTable(e: DataFrame, bands: Int = nBands): DataFrame = {
     // Round 11: the 32-dot projection is the native codegen'd
     // graft.plans.SimhashBands expression — bit-identical band values
     // to the HOF `transform(planes, p -> aggregate(zip_with(...)))`
@@ -190,10 +179,9 @@ object Dedup {
     // 0.82->0.31, q61 0.99->0.37, q203 1.01->0.44; SCALING.md), and
     // the projection is the one stage that is pure per-row CPU on
     // EVERY corpus row — the share that grows with corpus size.
-    val carry = if (keepV) Seq(col("vec_id"), col("v")) else Seq(col("vec_id"))
-    e.select(carry :+
+    e.select(col("vec_id"),
       posexplode(graft.plans.SimhashBands.bands(col("v"), bands))
-        .as(Seq("band", "val")): _*)
+        .as(Seq("band", "val")))
   }
 
   /** Distinct ordered candidate pairs (id_a < id_b) from an unpivoted
@@ -373,10 +361,8 @@ object Dedup {
   def q68DedupClusters(spark: SparkSession, dir: String): DataFrame =
     clustersFromPairs(q49EmbeddingNearDup(spark, dir).select("id_a", "id_b"))
 
-  /** q68's resolution tail from any (id_a, id_b) pair list — factored
-    * so the streaming cluster-maintenance twin folds its emitted edge
-    * sightings through the SAME connectedComponents + election body
-    * (parity by construction, the q239/q240 shared-fold rule). */
+  /** q68's resolution tail from any (id_a, id_b) pair list: the
+    * connectedComponents + canonical-election body. */
   def clustersFromPairs(pairs: DataFrame): DataFrame = {
     val comp = Graph.connectedComponents(pairs)
     val sizes = comp.groupBy(col("label").as("cluster"))
@@ -441,24 +427,8 @@ object Dedup {
     * (word, id), so a stop-word appearing in every doc produces no
     * fanout (keying on word alone would quadratically explode on
     * high-df words at corpus scale). */
-  def q77MinhashCalibration(spark: SparkSession, dir: String): DataFrame =
-    minhashCalibration(spark, dir, pairSamplePct = 100)
-
-  /** Library form with production pair sampling. Calibration needs a
-    * statistical read on sketch error, not every pair: at corpus scale
-    * the exact-Jaccard side (two full token passes) is the expensive
-    * half, so sample the pair set FIRST — a deterministic hash
-    * Bernoulli on the pair's anchor id (the q66 reproducible-sampling
-    * pattern: stable across runs, no RNG state) applied to the token
-    * stream before signatures or intersections are computed, so both
-    * corpus passes shrink to ~pct% of docs, not just the final rows. */
-  def minhashCalibration(spark: SparkSession, dir: String, pairSamplePct: Int): DataFrame = {
-    // a pair (id, id+1) is sampled iff sampled(anchor = id); a doc
-    // participates if it anchors a sampled pair OR is the +1 member
-    def sampledAnchor(id: Column): Column =
-      pmod(xxhash64(id), lit(100L)) < lit(pairSamplePct.toLong)
+  def q77MinhashCalibration(spark: SparkSession, dir: String): DataFrame = {
     val toks = docTokens(spark, dir)
-      .filter(sampledAnchor(col("doc_id")) || sampledAnchor(col("doc_id") - 1))
     val mins = minhashBands.map { case (band, a, b) =>
       min((col("h") * a + b) % Portable.P).as(s"m$band")
     }
@@ -473,9 +443,7 @@ object Dedup {
     val nEqual = (0 until minhashBands.size)
       .map(k => when(col(s"sa.m$k") === col(s"sb.m$k"), 1).otherwise(0))
       .reduce(_ + _)
-    // only SAMPLED anchors may emit a pair: a partner doc (present
-    // because id−1 was sampled) must not anchor an unsampled pair
-    sigs.filter(sampledAnchor(col("doc_id"))).as("sa")
+    sigs.as("sa")
       .join(sigs.as("sb"), col("sa.doc_id") + 1 === col("sb.doc_id"))
       .join(inter, col("sa.doc_id") === col("id_a"), "left")
       .select(

@@ -73,8 +73,7 @@ object HeavyHitters {
     * the estimate join is 20 candidates × depth against the broadcast
     * cell frame. All integer arithmetic mod 1e9+7 → exact everywhere. */
   /** The depth (r, bkt) probe rows for a token-hash column — the one
-    * definition of the hash grid, shared by cells, probes, batch and
-    * the streaming twin. */
+    * definition of the hash grid, shared by cells and probes. */
   private def cmsProbes(h: org.apache.spark.sql.Column) = {
     val P = Portable.P
     explode(array(CmsRows.map { case (r, a, b) =>
@@ -82,8 +81,7 @@ object HeavyHitters {
     }: _*))
   }
 
-  /** The CMS cell frame over a one-column (word) frame — shared by
-    * batch q256 and [[graft.streaming.DocStream.cmsCells]]: ONE
+  /** The q256 CMS cell frame over a one-column (word) frame: ONE
     * partial-aggregated pass to depth×width counters (the mergeable
     * fixed-size state CMS exists for). */
   def cmsCells(words: DataFrame): DataFrame =
@@ -94,8 +92,7 @@ object HeavyHitters {
 
   /** Point-query fold over a prepared cell frame: for each candidate
     * (word, exact_count), est = min over depth rows, plus the
-    * one-sided error columns. Shared by batch q256 and the streaming
-    * twin's readout (parity by construction). */
+    * one-sided error columns (q256's readout). */
   def cmsEstimates(cells: DataFrame, top: DataFrame): DataFrame =
     top.withColumn("h", Portable.tokenId(col("word")))
       .select(col("word"), col("exact_count"), cmsProbes(col("h")).as("c"))

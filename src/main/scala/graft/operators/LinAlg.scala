@@ -89,39 +89,18 @@ object LinAlg {
     val e = Tables.embeddings(spark, dir)
       .select((col("vec_id") % 2 === 0).as("a"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-    driftReport(e.groupBy(col("dim").cast("long").as("dim"))
+    e.groupBy(col("dim").cast("long").as("dim"))
       .agg(
         avg(when(col("a"), col("x"))).as("ma"),
         avg(when(!col("a"), col("x"))).as("mb"),
         var_samp(when(col("a"), col("x"))).as("va"),
-        var_samp(when(!col("a"), col("x"))).as("vb")))
-  }
-
-  /** Per-dimension (mean, sample variance) of an embedding table — the
-    * sufficient statistics behind q104, exposed as a library call so
-    * batch and stream share one definition ([[graft.streaming.VecStream
-    * .ingestDimStats]] runs this same body incrementally). One
-    * posexplode pass, partials combine map-side, d rows out. Values are
-    * UNROUNDED — [[dimDrift]] rounds at the compare, the q104 contract. */
-  def dimStats(emb: DataFrame): DataFrame =
-    emb.select(posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-      .groupBy(col("dim").cast("long").as("dim"))
-      .agg(avg(col("x")).as("mean"), var_samp(col("x")).as("var"))
-
-  /** Drift compare of two [[dimStats]] tables → the q104 columns. The
-    * join is d×d rows — nothing corpus-sized. */
-  def dimDrift(a: DataFrame, b: DataFrame): DataFrame =
-    driftReport(a.select(col("dim"), col("mean").as("ma"), col("var").as("va"))
-      .join(b.select(col("dim"), col("mean").as("mb"), col("var").as("vb")), "dim"))
-
-  /** The q104 columns over per-dim (dim, ma, mb, va, vb) statistics of
-    * two snapshots: each rounded to 6 dp at the compare, in dim order. */
-  private def driftReport(stats: DataFrame): DataFrame =
-    stats.select(col("dim"),
+        var_samp(when(!col("a"), col("x"))).as("vb"))
+      .select(col("dim"),
         round(col("ma"), 6).as("mean_a"), round(col("mb"), 6).as("mean_b"),
         round(col("mb") - col("ma"), 6).as("mean_shift"),
         round(col("va"), 6).as("var_a"), round(col("vb"), 6).as("var_b"))
       .orderBy("dim")
+  }
 
   /** q105 (rows-only): whitened semantic near-dup ranking — the payoff
     * of the PCA front end. Cosine thresholds on anisotropic embedding

@@ -451,7 +451,7 @@ object Quantize {
     * byte codes per vector, the PqM×PqK codebook, and the (cold-path)
     * float vectors for the refine stage. `materialized = true` cuts
     * lineage on the corpus-sized pieces, the right shape when the
-    * index is probed repeatedly (the streaming serving twin);
+    * index is probed repeatedly;
     * `false` leaves plain frames for one-shot batch plans. */
   case class IvfAdcIndex(cents: DataFrame, members: DataFrame,
                          codes: DataFrame, codebook: DataFrame,
@@ -657,15 +657,6 @@ object Quantize {
       .withColumn("rank", row_number().over(wr).cast("long"))
       .filter(col("rank") <= 10)
       .select("q_id", "rank", "n_id", "l2sq")
-  }
-
-  /** The full q244 serving path — build-free probe of a prepared
-    * index: candidates → ADC → refine, top-10 per query. The query
-    * block collects ONCE and feeds both stages. */
-  def ivfAdcSearch(idx: IvfAdcIndex, queries: DataFrame): DataFrame = {
-    val qRows = collectQueryRows(queries)
-    ivfAdcTop10From(idx, qRows, ivfAdcCandidatesFrom(idx, qRows))
-      .orderBy("q_id", "rank")
   }
 
   def q244IvfAdc(spark: SparkSession, dir: String): DataFrame = {

@@ -410,8 +410,8 @@ object Relational {
   /** q108: q21's daily aggregation, day-BOUNDED through
     * [[Tables.eventsBetween]] — the graded surface for the partitioned
     * events layout. On the flat driver layout the bound is a pushed
-    * `ts` range; pointed at a `event_date=` tree
-    * ([[Tables.writeEventsPartitionedByDay]]) the same plan prunes whole
+    * `ts` range; pointed at a day-partitioned `event_date=` tree the
+    * same plan prunes whole
     * day directories (ScaleSpec asserts PartitionFilters + numFiles on
     * THIS declared query). At 100 TB this is the difference between
     * scanning a week and scanning all history. */

@@ -164,9 +164,7 @@ object TextAnalysis {
 
   /** The q37 scorer over any (doc_id, text, n_chars) table — one
     * stateless projection, so the SAME expressions serve the batch
-    * query, [[graft.streaming.DocStream.qualityGate]] (an ingest gate
-    * that diverged from the curation query would admit docs the
-    * curation pass then drops) and the q97 weighted sampler. `carry`
+    * query and the q97 weighted sampler. `carry`
     * names extra input columns to thread through the projection — the
     * one-scan alternative to scoring and then self-joining the corpus
     * back on doc_id for a column the scorer dropped. */
@@ -248,11 +246,11 @@ object TextAnalysis {
     * re-sharding, re-ordering and doc-id reassignment — the property
     * that keeps eval sets leak-free across pipeline re-runs. Pure
     * per-row scalar + one small aggregate. */
-  /** Shared pseudo-sentence segmentation (q59 and its streaming twin):
+  /** Pseudo-sentence segmentation (q59):
     * consecutive `segWords`-word spans of each document, keyed for
     * first-occurrence arithmetic as doc_id * 100000 + seg_idx
-    * (documented headroom contract: < 100000 segments per doc). Works
-    * on batch AND streaming DataFrames — per-row HOF only, no shuffle. */
+    * (documented headroom contract: < 100000 segments per doc).
+    * Per-row HOF only, no shuffle. */
   private[graft] def segments(docs: DataFrame, segWords: Int = 10): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
@@ -314,9 +312,9 @@ object TextAnalysis {
 
   /** The q90 manifest plan over any (doc_id, text) table — the ONE
     * place the packing geometry (100-doc shards, 256-token bins,
-    * shard·100000 bin ids) lives, so the declared query, the
-    * [[TrainingSet]] build artifact and the streaming twin can never
-    * emit incompatible loader addresses. */
+    * shard·100000 bin ids) lives, so the declared query and the
+    * [[TrainingSet]] build artifact can never emit incompatible loader
+    * addresses. */
   def packingManifest(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val cumW = w.partitionBy("shard").orderBy("doc_id")
@@ -593,17 +591,6 @@ object TextAnalysis {
     * width. Shingles are hashed NATIVELY ([[graft.plans.ShingleHashes]] —
     * no shingle string is ever built; the HOF string form measured
     * 111 s over 400k docs against ~2 s for the kernel). */
-  /** The eval split's distinct shingle-hash set — the static probe table
-    * shared by batch q70 and the streaming twin ([[graft.streaming
-    * .DocStream.decontaminate]]): at production scale this is the
-    * benchmark suite's shingles, MBs against a corpus of TBs. */
-  def evalShingleSet(spark: SparkSession, dir: String, n: Int = 8): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(Portable.tokenId(col("text")) % 100L >= 95)
-      .select(explode(
-        graft.plans.ShingleHashes.shingleHashes(split(col("text"), " "), n)).as("shash"))
-      .distinct()
-
   def q70Decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val n = 8
     val sh = Tables.documents(spark, dir)
@@ -697,9 +684,8 @@ object TextAnalysis {
       .orderBy("doc_id", "suite")
   }
 
-  /** The suite-tagged eval shingle set behind q149 — shared with the
-    * ingest-time streaming probe ([[graft.streaming.DocStream
-    * .multiSuiteProbe]]): (suite, shash) rows, the held-out split
+  /** The suite-tagged eval shingle set behind q149: (suite, shash)
+    * rows, the held-out split
     * partitioned into three stand-in suites by content bucket. */
   def suiteShingleSet(spark: SparkSession, dir: String, n: Int = 8): DataFrame =
     Tables.documents(spark, dir)
@@ -1122,14 +1108,14 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** Feature-hash bucket count for q92/[[dsirWeightHashed]] — shared
-    * literally with the oracle SQL. */
+  /** Feature-hash bucket count for q92 — shared literally with the
+    * oracle SQL. */
   val dsirHashBuckets = 10000
 
   /** q92 (and the true-web-scale twin of q81) — DSIR's actual
     * hashed-feature form (Xie et al. 2023 hash n-grams, not raw
     * words): tokens hash into a FIXED number of buckets, so both model
-    * tables are at most `buckets` rows regardless of vocabulary —
+    * tables are at most [[dsirHashBuckets]] rows regardless of vocabulary —
     * always broadcastable with no Guard branch, O(buckets) driver
     * memory at any corpus size — and add-one smoothing uses the bucket
     * count as its base. Same score algebra as q81 over bucketed
@@ -1139,10 +1125,7 @@ object TextAnalysis {
     * is the PORTABLE tokenId (not xxhash64) so the whole query is
     * oracle-reproducible — measured at 100×: 26 s vs the exact q81's
     * 42 s, with the gap structural. */
-  def q92DsirHashed(spark: SparkSession, dir: String): DataFrame =
-    dsirWeightHashed(spark, dir, dsirHashBuckets)
-
-  def dsirWeightHashed(spark: SparkSession, dir: String, buckets: Int = 10000): DataFrame = {
+  def q92DsirHashed(spark: SparkSession, dir: String): DataFrame = {
     // Plan shape, measured at the 100× corpus: the doc-level split
     // hash must NEVER ride through the explode — projecting
     // `tokenId(text) % 100` next to a generator re-evaluates the
@@ -1161,7 +1144,8 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     def wbStream(d: DataFrame): DataFrame = d
       .select(col("doc_id"), explode(Portable.tokenize(col("text"))).as("word"))
-      .select(col("doc_id"), (Portable.tokenId(col("word")) % lit(buckets.toLong)).as("wb"))
+      .select(col("doc_id"),
+        (Portable.tokenId(col("word")) % lit(dsirHashBuckets.toLong)).as("wb"))
     val raw = wbStream(docs).groupBy("wb").agg(count(lit(1)).as("cr"))
     val tgt = wbStream(docs.filter(Portable.tokenId(col("text")) % 100L >= 95L))
       .groupBy("wb").agg(count(lit(1)).as("ct"))
@@ -1176,7 +1160,7 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("n_tokens"),
         round(avg(
-          log((col("ct") + lit(1.0)) / lit(nt.toDouble + buckets))
+          log((col("ct") + lit(1.0)) / lit(nt.toDouble + dsirHashBuckets))
             - log(col("cr") * lit(1.0) / lit(nr.toDouble))), 6).as("dsir_weight"))
       .orderBy("doc_id")
   }
@@ -1378,7 +1362,7 @@ object TextAnalysis {
     * Scale shape: each side collapses to (doc_id, md5) — 16 bytes a
     * row, the q30 fingerprint — then ONE full-outer hash join on
     * doc_id (co-partitioned and exchange-free when both snapshots are
-    * bucketed by doc_id, the Bucketing.scala path). Nothing else
+    * bucketed by doc_id — ScaleSpec pins that plan). Nothing else
     * touches the text. */
   def snapshotDelta(oldSnap: DataFrame, newSnap: DataFrame): DataFrame = {
     def fp(df: DataFrame) = df.select(col("doc_id"), md5(col("text")).as("h"))
@@ -1413,7 +1397,7 @@ object TextAnalysis {
     * feed's upserts append. Deletes are simply ids the anti join
     * removed and nothing re-adds. Two passes, no row-at-a-time logic;
     * exchange-free when snapshot and feed are both bucketed by doc_id
-    * (the q106/Bucketing.scala layout) — the shape that keeps
+    * (the q106 layout) — the shape that keeps
     * incremental snapshot maintenance proportional to the DELTA, not
     * the corpus.
     *
@@ -1441,9 +1425,7 @@ object TextAnalysis {
   }
 
   /** The q131 change feed: diff the snapshot against its q106 synthetic
-    * revision and emit (doc_id, op, text) upsert/delete records —
-    * shared with the StreamingSpec CDC fixture so batch MERGE and
-    * streaming mergeApply fold the identical feed. */
+    * revision and emit (doc_id, op, text) upsert/delete records. */
   private[graft] def revisionChangeFeed(docs: DataFrame): DataFrame = {
     val rev = syntheticRevision(docs)
     val delta = docs.select(col("doc_id"), md5(col("text")).as("h")).as("a")
@@ -1463,8 +1445,8 @@ object TextAnalysis {
           lit(null).cast("string").as("text")))
   }
 
-  /** The q106 synthetic "new crawl" (one definition, shared with the
-    * StreamingSpec parity fixture): removals % 13, rewrites % 7,
+  /** The q106 synthetic "new crawl" (one definition, shared by q106
+    * and the q131 change feed): removals % 13, rewrites % 7,
     * re-crawls % 11 under fresh +1e12 ids — the offset must clear
     * EVERY corpus's id range: the original +10M collided with the
     * amplified corpus's copy-slotted ids (copy*1e6 reaches 99M), so
@@ -1482,9 +1464,7 @@ object TextAnalysis {
   }
 
   /** One snapshot's per-(lang, source) doc/token cell table — the
-    * distribution summary drift compares. Shared verbatim with
-    * [[graft.streaming.DocStream.ingestCells]], the streaming
-    * aggregation that maintains the same cells incrementally. */
+    * distribution summary drift compares. */
   def corpusCells(df: DataFrame): DataFrame = df
     .groupBy("lang", "source")
     .agg(count(lit(1)).as("n_docs"),
@@ -1708,11 +1688,8 @@ object TextAnalysis {
   def q142ChunkOverlap(spark: SparkSession, dir: String): DataFrame =
     chunkOverlap(Tables.documents(spark, dir)).orderBy("doc_id", "chunk_idx")
 
-  /** The chunker core on any (doc_id, text, n_chars) frame — shared by
-    * batch q142 and the ingest-time streaming twin
-    * ([[graft.streaming.DocStream.chunkOverlap]]): stateless per-row
-    * generator, so the stream emits exactly the batch rows in append
-    * mode with zero state. */
+  /** The q142 chunker core on any (doc_id, text, n_chars) frame: a
+    * stateless per-row generator. */
   def chunkOverlap(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),

@@ -96,8 +96,7 @@ object TrainingSet {
             .write.mode("overwrite").parquet(s"$outDir/$s")
         }
         // the SHARED q90 manifest plan over the train split — same
-        // geometry and schema as the declared query and the streaming
-        // twin, by construction
+        // geometry and schema as the declared query, by construction
         val train = spark.read.parquet(s"$outDir/train")
         TextAnalysis.packingManifest(train)
           .write.mode("overwrite").parquet(s"$outDir/manifest")

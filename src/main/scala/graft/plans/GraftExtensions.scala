@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** SQL surface for the engine's native expressions, injected via
   * `SparkSessionExtensions` — the sanctioned extension seam (builder
@@ -89,11 +88,4 @@ object GraftExtensions {
         require(args.length == 1, "nfc_normalize expects 1 argument")
         NfcNormalize(args.head)
       }))
-
-  /** Register on an EXISTING session (tests, notebooks) — same
-    * builders, via the session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (ident, inf, builder) =>
-      SqlBridge.registerFunction(spark, ident, inf, builder)
-    }
 }

@@ -14,8 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (e + U+0301) are byte-different, so md5/minhash/shingle keys split
   * on a distinction no reader sees and exact dedup (q30) silently
   * under-merges. Normal-form canonicalization is the fix, run once at
-  * ingest (q159 reports its effect; the streaming twin runs the same
-  * expression per arriving doc).
+  * ingest (q159 reports its effect).
   *
   * Spark has no normalization built-in, so this wraps
   * `java.text.Normalizer` (ICU-free, in the JDK) in the engine's

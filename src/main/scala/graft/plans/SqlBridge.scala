@@ -1,5 +1,5 @@
 // Declared inside org.apache.spark.sql.* solely to reach private[sql]
-// helpers (Expression <-> Column conversion, the function registry) and
+// helpers (Expression <-> Column conversion) and
 // Spark's private[spark] XORShiftRandom. This is the
 // standard seam Spark extension libraries use; everything else in this
 // repo lives under the graft package.
@@ -12,17 +12,6 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object SqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a SQL function on a live session (sessionState is
-    * private[sql]; this is the same seam `injectFunction` uses at
-    * session build time). */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(ident, info, builder)
 
   /** Spark's `XORShiftRandom` (private[spark]): the generator MLlib's
     * Word2Vec seeds its initial vectors and window draws from, so

@@ -27,7 +27,7 @@ import graft.operators.{KMeans, Quantize}
   *   path[/gen-G]/cents/      (cluster, cv)                O(K), hot
   *   path[/gen-G]/codebook/   (sub, code, cv)              O(PqM·PqK), hot
   *   path[/gen-G]/lists/cell=N/ (n_id, codes: array, v)    corpus-sized
-  *   path/_batches/<tag>/<id> streaming commit markers, keyed by the
+  *   path/_batches/<tag>/<id> batch commit markers, keyed by the
   *                            fixed-width [[lineageTag]] (store-level:
   *                            they survive a retrain, which rebuilds FROM
   *                            the already-filed postings; `<id>.inflight`
@@ -73,7 +73,7 @@ import graft.operators.{KMeans, Quantize}
   *    crash at ANY point leaves either the old pointer (unpublished
   *    tree is garbage [[recover]] deletes) or the new one (superseded
   *    tree is garbage) — readers never see a partial index.
-  *  - '''Streaming batch commit''' ([[commitBatch]]): an intent marker
+  *  - '''Batch commit''' ([[commitBatch]]): an intent marker
   *    lands, arrivals are staged, then moved into the live cells under
   *    DETERMINISTIC names (`b-<tag>-<batchId>-<i>.parquet`) with any
   *    same-name leftovers deleted first, then the lineage-scoped final
@@ -97,7 +97,7 @@ import graft.operators.{KMeans, Quantize}
   * The writer half of the contract is ENFORCED, not just documented
   * (round 14): [[compact]] and [[retrain]] hold a `_maint.lock` marker
   * for their whole run, and [[commitBatch]] loud-fails while it exists
-  * — a stream that violates the offline window gets an exception and a
+  * — a writer that violates the offline window gets an exception and a
   * replay, never a silently lost or duplicated batch. The reader half
   * has a guard too: [[servedTop10]] refuses to serve a tree holding
   * `.old-cell=` remnants of a CRASHED compaction instead of silently
@@ -130,7 +130,7 @@ object IvfStore {
       .map(g => new Path(new Path(path), g).toString)
       .getOrElse(path)
 
-  /** The filesystem-safe identity of a streaming lineage: a fixed-width
+  /** The filesystem-safe identity of a commit lineage: a fixed-width
     * md5 prefix of the RAW lineage string. Injective for all practical
     * purposes where a readable sanitization is not — replacing
     * disallowed chars maps distinct lineages ("a/b", "a_b") to one
@@ -166,7 +166,7 @@ object IvfStore {
     * only pre-existing lock a maintenance open can meet is a CRASHED
     * predecessor's, which the `recover` pass this body starts with is
     * built to clean up after. A maintenance crash OR in-process failure
-    * leaves the lock in place: streaming commits keep failing loudly
+    * leaves the lock in place: batch commits keep failing loudly
     * (never silently interleaving with half-done maintenance state —
     * e.g. the `.old-cell=` remnants of a failed promote) until the next
     * maintenance open completes and releases it. */
@@ -180,7 +180,7 @@ object IvfStore {
     // a throw leaves the lock in place, deliberately: an in-process
     // maintenance FAILURE is a crash for contract purposes — a compact
     // whose promote-rename threw has left mid-swap state (`.old-cell=`
-    // remnants) that streaming commits must not interleave with; the
+    // remnants) that batch commits must not interleave with; the
     // next maintenance open's recover cleans up and releases. The one
     // exception is a [[CleanRefusal]] (a precondition check that
     // mutated nothing — e.g. compact refusing a leased live tree):
@@ -225,8 +225,8 @@ object IvfStore {
   /** A pinned read handle: `root` is a complete index tree (`lists`/
     * `cents`/`codebook`) that stays readable for [[LeaseTtlMs]] after
     * the last [[renew]] even across retrains (retire deferred) and
-    * compactions ([[compact]] refuses / [[compactIfNeeded]] skips
-    * while the live tree is leased) — pass it wherever a store path
+    * compactions ([[compact]] refuses while the live tree is leased)
+    * — pass it wherever a store path
     * goes; [[servedTop10]] resolves a generation dir to
     * itself, so a generation pin is strict. One documented looseness:
     * pinning a never-retrained FLAT store yields `root == path`, whose
@@ -398,7 +398,7 @@ object IvfStore {
           fs.delete(s.getPath, true)
       }
     }
-    // half-committed streaming batches: an inflight marker without its
+    // half-committed batches: an inflight marker without its
     // final twin means the commit crashed after touching the live tree
     // (or before — either way its files, still identifiable by their
     // batch prefix, must go BEFORE compaction/retrain folds them into
@@ -538,7 +538,7 @@ object IvfStore {
     *
     * This is the BATCH maintenance form: it assumes its caller runs
     * once (a replay re-files the same arrivals — there is no marker
-    * at this layer). Streaming ingest goes through [[commitBatch]],
+    * at this layer). Replayable ingest goes through [[commitBatch]],
     * whose staged deterministic-name commit makes replays converge
     * to exactly-once filing. */
   def append(spark: SparkSession, path: String, arrivals: DataFrame): Array[Long] = {
@@ -553,13 +553,13 @@ object IvfStore {
     posts.select("cell").distinct().collect().map(_.getLong(0)) // O(K)
   }
 
-  /** EXACTLY-ONCE streaming filing — [[append]] hardened for the
-    * at-least-once `foreachBatch` replay contract. The marker is
-    * namespaced by the streaming query's LINEAGE (its checkpoint
-    * identity), not the bare batchId: batch ids restart at 0 for
-    * every new checkpoint, so an unscoped marker would silently skip
-    * a new query's first batches against a pre-existing store (data
-    * loss the rebuild-equality audit would only catch offline).
+  /** EXACTLY-ONCE batch filing — [[append]] hardened for an
+    * at-least-once writer that may re-deliver a batch. The marker is
+    * namespaced by the writer's LINEAGE (e.g. a streaming query's
+    * checkpoint identity), not the bare batchId: batch ids restart at
+    * 0 for every new lineage, so an unscoped marker would silently
+    * skip a new writer's first batches against a pre-existing store
+    * (data loss the rebuild-equality audit would only catch offline).
     *
     * Filing is a staged commit, each step replay-idempotent, keyed by
     * the fixed-width [[lineageTag]] (injective where a readable
@@ -589,12 +589,12 @@ object IvfStore {
     * A marker hit short-circuits everything (committed batches
     * re-deliver as no-ops; empty batches land only their marker); any
     * crash before the marker either re-runs the whole staged commit
-    * onto the same file names (stream replays first) or is rolled
+    * onto the same file names (the writer replays first) or is rolled
     * back by [[recover]]'s inflight sweep (maintenance runs first —
     * without the intent marker, compaction would fold the orphaned
     * postings into anonymous files the replay's delete-by-prefix can
     * no longer see, and the replay would duplicate them).
-    * StreamingSpec drives both replay shapes, the new-lineage
+    * ScaleSpec drives both replay shapes, the new-lineage
     * regression, and the maintenance-before-replay rollback. */
   def commitBatch(spark: SparkSession, path: String, arrivals: DataFrame,
                   lineage: String, batchId: Long): Unit = {
@@ -606,7 +606,7 @@ object IvfStore {
     // the offline/single-writer contract, enforced (ADVICE r13): a
     // commit that lands while compact/retrain holds the maintenance
     // lock would race recover's staging/inflight sweeps — batches could
-    // silently vanish or double-file. Fail loudly instead; the stream's
+    // silently vanish or double-file. Fail loudly instead; the writer's
     // replay re-delivers the batch once maintenance is done. A lock
     // left by a CRASHED maintenance keeps failing commits until the
     // next maintenance open completes and releases it — loud, never
@@ -617,7 +617,7 @@ object IvfStore {
           "present) — store maintenance is offline/single-writer; retry " +
           "after compact/retrain completes (a crashed maintenance leaves " +
           "the lock until its next open finishes recovery)")
-    // empty-batch fast path: a low-traffic stream triggers mostly-empty
+    // empty-batch fast path: a low-traffic writer sends mostly-empty
     // batches — land the marker alone, no assign/encode/staging jobs
     if (arrivals.isEmpty) {
       fs.mkdirs(marker.getParent)
@@ -631,7 +631,7 @@ object IvfStore {
     // its final twin and deletes the batch's (prefix-named, so still
     // identifiable) files — restoring the exactly-once contract even
     // when compaction/retrain would otherwise have folded the orphans
-    // into anonymous files before the stream replays
+    // into anonymous files before the writer replays
     val inflight = new Path(p, s"_batches/$tag/$batchId.inflight")
     fs.mkdirs(inflight.getParent)
     fs.create(inflight, true).close()
@@ -663,7 +663,7 @@ object IvfStore {
     // one side wins: if a maintenance open raced this commit (contract
     // violation — the entry lock check is check-then-act), the rename
     // fails LOUDLY here, the batch is never recorded committed with
-    // maintenance-swept files, and the stream's replay re-files it
+    // maintenance-swept files, and the writer's replay re-files it
     // under the same deterministic names.
     val qualified = fs.makeQualified(p)
     val fc = FileContext.getFileContext(qualified.toUri, hconf(spark))
@@ -676,7 +676,7 @@ object IvfStore {
       Options.Rename.OVERWRITE)
     catch { case e: Exception => throw new IllegalStateException(
       s"commitBatch: intent marker $inflight was swept by a maintenance " +
-        "open mid-commit — batch NOT recorded; the stream's replay " +
+        "open mid-commit — batch NOT recorded; the writer's replay " +
         "re-files it once maintenance completes", e) }
     fs.delete(staging, true)
     ()
@@ -692,7 +692,7 @@ object IvfStore {
     * query) from a stored index, reading ONLY the probed cells'
     * directories. `queries` is (q_id, qv), broadcast-sized by the
     * q34 contract. Returns (q_id, rank, n_id, l2sq), bit-equal to
-    * [[Quantize.ivfAdcSearch]] over the same index.
+    * the in-memory [[Quantize.ivfAdcTop10From]] path over the same index.
     *
     * The probed-cell collect is O(|q|·Nprobe) ≤ O(K) distinct values —
     * bounded by construction (the IVF-cell-ids rule): it exists
@@ -780,8 +780,7 @@ object IvfStore {
     // reader mid-scan of this tree would lose files under it. The lease
     // machinery therefore gates compaction too: refuse while the live
     // tree holds a fresh reader lease (the caller retries after the
-    // readers release or their TTL lapses; the auto path
-    // [[compactIfNeeded]] skips instead of throwing).
+    // readers release or their TTL lapses).
     val liveKey = currentGen(spark, path).getOrElse("flat")
     if (freshLeases(fs, new Path(path), liveKey) > 0)
       throw new CleanRefusal(
@@ -825,41 +824,6 @@ object IvfStore {
       }
     } }).flatten.sortBy(_._1).toVector
     }
-  }
-
-  /** [[compact]] gated by a cheap O(K)-listing precheck — the shape a
-    * post-batch auto-compaction hook needs ([[graft.streaming.VecStream
-    * .appendArrivals]]): most batches find nothing over threshold and
-    * pay only the listings, never the recover pass or the lock. At
-    * 100 TB a deployment would keep per-cell file counters instead of
-    * listing; the contract (compact iff some cell exceeds the bound)
-    * is the same. */
-  def compactIfNeeded(spark: SparkSession, path: String,
-                      maxFilesPerCell: Int = 4): Seq[(Long, Int, Int)] = {
-    require(maxFilesPerCell >= 1)
-    val root = new Path(resolveRoot(spark, path), "lists")
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return Nil
-    val over = fs.listStatus(root).exists { c =>
-      c.isDirectory && c.getPath.getName.startsWith("cell=") &&
-        fs.listStatus(c.getPath).count { f =>
-          val n = f.getPath.getName
-          n.endsWith(".parquet") || n.startsWith("part-")
-        } > maxFilesPerCell
-    }
-    if (!over) return Nil
-    // the auto path must not kill the stream over a transient reader:
-    // skip this window and re-check after the next commit (the cell
-    // bound is a maintenance target, not an invariant)
-    val p = new Path(path)
-    val liveKey = currentGen(spark, path).getOrElse("flat")
-    if (freshLeases(fsOf(spark, p), p, liveKey) > 0) {
-      System.err.println(
-        s"[ivf-store] compactIfNeeded: deferred — live tree of $path " +
-          "holds a fresh reader lease")
-      return Nil
-    }
-    compact(spark, path, maxFilesPerCell)
   }
 
   /** The RETRAIN act — the branch of the q266 maintenance gate
@@ -1040,7 +1004,7 @@ object IvfStore {
     * (same two-paths-one-answer shape as q131). ScaleSpec separately
     * proves the scans prune (`PartitionFilters`, `numFiles` ≤ probed
     * cells) and that the served rows are bit-equal to the in-memory
-    * [[Quantize.ivfAdcSearch]]. */
+    * [[Quantize.ivfAdcTop10From]] path. */
   def q262IvfServedStore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)

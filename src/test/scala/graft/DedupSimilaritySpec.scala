@@ -509,26 +509,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(errs.sum / errs.length < 0.25, s"mean calibration error ${errs.sum / errs.length}")
   }
 
-  test("sampled calibration is exactly the full calibration's sampled-anchor subset") {
-    // production calibrates on a pair SAMPLE (SCALING.md): the sampled
-    // run must agree pair-for-pair with the full run on the pairs it
-    // keeps — same signatures, same exact jaccard — and still exhibit
-    // the sketch-error bound on its subset.
-    val full = Dedup.q77MinhashCalibration(spark, TestSpark.sf0001)
-    val sampled = Dedup.minhashCalibration(spark, TestSpark.sf0001, pairSamplePct = 30)
-    // the same deterministic predicate the operator uses, applied to the
-    // full result's anchor ids
-    val expected = full.filter(pmod(xxhash64(col("id_a")), lit(100L)) < lit(30L))
-    assert(sampled.count() > 0 && sampled.count() < full.count(),
-      "a 30% sample must keep some but not all pairs")
-    assert(sampled.exceptAll(expected).count() == 0 &&
-      expected.exceptAll(sampled).count() == 0,
-      "sampled rows must equal the full run filtered to sampled anchors")
-    val errs = sampled.select("abs_err").as[Double].collect()
-    assert(errs.sum / errs.length < 0.25,
-      s"sketch-error bound must hold on the sample, got mean ${errs.sum / errs.length}")
-  }
-
   test("q78 semantic prune flags a planted same-cell duplicate and respects anchor order") {
     val dir = java.nio.file.Files.createTempDirectory("graft-semdedup").toString
     def vec(seed: Int) = Array.tabulate(64)(i => math.sin(i * 0.7 + seed).toFloat)

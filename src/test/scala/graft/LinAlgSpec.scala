@@ -70,22 +70,6 @@ class LinAlgSpec extends AnyFunSuite {
     assert(vars.forall { case (_, (va, vb)) => va >= 0 && vb >= 0 })
   }
 
-  test("q104 equals the composable dimStats/dimDrift pair") {
-    val emb = Tables.embeddings(spark, TestSpark.sf0001)
-    val a = LinAlg.dimStats(emb.filter(col("vec_id") % 2 === 0))
-    val b = LinAlg.dimStats(emb.filter(col("vec_id") % 2 =!= 0))
-    val got = LinAlg.dimDrift(a, b).collect()
-      .map(r => r.getLong(0) -> (1 to 5).map(r.getDouble)).toMap
-    val want = SparkEntry.queries("q104_embedding_drift")(spark, TestSpark.sf0001)
-      .collect().map(r => r.getLong(0) -> (1 to 5).map(r.getDouble)).toMap
-    assert(got.keySet == want.keySet)
-    // same subsets, same arithmetic — only FP merge order can differ,
-    // and round-6 absorbs it; allow one ulp of the rounded grid
-    for (d <- want.keys; c <- 0 until 5)
-      assert(math.abs(got(d)(c) - want(d)(c)) <= 1e-6 + 1e-12,
-        s"dim $d col $c: ${got(d)(c)} vs ${want(d)(c)}")
-  }
-
   test("q105 whitened near-dup ranks a planted duplicate pair first") {
     val dir = java.nio.file.Files.createTempDirectory("graft-white").toString
     // seeded Random, NOT a modular pattern: periodic arithmetic noise

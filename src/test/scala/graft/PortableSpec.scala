@@ -120,7 +120,11 @@ class PortableSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions exposes the native expressions to plain SQL") {
-    graft.plans.GraftExtensions.register(spark)
+    // the same builders the session extension injects, registered on
+    // the running test session
+    graft.plans.GraftExtensions.functions.foreach { case (ident, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+    }
     val row = spark.sql(
       s"""SELECT token_id('spark')                             AS t,
          |       cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,

@@ -67,7 +67,7 @@ class QueriesSpec extends AnyFunSuite {
     // the web-scale variant: model tables bounded by the bucket count
     // (always broadcastable), scores correlated with the string-keyed
     // q81 despite hash collisions — the feature-hashing contract.
-    val hashed = graft.operators.TextAnalysis.dsirWeightHashed(spark, sf0001, buckets = 4096)
+    val hashed = run("q92_dsir_hashed")
     val exact = run("q81_dsir_weight")
     val joined = hashed.select(col("doc_id"), col("dsir_weight").as("wh"))
       .join(exact.select(col("doc_id"), col("dsir_weight").as("we")), "doc_id")

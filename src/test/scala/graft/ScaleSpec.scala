@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.Bucketing
-
 /** Scale-path mechanics: bucketed joins must plan without shuffle
   * exchanges; layouts and guards must prune or degrade without
   * changing answers. */
@@ -14,8 +12,8 @@ class ScaleSpec extends AnyFunSuite {
   test("bucketed co-located join plans with zero shuffle exchanges") {
     val orders = Tables.orders(spark, sf0001).select("o_orderkey", "o_totalprice")
     val lineitem = Tables.lineitem(spark, sf0001).select("l_orderkey", "l_quantity")
-    Bucketing.writeBucketed(orders, "b_orders", "o_orderkey", 4)
-    Bucketing.writeBucketed(lineitem, "b_lineitem", "l_orderkey", 4)
+    Fixtures.writeBucketed(orders, "b_orders", "o_orderkey", 4)
+    Fixtures.writeBucketed(lineitem, "b_lineitem", "l_orderkey", 4)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -59,11 +57,11 @@ class ScaleSpec extends AnyFunSuite {
 
   test("day-partitioned events layout reads transparently and date bounds prune the scan") {
     // at 100 TB events is the one table that grows without bound; the
-    // first-class layout path (Tables.writeEventsPartitionedByDay +
-    // eventsBetween) must turn a day bound into directory pruning while
+    // day-partitioned layout (Fixtures.writeEventsPartitionedByDay) read
+    // through eventsBetween must turn a day bound into directory pruning while
     // Tables.events keeps presenting the flat-layout schema
     val dir = java.nio.file.Files.createTempDirectory("graft-evpart").toString
-    Tables.writeEventsPartitionedByDay(spark, sf0001, s"$dir/events.parquet")
+    Fixtures.writeEventsPartitionedByDay(spark, sf0001, s"$dir/events.parquet")
     val flat = Tables.events(spark, sf0001)
     val part = Tables.events(spark, dir)
     assert(part.schema == flat.schema,
@@ -102,7 +100,7 @@ class ScaleSpec extends AnyFunSuite {
     // partitioned tree must read exactly its 7 bounded day files and
     // return the same rows as over the flat driver layout
     val dir = java.nio.file.Files.createTempDirectory("graft-q108").toString
-    Tables.writeEventsPartitionedByDay(spark, sf0001, s"$dir/events.parquet")
+    Fixtures.writeEventsPartitionedByDay(spark, sf0001, s"$dir/events.parquet")
     val run = SparkEntry.queries("q108_day_bounded_window")
     val flatRows = run(spark, sf0001).collect().map(_.toSeq).toSeq
     assert(flatRows.nonEmpty, "fixture must have events in the q108 week")
@@ -469,8 +467,8 @@ class ScaleSpec extends AnyFunSuite {
     // delta-sized output sort)
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val rev = graft.operators.TextAnalysis.syntheticRevision(docs)
-    Bucketing.writeBucketed(docs, "b_snap_a", "doc_id", 4)
-    Bucketing.writeBucketed(rev, "b_snap_b", "doc_id", 4)
+    Fixtures.writeBucketed(docs, "b_snap_a", "doc_id", 4)
+    Fixtures.writeBucketed(rev, "b_snap_b", "doc_id", 4)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -485,23 +483,6 @@ class ScaleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("retention fold plans one user-keyed pass over sightings, no self-join") {
-    import spark.implicits._
-    // input = distinct (user, week) sightings — at scale, users × weeks
-    // rows. The fold must stay: one user-keyed exchange (cohort window),
-    // tiny matrix-sized aggregations after — never a join back onto the
-    // sightings (the conflicting-lineage self-join this replaced) and
-    // never anything corpus-sized past the first shuffle.
-    val sightings = (1 to 200).flatMap { u =>
-      (0 to u % 5).map(w => (u.toLong, 19700L + 7L * w))
-    }.toDF("user_id", "week_day")
-    val plan = graft.streaming.EventStream.retentionMatrix(sightings)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin")
-      && !plan.contains("CartesianProduct"), s"fold must not join:\n$plan")
-    assert(plan.split("Exchange hashpartitioning").length - 1 <= 3,
-      s"one user window + matrix-sized aggs only:\n$plan")
-  }
   test("PQ / IVF retrieval and q115 re-rank plan broadcast-only corpus joins") {
     // the probe tables (LUT, shortlist, probed cells) are bounded by
     // construction; the corpus side must stream past them — a
@@ -536,8 +517,8 @@ class ScaleSpec extends AnyFunSuite {
     // write is scan-sized at 100 TB
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val feed = graft.operators.TextAnalysis.revisionChangeFeed(docs)
-    Bucketing.writeBucketed(docs, "b_merge_t", "doc_id", 4)
-    Bucketing.writeBucketed(feed, "b_merge_c", "doc_id", 4)
+    Fixtures.writeBucketed(docs, "b_merge_t", "doc_id", 4)
+    Fixtures.writeBucketed(feed, "b_merge_c", "doc_id", 4)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -669,25 +650,6 @@ class ScaleSpec extends AnyFunSuite {
       s"q142 must not hash-shuffle the corpus:\n${plan.take(1500)}")
     assert(plan.contains("Generate"),
       s"q142 should plan a Generate (posexplode):\n${plan.take(1200)}")
-  }
-
-  test("ivfAssign plans zero exchanges: one broadcast row, no k-way candidate fanout") {
-    // the streaming twin's scale contract, checked on the batch planner
-    // (same plan shape): the centroid array joins as ONE broadcast row
-    // and the argmin is a per-row fold — so unlike the batch window
-    // form there is no hash exchange and no k× candidate materialization
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cents = graft.operators.KMeans.fit(e)
-    val plan = graft.streaming.VecStream
-      .ivfAssign(Tables.embeddings(spark, sf0001), cents)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"fold-argmin assignment must not shuffle:\n${plan.take(1500)}")
-    assert(!plan.contains("Window"),
-      s"fold-argmin assignment must not rank via a window:\n${plan.take(1500)}")
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      s"centroid array must join as one broadcast row:\n${plan.take(1200)}")
   }
 
   test("q139 NDCG corpus streams past the broadcast query block") {
@@ -936,7 +898,7 @@ class ScaleSpec extends AnyFunSuite {
     try {
       val served = IvfStore.servedTop10(spark, path, q1).orderBy("q_id", "rank")
       val rows = served.collect().map(_.toSeq).toSeq
-      val mem = Quantize.ivfAdcSearch(idx, q1).collect().map(_.toSeq).toSeq
+      val mem = Fixtures.ivfAdcSearch(idx, q1).collect().map(_.toSeq).toSeq
       assert(rows.nonEmpty && rows == mem,
         "served-from-store top-10 must be bit-equal to the in-memory path")
       val scans = served.queryExecution.executedPlan.collectLeaves().collect {
@@ -970,7 +932,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("q262 served-from-store equals the full in-memory search on the EvalBlock block") {
     // the declared query answers from the persisted layout; the layout
-    // must be answer-invariant vs Quantize.ivfAdcSearch over the same
+    // must be answer-invariant vs Fixtures.ivfAdcSearch over the same
     // built index (two paths, one answer — the q131 shape)
     import graft.operators.Quantize
     val e = Tables.embeddings(spark, sf0001)
@@ -978,7 +940,7 @@ class ScaleSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") < graft.operators.KMeans.EvalBlock)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val idx = Quantize.buildIvfAdcIndex(e, materialized = true)
-    val want = Quantize.ivfAdcSearch(idx, q).collect().map(_.toSeq).toSeq
+    val want = Fixtures.ivfAdcSearch(idx, q).collect().map(_.toSeq).toSeq
     val got = SparkEntry.queries("q262_ivf_served_store")(spark, sf0001)
       .collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got == want)
@@ -1140,7 +1102,7 @@ class ScaleSpec extends AnyFunSuite {
     // answers = fresh full-corpus build, bit-for-bit (the q268 contract)
     val q = e.filter(col("vec_id") < KMeans.EvalBlock)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val want = Quantize.ivfAdcSearch(
+    val want = Fixtures.ivfAdcSearch(
       Quantize.buildIvfAdcIndex(e, materialized = true), q)
       .collect().map(_.toSeq).toSeq
     val got = IvfStore.servedTop10(spark, path, q)
@@ -1268,8 +1230,8 @@ class ScaleSpec extends AnyFunSuite {
     // compact rewrites the LIVE tree's cells in place — unlike retrain
     // there is no old generation to defer, so the lease machinery must
     // gate compaction itself: explicit compact refuses (and, having
-    // mutated nothing, releases the maintenance lock), the auto path
-    // skips, and a REAL mid-maintenance failure leaves the lock so
+    // mutated nothing, releases the maintenance lock) while commits
+    // still land, and a REAL mid-maintenance failure leaves the lock so
     // commits keep loud-failing until a maintenance open completes
     import graft.operators.{KMeans, Quantize}
     import graft.sources.IvfStore
@@ -1292,17 +1254,13 @@ class ScaleSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("lease"), s"refusal must name the lease: ${ex.getMessage}")
     assert(!new java.io.File(s"$path/_maint.lock").exists(),
       "a clean refusal must release the maintenance lock")
-    // auto path: skip, not throw — and the stream's commit still lands
-    assert(IvfStore.compactIfNeeded(spark, path, maxFilesPerCell = 1).isEmpty,
-      "auto-compaction must skip a leased live tree")
+    // a commit still lands on the leased tree
     val arrivals = e.limit(2).collect()
       .map(r => (r.getLong(0) + 500000L, r.getSeq[Double](1))).toSeq
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.toDF("vec_id", "embedding"), 0L, "ingest-cl",
-      maxFilesPerCell = Some(1))
+    IvfStore.commitBatch(spark, path, arrivals.toDF("vec_id", "v"), "ingest-cl", 0L)
     assert(spark.read.parquet(s"$path/lists")
       .filter(col("n_id") >= 500000L).count() == 2,
-      "a commit (with auto-compact enabled) must land while the tree is leased")
+      "a commit must land while the tree is leased")
     IvfStore.release(spark, lease)
     // released → compaction proceeds and hits the bound
     val done = IvfStore.compact(spark, path, maxFilesPerCell = 1)
@@ -1318,16 +1276,228 @@ class ScaleSpec extends AnyFunSuite {
     intercept[Throwable](IvfStore.retrain(spark, path))
     assert(new java.io.File(s"$path/_maint.lock").exists(),
       "a mid-maintenance failure must leave the lock in place")
-    val ex2 = intercept[IllegalStateException] {
-      graft.streaming.VecStream.appendArrivals(spark, path,
-        arrivals.toDF("vec_id", "embedding"), 1L, "ingest-cl")
-    }
+    val ex2 = intercept[IllegalStateException](
+      IvfStore.commitBatch(spark, path, arrivals.toDF("vec_id", "v"), "ingest-cl", 1L))
     assert(ex2.getMessage.contains("maintenance"),
       "commits must keep refusing while the failed maintenance's lock stands")
     java.nio.file.Files.write(victim.toPath, saved)
     IvfStore.retrain(spark, path) // completes → releases
     assert(!new java.io.File(s"$path/_maint.lock").exists(),
       "the next completed maintenance open must release the lock")
+  }
+
+  test("committed batches maintain the stored IVF index; replayed batches are no-ops") {
+    // the index was built when the corpus was smaller; the last ten
+    // vectors are filed as three commitBatch batches of one lineage
+    import spark.implicits._
+    import graft.operators.{KMeans, Quantize}
+    import graft.sources.IvfStore
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val maxId = e.agg(max("vec_id")).head().getLong(0)
+    val old = e.filter(col("vec_id") <= maxId - 10)
+    val cents = KMeans.fit(old)
+    val cb = Quantize.pqCodebook(old)
+    def idxOf(corpus: org.apache.spark.sql.DataFrame) = Quantize.IvfAdcIndex(
+      cents,
+      KMeans.assign(corpus, cents).select(col("vec_id").as("n_id"), col("cluster")),
+      Quantize.pqCodesWith(cb, corpus)
+        .select(col("vec_id").as("n_id"), col("sub"), col("code")),
+      cb, corpus)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-commit").toString
+    IvfStore.write(idxOf(old), path)
+    val arrivals = e.filter(col("vec_id") > maxId - 10)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    def commit(rows: Seq[(Long, Seq[Double])], batchId: Long, lineage: String): Unit =
+      IvfStore.commitBatch(spark, path, rows.toDF("vec_id", "v"), lineage, batchId)
+    arrivals.grouped(4).zipWithIndex.foreach { case (chunk, i) =>
+      commit(chunk, i.toLong, "ingest-a")
+    }
+    // committed tree == from-scratch rebuild under the same artifacts
+    val rebuilt = java.nio.file.Files.createTempDirectory("graft-ivf-commit-reb").toString
+    IvfStore.write(idxOf(e), rebuilt)
+    val m = spark.read.parquet(s"$path/lists")
+    val r = spark.read.parquet(s"$rebuilt/lists")
+    assert(m.count() == r.count() &&
+      m.exceptAll(r).isEmpty && r.exceptAll(m).isEmpty,
+      "committed postings must equal the batch rebuild bit-for-bit")
+    // and it SERVES identically
+    val qs = e.filter(col("vec_id") < KMeans.EvalBlock)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val sm = IvfStore.servedTop10(spark, path, qs)
+      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+    val sr = IvfStore.servedTop10(spark, rebuilt, qs)
+      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+    assert(sm.nonEmpty && sm == sr)
+    // at-least-once replay: re-delivering a COMMITTED batch id must
+    // change nothing (the _batches marker short-circuits it)
+    val before = m.count()
+    commit(arrivals.take(4), 0L, "ingest-a")
+    assert(spark.read.parquet(s"$path/lists").count() == before,
+      "a replayed committed batch must be a no-op")
+    // a NEW lineage restarts batch ids at 0 — its batch 0 must FILE,
+    // not short-circuit on the old lineage's marker
+    val extra = arrivals.take(4).map { case (id, v) => (id + 100000L, v) }
+    commit(extra, 0L, "ingest-b")
+    assert(spark.read.parquet(s"$path/lists").count() == before + 4,
+      "a new lineage's batch 0 must file its arrivals")
+    // half-commit replay converges to exactly-once: drop the marker
+    // (simulating a crash before it landed) and re-deliver — the staged
+    // commit overwrites its own deterministic file names, so the tree
+    // neither duplicates nor loses a posting
+    val tagB = IvfStore.lineageTag("ingest-b")
+    val markerFs = new java.io.File(s"$path/_batches/$tagB/0")
+    assert(markerFs.exists(), "commit marker must exist under the lineage tag")
+    assert(markerFs.delete())
+    commit(extra, 0L, "ingest-b")
+    val afterReplay = spark.read.parquet(s"$path/lists")
+    assert(afterReplay.count() == before + 4,
+      "replaying a half-committed batch must converge, not duplicate")
+    assert(afterReplay.filter(col("n_id") >= 100000L).count() == 4)
+    // markers live at STORE level so committed batches stay committed
+    // ACROSS a retrain (the new generation is rebuilt FROM the filed
+    // postings — re-filing them would duplicate): re-delivering both
+    // committed batches after the generation swap must no-op, and a
+    // genuinely new batch must file into the NEW generation's tree
+    val total = before + 4
+    val gen = IvfStore.retrain(spark, path)
+    def genLists = spark.read.parquet(s"$path/$gen/lists")
+    assert(genLists.count() == total,
+      "retrain must carry every filed posting into the new generation")
+    commit(arrivals.take(4), 0L, "ingest-a")
+    commit(extra, 0L, "ingest-b")
+    assert(genLists.count() == total,
+      "committed batches must stay committed across the generation swap")
+    commit(arrivals.take(2).map { case (id, v) => (id + 200000L, v) }, 1L, "ingest-b")
+    assert(genLists.filter(col("n_id") >= 200000L).count() == 2,
+      "a new batch after retrain must file into the new generation's tree")
+    // maintenance-before-replay rollback: a batch that crashed between
+    // its live-tree moves and the final marker leaves an .inflight
+    // intent without a final twin. If MAINTENANCE runs before the
+    // replay, recover must delete that batch's (still prefix-named)
+    // files — otherwise compaction would fold them into anonymous
+    // files and the replay would duplicate them forever.
+    val nowTotal = genLists.count()
+    val extra3 = arrivals.take(3).map { case (id, v) => (id + 300000L, v) }
+    commit(extra3, 2L, "ingest-b")
+    assert(genLists.filter(col("n_id") >= 300000L).count() == 3)
+    // simulate the crash window: final marker gone, intent restored
+    assert(new java.io.File(s"$path/_batches/$tagB/2").delete())
+    new java.io.File(s"$path/_batches/$tagB/2.inflight").createNewFile()
+    IvfStore.recover(spark, path)
+    assert(genLists.filter(col("n_id") >= 300000L).count() == 0,
+      "recover must roll back the half-committed batch's postings")
+    assert(genLists.count() == nowTotal)
+    // the eventual replay re-files it exactly once
+    commit(extra3, 2L, "ingest-b")
+    assert(genLists.filter(col("n_id") >= 300000L).count() == 3
+      && genLists.count() == nowTotal + 3,
+      "the replay after rollback must converge to exactly-once filing")
+    // empty-batch fast path: marker lands, tree untouched
+    commit(Seq.empty, 3L, "ingest-b")
+    assert(new java.io.File(s"$path/_batches/$tagB/3").exists()
+      && genLists.count() == nowTotal + 3,
+      "an empty batch must land only its marker")
+  }
+
+  test("commitBatch then compact keeps ingest cells at the file bound; content, serving and replay invariant") {
+    // commits fragment hot cells; a compact after each commit keeps
+    // every cell at the bound, the tree's content and serving stay
+    // bit-equal to a from-scratch batch rebuild, and committed batches
+    // stay committed (markers, not file names, are the dedup key —
+    // compaction folds batch files into anonymous names)
+    import spark.implicits._
+    import graft.operators.{KMeans, Quantize}
+    import graft.sources.IvfStore
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val maxId = e.agg(max("vec_id")).head().getLong(0)
+    val old = e.filter(col("vec_id") <= maxId - 24)
+    val cents = KMeans.fit(old)
+    val cb = Quantize.pqCodebook(old)
+    def idxOf(corpus: org.apache.spark.sql.DataFrame) = Quantize.IvfAdcIndex(
+      cents,
+      KMeans.assign(corpus, cents).select(col("vec_id").as("n_id"), col("cluster")),
+      Quantize.pqCodesWith(cb, corpus)
+        .select(col("vec_id").as("n_id"), col("sub"), col("code")),
+      cb, corpus)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-commitc").toString
+    IvfStore.write(idxOf(old), path)
+    // the base write leaves one file per cell, so at bound 1 every
+    // commit that touches an existing cell leaves work for compact
+    val arrivals = e.filter(col("vec_id") > maxId - 24)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val rewrites = arrivals.grouped(2).zipWithIndex.map { case (chunk, i) =>
+      IvfStore.commitBatch(spark, path, chunk.toDF("vec_id", "v"), "ingest-ac", i.toLong)
+      IvfStore.compact(spark, path, maxFilesPerCell = 1).size
+    }.toSeq
+    assert(rewrites.count(_ > 0) > 1,
+      s"compaction must have work after more than one commit: $rewrites")
+    def filesPerCell = new java.io.File(s"$path/lists").listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("cell="))
+      .map(d => d.getName -> d.listFiles().map(_.getName)
+        .count(n => n.endsWith(".parquet") || n.startsWith("part-"))).toMap
+    assert(filesPerCell.nonEmpty && filesPerCell.values.forall(_ <= 1),
+      s"every cell must end at the bound: $filesPerCell")
+    // content and serving equal the from-scratch batch rebuild
+    val rebuilt = java.nio.file.Files.createTempDirectory("graft-ivf-commitc-reb").toString
+    IvfStore.write(idxOf(e), rebuilt)
+    val m = spark.read.parquet(s"$path/lists")
+    val r = spark.read.parquet(s"$rebuilt/lists")
+    assert(m.count() == r.count() &&
+      m.exceptAll(r).isEmpty && r.exceptAll(m).isEmpty,
+      "committed and compacted postings must equal the batch rebuild bit-for-bit")
+    val qs = e.filter(col("vec_id") < KMeans.EvalBlock)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    assert(IvfStore.servedTop10(spark, path, qs)
+        .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq ==
+      IvfStore.servedTop10(spark, rebuilt, qs)
+        .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq)
+    // replay safety across compaction: the batch's own files are long
+    // gone (folded), but its lineage marker survives — re-delivery
+    // must no-op
+    val before = spark.read.parquet(s"$path/lists").count()
+    IvfStore.commitBatch(spark, path, arrivals.take(2).toDF("vec_id", "v"), "ingest-ac", 0L)
+    assert(spark.read.parquet(s"$path/lists").count() == before,
+      "a committed batch replayed after compaction must be a no-op")
+    // compact rewrites nothing when no cell exceeds the bound
+    assert(IvfStore.compact(spark, path, maxFilesPerCell = 1).isEmpty,
+      "a within-bound tree must not be rewritten")
+  }
+
+  test("commitBatch loud-fails while the maintenance lock is held and resumes after release") {
+    // a commit that lands during compact/retrain would race recover's
+    // sweeps; the maintenance lock makes that an exception, and a
+    // replay files the batch once maintenance released the lock
+    import spark.implicits._
+    import graft.sources.IvfStore
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val maxId = e.agg(max("vec_id")).head().getLong(0)
+    val old = e.filter(col("vec_id") <= maxId - 4)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-lock").toString
+    IvfStore.writeFitted(old, path)
+    val arrivals = e.filter(col("vec_id") > maxId - 4)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    // a crashed (or running) maintenance holds the lock
+    java.nio.file.Files.writeString(
+      java.nio.file.Path.of(path, "_maint.lock"), "pid=0 t=0")
+    val ex = intercept[IllegalStateException](
+      IvfStore.commitBatch(spark, path, arrivals.toDF("vec_id", "v"), "ingest-lk", 0L))
+    assert(ex.getMessage.contains("maintenance"),
+      s"the failure must name the lock: ${ex.getMessage}")
+    assert(!new java.io.File(
+      s"$path/_batches/${IvfStore.lineageTag("ingest-lk")}/0").exists(),
+      "a refused commit must leave no marker")
+    // the next maintenance open (here: a compact) releases the lock...
+    IvfStore.compact(spark, path, maxFilesPerCell = 64)
+    assert(!new java.io.File(s"$path/_maint.lock").exists(),
+      "maintenance must release the lock on completion")
+    // ...and the replay then files the batch exactly once
+    val before = spark.read.parquet(s"$path/lists").count()
+    IvfStore.commitBatch(spark, path, arrivals.toDF("vec_id", "v"), "ingest-lk", 0L)
+    assert(spark.read.parquet(s"$path/lists").count() == before + arrivals.length,
+      "the replayed batch must file after the lock clears")
   }
 
   test("rebuild audit reads clean on a maintained store and flags a duplicated posting file") {
