@@ -74,6 +74,22 @@ object Tables {
     }.nextOption()
   }
 
+  /** [[tsEncodingAt]] that answers None when `path` is absent or holds
+    * no parquet files yet (the canonical empty landing dir) — the
+    * STRUCTURAL form of that contract, so callers with a default
+    * encoding don't have to pattern-match exception messages. A probe
+    * that positively fails (the bare-INT64 loud-fail, IO errors) still
+    * throws. */
+  def tsEncodingIfPresent(spark: SparkSession, path: String): Option[TsEncoding] = {
+    val root = new Path(path)
+    val exists =
+      try {
+        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+        firstParquetFile(fs, root).isDefined
+      } catch { case _: java.io.FileNotFoundException => false }
+    if (exists) Some(tsEncodingAt(spark, path)) else None
+  }
+
   def tsEncodingAt(spark: SparkSession, path: String): TsEncoding = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)

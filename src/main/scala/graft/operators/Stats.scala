@@ -112,9 +112,12 @@ object Stats {
   def q137WelchTtest(spark: SparkSession, dir: String): DataFrame =
     welchFromSummaries(welchSummaries(Tables.events(spark, dir)))
 
-  /** The per-cohort (n, mean, s²) summaries the q137 t-test runs on
-    * (avg/var_samp are Spark's mergeable central-moment aggregates, so
-    * partials merge with O(|cohorts|) state). `n` counts non-null
+  /** The per-cohort (n, mean, s²) summaries the t-test runs on — ONE
+    * definition shared by batch q137 and the streaming twin
+    * ([[graft.streaming.EventStream]] applies it to a stream in
+    * complete mode: avg/var_samp are Spark's mergeable central-moment
+    * aggregates, so the micro-batch partials merge into exactly the
+    * batch answer with O(|cohorts|) state). `n` counts non-null
     * VALUES, not rows — a null measurement contributes to neither the
     * moments nor the sample size. */
   def welchSummaries(events: DataFrame): DataFrame =

@@ -295,8 +295,8 @@ object Temporal {
     * from each type's (min, max) day span IN-ROW (sequence + explode
     * over an O(types) frame — never a calendar × corpus join) and
     * left-joins the cells back — every post-collapse stage is bounded
-    * by types × span days. Null types/values drop at the gate (a null
-    * type is not a series). */
+    * by types × span days. Null types/values drop at the gate (the
+    * streaming-twin convention; a null type is not a series). */
   def q156GapFill(spark: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(spark, dir)
       .filter(col("event_type").isNotNull && col("value").isNotNull)
@@ -324,10 +324,10 @@ object Temporal {
     * replaces the window-function chain: Catalyst plans a single
     * exchange on user and merges overlapping [ts, ts+gap) intervals in
     * the aggregate itself (the UpdatingSessionsIterator path), which is
-    * also the operator Spark runs for a streaming session window,
-    * unlike q25's lag() which has no streaming rendering. Output is
-    * per-SESSION (start, end, n_events, value sum) — finer grain than
-    * q25's per-user rollup.
+    * also the EXACT operator a streaming deployment would run — batch
+    * and stream share the plan, unlike q25's lag() which has no
+    * streaming rendering. Output is per-SESSION (start, end, n_events,
+    * value sum) — finer grain than q25's per-user rollup.
     *
     * Boundary semantics, explicit — and VERIFIED on an exact-gap
     * fixture, not assumed: `session_window` MERGES an event landing
@@ -708,7 +708,9 @@ object Temporal {
   }
 
   /** The q174 fold over an already-distinct (user_id, d epoch-day)
-    * frame. */
+    * frame — shared verbatim by the batch query and the streaming
+    * twin's emitted first-sightings ([[graft.streaming.EventStream
+    * .activeDaySightings]]), so both render the SAME algebra. */
   def activeUsersFromDayRows(ud: DataFrame): DataFrame = {
     val span = ud.agg(min("d").as("d0"), max("d").as("d1"))
     val wU = Window.partitionBy("user_id").orderBy("d")
@@ -1367,7 +1369,10 @@ object Temporal {
   }
 
   /** The q239 fold from the (event_type, d, y3) daily-total frame to
-    * the anomaly report. */
+    * the anomaly report — shared with the streaming twin
+    * (`EventStream.deseasonalizedReport`), so the two surfaces are
+    * parity-by-construction: identical expression tree, identical
+    * rounding, identical guards. */
   def deseasonalizedFold(dailyTotals: DataFrame): DataFrame = {
     val daily = dailyTotals
       .withColumn("dow", dayofweek(col("d")).cast("long"))
@@ -1434,7 +1439,10 @@ object Temporal {
   }
 
   /** The q240 fold from the (day, delta_s) conversion-latency frame to
-    * the daily p50/p90 report. */
+    * the daily p50/p90 report — shared with the streaming twin
+    * (`EventStream.dailyLatencyReport`), so the two surfaces are
+    * parity-by-construction: identical histogram, identical exact
+    * order-statistic picks, identical rounding. */
   def dailyLatencyFold(deltas: DataFrame): DataFrame = {
     val hist = deltas.groupBy("day", "delta_s").agg(count(lit(1)).as("cnt"))
     val wc = Window.partitionBy("day").orderBy("delta_s")

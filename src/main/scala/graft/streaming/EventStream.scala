@@ -62,7 +62,7 @@ object EventStream {
       case TsEncoding.InstantTimestamp => TimestampType
     }
     // a production landing zone is often the day-partitioned tree
-    // (Tables.writeEventsPartitionedByDay), and a dir that is EMPTY at
+    // (`event_date=YYYY-MM-DD/`, which Tables.events also reads), and a dir that is EMPTY at
     // definition may receive that layout later — so the listing is
     // ALWAYS recursive (for a flat dir it lists the same files). The
     // partition column is NOT in the schema: the stream presents the

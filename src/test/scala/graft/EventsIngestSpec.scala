@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (TIMESTAMP(NANOS) in rounds 1-3, TIMESTAMP(MICROS) from round 4) and
   * took out the entire event-query family at analysis time. This spec
   * writes the SAME logical rows under every encoding Tables.TsEncoding
-  * names and asserts `Tables.events` decodes
+  * names and asserts `Tables.events` (and the streaming reader) decode
   * them identically, so the class of bug cannot silently recur. */
 class EventsIngestSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -151,5 +151,63 @@ class EventsIngestSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](
       Tables.tsEncodingAt(spark, writeBareMicros("baremicros")))
     assert(e.getMessage.contains("too small"))
+  }
+
+  test("streaming reader propagates the bare-INT64 loud-fail instead of defaulting") {
+    // the probe fallback exists ONLY for the empty/absent landing dir;
+    // a probe that positively failed must not be swallowed into the
+    // NTZ-micros default (that would re-create the silent ~1970 decode
+    // on the streaming path)
+    val e = intercept[IllegalStateException](
+      graft.streaming.EventStream.readStream(spark, writeBareMicros("stream-baremicros")))
+    assert(e.getMessage.contains("too small"))
+  }
+
+  test("streaming reader accepts an empty landing directory (files arrive later)") {
+    val dir = Files.createTempDirectory("graft-empty-landing").toString
+    val q = graft.streaming.EventStream.readStream(spark, dir)
+      .writeStream.format("memory").queryName("empty_landing")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-empty-landing-ckpt").toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("empty_landing").isEmpty)
+  }
+
+  test("streaming reader drains the day-partitioned landing tree like the flat layout") {
+    // a production landing zone is often the event_date=... tree; the
+    // stream must descend into it and present the flat logical schema
+    val flatDir = writeNtz("part-flat").stripSuffix("/events.parquet")
+    val partDir = Files.createTempDirectory("graft-part-stream").toString
+    Fixtures.writeEventsPartitionedByDay(spark, flatDir, s"$partDir/events.parquet")
+    val q = graft.streaming.EventStream.readStream(spark, s"$partDir/events.parquet")
+      .select(col("event_id"), unix_micros(col("ts")).as("us"),
+        col("user_id"), col("event_type"), col("value"), col("props"))
+      .writeStream.format("memory").queryName("part_stream")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-part-stream-ckpt").toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("part_stream").orderBy("event_id").collect().toSeq
+    val want = micros.map { case (id, us, user, typ, v, props) =>
+      Row(id, us, user, typ, v, props)
+    }
+    assert(got == want, "partitioned landing tree must decode to the same rows")
+  }
+
+  test("streaming reader decodes nanos and micros fixtures identically") {
+    def drained(dir: String): Seq[Row] = {
+      val q = graft.streaming.EventStream.readStream(spark, dir)
+        .select(col("event_id"), unix_micros(col("ts")).as("us"), col("user_id"))
+        .writeStream.format("memory").queryName(s"ingest_${dir.hashCode.abs}")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-ingest-ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(s"ingest_${dir.hashCode.abs}").orderBy("event_id").collect().toSeq
+    }
+    val viaNanos = drained(writeLongTs("stream-nanos", annotateNanos = true))
+    val viaMicros = drained(writeNtz("stream-ntz"))
+    assert(viaNanos.nonEmpty && viaNanos == viaMicros)
   }
 }

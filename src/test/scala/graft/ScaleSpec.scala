@@ -483,6 +483,23 @@ class ScaleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("retention fold plans one user-keyed pass over sightings, no self-join") {
+    import spark.implicits._
+    // input = distinct (user, week) sightings — at scale, users × weeks
+    // rows. The fold must stay: one user-keyed exchange (cohort window),
+    // tiny matrix-sized aggregations after — never a join back onto the
+    // sightings (the conflicting-lineage self-join this replaced) and
+    // never anything corpus-sized past the first shuffle.
+    val sightings = (1 to 200).flatMap { u =>
+      (0 to u % 5).map(w => (u.toLong, 19700L + 7L * w))
+    }.toDF("user_id", "week_day")
+    val plan = graft.streaming.EventStream.retentionMatrix(sightings)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin")
+      && !plan.contains("CartesianProduct"), s"fold must not join:\n$plan")
+    assert(plan.split("Exchange hashpartitioning").length - 1 <= 3,
+      s"one user window + matrix-sized aggs only:\n$plan")
+  }
   test("PQ / IVF retrieval and q115 re-rank plan broadcast-only corpus joins") {
     // the probe tables (LUT, shortlist, probed cells) are bounded by
     // construction; the corpus side must stream past them — a

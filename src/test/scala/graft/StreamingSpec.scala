@@ -279,21 +279,6 @@ class StreamingSpec extends AnyFunSuite {
       s"planted out-of-order users must stall mid-funnel: $got2")
   }
 
-  test("declared stream schemas match the batch-inferred schemas of the live testdata") {
-    // streaming sources cannot infer, so DocStream/VecStream declare
-    // their schemas — a drift between declaration and the driver's
-    // parquet stays LATENT until a consumer projects the mismatched
-    // column (label was declared string over int32 data and no probe
-    // read it). Pin declaration == inference so a regen flips this
-    // test, not a production query.
-    assert(graft.streaming.DocStream.docSchema ==
-      Tables.documents(spark, sf0001).schema,
-      "DocStream.docSchema drifted from the documents parquet")
-    assert(graft.streaming.VecStream.vecSchema ==
-      Tables.embeddings(spark, sf0001).schema,
-      "VecStream.vecSchema drifted from the embeddings parquet")
-  }
-
   test("weekStartDay matches Spark's date_trunc(week) across a year of days") {
     import spark.implicits._
     // the retention parity holds only if the stream's Scala-side week
@@ -1090,60 +1075,6 @@ class StreamingSpec extends AnyFunSuite {
       s"watermark trim must not change any reachable stage: $got")
   }
 
-  test("doc stateful twins survive dirty rows (null doc_id / text / source)") {
-    import spark.implicits._
-    // the doc-side mirror of the event dirty sweep: a crawl WILL carry
-    // null text and broken ids; one such row must not kill an ingest
-    // query. Contract (DocStream.droppingNullDocKeys): rows without a
-    // keyable doc_id/text drop; a null SOURCE stays keyable for the cap
-    // (it is a legitimate batch group too).
-    val clean = (1 to 20).map { i =>
-      org.apache.spark.sql.Row(i.toLong,
-        s"the quick brown fox number $i jumps over the lazy dog marker$i",
-        "en", s"src${i % 2}", 60L)
-    }
-    val dirty = Seq(
-      org.apache.spark.sql.Row(101L, null, "en", "src0", 0L),   // null text
-      org.apache.spark.sql.Row(null, "stray row with no id", "en", "src1", 20L), // null id
-      org.apache.spark.sql.Row(102L, "doc with a null source attribute", "en", null, 33L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dirty-docs")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(clean ++ dirty, 2),
-        graft.streaming.DocStream.docSchema)
-      .write.parquet(dir.resolve("documents.parquet").toString)
-    def drain(name: String,
-        build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]): Long = {
-      val q = build(graft.streaming.DocStream.readStream(
-          spark, dir.resolve("documents.parquet").toString))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft-$name-ckpt").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(name).count()
-    }
-    val corpusIndex = Seq((3L, "existing corpus text"))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("content_hash"))
-      .groupBy("content_hash").agg(min("doc_id").as("corpus_canonical"))
-    val nPack = drain("dirty_pack", df => graft.streaming.DocStream.packingManifest(df))
-    val nCap = drain("dirty_cap", df => graft.streaming.DocStream.sourceCap(df, cap = 5))
-    val nDedup = drain("dirty_incr",
-      df => graft.streaming.DocStream.incrementalDedup(df, corpusIndex))
-    val nLine = drain("dirty_line", df => graft.streaming.DocStream.lineDedup(df))
-    // keyable rows: 20 clean + the null-source doc (cap also keeps the
-    // null-TEXT doc out only via doc_id+text for pack/dedup; cap keys
-    // on doc_id alone, so it adjudicates the null-text doc too)
-    assert(nPack == 21L, s"packing manifest must slot the 21 keyable docs, got $nPack")
-    assert(nCap == 22L, s"source cap must adjudicate the 22 id-bearing docs, got $nCap")
-    assert(nDedup == 21L, s"incremental dedup must classify the 21 keyable docs, got $nDedup")
-    assert(nLine > 0L, "line dedup must emit the surviving segments")
-    // and the null-source doc got a real cap decision under its null group
-    val nullSrc = spark.table("dirty_cap").filter(col("doc_id") === 102L).collect()
-    assert(nullSrc.length == 1 && nullSrc.head.getLong(3) == 1L,
-      "the null-source doc is a legitimate group and fits under the cap")
-  }
-
   test("stateful ops recover from a checkpoint restart mid-stream") {
     import spark.implicits._
     // the production failure mode: the query dies (or is redeployed)
@@ -1435,78 +1366,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("doc twins recover quota and cursor state from a checkpoint restart") {
-    import spark.implicits._
-    // the event-side restart tests cover sets and ring buffers; the doc
-    // twins carry the remaining state classes — the source-cap QUOTA
-    // counter and the packing CURSOR. Continuation is the whole
-    // contract: a fresh-state run 2 would re-open s0's quota (admitting
-    // over-cap docs) and restart shard 0's cursor at offset 0.
-    def doc(id: Long, words: Int, src: String) = org.apache.spark.sql.Row(
-      id, (1 to words).map(i => s"w$i").mkString(" "), "en", src, words.toLong)
-    val fileA = Seq(doc(1, 100, "s0"), doc(2, 100, "s0"), doc(3, 40, "s1"))
-    val fileB = Seq(doc(4, 80, "s0"), doc(5, 80, "s0"), doc(6, 60, "s1"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-docrestart")
-    val ckCap = java.nio.file.Files.createTempDirectory("graft-docrestart-ckpt-c").toString
-    val ckPack = java.nio.file.Files.createTempDirectory("graft-docrestart-ckpt-p").toString
-    def writeDocs(name: String, rows: Seq[org.apache.spark.sql.Row]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory(s"graft-docstage-$name")
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-          graft.streaming.DocStream.docSchema)
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.move(part, dir.resolve(name))
-    }
-    writeDocs("a.parquet", fileA)
-    val capRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val packRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    def capQuery() = graft.streaming.DocStream.sourceCap(
-        graft.streaming.DocStream.readStream(spark, dir.toString), cap = 3)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.DocStream.CapDecision], _: Long) =>
-        val out = batch.collect().map(c => (c.doc_id, c.slot, c.kept))
-        capRows.synchronized { capRows ++= out }
-        ()
-      }
-      .option("checkpointLocation", ckCap).start()
-    def packQuery() = graft.streaming.DocStream.packingManifest(
-        graft.streaming.DocStream.readStream(spark, dir.toString))
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.DocStream.PackSlot], _: Long) =>
-        val out = batch.collect().map(p => (p.doc_id, p.bin, p.slot, p.bin_offset))
-        packRows.synchronized { packRows ++= out }
-        ()
-      }
-      .option("checkpointLocation", ckPack).start()
-    val c1 = capQuery(); try c1.processAllAvailable() finally c1.stop()
-    val p1 = packQuery(); try p1.processAllAvailable() finally p1.stop()
-    writeDocs("b.parquet", fileB)
-    val c2 = capQuery(); try c2.processAllAvailable() finally c2.stop()
-    val p2 = packQuery(); try p2.processAllAvailable() finally p2.stop()
-    // s0's quota continues 3, 4 — doc 5 is the over-cap reject; a lost
-    // counter would hand run-2 docs slots 1, 2 and admit everything
-    val caps = capRows.synchronized(capRows.toSet)
-    assert(caps == Set((1L, 1L, 1L), (2L, 2L, 1L), (4L, 3L, 1L), (5L, 4L, 0L),
-      (3L, 1L, 1L), (6L, 2L, 1L)),
-      s"restored quota counters must continue, not restart: $caps")
-    // shard 0's cursor continues at 240 tokens — doc 4 straddles into
-    // bin 0 at offset 240, doc 5 opens bin 1; and the whole drained
-    // manifest equals batch q90 over everything delivered
-    val batchDir = java.nio.file.Files.createTempDirectory("graft-docrestart-batch")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(fileA ++ fileB, 1),
-        graft.streaming.DocStream.docSchema)
-      .write.parquet(batchDir.resolve("documents.parquet").toString)
-    val want = SparkEntry.queries("q90_packing_manifest")(spark, batchDir.toString)
-      .select("doc_id", "bin", "slot", "bin_offset")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(packRows.synchronized(packRows.toSet) == want,
-      s"manifest across the restart must equal batch q90: ${packRows.toSet} vs $want")
-    assert(want.contains((4L, 0L, 4L, 240L)),
-      "doc 4 must continue bin 0 at the restored 240-token offset")
-  }
-
   test("watermarked funnel matches batch truth on seeded random deliveries") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -1598,835 +1457,6 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(u => u.user_id -> ((u.n_sessions, u.n_events))).toMap
     assert(got(1L) == ((2L, 3L)))
     assert(got(2L) == ((1L, 1L)))
-  }
-
-  test("streaming line dedup keeps exactly the batch q59 survivors under id-ordered arrival") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // 10-word segments by construction: segA/segB/segC are exact spans
-    def seg(w: String) = (1 to 10).map(i => s"$w$i").mkString(" ")
-    val (segA, segB, segC) = (seg("a"), seg("b"), seg("c"))
-    val docs = Seq(
-      1L -> s"$segA $segB",
-      2L -> s"$segB $segC", // segB is a replay — must be dropped
-      3L -> segA)           // whole doc is a replay — nothing survives
-    // batch answer on the same fixture
-    val dir = java.nio.file.Files.createTempDirectory("graft-linededup").toString
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val want = graft.operators.TextAnalysis.q59LineDedup(spark, dir)
-      .select("doc_id", "clean_text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // stream the docs one micro-batch per doc, in doc_id order
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.DocStream.lineDedup(ms.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("line_dedup_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ld-ckpt").toString)
-      .start()
-    try {
-      docs.foreach { d => ms.addData(d); q.processAllAvailable() }
-      val kept = spark.table("line_dedup_stream")
-        .groupBy("doc_id")
-        .agg(array_join(expr(
-          "transform(sort_array(collect_list(struct(seg_idx, seg))), x -> x.seg)"), " ")
-          .as("clean_text"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      // doc 3 emits nothing in the stream; batch says clean_text = ''
-      assert(kept == want.filter(_._2.nonEmpty),
-        s"streaming survivors $kept != batch $want")
-      assert(!kept.contains(3L))
-      assert(kept(2L) == segC)
-    } finally q.stop()
-  }
-
-  test("streaming incremental dedup matches the batch q73 classification under id-ordered arrival") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // static corpus index — the stored hash table a deployed ingest probes
-    val corpus = Seq(3L -> "existing corpus text", 4L -> "other corpus text")
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("content_hash"))
-      .groupBy("content_hash").agg(min("doc_id").as("corpus_canonical"))
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.DocStream
-      .incrementalDedup(ms.toDF().toDF("doc_id", "text"), corpus)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("incr_dedup_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-id-ckpt").toString)
-      .start()
-    try {
-      // one micro-batch per doc: the dup_batch case (27 after 7) crosses
-      // micro-batches, so it exercises the state store, not batch-local sort
-      Seq(7L -> "fresh shard text", 17L -> "existing corpus text",
-        27L -> "fresh shard text", 37L -> "unique shard text")
-        .foreach { d => ms.addData(d); q.processAllAvailable() }
-      val got = spark.table("incr_dedup_stream").collect()
-        .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-      // q73's exact classification on the same fixture (QueriesSpec twin)
-      assert(got == Map(
-        7L  -> (("new", 7L)),
-        17L -> (("dup_corpus", 3L)),
-        27L -> (("dup_batch", 7L)),
-        37L -> (("new", 37L))))
-    } finally q.stop()
-  }
-
-  test("streaming decontamination emits exactly the batch q70 rows") {
-    // the last major text operator without an ingest-time twin: probe
-    // arriving docs against the static eval-shingle set. Stateless, so
-    // parity is unconditional (no arrival-order caveat).
-    val dir = java.nio.file.Files.createTempDirectory("graft-decon-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val evalSet = graft.operators.TextAnalysis.evalShingleSet(spark, sf0001)
-    val q = graft.streaming.DocStream
-      .decontaminate(graft.streaming.DocStream.readStream(spark, dir.toString), evalSet)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("decon_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-decon-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("decon_stream")
-      val want = SparkEntry.queries("q70_decontaminate")(spark, sf0001)
-      assert(got.count() == want.count())
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "streaming decontamination must equal batch q70 row-for-row")
-      assert(want.filter(col("contaminated") === 1).count() > 0,
-        "fixture must contain real contamination or the parity is vacuous")
-    } finally q.stop()
-  }
-
-  test("streaming chunker emits exactly the batch q142 chunk rows") {
-    // stateless generator twin: every arriving doc lands as its chunk
-    // rows; parity is unconditional (no arrival-order caveat)
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunk-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val q = graft.streaming.DocStream
-      .chunkOverlap(graft.streaming.DocStream.readStream(spark, dir.toString))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("chunk_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-chunk-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("chunk_stream")
-      val want = SparkEntry.queries("q142_chunk_overlap")(spark, sf0001)
-      assert(got.count() == want.count() && got.count() > 0)
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "streaming chunks must equal batch q142 row-for-row")
-    } finally q.stop()
-  }
-
-  test("streaming multi-suite probe emits exactly the batch q149 attribution rows") {
-    // stateless suite-tagged twin of the decontamination probe: build
-    // the planted per-suite corpus (the q149 fixture recipe), stream
-    // the docs, and the emitted (doc, suite, n_overlap) rows must be
-    // the batch answer row-for-row
-    import spark.implicits._
-    import graft.functions.Portable
-    def bucketOf(text: String): Long = Seq(text).toDF("text")
-      .select((Portable.tokenId(col("text")) % 100L).as("b")).head().getLong(0)
-    def find(base: String, pred: Long => Boolean, tag: String): String =
-      Iterator.from(0).map(i => s"$base $tag$i").find(t => pred(bucketOf(t))).get
-    val baseA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val baseB = "red orange yellow green blue indigo violet cyan magenta umber"
-    val docs = Seq(
-      (1L, find(baseA, b => b >= 95 && b <= 96, "sa")),
-      (2L, find(baseB, b => b >= 97 && b <= 98, "sb")),
-      (3L, find(baseA, _ < 95, "la")),
-      (4L, find(baseB, _ < 95, "lb")),
-      (5L, find("one two three four five six seven eight nine ten", _ < 95, "cl")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-msuite-stream")
-    // the file stream source lists FLAT files: stage and move one part
-    val stage = java.nio.file.Files.createTempDirectory("graft-msuite-stage")
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = java.nio.file.Files.list(stage).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    java.nio.file.Files.move(part, dir.resolve("documents.parquet"))
-    val suiteSets = graft.operators.TextAnalysis.suiteShingleSet(spark, dir.toString)
-    val q = graft.streaming.DocStream
-      .multiSuiteProbe(
-        graft.streaming.DocStream.readStream(spark, dir.toString), suiteSets)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("msuite_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-msuite-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("msuite_stream")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val want = graft.operators.TextAnalysis
-        .q149MultiSuiteDecontaminate(spark, dir.toString)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(want == Set((3L, "suite_a", 3L), (4L, "suite_b", 3L)),
-        s"planted attribution: $want")
-      assert(got == want, s"stream $got vs batch $want")
-    } finally q.stop()
-  }
-
-  test("streaming CDC mergeApply folds the change feed to the batch q131 snapshot; replay is idempotent") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf0001).select(col("doc_id"), col("text"))
-    val snapDir = java.nio.file.Files.createTempDirectory("graft-cdc-snap").toString
-    docs.write.parquet(s"$snapDir/v=0") // caller-seeded base version
-    // the q131 feed, split across two micro-batches by id parity —
-    // records are keyed and independent, so any split must fold to the
-    // same final snapshot
-    val feed = graft.operators.TextAnalysis.revisionChangeFeed(docs)
-      .select(col("doc_id"), col("op"), col("text"))
-    val feedDir = java.nio.file.Files.createTempDirectory("graft-cdc-feed")
-    def stage(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-cdc-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator()
-      var found: java.nio.file.Path = null
-      while (part.hasNext) { val p = part.next(); if (p.toString.endsWith(".parquet")) found = p }
-      java.nio.file.Files.move(found, feedDir.resolve(name))
-    }
-    stage("a.parquet", feed.filter(col("doc_id") % 2 === 0))
-    stage("b.parquet", feed.filter(col("doc_id") % 2 =!= 0))
-    val q = graft.streaming.DocStream.mergeApply(
-      spark.readStream.schema(graft.streaming.DocStream.changeSchema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir.toString),
-      snapDir,
-      java.nio.file.Files.createTempDirectory("graft-cdc-ckpt").toString)
-    try q.processAllAvailable() finally q.stop()
-    def fp(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id"), md5(col("text")).as("h"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val got = fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir))
-    val want = SparkEntry.queries("q131_merge_upsert")(spark, sf0001)
-      .select("doc_id", "h")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == want, "streamed CDC apply must equal the batch MERGE")
-    // replay the SECOND batch (failure/retry): it must rebuild from the
-    // same predecessor version and overwrite itself — state unchanged
-    val batchB = spark.read.schema(graft.streaming.DocStream.changeSchema)
-      .parquet(feedDir.resolve("b.parquet").toString)
-    graft.streaming.DocStream.applyChangeBatch(batchB, 1L, snapDir)
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir)) == want,
-      "replaying a committed batch must not change the snapshot")
-    // the snapshot tree is persistent STORE state (r13 verdict #4): the
-    // version listing and the replay must work through the Hadoop
-    // FileSystem API against a scheme-qualified URI, not only a bare
-    // local path — the java.io.File listing this replaced silently saw
-    // an empty directory on any non-local filesystem
-    val qualified = s"file://$snapDir"
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, qualified)) == want,
-      "latestSnapshot must resolve versions through the fs API")
-    graft.streaming.DocStream.applyChangeBatch(batchB, 1L, qualified)
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, qualified)) == want,
-      "a qualified-URI replay must converge to the same snapshot")
-    // a TORN version (writer crashed mid-overwrite: files present, no
-    // _SUCCESS) must be invisible to readers AND to predecessor
-    // selection — without the commit gate, latestSnapshot served the
-    // partial corpus as the newest snapshot
-    val torn = new java.io.File(s"$snapDir/v=9")
-    torn.mkdirs()
-    java.nio.file.Files.writeString(
-      torn.toPath.resolve("part-00000.parquet"), "partial write")
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir)) == want,
-      "a torn (uncommitted) version must be invisible to latestSnapshot")
-    // the crashed batch's replay (id 8 → v=9) merges against the newest
-    // COMMITTED predecessor and overwrites the torn directory
-    graft.streaming.DocStream.applyChangeBatch(batchB, 8L, snapDir)
-    assert(new java.io.File(s"$snapDir/v=9/_SUCCESS").exists(),
-      "the replay must land a committed v=9 over the torn one")
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir)) == want,
-      "the recommitted version must carry the converged snapshot")
-    // retention: every version is a FULL corpus copy, so the tail must
-    // be boundable — vacuum keeps the newest k committed versions and
-    // sweeps torn leftovers strictly below the newest committed
-    val torn2 = new java.io.File(s"$snapDir/v=3")
-    torn2.mkdirs()
-    // reader grace: at the default minAge, every COMMITTED version was
-    // superseded within the window — a concurrent reader's scan can
-    // never lose its resolved version inside the grace — while the
-    // torn crash leftover is age-independent garbage and goes at once
-    assert(graft.streaming.DocStream.vacuumSnapshots(spark, snapDir,
-        keepLast = 1) == Seq(3L),
-      "vacuum must refuse recently superseded versions but sweep torn garbage")
-    assert(new java.io.File(s"$snapDir/v=0").isDirectory
-      && new java.io.File(s"$snapDir/v=2").isDirectory,
-      "graced committed versions must survive")
-    val dropped = graft.streaming.DocStream.vacuumSnapshots(spark, snapDir,
-      keepLast = 1, minAgeMs = 0L)
-    assert(new java.io.File(s"$snapDir/v=9").isDirectory
-      && !new java.io.File(s"$snapDir/v=0").exists()
-      && !new java.io.File(s"$snapDir/v=2").exists()
-      && !new java.io.File(s"$snapDir/v=3").exists(),
-      s"vacuum(keepLast=1) must keep only the newest committed version (dropped $dropped)")
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir)) == want,
-      "the surviving snapshot must serve unchanged after vacuum")
-    // replay meeting a vacuumed predecessor: batch 8's own committed
-    // v=9 proves it fully applied — the replay must no-op (converge),
-    // not fail the whole stream on a recoverable state
-    graft.streaming.DocStream.applyChangeBatch(batchB, 8L, snapDir)
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir)) == want,
-      "a replay whose predecessor was vacuumed must no-op on its committed output")
-    // the grace is SUPERSESSION-anchored: a version whose own commit is
-    // ancient but whose successor is fresh must survive (a reader may
-    // have resolved it moments before the successor landed) — under an
-    // own-mtime anchor any batch interval longer than the grace would
-    // delete the predecessor the instant its successor committed
-    graft.streaming.DocStream.applyChangeBatch(batchB, 20L, snapDir)
-    assert(new java.io.File(s"$snapDir/v=21/_SUCCESS").exists())
-    assert(new java.io.File(s"$snapDir/v=9/_SUCCESS")
-      .setLastModified(System.currentTimeMillis() - 60 * 60 * 1000L))
-    assert(graft.streaming.DocStream.vacuumSnapshots(spark, snapDir,
-        keepLast = 1).isEmpty
-      && new java.io.File(s"$snapDir/v=9").isDirectory,
-      "an old version with a FRESH successor must survive the grace")
-    assert(new java.io.File(s"$snapDir/v=21/_SUCCESS")
-      .setLastModified(System.currentTimeMillis() - 60 * 60 * 1000L))
-    assert(graft.streaming.DocStream.vacuumSnapshots(spark, snapDir,
-        keepLast = 1) == Seq(9L)
-      && !new java.io.File(s"$snapDir/v=9").exists(),
-      "once the successor has aged past the grace, the version is reclaimable")
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snapDir)) == want,
-      "the re-merged v=21 must still carry the converged snapshot")
-    // auto-retention wiring (the appendArrivals precedent): a fresh
-    // ingest with keepVersions=1 self-vacuums down to one committed
-    // version per batch boundary and still folds to the same snapshot
-    val snap2 = java.nio.file.Files.createTempDirectory("graft-cdc-snap2").toString
-    docs.write.parquet(s"$snap2/v=0")
-    val q2 = graft.streaming.DocStream.mergeApply(
-      spark.readStream.schema(graft.streaming.DocStream.changeSchema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir.toString),
-      snap2,
-      java.nio.file.Files.createTempDirectory("graft-cdc-ckpt2").toString,
-      keepVersions = Some(1), vacuumGraceMs = 0L)
-    try q2.processAllAvailable() finally q2.stop()
-    val vDirs = new java.io.File(snap2).listFiles()
-      .filter(_.getName.startsWith("v=")).map(_.getName).toSeq
-    assert(vDirs.size == 1,
-      s"auto-vacuum(keepVersions=1) must leave one version, got $vDirs")
-    assert(fp(graft.streaming.DocStream.latestSnapshot(spark, snap2)) == want,
-      "the self-vacuuming ingest must fold to the same final snapshot")
-    // a retention misconfiguration must be rejected at the call site,
-    // not as a delayed mid-stream failure after a batch durably applied
-    intercept[IllegalArgumentException] {
-      graft.streaming.DocStream.mergeApply(
-        spark.readStream.schema(graft.streaming.DocStream.changeSchema)
-          .parquet(feedDir.toString),
-        snap2,
-        java.nio.file.Files.createTempDirectory("graft-cdc-ckpt3").toString,
-        keepVersions = Some(0))
-    }
-  }
-
-  test("streaming snapshot-delta probe equals batch q106 minus its removed rows") {
-    // the new crawl ARRIVES as a stream and probes the old snapshot's
-    // static fingerprint index; added/changed verdicts must match the
-    // batch delta exactly, and `removed` is exactly the set the stream
-    // cannot know (closed by the batch anti-join at end of crawl)
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf0001)
-    val revisionDir = java.nio.file.Files.createTempDirectory("graft-delta-stream")
-    graft.operators.TextAnalysis.syntheticRevision(docs)
-      .write.parquet(revisionDir.resolve("documents.parquet").toString)
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .parquet(revisionDir.resolve("documents.parquet").toString)
-    val q = graft.streaming.DocStream
-      .snapshotDeltaProbe(stream, graft.streaming.DocStream.fingerprintIndex(docs))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("delta_probe")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-delta-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val live = spark.table("delta_probe").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      val batch = SparkEntry.queries("q106_snapshot_delta")(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      val removed = batch.filter(_._2 == "removed")
-      assert(removed.nonEmpty, "fixture must exercise removals or the split is vacuous")
-      assert(live == batch -- removed,
-        s"stream verdicts must equal batch delta minus removed; diff: ${
-          (live diff (batch -- removed)) ++ ((batch -- removed) diff live)}")
-    } finally q.stop()
-  }
-
-  test("streaming embedding-drift stats converge to the batch q104 comparison") {
-    // the stream maintains the per-dimension stats table incrementally
-    // (complete mode, O(d) state); streaming only the ODD-id vectors
-    // and comparing against a static even-id baseline must reproduce
-    // the batch q104 parity-split drift exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft-vecdrift-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/embeddings.parquet"),
-      dir.resolve("embeddings.parquet"))
-    val q = graft.streaming.VecStream
-      .ingestDimStats(
-        graft.streaming.VecStream.readStream(spark, dir.toString)
-          .filter(col("vec_id") % 2 =!= 0))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("vec_dim_stats")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-vecdrift-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val live = spark.table("vec_dim_stats")
-      val emb = Tables.embeddings(spark, sf0001)
-      val baseline = graft.operators.LinAlg.dimStats(
-        emb.filter(col("vec_id") % 2 === 0))
-      val got = graft.operators.LinAlg.dimDrift(baseline, live).collect()
-        .map(r => r.getLong(0) -> (1 to 5).map(r.getDouble)).toMap
-      val want = SparkEntry.queries("q104_embedding_drift")(spark, sf0001)
-        .collect().map(r => r.getLong(0) -> (1 to 5).map(r.getDouble)).toMap
-      assert(got.keySet == want.keySet && got.nonEmpty)
-      for (d <- want.keys; c <- 0 until 5)
-        assert(math.abs(got(d)(c) - want(d)(c)) <= 1e-6 + 1e-12,
-          s"dim $d col $c: ${got(d)(c)} vs ${want(d)(c)}")
-    } finally q.stop()
-  }
-
-  test("streaming IVF assignment equals the batch assign bit-for-bit") {
-    // stateless fold-argmin twin of KMeans.assign: same rounded
-    // distance, same lowest-cluster tie-break — every arriving vector
-    // must land in exactly the cell the batch index build would pick
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/embeddings.parquet"),
-      dir.resolve("embeddings.parquet"))
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cents = graft.operators.KMeans.fit(e)
-    val q = graft.streaming.VecStream
-      .ivfAssign(graft.streaming.VecStream.readStream(spark, dir.toString), cents)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ivf_assign_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ivf-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("ivf_assign_stream")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val want = graft.operators.KMeans.assign(e, cents)
-        .select(col("vec_id"), col("cluster"), col("dist"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(want.nonEmpty && got == want,
-        "streaming cell assignment must equal the batch KMeans.assign")
-      // every cell in use — the parity is not vacuous on a degenerate fit
-      assert(got.map(_._2).size > 1)
-    } finally q.stop()
-  }
-
-  test("streaming centroid update converges to the batch per-cell mean, shared aggregator") {
-    // the re-centering half of IVF upkeep: the running per-cell mean a
-    // stream maintains must equal the batch assign -> VectorMean answer
-    // once all vectors have arrived. Batch and stream share the SAME
-    // typed aggregator object, so this pins the incremental planner's
-    // state fold, not a reimplementation.
-    val dir = java.nio.file.Files.createTempDirectory("graft-cu-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/embeddings.parquet"),
-      dir.resolve("embeddings.parquet"))
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cents = graft.operators.KMeans.fit(e)
-    val q = graft.streaming.VecStream
-      .centroidUpdate(graft.streaming.VecStream.readStream(spark, dir.toString), cents)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("centroid_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-cu-ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // update mode re-emits per batch; one file = the last emission per
-    // cluster is the converged centroid
-    val got = spark.table("centroid_stream")
-      .groupBy("cluster").agg(max("n_vectors").as("n"),
-        last("centroid").as("centroid"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Double](2)))).toMap
-    val mean = udaf(graft.functions.VectorMean)
-    val want = graft.operators.KMeans.assign(e, cents)
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("n"), mean(col("v")).as("centroid"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Double](2)))).toMap
-    assert(got.keySet == want.keySet && got.nonEmpty)
-    want.foreach { case (c, (n, wv)) =>
-      val (gn, gv) = got(c)
-      assert(gn == n, s"cell $c count")
-      assert(gv.length == wv.length)
-      // same aggregator, but partial-merge ORDER differs between the
-      // incremental and batch plans — identical up to fp reassociation
-      gv.zip(wv).foreach { case (a, b) =>
-        assert(math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b)),
-          s"cell $c centroid drifted beyond reassociation noise")
-      }
-    }
-  }
-
-  test("streaming drift monitor converges to the batch q98 comparison") {
-    // the stream maintains the q98 cell table incrementally (complete
-    // mode, O(lang × source) state); once the source drains, drift
-    // against a static baseline must equal the batch two-snapshot query
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val q = graft.streaming.DocStream
-      .ingestCells(graft.streaming.DocStream.readStream(spark, dir.toString))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("drift_cells")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-drift-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val live = spark.table("drift_cells")
-      val docs = Tables.documents(spark, sf0001)
-      // baseline: a skewed half of the corpus, so drift is non-trivial
-      val baseline = graft.operators.TextAnalysis.corpusCells(
-        docs.filter(col("doc_id") % 3 === 0))
-      val got = graft.operators.TextAnalysis.cellDrift(baseline, live)
-      val want = graft.operators.TextAnalysis.snapshotDrift(
-        docs.filter(col("doc_id") % 3 === 0), docs)
-      assert(got.count() == want.count())
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "monitor drift must equal the batch snapshot comparison row-for-row")
-      assert(want.filter(col("share_drift") > 0).count() > 0,
-        "fixture must produce real drift or the parity is vacuous")
-    } finally q.stop()
-  }
-
-  test("streaming PII scrub rewrites arriving docs exactly as batch q69 would") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pii-stream")
-    Seq(
-      (1L, "contact alice.smith+dev@example.co.uk or call +1 (415) 555-0123 now", "en", "s0"),
-      (2L, "server at 10.0.142.7 responded", "en", "s1"),
-      (3L, "plain prose with no identifiers at all", "de", "s2"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$dir/documents.parquet")
-    val q = graft.streaming.DocStream
-      .piiScrub(graft.streaming.DocStream.readStream(spark, s"$dir/documents.parquet"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("pii_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-pii-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("pii_stream").select("doc_id", "text")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val want = graft.operators.TextAnalysis.q69PiiScrub(spark, dir.toString)
-        .select("doc_id", "clean_text")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got == want, "stream-scrubbed text must equal the batch q69 clean_text")
-      assert(!got(1L).contains("alice") && got(1L).contains("<EMAIL>"),
-        "planted email must be redacted at ingest")
-      assert(got(3L) == "plain prose with no identifiers at all",
-        "clean prose must pass through untouched")
-    } finally q.stop()
-  }
-
-  test("streaming quality gate admits exactly the batch q37 rows above threshold") {
-    // stateless twin sharing q37's scorer verbatim: parity is
-    // unconditional and the gate can never disagree with batch curation
-    val dir = java.nio.file.Files.createTempDirectory("graft-qgate-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val q = graft.streaming.DocStream
-      .qualityGate(graft.streaming.DocStream.readStream(spark, dir.toString), 0.6)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("qgate_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-qgate-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("qgate_stream")
-      val want = SparkEntry.queries("q37_quality_score")(spark, sf0001)
-        .filter(col("quality") >= 0.6)
-      assert(got.count() == want.count())
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "streaming quality gate must equal the batch q37 filter row-for-row")
-      val total = SparkEntry.queries("q37_quality_score")(spark, sf0001).count()
-      assert(want.count() > 0 && want.count() < total,
-        "threshold must genuinely split the fixture or the parity is vacuous")
-    } finally q.stop()
-  }
-
-  test("online BQ retrieval answers a query stream bit-identically to batch q84") {
-    import org.apache.spark.sql.DataFrame
-    val dir = java.nio.file.Files.createTempDirectory("graft-vec-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/embeddings.parquet"),
-      dir.resolve("embeddings.parquet"))
-    val corpus = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val corpusSig = graft.operators.Quantize.binarySignatures(corpus)
-    val queries = spark.readStream
-      .schema(spark.read.parquet(s"$dir/embeddings.parquet").schema)
-      .parquet(dir.toString)
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Double)]
-    val q = queries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = graft.streaming.VecStream.bqProbe(corpusSig, batch).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-        results.synchronized { results ++= out }
-        ()
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-vec-ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val want = SparkEntry.queries("q84_binary_quant_knn")(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-    assert(results.nonEmpty && results.toSet == want.toSet,
-      s"online answers must equal the batch top-k (got ${results.size}, want ${want.length})")
-  }
-
-  test("streaming source cap admits exactly the batch q67 winners under priority-ordered ids") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft-cap-stream")
-    // doc ids assigned in ascending content-hash priority, so within
-    // every source ascending doc_id == q67's (prio, doc_id) fill order
-    // — the arrival-order contract under which the ingest gate and the
-    // batch cap admit the same docs
-    val raw = (1 to 60).map { i =>
-      (i.toLong, s"document body number $i with marker $i", "en", s"src${i % 3}")
-    }.toDF("tmp", "text", "lang", "source")
-    raw
-      .withColumn("prio", graft.functions.Portable.tokenId(col("text")))
-      .withColumn("doc_id",
-        row_number().over(Window.orderBy("prio", "tmp")).cast("long"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).orderBy("doc_id")
-      .write.parquet(dir.resolve("documents.parquet").toString)
-    val want = SparkEntry.queries("q67_source_cap")(spark, dir.toString).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap // source -> n_kept
-    val q = graft.streaming.DocStream
-      .sourceCap(graft.streaming.DocStream.readStream(
-        spark, dir.resolve("documents.parquet").toString), cap = 15)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cap_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-cap-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("cap_stream").collect()
-      assert(got.length == 60, "every arriving doc gets a decision")
-      got.groupBy(_.getString(1)).foreach { case (src, rows) =>
-        assert(rows.map(_.getLong(2)).sorted.sameElements(1L to rows.length),
-          s"slots must be dense per source: $src")
-        val kept = rows.filter(_.getLong(3) == 1L)
-        assert(kept.length.toLong == want(src),
-          s"stream must admit exactly the batch winners for $src")
-        assert(kept.forall(_.getLong(2) <= 15L))
-        // under priority-ordered ids the admitted docs are the lowest ids
-        val keptIds = kept.map(_.getLong(0)).sorted.toSeq
-        val allIds = rows.map(_.getLong(0)).sorted.toSeq
-        assert(keptIds == allIds.take(kept.length))
-      }
-    } finally q.stop()
-  }
-
-  test("streaming packing manifest equals batch q90 row for row under id-ordered arrival") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val q = graft.streaming.DocStream
-      .packingManifest(graft.streaming.DocStream.readStream(spark, dir.toString))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("pack_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-pack-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("pack_stream")
-        .select("bin", "slot", "doc_id", "bin_offset", "n_tokens")
-      val want = SparkEntry.queries("q90_packing_manifest")(spark, sf0001)
-      assert(got.count() == want.count() && got.count() > 0)
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "ingest-time slots must equal the batch manifest exactly")
-    } finally q.stop()
-  }
-
-  test("per-row text kernels (repetition stats, PII scrub) run unchanged on a doc stream") {
-    // the text-pipeline scalar operators are stateless per-row plans, so
-    // the SAME expressions work at ingest time with no code changes —
-    // assert the streaming answer equals the batch answer on real docs
-    val dir = java.nio.file.Files.createTempDirectory("graft-textstream")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sf0001/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    def signals(df: org.apache.spark.sql.DataFrame) = df.select(
-      col("doc_id"),
-      graft.plans.RepetitionStats.repetitionStats(split(col("text"), " ")).as("st"),
-      graft.operators.TextAnalysis.redactPii(col("text")).as("clean"),
-      // the q159 canonicalization gate is the same stateless kernel —
-      // content keys computed at ingest match the batch keys exactly
-      md5(graft.plans.NfcNormalize.nfc(col("text")).cast("binary")).as("nfc_key"))
-      .select(col("doc_id"), col("st.n_distinct").as("nd"), col("clean"), col("nfc_key"))
-    val q = signals(graft.streaming.DocStream.readStream(spark, dir.toString))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("text_signals_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ts-ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("text_signals_stream")
-      val want = signals(Tables.documents(spark, sf0001))
-      assert(got.count() == want.count())
-      assert(got.exceptAll(want).count() == 0)
-    } finally q.stop()
-  }
-
-  test("streaming MG sketches: per-source heavy-hitter guarantee holds under shuffled delivery") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val K = graft.functions.MisraGries.K
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "text", "source").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-    // adversarial delivery: seeded shuffle, many small micro-batches —
-    // the guarantee must be order-independent (mergeable summaries)
-    val shuffled = new scala.util.Random(42).shuffle(docs)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String, String)]
-    val q = graft.streaming.DocStream.heavyHitterSketches(
-        ms.toDF().toDF("doc_id", "text", "source"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("hh_sketches")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-hh-ckpt").toString)
-      .start()
-    try {
-      shuffled.grouped(7).foreach { chunk =>
-        ms.addData(chunk: _*); q.processAllAvailable()
-      }
-      val exact = Tables.documents(spark, sf0001)
-        .select(col("source"),
-          explode(graft.functions.Portable.tokenize(col("text"))).as("word"))
-        .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val totals = exact.groupBy(_._1._1).map { case (s, m) => s -> m.values.sum }
-      val got = spark.table("hh_sketches").collect()
-      assert(got.length == totals.size, "one summary per source")
-      got.foreach { r =>
-        val src = r.getString(0)
-        val sk = r.getStruct(1)
-        val items = sk.getAs[Map[String, Long]]("items")
-        val n = sk.getAs[Long]("n")
-        assert(n == totals(src), s"$src: token total drifted")
-        assert(items.size <= K)
-        val bound = n / (K + 1)
-        exact.filter { case ((s, _), c) => s == src && c > bound }.foreach {
-          case ((_, w), c) =>
-            assert(items.contains(w), s"$src: heavy token $w (count $c) missing")
-        }
-        items.foreach { case (w, est) =>
-          val truth = exact.getOrElse((src, w), 0L)
-          assert(est <= truth && truth - est <= bound,
-            s"$src/$w: est $est vs truth $truth (bound $bound)")
-        }
-      }
-    } finally q.stop()
-  }
-
-  test("streaming CMS cells equal batch cell-for-cell under shuffled delivery; estimates fold to q256") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val shuffled = new scala.util.Random(43).shuffle(docs)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.DocStream.cmsCells(
-        ms.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("cms_cells_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-cms-ckpt").toString)
-      .start()
-    try {
-      shuffled.grouped(9).foreach { chunk =>
-        ms.addData(chunk: _*); q.processAllAvailable()
-      }
-      val toks = Tables.documents(spark, sf0001)
-        .select(explode(graft.functions.Portable.tokenize(col("text"))).as("word"))
-      val want = graft.operators.HeavyHitters.cmsCells(toks)
-      val got = spark.table("cms_cells_stream")
-      // cell-for-cell: counts are mergeable, so delivery order is moot
-      assert(got.count() == want.count())
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
-      // the shared point-query fold over the STREAM cells reproduces
-      // the batch q256 report verbatim
-      val top = toks.groupBy("word")
-        .agg(count(lit(1)).as("exact_count"))
-        .orderBy(desc("exact_count"), asc("word")).limit(20)
-      val streamEst = graft.operators.HeavyHitters
-        .cmsEstimates(got, top).collect().map(_.toSeq)
-      val batchEst = SparkEntry.queries("q256_cms_freq")(spark, sf0001)
-        .collect().map(_.toSeq)
-      assert(streamEst.toSeq == batchEst.toSeq)
-    } finally q.stop()
-  }
-
-  test("streaming CMS keeps null-doc_id docs: cell parity with batch on a planted null-key doc") {
-    // The CMS grid keys on (r, bkt), never a doc key, so the stream must
-    // NOT drop null-doc_id rows the way keyed folds do — batch q256
-    // tokenizes every document. A planted null-doc_id doc with text and
-    // a null-text doc both flow through identically to batch (ADVICE r11).
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(java.lang.Long, String)]
-    val q = graft.streaming.DocStream.cmsCells(
-        ms.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("cms_nullkey_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-cms-null-ckpt").toString)
-      .start()
-    try {
-      ms.addData(
-        (java.lang.Long.valueOf(7L), "alpha beta alpha"),
-        (null: java.lang.Long, "beta gamma gamma"),
-        (java.lang.Long.valueOf(8L), null: String))
-      q.processAllAvailable()
-      val batch = graft.operators.HeavyHitters.cmsCells(
-        Seq((Option(7L), Option("alpha beta alpha")),
-            (Option.empty[Long], Option("beta gamma gamma")),
-            (Option(8L), Option.empty[String]))
-          .toDF("doc_id", "text")
-          .select(explode(graft.functions.Portable.tokenize(col("text"))).as("word")))
-      val got = spark.table("cms_nullkey_stream")
-      assert(got.count() == batch.count())
-      assert(got.exceptAll(batch).count() == 0 && batch.exceptAll(got).count() == 0)
-    } finally q.stop()
   }
 
   test("streaming EWMA monitor equals batch q113 on every closed day") {
@@ -2782,141 +1812,6 @@ class StreamingSpec extends AnyFunSuite {
       s"state must survive the restart: $got")
   }
 
-  test("streaming bottom-k sample folds to batch q196 under REVERSED arrival") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // the property q196 sells is order-independence of the final
-    // sample; deliver the corpus in reverse doc_id order across three
-    // micro-batches to stress it
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "lang", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      .sortBy(-_._1)
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String, String, String)]
-    val q = graft.streaming.DocStream.prioritySampleSightings(
-        ms.toDF().toDF("doc_id", "source", "lang", "text"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("psample_sightings")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ps-ckpt").toString)
-      .start()
-    try {
-      docs.grouped((docs.length + 2) / 3).foreach { g =>
-        ms.addData(g.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val sightings = spark.table("psample_sightings")
-    val got = graft.streaming.DocStream.prioritySample(sightings)
-      .collect().map(_.toSeq).toSeq
-    val want = SparkEntry.queries("q196_priority_sample")(spark, sf0001)
-      .collect().map(_.toSeq).toSeq
-    assert(want.nonEmpty && got == want,
-      "stream-folded bottom-k must equal batch q196 row-for-row")
-    // the emission stream is a superset of the sample; the shards×k×ln
-    // undercut only bites when corpus ≫ shards·k (at sf0.001, 500 docs
-    // vs 16×100 slots, every doc legitimately enters its shard top-k)
-    val n = sightings.count()
-    assert(n >= 100 && n <= docs.length)
-    assert(sightings.select("doc_id").distinct().count() == n,
-      "a doc enters its shard's bottom-k at most once")
-  }
-
-  test("streaming A-ES weighted sample folds to batch q213 under REVERSED arrival") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // q196's monotone-entry argument with the sign flipped: the
-    // weighted key ln(u)/w enters a shard's TOP-k monotonically, so
-    // the fold must equal batch q213 under any delivery order —
-    // reverse doc_id across three micro-batches stresses it
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "n_chars", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
-      .sortBy(-_._1)
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String, Long, String)]
-    val q = graft.streaming.DocStream.weightedSampleSightings(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "text"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("aes_sightings")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-aes-ckpt").toString)
-      .start()
-    try {
-      docs.grouped((docs.length + 2) / 3).foreach { g =>
-        ms.addData(g.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val sightings = spark.table("aes_sightings")
-    val got = graft.streaming.DocStream.weightedSample(sightings)
-      .collect().map(_.toSeq).toSeq
-    val want = SparkEntry.queries("q213_weighted_sample")(spark, sf0001)
-      .collect().map(_.toSeq).toSeq
-    assert(want.nonEmpty && got == want,
-      "stream-folded A-ES sample must equal batch q213 row-for-row")
-    val n = sightings.count()
-    assert(n >= 100 && n <= docs.length)
-    assert(sightings.select("doc_id").distinct().count() == n,
-      "a doc enters its shard's top-k at most once")
-  }
-
-  test("A-ES weighted sample state survives a checkpoint restart") {
-    import spark.implicits._
-    // kill the query after the first micro-batch commits, restart from
-    // the checkpoint, deliver the rest: the recovered shard top-k state
-    // must suppress docs that would re-enter a FRESH top-k, and the
-    // fold must still equal batch q213 (the q184 debounce restart
-    // pattern applied to sample state)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-aesr-src")
-    val ck = java.nio.file.Files.createTempDirectory("graft-aesr-ckpt").toString
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "n_chars", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[
-      graft.streaming.DocStream.AesEntry]
-    def query() = graft.streaming.DocStream.weightedSampleSightings(
-        spark.readStream.schema(graft.streaming.DocStream.docSchema)
-          .parquet(srcDir.toString)
-          .select(col("doc_id"), col("source"), col("n_chars"), col("text")))
-      .writeStream.outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[graft.streaming.DocStream.AesEntry],
-         _: Long) =>
-          val out = batch.collect()
-          rows.synchronized { rows ++= out }
-          ()
-      }
-      .option("checkpointLocation", ck)
-      .start()
-    val (half1, half2) = docs.splitAt(docs.length / 2)
-    // write FLAT part files as the file stream expects (the
-    // writeFlatEvents stage-and-move pattern, documents schema)
-    def writeFlatDocs(name: String,
-        ds: Seq[(Long, String, Long, String)]): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory(s"graft-aes-$name")
-      ds.map(d => (d._1, d._4, "en", d._2, d._3))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.move(part, srcDir.resolve(name))
-    }
-    writeFlatDocs("a.parquet", half1.toSeq)
-    val q1 = query()
-    try q1.processAllAvailable() finally q1.stop()
-    writeFlatDocs("b.parquet", half2.toSeq)
-    val q2 = query()
-    try q2.processAllAvailable() finally q2.stop()
-    import org.apache.spark.sql.functions.{desc, asc}
-    val sightings = rows.synchronized(rows.toSeq).toDF()
-    val got = graft.streaming.DocStream.weightedSample(sightings)
-      .collect().map(_.toSeq).toSeq
-    val want = SparkEntry.queries("q213_weighted_sample")(spark, sf0001)
-      .collect().map(_.toSeq).toSeq
-    assert(want.nonEmpty && got == want,
-      "restart-recovered state must still fold to batch q213")
-  }
-
   test("streaming gap sightings fold to batch q235 under ordered delivery") {
     import spark.implicits._
     // the live burstiness monitor's contract: under event-time-ordered
@@ -3151,250 +2046,6 @@ class StreamingSpec extends AnyFunSuite {
       "wide-horizon bounded fold must equal batch q240 row-for-row")
   }
 
-  test("streaming arrivals maintain the stored IVF index; replayed batches are no-ops") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.{KMeans, Quantize}
-    import graft.sources.IvfStore
-    // index built when the corpus was smaller; the last ten vectors
-    // arrive as a stream and are filed at ingest via foreachBatch
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val maxId = e.agg(max("vec_id")).head().getLong(0)
-    val old = e.filter(col("vec_id") <= maxId - 10)
-    val cents = KMeans.fit(old)
-    val cb = Quantize.pqCodebook(old)
-    def idxOf(corpus: org.apache.spark.sql.DataFrame) = Quantize.IvfAdcIndex(
-      cents,
-      KMeans.assign(corpus, cents).select(col("vec_id").as("n_id"), col("cluster")),
-      Quantize.pqCodesWith(cb, corpus)
-        .select(col("vec_id").as("n_id"), col("sub"), col("code")),
-      cb, corpus)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
-    IvfStore.write(idxOf(old), path)
-    val arrivals = e.filter(col("vec_id") > maxId - 10)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Seq[Double])]
-    val q = ms.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          graft.streaming.VecStream.appendArrivals(spark, path, b, id, "ingest-a")
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ivf-stream-ckpt").toString)
-      .start()
-    try {
-      arrivals.grouped(4).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // drained tree == from-scratch rebuild under the same artifacts
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-ivf-stream-reb").toString
-    IvfStore.write(idxOf(e), rebuilt)
-    val m = spark.read.parquet(s"$path/lists")
-    val r = spark.read.parquet(s"$rebuilt/lists")
-    assert(m.count() == r.count() &&
-      m.exceptAll(r).isEmpty && r.exceptAll(m).isEmpty,
-      "ingest-maintained postings must equal the batch rebuild bit-for-bit")
-    // and it SERVES identically
-    val qs = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val sm = IvfStore.servedTop10(spark, path, qs)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-    val sr = IvfStore.servedTop10(spark, rebuilt, qs)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-    assert(sm.nonEmpty && sm == sr)
-    // at-least-once replay: re-delivering a COMMITTED batch id must
-    // change nothing (the _batches marker short-circuits it)
-    val before = m.count()
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.take(4).toSeq.toDF("vec_id", "embedding"), 0L, "ingest-a")
-    assert(spark.read.parquet(s"$path/lists").count() == before,
-      "a replayed committed batch must be a no-op")
-    // the ADVICE r12 data-loss regression: a NEW lineage (fresh
-    // checkpoint) restarts batch ids at 0 — its batch 0 must FILE, not
-    // short-circuit on the old lineage's marker
-    val extraDf = arrivals.take(4).toSeq
-      .map { case (id, v) => (id + 100000L, v) }.toDF("vec_id", "embedding")
-    graft.streaming.VecStream.appendArrivals(spark, path, extraDf, 0L, "ingest-b")
-    assert(spark.read.parquet(s"$path/lists").count() == before + 4,
-      "a new lineage's batch 0 must file its arrivals")
-    // half-commit replay converges to exactly-once: drop the marker
-    // (simulating a crash before it landed) and re-deliver — the staged
-    // commit overwrites its own deterministic file names, so the tree
-    // neither duplicates nor loses a posting
-    val tagB = IvfStore.lineageTag("ingest-b")
-    val markerFs = new java.io.File(s"$path/_batches/$tagB/0")
-    assert(markerFs.exists(), "commit marker must exist under the lineage tag")
-    assert(markerFs.delete())
-    graft.streaming.VecStream.appendArrivals(spark, path, extraDf, 0L, "ingest-b")
-    val afterReplay = spark.read.parquet(s"$path/lists")
-    assert(afterReplay.count() == before + 4,
-      "replaying a half-committed batch must converge, not duplicate")
-    assert(afterReplay.filter(col("n_id") >= 100000L).count() == 4)
-    // markers live at STORE level so committed batches stay committed
-    // ACROSS a retrain (the new generation is rebuilt FROM the filed
-    // postings — re-filing them would duplicate): re-delivering both
-    // committed batches after the generation swap must no-op, and a
-    // genuinely new batch must file into the NEW generation's tree
-    val total = before + 4
-    val gen = IvfStore.retrain(spark, path)
-    def genLists = spark.read.parquet(s"$path/$gen/lists")
-    assert(genLists.count() == total,
-      "retrain must carry every filed posting into the new generation")
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.take(4).toSeq.toDF("vec_id", "embedding"), 0L, "ingest-a")
-    graft.streaming.VecStream.appendArrivals(spark, path, extraDf, 0L, "ingest-b")
-    assert(genLists.count() == total,
-      "committed batches must stay committed across the generation swap")
-    val extra2 = arrivals.take(2).toSeq
-      .map { case (id, v) => (id + 200000L, v) }.toDF("vec_id", "embedding")
-    graft.streaming.VecStream.appendArrivals(spark, path, extra2, 1L, "ingest-b")
-    assert(genLists.filter(col("n_id") >= 200000L).count() == 2,
-      "a new batch after retrain must file into the new generation's tree")
-    // maintenance-before-replay rollback: a batch that crashed between
-    // its live-tree moves and the final marker leaves an .inflight
-    // intent without a final twin. If MAINTENANCE runs before the
-    // stream replays, recover must delete that batch's (still
-    // prefix-named) files — otherwise compaction would fold them into
-    // anonymous files and the replay would duplicate them forever.
-    val nowTotal = genLists.count()
-    val extra3 = arrivals.take(3).toSeq
-      .map { case (id, v) => (id + 300000L, v) }.toDF("vec_id", "embedding")
-    graft.streaming.VecStream.appendArrivals(spark, path, extra3, 2L, "ingest-b")
-    assert(genLists.filter(col("n_id") >= 300000L).count() == 3)
-    // simulate the crash window: final marker gone, intent restored
-    assert(new java.io.File(s"$path/_batches/$tagB/2").delete())
-    new java.io.File(s"$path/_batches/$tagB/2.inflight").createNewFile()
-    graft.sources.IvfStore.recover(spark, path)
-    assert(genLists.filter(col("n_id") >= 300000L).count() == 0,
-      "recover must roll back the half-committed batch's postings")
-    assert(genLists.count() == nowTotal)
-    // the stream's eventual replay re-files it exactly once
-    graft.streaming.VecStream.appendArrivals(spark, path, extra3, 2L, "ingest-b")
-    assert(genLists.filter(col("n_id") >= 300000L).count() == 3
-      && genLists.count() == nowTotal + 3,
-      "the replay after rollback must converge to exactly-once filing")
-    // empty-batch fast path: marker lands, tree untouched
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding"), 3L, "ingest-b")
-    assert(new java.io.File(s"$path/_batches/$tagB/3").exists()
-      && genLists.count() == nowTotal + 3,
-      "an empty batch must land only its marker")
-  }
-
-  test("auto-compaction keeps ingest cells at the file bound; content, serving and replay invariant") {
-    // r13 verdict #3: appendArrivals fragments hot cells and compact
-    // existed but nothing triggered it. With maxFilesPerCell set, the
-    // sink self-maintains: after a long multi-batch ingest every cell
-    // is at or under the bound, the tree's content and serving are
-    // bit-equal to a from-scratch batch rebuild, and committed batches
-    // stay committed (markers, not file names, are the dedup key —
-    // compaction folds batch files into anonymous names)
-    import spark.implicits._
-    import graft.operators.{KMeans, Quantize}
-    import graft.sources.IvfStore
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val maxId = e.agg(max("vec_id")).head().getLong(0)
-    val old = e.filter(col("vec_id") <= maxId - 24)
-    val cents = KMeans.fit(old)
-    val cb = Quantize.pqCodebook(old)
-    def idxOf(corpus: org.apache.spark.sql.DataFrame) = Quantize.IvfAdcIndex(
-      cents,
-      KMeans.assign(corpus, cents).select(col("vec_id").as("n_id"), col("cluster")),
-      Quantize.pqCodesWith(cb, corpus)
-        .select(col("vec_id").as("n_id"), col("sub"), col("code")),
-      cb, corpus)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-autoc").toString
-    IvfStore.write(idxOf(old), path)
-    // the base write leaves one file per cell, so bound=1 makes every
-    // commit that touches an existing cell trip the precheck — the
-    // hook must fire repeatedly across the ingest, not just once
-    val arrivals = e.filter(col("vec_id") > maxId - 24)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    arrivals.grouped(2).zipWithIndex.foreach { case (chunk, i) =>
-      graft.streaming.VecStream.appendArrivals(spark, path,
-        chunk.toSeq.toDF("vec_id", "embedding"), i.toLong, "ingest-ac",
-        maxFilesPerCell = Some(1))
-    }
-    def filesPerCell = new java.io.File(s"$path/lists").listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("cell="))
-      .map(d => d.getName -> d.listFiles().map(_.getName)
-        .count(n => n.endsWith(".parquet") || n.startsWith("part-"))).toMap
-    assert(filesPerCell.nonEmpty && filesPerCell.values.forall(_ <= 1),
-      s"every cell must end at the bound: $filesPerCell")
-    // content and serving equal the from-scratch batch rebuild
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-ivf-autoc-reb").toString
-    IvfStore.write(idxOf(e), rebuilt)
-    val m = spark.read.parquet(s"$path/lists")
-    val r = spark.read.parquet(s"$rebuilt/lists")
-    assert(m.count() == r.count() &&
-      m.exceptAll(r).isEmpty && r.exceptAll(m).isEmpty,
-      "self-maintained postings must equal the batch rebuild bit-for-bit")
-    val qs = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    assert(IvfStore.servedTop10(spark, path, qs)
-        .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq ==
-      IvfStore.servedTop10(spark, rebuilt, qs)
-        .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq)
-    // replay safety across compaction: the batch's own files are long
-    // gone (folded), but its lineage marker survives — re-delivery
-    // must no-op, with or without the hook enabled
-    val before = spark.read.parquet(s"$path/lists").count()
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.take(2).toSeq.toDF("vec_id", "embedding"), 0L, "ingest-ac",
-      maxFilesPerCell = Some(1))
-    assert(spark.read.parquet(s"$path/lists").count() == before,
-      "a committed batch replayed after compaction must be a no-op")
-    // the precheck is quiet when nothing exceeds the bound
-    assert(IvfStore.compactIfNeeded(spark, path, 1).isEmpty,
-      "a within-bound tree must not trigger a compact pass")
-  }
-
-  test("commitBatch loud-fails while the maintenance lock is held and resumes after release") {
-    // ADVICE r13: the offline/single-writer contract used to be only
-    // documented — a stream committing during compact/retrain raced
-    // recover's sweeps silently. Now the maintenance lock makes the
-    // violation an exception, and the stream's normal replay files the
-    // batch once maintenance released the lock.
-    import spark.implicits._
-    import graft.operators.Quantize
-    import graft.sources.IvfStore
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val maxId = e.agg(max("vec_id")).head().getLong(0)
-    val old = e.filter(col("vec_id") <= maxId - 4)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-lock").toString
-    IvfStore.writeFitted(old, path)
-    val arrivals = e.filter(col("vec_id") > maxId - 4)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    // a crashed (or running) maintenance holds the lock
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(path, "_maint.lock"), "pid=0 t=0")
-    val ex = intercept[IllegalStateException] {
-      graft.streaming.VecStream.appendArrivals(spark, path,
-        arrivals.toSeq.toDF("vec_id", "embedding"), 0L, "ingest-lk")
-    }
-    assert(ex.getMessage.contains("maintenance"),
-      s"the failure must name the lock: ${ex.getMessage}")
-    assert(!new java.io.File(
-      s"$path/_batches/${IvfStore.lineageTag("ingest-lk")}/0").exists(),
-      "a refused commit must leave no marker")
-    // the next maintenance open (here: a compact) releases the lock...
-    IvfStore.compact(spark, path, maxFilesPerCell = 64)
-    assert(!new java.io.File(s"$path/_maint.lock").exists(),
-      "maintenance must release the lock on completion")
-    // ...and the replay then files the batch exactly once
-    val before = spark.read.parquet(s"$path/lists").count()
-    graft.streaming.VecStream.appendArrivals(spark, path,
-      arrivals.toSeq.toDF("vec_id", "embedding"), 0L, "ingest-lk")
-    assert(spark.read.parquet(s"$path/lists").count() == before + arrivals.length,
-      "the replayed batch must file after the lock clears")
-  }
-
   test("streaming daily totals fold to batch q239 under arbitrary delivery") {
     import spark.implicits._
     // the live deseasonalized-anomaly monitor's contract: running
@@ -3441,375 +2092,5 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(want.nonEmpty && got == want,
       "stream-folded deseasonalized report must equal batch q239 row-for-row")
-  }
-
-  test("streaming encoder-consistency gate folds to batch q226 on a planted drift") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // the q226 planted fixture: two dup groups, one drifted vector —
-    // delivered doc_id-ordered across two micro-batches (the chain-
-    // pairing arrival contract)
-    val dir = java.nio.file.Files.createTempDirectory("graft-encs").toString
-    val same = Seq.tabulate(64)(j => j * 0.01)
-    val drifted = Seq.tabulate(64)(j => -j * 0.01)
-    // includes a CROSS-SOURCE dup pair (5 srcA → 6 srcB): batch q226
-    // attributes the pair to the FIRST member's source (srcA), so the
-    // twin must carry the previous doc's source in state — emitting
-    // the NEW doc's source would put this pair under srcB and diverge
-    // the per-source report (the round-9 ADVICE finding). srcB also
-    // gets its own drifted pair (7,8) so both sources carry rows.
-    val rows = Seq(
-      (1L, "srcA", "alpha beta gamma delta", same),
-      (2L, "srcA", "alpha beta gamma delta", same),
-      (3L, "srcA", "epsilon zeta eta theta", same),
-      (4L, "srcA", "epsilon zeta eta theta", drifted),
-      (5L, "srcA", "unique text one", same),
-      (6L, "srcB", "unique text one", same),
-      (7L, "srcB", "omega psi chi phi", same),
-      (8L, "srcB", "omega psi chi phi", drifted))
-    // batch ground truth over the same rows
-    rows.map(r => (r._1, r._3, "en", r._2))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$dir/documents.parquet")
-    rows.map(r => (r._1, r._4.map(_.toFloat)))
-      .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
-    val want = SparkEntry.queries("q226_encoder_consistency")(spark, dir)
-      .collect().map(_.toSeq).toSeq
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String, String, Seq[Double])]
-    val q = graft.streaming.DocStream.encoderConsistencySightings(
-        ms.toDF().toDF("doc_id", "source", "text", "embedding"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("enc_sightings")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-encs-ckpt").toString)
-      .start()
-    try {
-      // split so the cross-source pair (5 srcA, 6 srcB) ALSO spans two
-      // micro-batches: doc 5's (id, source, vector) must survive in
-      // state to attribute the pair when doc 6 arrives
-      ms.addData(rows.take(5)); q.processAllAvailable()
-      ms.addData(rows.drop(5)); q.processAllAvailable()
-    } finally q.stop()
-    val sightings = spark.table("enc_sightings")
-    // each drifted pair was emitted the moment its second copy arrived
-    val drift = sightings.filter(col("cos_sim") < 0.999)
-      .orderBy("id_prev").collect()
-    assert(drift.length == 2 && drift(0).getLong(1) == 3L
-      && drift(0).getLong(2) == 4L && drift(1).getLong(1) == 7L
-      && drift(1).getLong(2) == 8L)
-    // the cross-source pair carries the FIRST member's source
-    val cross = sightings.filter(col("id_prev") === 5L).collect()
-    assert(cross.length == 1 && cross.head.getString(0) == "srcA")
-    val got = graft.streaming.DocStream.encoderConsistencyReport(sightings)
-      .collect().map(_.toSeq).toSeq
-    assert(want.nonEmpty && got == want,
-      "stream-folded drift report must equal batch q226 row-for-row")
-  }
-
-  /** Stage `rows` as ONE flat embeddings parquet file `dir/<name>`
-    * (float array, the driver encoding); nullEmbedding/nullId rows are
-    * appended as dirty-stream fixtures. */
-  private def writeVecFile(dir: java.nio.file.Path, name: String,
-      rows: Seq[(java.lang.Long, Array[Double])]): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("label",
-        org.apache.spark.sql.types.IntegerType)))
-    val rws = rows.map { case (id, v) =>
-      org.apache.spark.sql.Row(id,
-        if (v == null) null else v.map(_.toFloat).toSeq, 0)
-    }
-    val stage = java.nio.file.Files.createTempDirectory(s"graft-vstage")
-    spark.createDataFrame(spark.sparkContext.parallelize(rws, 1), schema)
-      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = java.nio.file.Files.list(stage).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    java.nio.file.Files.move(part, dir.resolve(name))
-  }
-
-  /** Plain-Scala replica of Dedup.simhashBandTable's per-vector band
-    * values — same plane literals, same sequential dot order, same
-    * `>= 0` sign rule — for engineering band-collision fixtures. */
-  private def bandsOf(v: Array[Double]): Seq[(Int, Long)] = {
-    import graft.operators.Dedup
-    (0 until Dedup.nBands).map { k =>
-      var bv = 0L
-      (0 until Dedup.bandBits).foreach { t =>
-        val p = Dedup.simhashPlanes(k * Dedup.bandBits + t)
-        var dot = 0.0
-        var i = 0
-        while (i < Dedup.planeDim) { dot += v(i) * p(i); i += 1 }
-        if (dot >= 0) bv |= (1L << t)
-      }
-      k -> bv
-    }
-  }
-
-  private def cosRef(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i) * b(i); nx += a(i) * a(i); ny += b(i) * b(i); i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
-
-  test("streaming band-edge sightings fold to batch q68 under arbitrary dirty delivery") {
-    // the cluster-maintenance twin's baseline parity: the real corpus
-    // split across micro-batches by id PARITY (no ordering contract —
-    // the emission set is order-independent), plus unkeyable dirty rows
-    // (null id, null embedding) that must drop at ingest. The fold must
-    // equal batch q68 over the clean corpus row-for-row.
-    // sf0.01: the smallest corpus where batch q68 is non-empty
-    val corpus = "/root/testdata/sf0.01"
-    val rows = Tables.embeddings(spark, corpus)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (java.lang.Long.valueOf(r.getLong(0)),
-        r.getSeq[Double](1).toArray))
-    val (h1, h2) = rows.partition(_._1 % 2 == 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bandedge")
-    writeVecFile(dir, "a.parquet", h1.toSeq)
-    writeVecFile(dir, "b.parquet",
-      h2.toSeq ++ Seq((null: java.lang.Long, rows.head._2),
-        (java.lang.Long.valueOf(999999L), null: Array[Double])))
-    val q = graft.streaming.VecStream.bandEdgeSightings(
-        spark.readStream.schema(graft.streaming.VecStream.vecSchema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("band_edges")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-bandedge-ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val got = graft.streaming.VecStream
-      .dedupClusterReport(spark.table("band_edges"))
-      .collect().map(_.toSeq).toSeq
-    val want = SparkEntry.queries("q68_dedup_clusters")(spark, corpus)
-      .collect().map(_.toSeq).toSeq
-    assert(want.nonEmpty && got == want,
-      "stream-folded dedup clusters must equal batch q68 row-for-row")
-  }
-
-  test("online IVF+ADC probe answers equal the batch q244 query path row-for-row") {
-    // the serving twin of the flagship composed index: the index is
-    // built ONCE (materialized artifacts — what a deployment keeps
-    // hot), query vectors arrive as a stream, and each micro-batch's
-    // foreachBatch answer must be bit-identical to the batch
-    // ivfAdcSearch over the same queries. Queries split across two
-    // files: per-query independence means batch boundaries are
-    // invisible in the answers. A dirty null-embedding row drops.
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val idx = graft.operators.Quantize.buildIvfAdcIndex(e, materialized = true)
-    val queries = Tables.embeddings(spark, sf0001)
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (java.lang.Long.valueOf(r.getLong(0)), r.getSeq[Double](1).toArray))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfadc-serve")
-    writeVecFile(dir, "a.parquet", queries.take(5).toSeq)
-    writeVecFile(dir, "b.parquet",
-      queries.drop(5).toSeq :+ ((null: java.lang.Long, queries.head._2)))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    val q = spark.readStream.schema(graft.streaming.VecStream.vecSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val out = graft.streaming.VecStream.ivfAdcProbe(idx, batch)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        rows.synchronized { rows ++= out }
-        ()
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ivfadc-ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val got = rows.synchronized(rows.toSeq).sortBy(r => (r._1, r._2))
-    val want = graft.operators.Quantize.ivfAdcSearch(idx,
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("v").as("qv")))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(want.nonEmpty && got == want,
-      "online probe answers must equal the batch q244 query path")
-    assert(got.map(_._1).distinct.length == 10, "every query answered once")
-  }
-
-  test("store-backed online probe answers equal batch q262 row-for-row") {
-    // the serving half of the persisted-index lifecycle: the store is
-    // written once, query vectors arrive as a stream, and each
-    // micro-batch is answered FROM DISK with the probed-cell partition
-    // filter — answers bit-equal to the batch served-from-store rows.
-    // A dirty null-embedding row drops (the null-key contract).
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val idx = graft.operators.Quantize.buildIvfAdcIndex(e, materialized = true)
-    val path = java.nio.file.Files.createTempDirectory("graft-storeprobe").toString
-    graft.sources.IvfStore.write(idx, path)
-    val queries = Tables.embeddings(spark, sf0001)
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (java.lang.Long.valueOf(r.getLong(0)), r.getSeq[Double](1).toArray))
-    val dir = java.nio.file.Files.createTempDirectory("graft-storeprobe-src")
-    writeVecFile(dir, "a.parquet", queries.take(5).toSeq)
-    writeVecFile(dir, "b.parquet",
-      queries.drop(5).toSeq :+ ((null: java.lang.Long, queries.head._2)))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    val q = spark.readStream.schema(graft.streaming.VecStream.vecSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val out = graft.streaming.VecStream.storedProbe(spark, path, batch)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        rows.synchronized { rows ++= out }
-        ()
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-storeprobe-ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val got = rows.synchronized(rows.toSeq).sortBy(r => (r._1, r._2))
-    val want = graft.sources.IvfStore.servedTop10(spark, path,
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("v").as("qv")))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq.sortBy(r => (r._1, r._2))
-    assert(want.nonEmpty && got == want,
-      "online store-backed answers must equal the batch served-from-store rows")
-    assert(got.map(_._1).distinct.length == 10, "every query answered once")
-  }
-
-  test("a bridging near-dup merges two live clusters across a checkpoint restart") {
-    // THE production event the twin exists for: clusters {A, A2} and
-    // {B, B2} form in run 1; the stream restarts; a single bridging
-    // vector C arrives in run 2 and must merge them into ONE cluster —
-    // possible only if the restored bucket state still holds the run-1
-    // members (fresh state would emit no edges for C at all).
-    val rnd = new scala.util.Random(20260815L)
-    def gen(): Array[Double] =
-      Array.fill(64)(rnd.nextGaussian().toFloat.toDouble)
-    // search a deterministic fixture: cos(A,B) well under the 0.45
-    // gate, the bridge C = A + B at cos ~0.7 to both, sharing at least
-    // one band BUCKET with each (collision odds ~0.33 per side)
-    val fixture = Iterator.continually {
-      val a = gen(); val b = gen()
-      val c = a.zip(b).map { case (x, y) => (x + y).toFloat.toDouble }
-      (a, b, c)
-    }.take(10000).find { case (a, b, c) =>
-      val (ba, bb, bc) = (bandsOf(a).toSet, bandsOf(b).toSet, bandsOf(c).toSet)
-      cosRef(a, b) < 0.4 && cosRef(c, a) >= 0.5 && cosRef(c, b) >= 0.5 &&
-        (bc & ba).nonEmpty && (bc & bb).nonEmpty && (ba & bb).isEmpty
-    }
-    assert(fixture.nonEmpty, "no band-collision fixture found in 10000 draws")
-    val (a, b, c) = fixture.get
-    def scaled(v: Array[Double], s: Double): Array[Double] =
-      v.map(x => (x * s).toFloat.toDouble) // positive scale: same signs,
-        // same buckets in every band, cosine 1 — a guaranteed near-dup
-    val run1 = Seq((0L, a), (1L, scaled(a, 1.05)),
-      (10L, b), (11L, scaled(b, 1.05)))
-      .map { case (i, v) => (java.lang.Long.valueOf(i), v) }
-    val run2 = Seq((java.lang.Long.valueOf(5L), c))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bridge")
-    val ck = java.nio.file.Files.createTempDirectory("graft-bridge-ckpt").toString
-    writeVecFile(dir, "a.parquet", run1)
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[graft.streaming.VecStream.EdgeSighting]
-    def query() = graft.streaming.VecStream.bandEdgeSightings(
-        spark.readStream.schema(graft.streaming.VecStream.vecSchema)
-          .parquet(dir.toString))
-      .writeStream.outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[graft.streaming.VecStream.EdgeSighting],
-         _: Long) =>
-          val out = batch.collect()
-          rows.synchronized { rows ++= out }
-          ()
-      }
-      .option("checkpointLocation", ck).start()
-    import spark.implicits._
-    val q1 = query(); try q1.processAllAvailable() finally q1.stop()
-    val rep1 = graft.streaming.VecStream
-      .dedupClusterReport(rows.synchronized(rows.toSeq).toDF())
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rep1 == Set((0L, 0L), (1L, 0L), (10L, 10L), (11L, 10L)),
-      s"run 1 must hold two separate clusters: $rep1")
-    writeVecFile(dir, "b.parquet", run2)
-    val q2 = query(); try q2.processAllAvailable() finally q2.stop()
-    val all = rows.synchronized(rows.toSeq)
-    val rep2 = graft.streaming.VecStream.dedupClusterReport(all.toDF())
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rep2 == Set((0L, 0L, 5L), (1L, 0L, 5L), (5L, 0L, 5L),
-      (10L, 0L, 5L), (11L, 0L, 5L)),
-      s"the bridge must merge both clusters into canonical 0: $rep2")
-    // and the fold equals batch q68 over the union corpus
-    val batchDir = java.nio.file.Files.createTempDirectory("graft-bridge-batch")
-    writeVecFile(batchDir, "embeddings.parquet", run1 ++ run2)
-    val want = SparkEntry.queries("q68_dedup_clusters")(spark, batchDir.toString)
-      .collect().map(_.toSeq).toSeq
-    val got = graft.streaming.VecStream.dedupClusterReport(all.toDF())
-      .collect().map(_.toSeq).toSeq
-    assert(want.nonEmpty && got == want)
-  }
-
-  test("a bucket past the cap is tombstoned: its early emissions retract, live pairs survive") {
-    import spark.implicits._
-    // batch keeps only buckets whose FINAL size is within bucketCap —
-    // a stream can't know that early, so the twin emits as it goes and
-    // RETRACTS via a tombstone the moment the cap is crossed. 201
-    // positive scalings of one vector flood their four buckets past
-    // the cap (every early pair must vanish from the fold); a separate
-    // scaled pair in other buckets must survive.
-    val rnd = new scala.util.Random(20260816L)
-    def gen(): Array[Double] =
-      Array.fill(64)(rnd.nextGaussian().toFloat.toDouble)
-    val hot = gen()
-    val hotBands = bandsOf(hot).toSet
-    // a pair whose buckets avoid the flooded ones entirely
-    val d = Iterator.continually(gen()).take(10000)
-      .find(v => (bandsOf(v).toSet & hotBands).isEmpty && cosRef(v, hot) < 0.4)
-    assert(d.nonEmpty)
-    val cap = graft.operators.Dedup.bucketCap
-    val flood = (0 until cap + 1).map(j =>
-      (java.lang.Long.valueOf(100L + j),
-        hot.map(x => (x * (1.0 + 0.001 * j)).toFloat.toDouble)))
-    val pair = Seq(
-      (java.lang.Long.valueOf(500L), d.get),
-      (java.lang.Long.valueOf(501L), d.get.map(x => (x * 1.05).toFloat.toDouble)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-capstream")
-    writeVecFile(dir, "a.parquet", flood ++ pair)
-    val q = graft.streaming.VecStream.bandEdgeSightings(
-        spark.readStream.schema(graft.streaming.VecStream.vecSchema)
-          .parquet(dir.toString))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cap_edges")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-cap-ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val sightings = spark.table("cap_edges")
-    assert(sightings.filter(col("dead")).count() == graft.operators.Dedup.nBands.toLong,
-      "all four flooded buckets must tombstone")
-    assert(sightings.filter(!col("dead") && col("id_a") >= 100L
-        && col("id_a") < 500L).count() > 0,
-      "early flood pairs WERE emitted (the retraction is load-bearing)")
-    val got = graft.streaming.VecStream.dedupClusterReport(sightings)
-      .collect().map(_.toSeq).toSeq
-    val batchDir = java.nio.file.Files.createTempDirectory("graft-cap-batch")
-    writeVecFile(batchDir, "embeddings.parquet", flood ++ pair)
-    val want = SparkEntry.queries("q68_dedup_clusters")(spark, batchDir.toString)
-      .collect().map(_.toSeq).toSeq
-    assert(want == Seq(Seq(500L, 500L, 2L, 1L), Seq(501L, 500L, 2L, 0L)),
-      s"batch must keep only the live pair: $want")
-    assert(got == want, "tombstoned fold must equal batch q68")
   }
 }

@@ -20,7 +20,7 @@ framework and the JVM call them, not Scala code.
 
 Output: one `path:line  Owner.name  (N test refs)` line per def,
 grouped by file, then a count. Exit status 1 when a printed def is not
-in ALLOWED: such a def is either dead main code or a spec fixture that
+in ALLOWED and its object is not in ALLOWED_OWNERS: such a def is either dead main code or a spec fixture that
 belongs under src/test.
 """
 import os
@@ -37,6 +37,13 @@ SKIP = {"main"}
 # Owner.name of main defs a spec may call although no program does.
 ALLOWED = {
     "TextAnalysis.lmCachedDirs",  # test hook: the bigram-LM cache's resident dirs
+}
+
+# Objects whose whole public surface is a library that only specs drive.
+# EventStream (the Structured Streaming twins of the event queries) stays
+# until ROADMAP #4 decides between deleting it and giving it a program.
+ALLOWED_OWNERS = {
+    "EventStream",
 }
 
 
@@ -103,7 +110,8 @@ def main():
         rel = os.path.relpath(p, root)
         print(f"{rel}:{i}  {o}.{n}  ({test_refs[n]} test refs)")
     print(f"{len(hits)} defs in src/main referenced only from src/test")
-    bad = [f"{o}.{n}" for _, _, o, n in hits if f"{o}.{n}" not in ALLOWED]
+    bad = [f"{o}.{n}" for _, _, o, n in hits
+           if f"{o}.{n}" not in ALLOWED and o not in ALLOWED_OWNERS]
     if bad:
         print(f"not in ALLOWED: {', '.join(bad)}")
         return 1
