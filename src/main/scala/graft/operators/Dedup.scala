@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -97,30 +97,21 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** q33: n-gram Jaccard near-dup candidates — 4-word shingles, inverted-
-    * index self-join on shingle, Jaccard = |∩| / (|A|+|B|-|∩|), keep the
-    * top-20 most similar pairs. The document-frequency cutoff (df ≤ 50)
-    * is prefix filtering: it bounds the worst-case join fanout per
-    * shingle and drops only stop-shingles that carry no dedup signal
-    * (the cutoff is part of the operator contract, mirrored in the
-    * oracle). Shingle width matters at scale: on this corpus 3-grams
-    * produce ~1.3M candidate pairs, 4-grams ~50k — same knob that keeps
-    * web-scale MinHash dedup tractable. */
-  def q33NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    // Candidate pairs by bucket, not by self-join (shingleJaccardPairs):
-    // group each shingle's doc list (the df ≤ 50 cutoff bounds the
-    // list, so no skew bomb), emit ordered (a, b) pairs with one HOF —
-    // one shuffle on shingle replaces the self-join's two, and pair
-    // generation is codegen'd. Doc-size side is a narrow per-doc
-    // projection — broadcast under the guard. Shingle EQUALITY is all
-    // the bucketing needs, so shingles are native 64-bit hashes
-    // (plans.ShingleHashes) — no shingle string is ever built; the HOF
-    // string form paid ~5µs per window interpreted. The exploded table
-    // now has one consumer, so there is nothing to persist.
+  /** q33: n-gram Jaccard near-dup candidates — 4-word shingles,
+    * Jaccard = |∩| / (|A|+|B|-|∩|), keep the top-20 most similar pairs.
+    * Candidates come from the shingle inverted index by [[bucketPairs]]
+    * (never a doc × doc self-join); bucketing needs only shingle
+    * equality, so shingles are native 64-bit hashes (plans.ShingleHashes)
+    * and no shingle string is built. The df ≤ 50 cutoff is prefix
+    * filtering: it bounds the pair fanout per shingle and drops only
+    * stop-shingles that carry no dedup signal (part of the operator
+    * contract, mirrored in the oracle). Shingle width matters at scale:
+    * on this corpus 3-grams produce ~1.3M candidate pairs, 4-grams ~50k
+    * — same knob that keeps web-scale MinHash dedup tractable. */
+  def q33NgramJaccard(spark: SparkSession, dir: String): DataFrame =
     shingleJaccardPairs(Tables.documents(spark, dir), k = 4, dfCap = 50)
       .orderBy(desc("jaccard"), asc("id_a"), asc("id_b"))
       .limit(20)
-  }
 
   /** Embedding-simhash blocking constants. `nBands` bands of `bandBits`
     * sign bits each; bit j is the sign of the dot product with a fixed
@@ -184,19 +175,45 @@ object Dedup {
         .as(Seq("band", "val")))
   }
 
-  /** Distinct ordered candidate pairs (id_a < id_b) from an unpivoted
-    * band table — the bucket-collect pair generation both q49 and the
-    * q61 kNN join use (one Spark body ↔ one shared oracle CTE in
-    * SparkEntry.simhashCandCte; keep them in lockstep). */
+  /** Ordered id pairs (id_a, id_b) of every bucket — the rows of
+    * `keyed` sharing one value of `keys`, a null key being one value —
+    * that holds 2..`cap` non-null bigint `id`s: every pair by sorted
+    * position i < j, so a duplicated id pairs with itself and once per
+    * copy with the others. That is the pair multiset of the
+    * `collect_list` bucket form (HofSpecs.bucketPairs); callers dedupe
+    * or count. The paper's map → shuffle → reduce: hash-partition on
+    * `keys`, sort by (`keys`, `id`), then a streaming scan over each run
+    * of equal keys (by value; callers key on integral columns) that
+    * holds at most `cap` ids and yields its pairs lazily. */
+  def bucketPairs(keyed: DataFrame, keys: Seq[String], id: String, cap: Int): DataFrame = {
+    val nk = keys.size
+    keyed.select((keys :+ id).map(col): _*)
+      .repartition(keys.map(col): _*)
+      .sortWithinPartitions((keys :+ id).map(col): _*)
+      .mapPartitions { (part: Iterator[Row]) =>
+        val rows = part.buffered
+        val ids = new Array[Long](cap)
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+          val key = Array.tabulate[Any](nk)(rows.head.get)
+          var n = 0
+          while (rows.hasNext && (0 until nk).forall(k => rows.head.get(k) == key(k))) {
+            val r = rows.next()
+            if (!r.isNullAt(nk)) { if (n < cap) ids(n) = r.getLong(nk); n += 1 }
+          }
+          if (n < 2 || n > cap) Iterator.empty
+          else Iterator.range(0, n - 1)
+            .flatMap(i => Iterator.range(i + 1, n).map(j => (ids(i), ids(j))))
+        }
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .toDF("id_a", "id_b")
+  }
+
+  /** Distinct ordered candidate pairs (id_a < id_b) of an unpivoted band
+    * table (vec_id, band, val): [[bucketPairs]] on (band, val) under
+    * `bucketCap`, deduplicated since a pair can share several bands. Its
+    * oracle twin is SparkEntry.simhashCandCte; keep them in lockstep. */
   def candidatePairs(ub: DataFrame): DataFrame =
-    ub.groupBy("band", "val")
-      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")).between(2, bucketCap))
-      .select(explode(expr(
-        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a AS id_a, b AS id_b))))"
-      )).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct() // a pair can collide in several bands
+    bucketPairs(ub, Seq("band", "val"), "vec_id", bucketCap).distinct()
 
   /** Blocked-exact embedding near-dup — the scale-safe declared form of
     * q49. Candidates are pairs sharing at least one of `nBands` simhash
@@ -508,54 +525,35 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .localCheckpoint(true)
 
-  /** Shared pair-generation plan over the doc corpus: bucketed
-    * candidate pairs under the df cap, scored with shingle-set Jaccard.
-    *
-    * Set sizes come from a NARROW per-doc projection
-    * (`size(shingleHashes(...))` — the hashes are deduped per doc, so
-    * the array length IS the distinct-shingle count the old
-    * `sh.groupBy(doc_id).count()` shuffled the whole exploded table to
-    * produce; docs with zero shingles had no size row and can never
-    * appear in a pair, so filtering them keeps the inner joins
-    * identical). That drops the second corpus-shingle pass, its
-    * O(corpus-shingles) shuffle, the eager checkpoint + count jobs,
-    * and with only one consumer left the explode needs no persist. */
+  /** Shared pair-generation plan over the doc corpus: the df-capped
+    * shingle buckets of [[bucketPairs]], counted per pair into |∩| and
+    * scored with shingle-set Jaccard. Set sizes come from a narrow
+    * per-doc projection: the hashes are deduped per doc, so the array
+    * length is the distinct-shingle count, and a doc with no shingles
+    * can never appear in a pair, so filtering it keeps the inner joins
+    * identical. */
   private def shingleJaccardPairs(docs: DataFrame, k: Int, dfCap: Int): DataFrame = {
     val hashes = graft.plans.ShingleHashes.shingleHashes(split(col("text"), " "), k)
-    // the shingle kernel is the one per-row CPU stage that touches
-    // every corpus token — run it ONCE and cache the per-doc hash
-    // arrays (round 14): the inverted-index explode and the set-size
-    // projection otherwise each re-tokenize and re-hash the whole
-    // corpus in their own subtrees. EAGER checkpoint: a lazy one
-    // materialized inside the consuming action, where the size
-    // broadcast and the shuffle map stage computed the same partition
-    // concurrently, and the slower job's tasks then reported metrics
-    // of a plan the checkpoint had already released.
+    // the shingle kernel touches every corpus token: run it ONCE for
+    // the inverted index and the set sizes. EAGER checkpoint: a lazy one
+    // materialized inside the consuming action, where the size broadcast
+    // and the shuffle map stage computed the same partition concurrently.
     val base = docs.select(col("doc_id"), hashes.as("hs"))
       .localCheckpoint(true)
-    val sh = base.select(col("doc_id"), explode(col("hs")).as("shingle"))
-    val pairs = sh.groupBy("shingle")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")).between(2, dfCap))
-      .select(explode(expr(
-        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a AS id_a, b AS id_b))))"
-      )).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
+    val pairs = bucketPairs(base.select(col("doc_id"), explode(col("hs")).as("shingle")),
+        Seq("shingle"), "doc_id", dfCap)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"))
-    // sizes is O(docs) — corpus-sized, so the two probe joins go
-    // through the size guard (shuffle join past the bound; the pair
-    // side is already candidate-bounded by the df cap). The guard's
-    // count is a metadata-only count over the doc source.
+    // sizes is O(docs): the probe joins go through the size guard on
+    // plan statistics, which costs no Spark job (a row count costs two)
     val sizes = base
       .select(col("doc_id"), size(col("hs")).cast("long").as("n_sh"))
       .filter(col("n_sh") > 0)
-    val sizesCount = Some(docs.count()) // upper bound: filter only shrinks it
     pairs
       .join(Guard.modelBroadcast(
-        sizes.select(col("doc_id").as("id_a"), col("n_sh").as("size_a")), sizesCount), "id_a")
+        sizes.select(col("doc_id").as("id_a"), col("n_sh").as("size_a"))), "id_a")
       .join(Guard.modelBroadcast(
-        sizes.select(col("doc_id").as("id_b"), col("n_sh").as("size_b")), sizesCount), "id_b")
+        sizes.select(col("doc_id").as("id_b"), col("n_sh").as("size_b"))), "id_b")
       .select(col("id_a"), col("id_b"),
         round(col("inter") / (col("size_a") + col("size_b") - col("inter")), 6).as("jaccard"))
   }
@@ -592,14 +590,8 @@ object Dedup {
       .select(col("doc_id"), array_distinct(col("gh")).as("dg"),
         TextAnalysis.winnowSig(WinnowDedupW).as("sig"))
       .localCheckpoint(true) // feeds the inverted index + both rescore sides
-    val cand = base.select(col("doc_id"), explode(col("sig")).as("h"))
-      .groupBy("h")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")).between(2, 50))
-      .select(explode(expr(
-        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a AS id_a, b AS id_b))))"
-      )).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
+    val cand = bucketPairs(base.select(col("doc_id"), explode(col("sig")).as("h")),
+        Seq("h"), "doc_id", cap = 50)
       .distinct()
     cand
       .join(base.select(col("doc_id").as("id_a"), col("dg").as("dga")), "id_a")
@@ -1182,7 +1174,7 @@ object Dedup {
     * signals fire on disjoint populations (both earn their keep);
     * κ ≈ 1 means one of the two passes is redundant cost at 100 TB.
     *
-    * Scale shape: candidates from ONE capped bucket-collect; MinHash
+    * Scale shape: candidates from ONE capped bucket scan; MinHash
     * signatures are the q31 aggregate; two key joins + a single 2×2
     * cell fold — no doc×doc anywhere. κ algebra from exact integer
     * cells (the q191 shape, one global table). */

@@ -64,4 +64,17 @@ object HofSpecs {
     }
     df.withColumn("__dots", dots).withColumn(out, array(packed: _*)).drop("__dots")
   }
+
+  /** [[Dedup.bucketPairs]]: the bucket-collect form it replaced — each
+    * bucket's sorted id list from `collect_list` (which drops null ids),
+    * kept at 2..`cap` ids, expanded into its ordered (id_a, id_b) pairs
+    * by one HOF. */
+  def bucketPairs(keyed: DataFrame, keys: Seq[String], id: String, cap: Int): DataFrame =
+    keyed.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col(id))).as("ids"))
+      .filter(size(col("ids")).between(2, cap))
+      .select(explode(expr(
+        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a AS id_a, b AS id_b))))"
+      )).as("p"))
+      .select(col("p.id_a"), col("p.id_b"))
 }

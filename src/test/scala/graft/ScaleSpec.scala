@@ -447,6 +447,20 @@ class ScaleSpec extends AnyFunSuite {
       && !plan.contains("CartesianProduct"), s"no corpus-sized join:\n$plan")
   }
 
+  test("q33, q264 and q49 pair generators plan no ObjectHashAggregate and no nested-loop join") {
+    // candidate pairs come from the sort-run scan (Dedup.bucketPairs);
+    // an ObjectHashAggregate would be the collect_list bucket form back,
+    // sort-based past 128 keys, and a nested loop an all-pairs join
+    for (q <- Seq("q33_ngram_jaccard", "q264_winnowed_dedup", "q49_embedding_neardup")) {
+      val plan = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan.toString
+      assert(!plan.contains("ObjectHashAggregate") && !plan.contains("NestedLoopJoin")
+        && !plan.contains("CartesianProduct"), s"$q:\n$plan")
+      if (q.startsWith("q33"))
+        assert("BroadcastHashJoin".r.findAllIn(plan).size == 2,
+          s"q33's two size sides must broadcast under the statistics guard:\n$plan")
+    }
+  }
+
   test("q105 whitened near-dup never plans an all-pairs join") {
     // the q49 guarantee must survive the whitening front end: candidate
     // pairs come from band buckets (hash exchanges), never a nested

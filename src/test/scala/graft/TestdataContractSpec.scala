@@ -50,4 +50,15 @@ class TestdataContractSpec extends AnyFunSuite {
     assert(drifted.isEmpty,
       s"testdata schema drift — adapt the ingest or the queries:\n${drifted.mkString("\n")}")
   }
+
+  test("the declared documents schema equals the one Spark infers from every fixture") {
+    val fixtures = new java.io.File(TestSpark.sf0001).getParentFile.listFiles()
+      .filter(d => new java.io.File(d, "documents.parquet").exists).map(_.getPath).sorted
+    assert(fixtures.contains(TestSpark.sf0001), fixtures.mkString(", "))
+    for (dir <- fixtures) {
+      val (declared, inferred) =
+        (Tables.documents(spark, dir).schema, Tables.table(spark, dir, "documents").schema)
+      assert(declared == inferred, s"$dir: declared ${declared.toDDL}, inferred ${inferred.toDDL}")
+    }
+  }
 }
