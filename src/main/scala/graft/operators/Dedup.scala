@@ -380,7 +380,7 @@ object Dedup {
 
   /** q68's resolution tail from any (id_a, id_b) pair list: the
     * connectedComponents + canonical-election body. */
-  def clustersFromPairs(pairs: DataFrame): DataFrame = {
+  private def clustersFromPairs(pairs: DataFrame): DataFrame = {
     val comp = Graph.connectedComponents(pairs)
     val sizes = comp.groupBy(col("label").as("cluster"))
       .agg(count(lit(1)).as("n_members"))
@@ -510,10 +510,6 @@ object Dedup {
       .orderBy("vec_id")
   }
 
-  /** q42 (rows-only): MLlib MinHashLSH signatures over word sets — the
-    * library-native LSH surface (model hashes are seeded but not
-    * reproducible in DuckDB, so no SQL oracle; the approx-join path is
-    * exercised in the test suite). */
   /** Thresholded text near-dup edge list — the q33 blocked shape
     * (native shingle hashes, bucketed pair generation, df ≤ `dfCap`
     * bound) without q33's top-k contract: every ordered pair whose
@@ -666,6 +662,10 @@ object Dedup {
       .orderBy("cluster", "doc_id")
   }
 
+  /** q42 (rows-only): MLlib MinHashLSH signatures over word sets — the
+    * library-native LSH surface (model hashes are seeded but not
+    * reproducible in DuckDB, so no SQL oracle; the approx-join path is
+    * exercised in the test suite). */
   def q42MlMinHashLsh(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
     val docs = Tables.documents(spark, dir)

@@ -84,7 +84,7 @@ object HeavyHitters {
   /** The q256 CMS cell frame over a one-column (word) frame: ONE
     * partial-aggregated pass to depth×width counters (the mergeable
     * fixed-size state CMS exists for). */
-  def cmsCells(words: DataFrame): DataFrame =
+  private def cmsCells(words: DataFrame): DataFrame =
     words.withColumn("h", Portable.tokenId(col("word")))
       .select(cmsProbes(col("h")).as("c"))
       .groupBy(col("c.r").as("r"), col("c.bkt").as("bkt"))
@@ -93,7 +93,7 @@ object HeavyHitters {
   /** Point-query fold over a prepared cell frame: for each candidate
     * (word, exact_count), est = min over depth rows, plus the
     * one-sided error columns (q256's readout). */
-  def cmsEstimates(cells: DataFrame, top: DataFrame): DataFrame =
+  private def cmsEstimates(cells: DataFrame, top: DataFrame): DataFrame =
     top.withColumn("h", Portable.tokenId(col("word")))
       .select(col("word"), col("exact_count"), cmsProbes(col("h")).as("c"))
       .select(col("word"), col("exact_count"),

@@ -415,44 +415,11 @@ object Quantize {
   /** Exact-rescore depth for [[q244IvfAdc]] (the q84 shortlist size). */
   val RefineR = 30
 
-  /** q244: the composed PRODUCTION ANN index — IVF + ADC + refine,
-    * the FAISS `IVFPQ,Refine` shape a 100 TB serving deployment
-    * actually runs, assembled from rungs the ladder already verified
-    * one at a time (q119 IVF probe, q114b ADC table lookup, q84/q115
-    * two-stage rescore) but never composed: per query,
-    *
-    *   1. rank the [[KMeans.K]] coarse centroids, probe the
-    *      [[KMeans.Nprobe]] nearest cells (q119);
-    *   2. rank ONLY the probed cells' members by ADC — sum of
-    *      [[PqM]] code-table lookups, zero float reads (q114b);
-    *   3. exact-rescore the ADC top-[[RefineR]] against their stored
-    *      floats, top-10 out (q115's refine).
-    *
-    * Reported per query beside recall@10 vs the exact q34 truth pass:
-    * the BILL — codes_scanned (candidates × PqM byte lookups: the
-    * memory-bandwidth cost of step 2) and floats_scanned (shortlist +
-    * centroid vectors, × dim: the only full-precision reads the whole
-    * query makes). Beside q224's nprobe sweep and q242's K sweep,
-    * this is the third readout a deployment tunes against: what the
-    * CHOSEN operating point actually pays end to end.
-    *
-    * Scale shape: every stage inherits its rung's audited plan — the
-    * fit/assignment is the broadcast-centroid Lloyd (corpus never
-    * shuffles), candidates are members × a broadcast |q|×Nprobe probe
-    * frame, ADC joins a broadcast PqM×PqK-per-query LUT against the
-    * code table (floats untouched), and the refine joins floats
-    * against a broadcast |q|×RefineR shortlist (Catalyst can't derive
-    * the bound from the rank filter, so the broadcasts are explicit —
-    * the q115 note). Fully deterministic (seeded fit + codebook,
-    * 6-dp-rounded distances, id tie-breaks) → oracle-checked end to
-    * end. */
   /** The stored IVF+ADC serving artifacts — what a deployment keeps
     * hot: the K coarse centroids, the cell membership table, the PqM
     * byte codes per vector, the PqM×PqK codebook, and the (cold-path)
-    * float vectors for the refine stage. `materialized = true` cuts
-    * lineage on the corpus-sized pieces, the right shape when the
-    * index is probed repeatedly;
-    * `false` leaves plain frames for one-shot batch plans. */
+    * float vectors for the refine stage, as plain (uncheckpointed)
+    * frames. */
   case class IvfAdcIndex(cents: DataFrame, members: DataFrame,
                          codes: DataFrame, codebook: DataFrame,
                          floats: DataFrame)
@@ -460,14 +427,12 @@ object Quantize {
   /** Build the [[IvfAdcIndex]] from an embedding table
     * (vec_id, v: array&lt;double&gt;) — seeded Lloyd fit, assignment,
     * seeded PQ codebook, code table. */
-  def buildIvfAdcIndex(e: DataFrame, materialized: Boolean = false): IvfAdcIndex = {
-    def cut(df: DataFrame): DataFrame =
-      if (materialized) df.localCheckpoint(true) else df
+  def buildIvfAdcIndex(e: DataFrame): IvfAdcIndex = {
     val cents = KMeans.fit(e)
     IvfAdcIndex(
       cents,
-      cut(KMeans.assign(e, cents).select(col("vec_id").as("n_id"), col("cluster"))),
-      cut(pqCodes(e).select(col("vec_id").as("n_id"), col("sub"), col("code"))),
+      KMeans.assign(e, cents).select(col("vec_id").as("n_id"), col("cluster")),
+      pqCodes(e).select(col("vec_id").as("n_id"), col("sub"), col("code")),
       pqCodebook(e),
       e)
   }
@@ -659,6 +624,37 @@ object Quantize {
       .select("q_id", "rank", "n_id", "l2sq")
   }
 
+  /** q244: the composed PRODUCTION ANN index — IVF + ADC + refine,
+    * the FAISS `IVFPQ,Refine` shape a 100 TB serving deployment
+    * actually runs, assembled from rungs the ladder already verified
+    * one at a time (q119 IVF probe, q114b ADC table lookup, q84/q115
+    * two-stage rescore) but never composed: per query,
+    *
+    *   1. rank the [[KMeans.K]] coarse centroids, probe the
+    *      [[KMeans.Nprobe]] nearest cells (q119);
+    *   2. rank ONLY the probed cells' members by ADC — sum of
+    *      [[PqM]] code-table lookups, zero float reads (q114b);
+    *   3. exact-rescore the ADC top-[[RefineR]] against their stored
+    *      floats, top-10 out (q115's refine).
+    *
+    * Reported per query beside recall@10 vs the exact q34 truth pass:
+    * the BILL — codes_scanned (candidates × PqM byte lookups: the
+    * memory-bandwidth cost of step 2) and floats_scanned (shortlist +
+    * centroid vectors, × dim: the only full-precision reads the whole
+    * query makes). Beside q224's nprobe sweep and q242's K sweep,
+    * this is the third readout a deployment tunes against: what the
+    * CHOSEN operating point actually pays end to end.
+    *
+    * Scale shape: every stage inherits its rung's audited plan — the
+    * fit/assignment is the broadcast-centroid Lloyd (corpus never
+    * shuffles), candidates are members × a broadcast |q|×Nprobe probe
+    * frame, ADC joins a broadcast PqM×PqK-per-query LUT against the
+    * code table (floats untouched), and the refine joins floats
+    * against a broadcast |q|×RefineR shortlist (Catalyst can't derive
+    * the bound from the rank filter, so the broadcasts are explicit —
+    * the q115 note). Fully deterministic (seeded fit + codebook,
+    * 6-dp-rounded distances, id tie-breaks) → oracle-checked end to
+    * end. */
   def q244IvfAdc(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -112,15 +112,10 @@ object Stats {
   def q137WelchTtest(spark: SparkSession, dir: String): DataFrame =
     welchFromSummaries(welchSummaries(Tables.events(spark, dir)))
 
-  /** The per-cohort (n, mean, s²) summaries the t-test runs on — ONE
-    * definition shared by batch q137 and the streaming twin
-    * ([[graft.streaming.EventStream]] applies it to a stream in
-    * complete mode: avg/var_samp are Spark's mergeable central-moment
-    * aggregates, so the micro-batch partials merge into exactly the
-    * batch answer with O(|cohorts|) state). `n` counts non-null
-    * VALUES, not rows — a null measurement contributes to neither the
-    * moments nor the sample size. */
-  def welchSummaries(events: DataFrame): DataFrame =
+  /** The per-cohort (n, mean, s²) summaries the t-test runs on. `n`
+    * counts non-null VALUES, not rows — a null measurement contributes
+    * to neither the moments nor the sample size. */
+  private def welchSummaries(events: DataFrame): DataFrame =
     events
       .filter(col("event_type").isin("purchase", "view"))
       .groupBy("event_type")
@@ -129,7 +124,7 @@ object Stats {
         var_samp("value").as("s2"))
 
   /** The closed-form statistic over the 2-row summary table. */
-  def welchFromSummaries(g: DataFrame): DataFrame = {
+  private def welchFromSummaries(g: DataFrame): DataFrame = {
     val a = g.filter(col("event_type") === "purchase")
       .select(col("n").as("n1"), col("m").as("m1"), col("s2").as("v1"))
     val b = g.filter(col("event_type") === "view")

@@ -708,10 +708,8 @@ object Temporal {
   }
 
   /** The q174 fold over an already-distinct (user_id, d epoch-day)
-    * frame — shared verbatim by the batch query and the streaming
-    * twin's emitted first-sightings ([[graft.streaming.EventStream
-    * .activeDaySightings]]), so both render the SAME algebra. */
-  def activeUsersFromDayRows(ud: DataFrame): DataFrame = {
+    * frame. */
+  private def activeUsersFromDayRows(ud: DataFrame): DataFrame = {
     val span = ud.agg(min("d").as("d0"), max("d").as("d1"))
     val wU = Window.partitionBy("user_id").orderBy("d")
     val withNext = ud
@@ -1369,11 +1367,8 @@ object Temporal {
   }
 
   /** The q239 fold from the (event_type, d, y3) daily-total frame to
-    * the anomaly report — shared with the streaming twin
-    * (`EventStream.deseasonalizedReport`), so the two surfaces are
-    * parity-by-construction: identical expression tree, identical
-    * rounding, identical guards. */
-  def deseasonalizedFold(dailyTotals: DataFrame): DataFrame = {
+    * the anomaly report. */
+  private def deseasonalizedFold(dailyTotals: DataFrame): DataFrame = {
     val daily = dailyTotals
       .withColumn("dow", dayofweek(col("d")).cast("long"))
     val wt = Window.partitionBy("event_type")
@@ -1439,11 +1434,9 @@ object Temporal {
   }
 
   /** The q240 fold from the (day, delta_s) conversion-latency frame to
-    * the daily p50/p90 report — shared with the streaming twin
-    * (`EventStream.dailyLatencyReport`), so the two surfaces are
-    * parity-by-construction: identical histogram, identical exact
-    * order-statistic picks, identical rounding. */
-  def dailyLatencyFold(deltas: DataFrame): DataFrame = {
+    * the daily p50/p90 report: exact order-statistic picks over the
+    * per-day histogram. */
+  private def dailyLatencyFold(deltas: DataFrame): DataFrame = {
     val hist = deltas.groupBy("day", "delta_s").agg(count(lit(1)).as("cnt"))
     val wc = Window.partitionBy("day").orderBy("delta_s")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -675,7 +675,7 @@ object TextAnalysis {
     val sh = Tables.documents(spark, dir)
       .select(col("doc_id"),
         (Portable.tokenId(col("text")) % 100L).as("bucket"),
-        explode(graft.plans.ShingleHashes.shingleHashes(split(col("text"), " "), 8)).as("shash"))
+        explode(graft.plans.ShingleHashes.shingleHashes(split(col("text"), " "), SuiteShingleN)).as("shash"))
     sh.filter(col("bucket") < 95)
       .join(Guard.modelBroadcast(suiteShingleSet(spark, dir)),
         Seq("shash")) // inner: only leaks survive
@@ -684,13 +684,16 @@ object TextAnalysis {
       .orderBy("doc_id", "suite")
   }
 
+  /** Word-shingle size q149 matches on. */
+  private val SuiteShingleN = 8
+
   /** The suite-tagged eval shingle set behind q149: (suite, shash)
     * rows, the held-out split
     * partitioned into three stand-in suites by content bucket. */
-  def suiteShingleSet(spark: SparkSession, dir: String, n: Int = 8): DataFrame =
+  private def suiteShingleSet(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select((Portable.tokenId(col("text")) % 100L).as("bucket"),
-        explode(graft.plans.ShingleHashes.shingleHashes(split(col("text"), " "), n)).as("shash"))
+        explode(graft.plans.ShingleHashes.shingleHashes(split(col("text"), " "), SuiteShingleN)).as("shash"))
       .filter(col("bucket") >= 95)
       .select(
         when(col("bucket") <= 96, "suite_a")
@@ -1465,15 +1468,13 @@ object TextAnalysis {
 
   /** One snapshot's per-(lang, source) doc/token cell table — the
     * distribution summary drift compares. */
-  def corpusCells(df: DataFrame): DataFrame = df
+  private def corpusCells(df: DataFrame): DataFrame = df
     .groupBy("lang", "source")
     .agg(count(lit(1)).as("n_docs"),
       sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"))
 
-  /** The q98 comparison over two precomputed cell tables (the batch
-    * query compares two corpus scans; an ingest monitor compares a
-    * static baseline against the stream's live cells each trigger). */
-  def cellDrift(oldCells: DataFrame, newCells: DataFrame): DataFrame = {
+  /** The q98 comparison over two precomputed cell tables. */
+  private def cellDrift(oldCells: DataFrame, newCells: DataFrame): DataFrame = {
     def cells(df: DataFrame, suffix: String) = df
       .select(col("lang"), col("source"),
         col("n_docs").as(s"n_docs_$suffix"),
@@ -1690,7 +1691,7 @@ object TextAnalysis {
 
   /** The q142 chunker core on any (doc_id, text, n_chars) frame: a
     * stateless per-row generator. */
-  def chunkOverlap(docs: DataFrame): DataFrame =
+  private def chunkOverlap(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         posexplode(expr(

@@ -159,13 +159,13 @@ class EventsIngestSpec extends AnyFunSuite {
     // NTZ-micros default (that would re-create the silent ~1970 decode
     // on the streaming path)
     val e = intercept[IllegalStateException](
-      graft.streaming.EventStream.readStream(spark, writeBareMicros("stream-baremicros")))
+      Tables.eventsStream(spark, writeBareMicros("stream-baremicros")))
     assert(e.getMessage.contains("too small"))
   }
 
   test("streaming reader accepts an empty landing directory (files arrive later)") {
     val dir = Files.createTempDirectory("graft-empty-landing").toString
-    val q = graft.streaming.EventStream.readStream(spark, dir)
+    val q = Tables.eventsStream(spark, dir)
       .writeStream.format("memory").queryName("empty_landing")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-empty-landing-ckpt").toString)
@@ -180,7 +180,7 @@ class EventsIngestSpec extends AnyFunSuite {
     val flatDir = writeNtz("part-flat").stripSuffix("/events.parquet")
     val partDir = Files.createTempDirectory("graft-part-stream").toString
     Fixtures.writeEventsPartitionedByDay(spark, flatDir, s"$partDir/events.parquet")
-    val q = graft.streaming.EventStream.readStream(spark, s"$partDir/events.parquet")
+    val q = Tables.eventsStream(spark, s"$partDir/events.parquet")
       .select(col("event_id"), unix_micros(col("ts")).as("us"),
         col("user_id"), col("event_type"), col("value"), col("props"))
       .writeStream.format("memory").queryName("part_stream")
@@ -197,7 +197,7 @@ class EventsIngestSpec extends AnyFunSuite {
 
   test("streaming reader decodes nanos and micros fixtures identically") {
     def drained(dir: String): Seq[Row] = {
-      val q = graft.streaming.EventStream.readStream(spark, dir)
+      val q = Tables.eventsStream(spark, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("us"), col("user_id"))
         .writeStream.format("memory").queryName(s"ingest_${dir.hashCode.abs}")
         .option("checkpointLocation",

@@ -497,23 +497,6 @@ class ScaleSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("retention fold plans one user-keyed pass over sightings, no self-join") {
-    import spark.implicits._
-    // input = distinct (user, week) sightings — at scale, users × weeks
-    // rows. The fold must stay: one user-keyed exchange (cohort window),
-    // tiny matrix-sized aggregations after — never a join back onto the
-    // sightings (the conflicting-lineage self-join this replaced) and
-    // never anything corpus-sized past the first shuffle.
-    val sightings = (1 to 200).flatMap { u =>
-      (0 to u % 5).map(w => (u.toLong, 19700L + 7L * w))
-    }.toDF("user_id", "week_day")
-    val plan = graft.streaming.EventStream.retentionMatrix(sightings)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin")
-      && !plan.contains("CartesianProduct"), s"fold must not join:\n$plan")
-    assert(plan.split("Exchange hashpartitioning").length - 1 <= 3,
-      s"one user window + matrix-sized aggs only:\n$plan")
-  }
   test("PQ / IVF retrieval and q115 re-rank plan broadcast-only corpus joins") {
     // the probe tables (LUT, shortlist, probed cells) are bounded by
     // construction; the corpus side must stream past them — a
@@ -912,7 +895,7 @@ class ScaleSpec extends AnyFunSuite {
     import graft.sources.IvfStore
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val idx = Quantize.buildIvfAdcIndex(e, materialized = true)
+    val idx = Quantize.buildIvfAdcIndex(e)
     val path = java.nio.file.Files.createTempDirectory("graft-ivfstore").toString
     IvfStore.write(idx, path)
     // every cell directory exists (one per non-empty cell)
@@ -970,7 +953,7 @@ class ScaleSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = e.filter(col("vec_id") < graft.operators.KMeans.EvalBlock)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val idx = Quantize.buildIvfAdcIndex(e, materialized = true)
+    val idx = Quantize.buildIvfAdcIndex(e)
     val want = Fixtures.ivfAdcSearch(idx, q).collect().map(_.toSeq).toSeq
     val got = SparkEntry.queries("q262_ivf_served_store")(spark, sf0001)
       .collect().map(_.toSeq).toSeq
@@ -1134,7 +1117,7 @@ class ScaleSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") < KMeans.EvalBlock)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val want = Fixtures.ivfAdcSearch(
-      Quantize.buildIvfAdcIndex(e, materialized = true), q)
+      Quantize.buildIvfAdcIndex(e), q)
       .collect().map(_.toSeq).toSeq
     val got = IvfStore.servedTop10(spark, path, q)
       .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
@@ -1584,7 +1567,7 @@ class ScaleSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-recover").toString
-    IvfStore.write(Quantize.buildIvfAdcIndex(e, materialized = true), path)
+    IvfStore.write(Quantize.buildIvfAdcIndex(e), path)
     val q = e.filter(col("vec_id") < KMeans.EvalBlock)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val want = IvfStore.servedTop10(spark, path, q)
@@ -1690,7 +1673,7 @@ class ScaleSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-stray").toString
-    IvfStore.write(Quantize.buildIvfAdcIndex(e, materialized = true), path)
+    IvfStore.write(Quantize.buildIvfAdcIndex(e), path)
     val tagDir = new java.io.File(s"$path/_batches/deadbeefdeadbeef")
     assert(tagDir.mkdirs())
     java.nio.file.Files.writeString(
