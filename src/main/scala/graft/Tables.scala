@@ -77,22 +77,6 @@ object Tables {
     }.nextOption()
   }
 
-  /** [[tsEncodingAt]] that answers None when `path` is absent or holds
-    * no parquet files yet (the canonical empty landing dir) — the
-    * STRUCTURAL form of that contract, so callers with a default
-    * encoding don't have to pattern-match exception messages. A probe
-    * that positively fails (the bare-INT64 loud-fail, IO errors) still
-    * throws. */
-  private def tsEncodingIfPresent(spark: SparkSession, path: String): Option[TsEncoding] = {
-    val root = new Path(path)
-    val exists =
-      try {
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        firstParquetFile(fs, root).isDefined
-      } catch { case _: java.io.FileNotFoundException => false }
-    if (exists) Some(tsEncodingAt(spark, path)) else None
-  }
-
   /** Probe the parquet footer at `path` (a file, or a directory of part
     * files) for the physical encoding of its `ts` column. Footer-only:
     * reads one file's metadata, no row groups. */
@@ -187,47 +171,6 @@ object Tables {
     if (tsEncodingAt(spark, path) == TsEncoding.NanosAnnotated)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(spark.read.parquet(path))
-  }
-
-  /** Open the events parquet path (a directory of part files) as a file
-    * stream — schema-adaptive across the ts encodings [[events]]
-    * handles, normalized to the same session-TZ micros TimestampType.
-    *
-    * A landing directory that is empty (or absent) at stream definition
-    * — the canonical file-stream deployment, files arrive later — can't
-    * be probed; it defaults to the current standard encoding (NTZ
-    * micros, what every engine-written and generated events table
-    * ships as). Legacy nanos-long producers must have at least one file
-    * present at definition for the probe to see. */
-  def eventsStream(spark: SparkSession, path: String): DataFrame = {
-    // ONLY the canonical empty/absent landing dir (probe answers None)
-    // falls back to the default encoding. A probe that positively
-    // FAILED — the bare-INT64 micros-magnitude loud-fail
-    // (IllegalStateException), IO/permission errors — propagates:
-    // swallowing it would re-create downstream exactly the silent
-    // ~1970-decode class of bug the probe exists to prevent.
-    val tsType = tsEncodingIfPresent(spark, path).getOrElse(TsEncoding.LocalTimestamp) match {
-      case TsEncoding.NanosAnnotated =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        "bigint"
-      case TsEncoding.PlainLong        => "bigint"
-      case TsEncoding.LocalTimestamp   => "timestamp_ntz"
-      case TsEncoding.InstantTimestamp => "timestamp_ltz"
-    }
-    // the stream source needs the schema up front, so the batch
-    // reader's post-read branch on `ts` becomes the pre-read probe above
-    val schema = StructType.fromDDL(s"event_id bigint, ts $tsType, " +
-      "user_id bigint, event_type string, value double, props string")
-    // a production landing zone is often the day-partitioned tree
-    // (`event_date=YYYY-MM-DD/`, which [[events]] also reads), and a dir
-    // that is EMPTY at definition may receive that layout later — so the
-    // listing is ALWAYS recursive (for a flat dir it lists the same
-    // files). The partition column is NOT in the schema: the stream
-    // presents the same logical schema as the batch reader (which drops
-    // it too).
-    normalizeTs(
-      spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").parquet(path))
   }
 
   /** Day-bounded events scan, `fromDay` inclusive to `untilDay`

@@ -47,16 +47,4 @@ object Portable {
     * `filter(split(lower(text), "\\W+"), w -> w rlike "^[a-z]+$")`. */
   def tokenize(text: Column): Column =
     graft.plans.ReferenceTokens.referenceTokens(lower(text))
-
-  /** Word n-gram shingles: array of space-joined n-grams of `words`.
-    * Docs shorter than n shingle to their full text (slice clamps at the
-    * end). slice+array_join keeps the generated code small — an earlier
-    * n-way concat_ws(try_element_at…) form compiled to enough Janino
-    * source to dominate cold-start time. */
-  def shingles(words: Column, n: Int): Column = {
-    val grams = transform(
-      sequence(lit(1), greatest(size(words) - lit(n - 1), lit(1))),
-      i => array_join(slice(words, i, lit(n)), " "))
-    array_distinct(grams)
-  }
 }

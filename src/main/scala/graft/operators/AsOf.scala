@@ -24,10 +24,7 @@ object AsOf {
   /** Generic as-of join.
     *
     * Skew note: the carry window partitions on the raw key, so a key
-    * owning ~all left rows serializes through one task. For such
-    * distributions use [[joinBucketed]], which splits the window on
-    * (key, time-bucket) at the cost of one extra small shuffle —
-    * result equality is asserted in DedupSimilaritySpec.
+    * owning ~all left rows serializes through one task.
     *
     * @param left  left rows; must contain `key` and `leftTime`
     * @param right right rows; must contain `key`, `rightTime` and
@@ -68,77 +65,6 @@ object AsOf {
     val carried = l.unionByName(r)
       .withColumn(p, last(col(p), ignoreNulls = true).over(w))
     carried.filter(col(isRight) === 0)
-      .select(Seq(col(key)) ++
-        left.columns.filter(_ != key).map(col) ++
-        payload.map(c => col(s"$p.$c").as(c)): _*)
-  }
-
-  /** Skew-safe as-of join: identical semantics to [[join]], but the
-    * carry window partitions on (key, time-bucket) instead of the raw
-    * key, so a hot key's rows spread across buckets instead of landing
-    * in one window partition (the [[join]] shape serializes a
-    * one-user-owns-the-stream key through a single task). Cross-bucket
-    * state is reconstructed from a per-(key, bucket) summary of the
-    * right side — cardinality = keys × touched buckets, not rows — via
-    * one small per-key window over buckets, then joined back on the
-    * composite (key, bucket) key. Use when a key can dominate the left
-    * side; [[join]] is one shuffle cheaper when keys are well spread.
-    *
-    * @param bucketSeconds carry-window granularity; any value is
-    *        correct (equality with [[join]] is asserted in tests),
-    *        choose ~ (time span / target parallelism per hot key) */
-  def joinBucketed(left: DataFrame, right: DataFrame, key: String,
-                   leftTime: String, rightTime: String, payload: Seq[String],
-                   bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    val t = "__asof_t"
-    val isRight = "__asof_r"
-    val p = "__asof_p"
-    val b = "__asof_b"
-    val ci = "__asof_ci"
-    val internal = Set(t, isRight, p, b, ci)
-    require(payload.forall(c => !left.columns.contains(c)),
-      s"payload columns ${payload.filter(left.columns.contains)} collide with left columns")
-    require((left.columns ++ right.columns ++ payload).forall(!internal.contains(_)),
-      s"column names $internal are reserved by AsOf.joinBucketed")
-    val payloadType = org.apache.spark.sql.types.StructType(
-      payload.map(c => right.schema(c).copy(name = c)))
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      floor(unix_micros(c) / (bucketSeconds * 1000000L))
-    val l = left
-      .withColumn(t, col(leftTime).cast("timestamp"))
-      .withColumn(isRight, lit(0))
-      .select(Seq(col(key), col(t), col(isRight)) ++
-        left.columns.filter(_ != key).map(col) :+
-        lit(null).cast(payloadType).as(p): _*)
-    val r = right
-      .withColumn(t, col(rightTime).cast("timestamp"))
-      .withColumn(isRight, lit(1))
-      .select(Seq(col(key), col(t), col(isRight)) ++
-        left.columns.filter(_ != key).map(c => lit(null).cast(left.schema(c).dataType).as(c)) :+
-        struct(payload.map(col): _*).as(p): _*)
-    val u = l.unionByName(r).withColumn(b, bucketOf(col(t)))
-    // pass 1: carry within (key, bucket) — the skew-split window
-    val w1 = Window.partitionBy(key, b)
-      .orderBy(col(t).asc, col(isRight).desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = u.withColumn(p, last(col(p), ignoreNulls = true).over(w1))
-    // pass 2: latest right payload per (key, bucket) — (key, rightTime)
-    // is unique by the operator contract, so max_by is deterministic
-    val summary = r.withColumn(b, bucketOf(col(t)))
-      .groupBy(col(key), col(b))
-      .agg(max_by(col(p), col(t)).as(p))
-    // carry-in per touched (key, bucket): latest summary from EARLIER
-    // buckets. Window rows = touched buckets per key, not data rows.
-    val wb = Window.partitionBy(key).orderBy(b)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carryIn = u.select(col(key), col(b)).distinct()
-      .join(summary, Seq(key, b), "left")
-      .withColumn(ci, last(col(p), ignoreNulls = true).over(wb))
-      .select(col(key), col(b), col(ci))
-    carried.filter(col(isRight) === 0)
-      .join(carryIn, Seq(key, b), "left")
-      .withColumn(p, coalesce(col(p), col(ci)))
       .select(Seq(col(key)) ++
         left.columns.filter(_ != key).map(col) ++
         payload.map(c => col(s"$p.$c").as(c)): _*)

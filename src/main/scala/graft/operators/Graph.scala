@@ -125,68 +125,7 @@ object Graph {
     }
     throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
-        "(graph diameter exceeds the bound — use connectedComponentsStar)")
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * rounds (Kiveris et al.) — the high-diameter path. Where min-label
-    * propagation moves the minimum ONE hop per round (a D-diameter
-    * chain needs D rounds), each star round rewires whole
-    * neighborhoods onto their local minimum, converging in O(log n)
-    * rounds on any graph — the 2000-node chain in the spec closes in
-    * a handful of rounds where [[connectedComponents]] would need
-    * 2000. Per round: two groupBy(min) passes over O(E) edges, same
-    * join+partial-agg shape as everything else in the engine; edges
-    * stay canonical (root < child), so convergence is "the edge set
-    * stopped changing", checked with one count + one anti-join count.
-    *
-    * large-star: every neighbor LARGER than u links to
-    * min(Γ(u) ∪ {u}); small-star: every neighbor ≤ u links there too,
-    * keeping u's own link. At the fixpoint every edge is (root, child)
-    * with root = its component's minimum — the labeling read off
-    * directly. */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 40): DataFrame = {
-    def canon(e: DataFrame): DataFrame = e
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-      val mins = sym.groupBy("u").agg(least(min(col("v")), first(col("u"))).as("m"))
-      canon(sym.filter(col("v") > col("u")).join(mins, "u")
-        .select(col("v").as("a"), col("m").as("b")))
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      // canonical edges already have a = min endpoint: key by the LARGER
-      // endpoint b, whose neighbors here are all ≤ it
-      val rows = e.select(col("b").as("u"), col("a").as("v"))
-      val mins = rows.groupBy("u").agg(min(col("v")).as("m"))
-      canon(rows.join(mins, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .union(mins.select(col("u").as("a"), col("m").as("b"))))
-    }
-
-    var e = canon(edges.select(col("id_a").as("a"), col("id_b").as("b"))).localCheckpoint()
-    var round = 0
-    while (round < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      val changed = next.count() != e.count() ||
-        next.join(e, Seq("a", "b"), "left_anti").limit(1).count() > 0
-      val prev = e
-      e = next
-      round += 1
-      if (!changed) {
-        // fixpoint: edges are (root, child); roots label themselves
-        return prev.select(col("b").as("id"), col("a").as("label"))
-          .union(prev.select(col("a").as("id"), col("a").as("label")))
-          .distinct()
-      }
-    }
-    throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds")
+        "(graph diameter exceeds the bound)")
   }
 
   /** Fixed-iteration PageRank over an undirected edge list — the second

@@ -91,7 +91,7 @@ object QualityFilter {
     * observed keep rate it promised vs what held out. Pure
     * O(rows)-scan + O(10)-row aggregate over the q89 output;
     * rows-only by the q89 model contract, with the expected-calibration
-    * -error bound spec-tested instead (TrainingSetSpec). */
+    * -error bound spec-tested instead (QueriesSpec). */
   def q150CalibrationCurve(spark: SparkSession, dir: String): DataFrame = {
     q89QualityClassifier(spark, dir)
       .filter(col("is_train") === 0L)

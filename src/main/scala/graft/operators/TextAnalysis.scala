@@ -307,19 +307,11 @@ object TextAnalysis {
     * per-bin rank window. A doc whose tokens straddle the 256 boundary
     * stays in its starting bin — q63's documented approximate-packing
     * semantics, inherited verbatim. */
-  def q90PackingManifest(spark: SparkSession, dir: String): DataFrame =
-    packingManifest(Tables.documents(spark, dir))
-
-  /** The q90 manifest plan over any (doc_id, text) table — the ONE
-    * place the packing geometry (100-doc shards, 256-token bins,
-    * shard·100000 bin ids) lives, so the declared query and the
-    * [[TrainingSet]] build artifact can never emit incompatible loader
-    * addresses. */
-  def packingManifest(docs: DataFrame): DataFrame = {
+  def q90PackingManifest(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val cumW = w.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    docs
+    Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         expr("doc_id div 100").as("shard"))

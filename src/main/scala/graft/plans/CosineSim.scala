@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Fused cosine similarity over two `array<double>` columns as a native
   * Catalyst expression with whole-stage codegen.
   *
-  * The composable form in [[graft.functions.VectorOps.cosine]]
-  * (`aggregate(zip_with(a,b,*))` + two norm folds) is pure built-ins but
-  * materializes a zipped intermediate array per row and walks each input
-  * twice. This expression is one allocation-free loop emitted straight
+  * The composable form (`aggregate(zip_with(a,b,*))` + two norm folds,
+  * the HofSpecs reference KernelParitySpec checks this against) is pure
+  * built-ins but materializes a zipped intermediate array per row and
+  * walks each input twice. This expression is one allocation-free loop emitted straight
   * into the generated code — the right hot-loop shape for brute-force
   * ANN scoring, where the expression runs corpus × queries times.
   * [[L2Dist]] is the same treatment for the squared-L2 kernel the
@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Semantics (matches the HOF form and DuckDB's
   * `list_cosine_similarity` on equal-length inputs): null if either
-  * input is null, either norm is zero, or lengths differ.
+  * input is null, lengths differ, an element is null (the HOF's
+  * null-poisoned fold), or either norm is zero.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -42,9 +43,29 @@ case class CosineSim(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSim.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val r = ctx.freshName("r")
+      s"""
+         |final java.lang.Double $r = graft.plans.CosineSim.compute($a, $b);
+         |${ev.isNull} = $r == null;
+         |if (!${ev.isNull}) ${ev.value} = $r.doubleValue();
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSim {
+  /** Shared by interpreted eval and generated code: one loop folds the
+    * dot product and both squared norms left to right; null on a length
+    * mismatch, a null element or a zero norm. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var dot = 0.0
@@ -52,6 +73,7 @@ case class CosineSim(left: Expression, right: Expression)
     var ny = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xv = x.getDouble(i)
       val yv = y.getDouble(i)
       dot += xv * yv
@@ -63,45 +85,6 @@ case class CosineSim(left: Expression, right: Expression)
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val denom = ctx.freshName("denom")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $xv = $a.getDouble($i);
-         |    final double $yv = $b.getDouble($i);
-         |    $dot += $xv * $yv;
-         |    $nx += $xv * $xv;
-         |    $ny += $yv * $yv;
-         |  }
-         |  final double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |  if ($denom == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / $denom;
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
   /** Column-API entry point: `cosine(a, b)` over array<double> columns. */
   def cosine(a: Column, b: Column): Column =
     SqlBridge.column(CosineSim(SqlBridge.expression(a), SqlBridge.expression(b)))

@@ -20,14 +20,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * assignment (sf0.1, 120 broadcast centroids): 2.2 s → 0.7 s per corpus
   * pass from this expression alone.
   *
-  * Numeric parity with the HOF form is exact: the generated loop is the
-  * same sequential left fold `acc += (x_i − y_i)²` from `acc = 0.0`
-  * (and `0.0 + x == x` for every non-negative square, so the first term
-  * matches the HOF's seeded fold bit-for-bit). The DuckDB oracle's
+  * Numeric parity with the HOF form is exact: [[L2Dist.compute]], the
+  * one loop both eval paths run, is the same sequential left fold
+  * `acc += (x_i − y_i)²` from `acc = 0.0` (and `0.0 + x == x` for
+  * every non-negative square, so the first term matches the HOF's
+  * seeded fold bit-for-bit). The DuckDB oracle's
   * `list_reduce(list_prepend(0.0, ...))` mirrors the same order — the
-  * q76 contract. Null if either input is null or lengths differ (the
-  * zip_with form yields null on length mismatch through its padded-null
-  * lane; this expression makes that contract explicit).
+  * q76 contract. Null if either input is null, lengths differ or an
+  * element is null (the zip_with form yields null on a length mismatch
+  * through its padded-null lane, and its fold is null-poisoned by a
+  * null element; this expression makes that contract explicit).
   */
 case class L2Dist(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -46,39 +48,16 @@ case class L2Dist(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "l2_dist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    java.lang.Double.valueOf(acc)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    L2Dist.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
+      val r = ctx.freshName("r")
       s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $d = $a.getDouble($i) - $b.getDouble($i);
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
+         |final java.lang.Double $r = graft.plans.L2Dist.compute($a, $b);
+         |${ev.isNull} = $r == null;
+         |if (!${ev.isNull}) ${ev.value} = $r.doubleValue();
        """.stripMargin
     })
   }
@@ -88,6 +67,23 @@ case class L2Dist(left: Expression, right: Expression)
 }
 
 object L2Dist {
+  /** Shared by interpreted eval and generated code: the sequential left
+    * fold `acc += (x_i − y_i)²` from 0.0; null on a length mismatch or
+    * a null element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val d = x.getDouble(i) - y.getDouble(i)
+      acc += d * d
+      i += 1
+    }
+    java.lang.Double.valueOf(acc)
+  }
+
   /** Column-API entry point: `sqDist(a, b)` over array<double> columns. */
   def sqDist(a: Column, b: Column): Column =
     SqlBridge.column(L2Dist(SqlBridge.expression(a), SqlBridge.expression(b)))

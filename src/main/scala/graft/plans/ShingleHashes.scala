@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
 
 /** Distinct word n-gram shingle HASHES of a token array, natively:
   * `array<long>` of the xxhash64 chain over each n-word window,
-  * deduplicated. Window semantics match [[graft.functions.Portable.shingles]]
-  * (docs shorter than n yield one whole-doc shingle), so this is a
-  * drop-in for any consumer that only needs shingle EQUALITY — overlap
+  * deduplicated. Window semantics match the string-shingle HOF form
+  * (HofSpecs; docs shorter than n yield one whole-doc shingle), so this
+  * is a drop-in for any consumer that only needs shingle EQUALITY — overlap
   * joins, bucket grouping, signatures — which is every consumer in a
   * dedup pipeline; nothing ever reads a shingle's text back.
   *

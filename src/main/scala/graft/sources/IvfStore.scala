@@ -99,9 +99,11 @@ import graft.operators.{KMeans, Quantize}
   * for their whole run, and [[commitBatch]] loud-fails while it exists
   * — a writer that violates the offline window gets an exception and a
   * replay, never a silently lost or duplicated batch. The reader half
-  * has a guard too: [[servedTop10]] refuses to serve a tree holding
-  * `.old-cell=` remnants of a CRASHED compaction instead of silently
-  * missing the mid-swap cell's postings.
+  * is a guard, not a lease: [[servedTop10]] refuses to serve a tree
+  * holding `.old-cell=` remnants of a CRASHED compaction instead of
+  * silently missing the mid-swap cell's postings. Readers pin nothing:
+  * a scan still running when a [[retrain]] retires its tree fails and
+  * is retried against the new pointer (the race [[retrain]] documents).
   */
 object IvfStore {
 
@@ -181,147 +183,10 @@ object IvfStore {
     // maintenance FAILURE is a crash for contract purposes — a compact
     // whose promote-rename threw has left mid-swap state (`.old-cell=`
     // remnants) that batch commits must not interleave with; the
-    // next maintenance open's recover cleans up and releases. The one
-    // exception is a [[CleanRefusal]] (a precondition check that
-    // mutated nothing — e.g. compact refusing a leased live tree):
-    // holding the lock after one would block commits for no reason.
-    val result = try body catch {
-      case e: CleanRefusal => fs.delete(lock, false); throw e
-    }
+    // next maintenance open's recover cleans up and releases.
+    val result = body
     fs.delete(lock, false)
     result
-  }
-
-  /** A maintenance entry that refused BEFORE mutating anything — safe
-    * to release the lock on (unlike a mid-flight failure, which must
-    * leave it so commits keep loud-failing until recovery). */
-  private final class CleanRefusal(msg: String)
-    extends IllegalStateException(msg)
-
-  // ------------------------------------------------------------------
-  // Reader leases — generation pinning, closing the one documented
-  // reader race: a query that resolved `_current` before a retrain's
-  // pointer swap and is still scanning the old tree when the retire
-  // lands would fail its read mid-scan. A pinned reader instead holds
-  // a lease file under `_leases/<gen>/`; [[retrain]] checks the old
-  // generation's leases AFTER publishing the new pointer and DEFERS
-  // the retire while any lease is fresh — the deferred tree is swept
-  // by the next maintenance open's [[recover]] once its leases expire
-  // or are [[release]]d. The handshake is race-free against a
-  // concurrent swap because the two sides check in opposite orders:
-  // the reader writes its lease THEN re-reads the pointer (re-pinning
-  // if it moved), the writer swaps the pointer THEN reads the leases —
-  // so a lease the writer's check missed was written after the swap,
-  // which means the reader's re-read saw the NEW pointer and re-pinned
-  // onto it; either way no fresh lease on a deleted tree.
-  // ------------------------------------------------------------------
-
-  /** How long a lease stays live without renewal — a deployment sets
-    * this to its max query latency (the retire grace the [[retrain]]
-    * scaladoc prices); expiry bounds the garbage a reader that died
-    * without [[release]] can pin. */
-  val LeaseTtlMs: Long = 10 * 60 * 1000L
-
-  /** A pinned read handle: `root` is a complete index tree (`lists`/
-    * `cents`/`codebook`) that stays readable for [[LeaseTtlMs]] after
-    * the last [[renew]] even across retrains (retire deferred) and
-    * compactions ([[compact]] refuses while the live tree is leased)
-    * — pass it wherever a store path
-    * goes; [[servedTop10]] resolves a generation dir to
-    * itself, so a generation pin is strict. One documented looseness:
-    * pinning a never-retrained FLAT store yields `root == path`, whose
-    * files the lease does keep alive through a concurrent first
-    * retrain, but a reader that re-enters through the pointer-
-    * resolving APIs follows `_current` to the new generation — a
-    * complete tree either way, never a partial one. */
-  final case class GenLease(path: String, genKey: String, root: String,
-                            leaseFile: Path)
-
-  private def leaseDir(p: Path, genKey: String): Path =
-    new Path(new Path(p, "_leases"), genKey)
-
-  /** Count this generation's live leases, pruning expired lease files
-    * (and the dir, once empty) as a side effect — called only from
-    * maintenance paths, which hold the maintenance lock. */
-  private def freshLeases(fs: FileSystem, p: Path, genKey: String): Int = {
-    val d = leaseDir(p, genKey)
-    if (!fs.exists(d)) return 0
-    val cutoff = System.currentTimeMillis() - LeaseTtlMs
-    var fresh = 0
-    fs.listStatus(d).foreach { s =>
-      if (s.getModificationTime >= cutoff) fresh += 1
-      else {
-        // re-stat immediately before the delete: a [[renew]] may have
-        // touched the lease between the (possibly cached) listing and
-        // now — sweeping it would silently unpin a live reader. The
-        // residual renew-vs-delete window after the re-stat requires
-        // the lease to ALREADY be TTL-expired, which renew's own
-        // post-touch existence check turns into a loud re-pin.
-        val still = try fs.getFileStatus(s.getPath).getModificationTime < cutoff
-          catch { case _: java.io.FileNotFoundException => false }
-        if (still) fs.delete(s.getPath, false) else fresh += 1
-      }
-    }
-    if (fresh == 0) fs.delete(d, true)
-    fresh
-  }
-
-  /** Pin the live tree: resolve the pointer, lease the resolved
-    * generation, re-check the pointer (the handshake above), and hand
-    * back the root the caller may scan until [[release]] or lease
-    * expiry. The flat never-retrained layout pins under the key
-    * "flat" — [[retrain]]'s flat-retire branch honors it the same
-    * way. */
-  def pin(spark: SparkSession, path: String): GenLease = {
-    val p = new Path(path)
-    val fs = fsOf(spark, p)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 5) throw new IllegalStateException(
-        s"pin: pointer of $path moved on every attempt — retrains are " +
-          "cycling faster than a reader can lease; quiesce maintenance")
-      val g0 = currentGen(spark, path)
-      val key = g0.getOrElse("flat")
-      val lease = new Path(leaseDir(p, key),
-        s"${ProcessHandle.current().pid()}-${java.util.UUID.randomUUID()}.lease")
-      fs.mkdirs(lease.getParent)
-      fs.create(lease, true).close()
-      if (currentGen(spark, path) == g0)
-        return GenLease(path, key,
-          g0.map(g => new Path(p, g).toString).getOrElse(path), lease)
-      fs.delete(lease, false) // pointer moved mid-pin: re-resolve
-    }
-    sys.error("unreachable")
-  }
-
-  /** Touch the lease file so a scan longer than [[LeaseTtlMs]] keeps
-    * its pin — O(1), call from a heartbeat. */
-  def renew(spark: SparkSession, lease: GenLease): Unit = {
-    val fs = fsOf(spark, new Path(lease.path))
-    if (!fs.exists(lease.leaseFile)) throw new IllegalStateException(
-      s"renew: lease ${lease.leaseFile} expired and was swept — the " +
-        "pinned tree may be gone; re-pin and re-run the scan")
-    fs.setTimes(lease.leaseFile, System.currentTimeMillis(), -1)
-    // re-verify AFTER the touch: a maintenance sweep that had already
-    // re-stat'd this lease as expired may have deleted it between the
-    // exists() above and the touch — a renew that returned normally on
-    // a swept lease would let the reader scan a tree recover is about
-    // to (or already did) retire. setTimes on a missing path is a
-    // no-op on some filesystems, so the only reliable signal is a
-    // final existence check.
-    if (!fs.exists(lease.leaseFile)) throw new IllegalStateException(
-      s"renew: lease ${lease.leaseFile} was swept mid-renew (it had " +
-        "already TTL-expired) — re-pin and re-run the scan")
-  }
-
-  /** Drop the pin. The tree itself is retired by the next maintenance
-    * open's [[recover]] sweep, not here — release is a reader-side
-    * call and readers never mutate the store. */
-  def release(spark: SparkSession, lease: GenLease): Unit = {
-    val fs = fsOf(spark, new Path(lease.path))
-    fs.delete(lease.leaseFile, false)
-    ()
   }
 
   /** Atomically publish generation `gen` as the live tree: write the
@@ -345,12 +210,10 @@ object IvfStore {
     * O(K) directory listings:
     *
     *  - a `gen-*` tree not named by `_current` (crash between tree
-    *    write and publish, or between publish and old-tree retire, or
-    *    a retire [[retrain]] deferred for a pinned reader) is deleted
-    *    UNLESS it still holds a fresh reader lease; with `_current`
-    *    published, a leftover FLAT tree (`lists`/`cents`/`codebook`
-    *    directly under `path`) is the retired pre-generation layout
-    *    and is deleted too, under the same lease gate;
+    *    write and publish, or between publish and old-tree retire) is
+    *    deleted; with `_current` published, a leftover FLAT tree
+    *    (`lists`/`cents`/`codebook` directly under `path`) is the
+    *    retired pre-generation layout and is deleted too;
     *  - a `.old-cell=N` whose `cell=N` twin is ABSENT is a compaction
     *    that crashed between its two renames — rolled BACK (the old
     *    files are intact by construction); one whose twin exists is a
@@ -363,9 +226,7 @@ object IvfStore {
     val cur = currentGen(spark, path)
     fs.listStatus(p).foreach { s =>
       val n = s.getPath.getName
-      if (n.startsWith("gen-") && !cur.contains(n)) {
-        if (freshLeases(fs, p, n) == 0) fs.delete(s.getPath, true)
-      }
+      if (n.startsWith("gen-") && !cur.contains(n)) fs.delete(s.getPath, true)
       else if (n == "_current.tmp") fs.delete(s.getPath, false)
       // abandoned half-staged batches (a writer that crashed mid-stage
       // and never re-delivered): recover only runs at offline
@@ -374,9 +235,8 @@ object IvfStore {
       // Committed batches are untouched — their markers and filed
       // postings live outside _staging.
       else if (n == "_staging") fs.delete(s.getPath, true)
-      else if (cur.isDefined && (n == "lists" || n == "cents" || n == "codebook")) {
-        if (freshLeases(fs, p, "flat") == 0) fs.delete(s.getPath, true)
-      }
+      else if (cur.isDefined && (n == "lists" || n == "cents" || n == "codebook"))
+        fs.delete(s.getPath, true)
     }
     val lists = new Path(resolveRoot(spark, path), "lists")
     if (fs.exists(lists)) {
@@ -775,18 +635,6 @@ object IvfStore {
     val fs = fsOf(spark, new Path(path))
     withMaintLock(fs, new Path(path)) {
     recover(spark, path)
-    // a compaction rewrites the LIVE tree's cell directories in place —
-    // unlike retrain, there is no old generation to defer: a pinned
-    // reader mid-scan of this tree would lose files under it. The lease
-    // machinery therefore gates compaction too: refuse while the live
-    // tree holds a fresh reader lease (the caller retries after the
-    // readers release or their TTL lapses).
-    val liveKey = currentGen(spark, path).getOrElse("flat")
-    if (freshLeases(fs, new Path(path), liveKey) > 0)
-      throw new CleanRefusal(
-        s"compact: live tree of $path ($liveKey) holds a fresh reader " +
-          "lease — compaction rewrites cells in place; retry after the " +
-          "pinned readers release or their lease TTL lapses")
     val root = new Path(resolveRoot(spark, path), "lists")
     val cells = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
@@ -848,10 +696,7 @@ object IvfStore {
     *     answer). One honest race: a query that resolved the pointer
     *     BEFORE the swap and is still scanning the old tree when the
     *     retire lands will fail its read — it can retry against the
-    *     new pointer and get a correct (never partial) answer. A
-    *     deployment serving during retrains delays the retire by its
-    *     max query latency (generation pinning); the swap itself
-    *     needs no such grace.
+    *     new pointer and get a correct (never partial) answer.
     *
     * Scale shape: one full corpus scan + the q262 build cost — the
     * honest price of a retrain, paid only when the q266 gate's
@@ -879,22 +724,11 @@ object IvfStore {
     writeTree(postingsUnder(stored, cents, cb), cents, cb,
       new Path(p, gen).toString)
     publish(spark, path, gen)
-    // retire AFTER the swap, and only if no reader holds a fresh lease
-    // on the superseded tree (pin/publish check in opposite orders —
-    // see the lease section — so a missed lease implies its reader
-    // re-pinned onto the new generation). A deferred retire leaves the
-    // old tree for the next maintenance open's recover sweep.
+    // retire AFTER the swap
     oldGen match {
-      case Some(g) =>
-        if (freshLeases(fs, p, g) == 0) fs.delete(new Path(p, g), true)
-        else System.err.println(
-          s"[ivf-store] retrain: retire of $g deferred — fresh reader lease")
+      case Some(g) => fs.delete(new Path(p, g), true)
       case None =>
-        if (freshLeases(fs, p, "flat") == 0)
-          Seq("lists", "cents", "codebook")
-            .foreach(d => fs.delete(new Path(p, d), true))
-        else System.err.println(
-          "[ivf-store] retrain: retire of flat tree deferred — fresh reader lease")
+        Seq("lists", "cents", "codebook").foreach(d => fs.delete(new Path(p, d), true))
     }
     gen
     }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Portable
+import graft.functions.{Portable, VectorOps}
 import graft.operators.Dedup
 
 /** The higher-order-function (HOF) forms the native `graft.plans`
@@ -64,6 +64,29 @@ object HofSpecs {
     }
     df.withColumn("__dots", dots).withColumn(out, array(packed: _*)).drop("__dots")
   }
+
+  /** [[graft.plans.ShingleHashes]]: distinct space-joined word n-grams
+    * of `words`; docs shorter than n shingle to their full text (slice
+    * clamps at the end). */
+  def shingles(words: Column, n: Int): Column = array_distinct(transform(
+    sequence(lit(1), greatest(size(words) - lit(n - 1), lit(1))),
+    i => array_join(slice(words, i, lit(n)), " ")))
+
+  /** Elementwise dot product of two array<double> columns. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+
+  /** [[graft.plans.CosineSim]]: dot over the product of the two norms;
+    * null for a zero vector. */
+  def cosine(a: Column, b: Column): Column = {
+    val d = dot(a, b)
+    val n = VectorOps.l2Norm(a) * VectorOps.l2Norm(b)
+    when(n === 0.0, lit(null)).otherwise(d / n)
+  }
+
+  /** [[graft.plans.L2Dist]]: the seeded left fold of squared differences. */
+  def sqDist(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 
   /** [[Dedup.bucketPairs]]: the bucket-collect form it replaced — each
     * bucket's sorted id list from `collect_list` (which drops null ids),

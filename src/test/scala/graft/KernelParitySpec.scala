@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Portable
 import graft.operators.{Dedup, TextAnalysis}
-import graft.plans.{GramHashes, SimhashBands, WinnowMinima}
+import graft.plans.{CosineSim, GramHashes, L2Dist, SimhashBands, WinnowMinima}
 
 /** Parity harness for the native per-row kernels: the tokenizer
   * ([[graft.plans.ReferenceTokens]] behind [[Portable.tokenize]]),
-  * [[graft.plans.TokenId]], [[GramHashes]], [[WinnowMinima]] and
-  * [[SimhashBands]]. Random batches (scalacheck) are evaluated three
+  * [[graft.plans.TokenId]], [[GramHashes]], [[WinnowMinima]],
+  * [[SimhashBands]], [[CosineSim]] and [[L2Dist]]. Random batches (scalacheck) are evaluated three
   * ways and must agree row for row:
   *  - interpreted: no whole-stage codegen, `factoryMode=NO_CODEGEN`;
   *  - generated: whole-stage codegen with `spark.sql.codegen.fallback`
@@ -25,7 +25,8 @@ import graft.plans.{GramHashes, SimhashBands, WinnowMinima}
   * The inputs mix null, empty text, texts shorter than the gram or
   * window width, repeated words, control characters, non-BMP code
   * points and case-mapping traps (Kelvin sign, dotted capital I,
-  * ligatures), and arrays with null elements. */
+  * ligatures), arrays with null elements, and vector pairs of unequal
+  * length, zero norm or NaN components. */
 class KernelParitySpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -34,7 +35,8 @@ class KernelParitySpec extends AnyFunSuite {
     StructField("text", StringType),
     StructField("words", ArrayType(StringType, containsNull = true)),
     StructField("gh", ArrayType(LongType, containsNull = true)),
-    StructField("v", ArrayType(DoubleType, containsNull = true))))
+    StructField("v", ArrayType(DoubleType, containsNull = true)),
+    StructField("u", ArrayType(DoubleType, containsNull = true))))
 
   /** One generated batch: the random gram width `k` and window `w` the
     * free-width kernels run at, and the rows. */
@@ -79,32 +81,47 @@ class KernelParitySpec extends AnyFunSuite {
   private val gh: Gen[Any] = orNull(Gen.choose(0, 40).flatMap(n =>
     Gen.listOfN(n, orNull(Gen.frequency(3 -> Gen.choose(-5L, 20L), 1 -> Gen.long), 1))), 1)
 
+  private val component: Gen[Any] = orNull(Gen.frequency(20 -> Gen.choose(-1.0, 1.0),
+    1 -> Gen.const(Double.NaN), 1 -> Gen.const(-0.0), 1 -> Gen.const(0.0),
+    1 -> Gen.const(Double.NegativeInfinity)), 1)
+
   private val v: Gen[Any] = {
-    val x = Gen.frequency(20 -> Gen.choose(-1.0, 1.0), 1 -> Gen.const(Double.NaN),
-      1 -> Gen.const(-0.0), 1 -> Gen.const(0.0), 1 -> Gen.const(Double.NegativeInfinity))
     val len = Gen.frequency(1 -> Gen.choose(0, Dedup.planeDim - 1),
       6 -> Gen.const(Dedup.planeDim), 1 -> Gen.choose(Dedup.planeDim + 1, 100))
-    orNull(len.flatMap(n => Gen.listOfN(n, orNull(x, 1))), 1)
+    orNull(len.flatMap(n => Gen.listOfN(n, component)), 1)
   }
 
-  /** Fixed edge rows every batch carries. */
+  /** The second vector of the (v, u) pair kernels: mostly v's length,
+    * sometimes a zero vector of it, another length, or null. */
+  private def u(v: Any): Gen[Any] = {
+    val n = v match { case xs: Seq[_] => xs.length; case _ => Dedup.planeDim }
+    Gen.frequency(6 -> Gen.listOfN(n, component), 1 -> Gen.const(Seq.fill(n)(0.0)),
+      1 -> Gen.choose(0, 100).flatMap(Gen.listOfN(_, component)), 1 -> Gen.const(null))
+  }
+
+  private val ones = Seq.fill(Dedup.planeDim)(1.0)
+
+  /** Fixed edge rows every batch carries. The (v, u) pairs: both null,
+    * both empty, null elements, zero vectors, one null, a NaN
+    * component, a length mismatch. */
   private val edges: Seq[Row] = Seq(
-    Row(0L, null, null, null, null),
-    Row(1L, "", Seq(), Seq(), Seq()),
-    Row(2L, "a", Seq(null), Seq(null), Seq.fill(Dedup.planeDim)(null)),
-    Row(3L, "a b c", Seq("a", null, "b"), Seq(null, 3L, null), Seq.fill(Dedup.planeDim)(-0.0)),
-    Row(4L, "the the the the the the", Seq.fill(9)("the"), Seq.fill(9)(7L), null),
+    Row(0L, null, null, null, null, null),
+    Row(1L, "", Seq(), Seq(), Seq(), Seq()),
+    Row(2L, "a", Seq(null), Seq(null), Seq.fill(Dedup.planeDim)(null), ones),
+    Row(3L, "a b c", Seq("a", null, "b"), Seq(null, 3L, null), Seq.fill(Dedup.planeDim)(-0.0),
+      Seq.fill(Dedup.planeDim)(0.0)),
+    Row(4L, "the the the the the the", Seq.fill(9)("the"), Seq.fill(9)(7L), null, ones),
     Row(5L, "\u212Aelvin \u0130stanbul \uFB01le STRASSE \u00DF", Seq("\u212A"),
-      Seq(Long.MaxValue, Long.MinValue), Seq.fill(Dedup.planeDim)(1.0)),
+      Seq(Long.MaxValue, Long.MinValue), ones, Double.NaN +: ones.tail),
     Row(6L, "a\u0000b\u0007c  \uD83D\uDE00 abc x\uD835\uDD18y abc123 def_ghi \uD800",
-      Seq("", " "), Seq(5L, 4L, 3L, 2L, 1L), Seq.fill(10)(1.0)))
+      Seq("", " "), Seq(5L, 4L, 3L, 2L, 1L), Seq.fill(10)(1.0), ones))
 
   private val batch: Gen[Batch] = for {
     k <- Gen.choose(1, 6)
     w <- Gen.choose(1, 17)
-    rows <- Gen.listOfN(200, for { t <- text; ws <- words; g <- gh; x <- v } yield (t, ws, g, x))
-  } yield Batch(k, w, edges ++ rows.zipWithIndex.map { case ((t, ws, g, x), i) =>
-    Row(100L + i, t, ws, g, x) })
+    rows <- Gen.listOfN(200, for { t <- text; ws <- words; g <- gh; x <- v; y <- u(x) }
+      yield Row(t, ws, g, x, y))
+  } yield Batch(k, w, edges ++ rows.zipWithIndex.map { case (r, i) => Row(100L +: r.toSeq: _*) })
 
   private def grams(text: Column) = split(text, " ")
 
@@ -116,7 +133,9 @@ class KernelParitySpec extends AnyFunSuite {
     GramHashes.gramHashes(grams(col("text")), TextAnalysis.WinnowK).as("gh_text"),
     GramHashes.gramHashes(col("words"), b.k).as("gh_k"),
     WinnowMinima.winnowMinima(col("gh"), b.w).as("sig_w"),
-    SimhashBands.bands(col("v"), Dedup.nBands).as("bands")) ++
+    SimhashBands.bands(col("v"), Dedup.nBands).as("bands"),
+    CosineSim.cosine(col("v"), col("u")).as("cosine"),
+    L2Dist.sqDist(col("v"), col("u")).as("sq_dist")) ++
     TextAnalysis.WinnowWindows.map(w => WinnowMinima.winnowMinima(
       GramHashes.gramHashes(grams(col("text")), TextAnalysis.WinnowK), w).as(s"sig_text_$w")): _*)
 
@@ -133,7 +152,9 @@ class KernelParitySpec extends AnyFunSuite {
       onNull(col("text"), ghText).as("gh_text"),
       onNull(col("words"), HofSpecs.gramHashes(col("words"), b.k)).as("gh_k"),
       onNull(col("gh"), HofSpecs.winnowMinima(col("gh"), b.w)).as("sig_w"),
-      onNull(col("v"), col("bands_hof")).as("bands")) ++
+      onNull(col("v"), col("bands_hof")).as("bands"),
+      HofSpecs.cosine(col("v"), col("u")).as("cosine"),
+      HofSpecs.sqDist(col("v"), col("u")).as("sq_dist")) ++
       TextAnalysis.WinnowWindows.map(w =>
         onNull(col("text"), HofSpecs.winnowMinima(ghText, w)).as(s"sig_text_$w")): _*)
   }
@@ -174,9 +195,14 @@ class KernelParitySpec extends AnyFunSuite {
       "generated" -> withConf(generated: _*)(run(kernels(b, df), wholeStage = true)))
     val names = kernels(b, df).columns
     val input = b.rows.map(r => r.getLong(0) -> r).toMap
+    // doubles compare bit for bit: NaN equals NaN, -0.0 differs from 0.0
+    def same(g: Any, s: Any) = (g, s) match {
+      case (a: Double, b: Double) => java.lang.Double.compare(a, b) == 0
+      case _ => g == s
+    }
     for ((mode, got) <- modes; (id, spec) <- want; c <- 1 until names.length) {
       val (g, s) = (got(id).get(c), spec.get(c))
-      if (g != s) fail(ascii(
+      if (!same(g, s)) fail(ascii(
         s"$mode ${names(c)} (k=${b.k}, w=${b.w}) on ${input(id)}: got $g, want $s"))
     }
   }
@@ -200,7 +226,9 @@ class KernelParitySpec extends AnyFunSuite {
       Portable.tokenize(col("text")) -> HofSpecs.tokenize(col("text")),
       GramHashes.gramHashes(ws, TextAnalysis.WinnowK) ->
         HofSpecs.gramHashes(ws, TextAnalysis.WinnowK),
-      WinnowMinima.winnowMinima(col("gh"), 8) -> HofSpecs.winnowMinima(col("gh"), 8))
+      WinnowMinima.winnowMinima(col("gh"), 8) -> HofSpecs.winnowMinima(col("gh"), 8),
+      CosineSim.cosine(col("v"), col("u")) -> HofSpecs.cosine(col("v"), col("u")),
+      L2Dist.sqDist(col("v"), col("u")) -> HofSpecs.sqDist(col("v"), col("u")))
     pairs.foreach { case (kernel, hof) =>
       val got = df.select(kernel).schema.head.dataType
       val want = df.select(hof).schema.head.dataType

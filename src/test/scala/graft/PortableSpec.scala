@@ -68,7 +68,7 @@ class PortableSpec extends AnyFunSuite {
 
   test("shingles produce distinct n-grams incl. short-doc degenerate case") {
     val got = Seq(Seq("a", "b", "c", "d"), Seq("x"))
-      .toDF("words").select(Portable.shingles(col("words"), 3)).as[Seq[String]].collect()
+      .toDF("words").select(HofSpecs.shingles(col("words"), 3)).as[Seq[String]].collect()
     assert(got(0).toSet == Set("a b c", "b c d"))
     assert(got(1) == Seq("x"))
   }
@@ -84,7 +84,7 @@ class PortableSpec extends AnyFunSuite {
     val rows = docs.toDF("id", "words")
       .select(col("id"),
         graft.plans.ShingleHashes.shingleHashes(col("words"), 3).as("hashes"),
-        Portable.shingles(col("words"), 3).as("strings"))
+        HofSpecs.shingles(col("words"), 3).as("strings"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getSeq[Long](1).toSet, r.getSeq[String](2).toSet))).toMap
     rows.values.foreach { case (hs, ss) =>
@@ -117,39 +117,5 @@ class PortableSpec extends AnyFunSuite {
     assert(run("\u1112\u1161\u11ab") == "\ud55c")
     assert(spark.range(1)
       .select(nfc(lit(null).cast("string"))).head().isNullAt(0))
-  }
-
-  test("GraftExtensions exposes the native expressions to plain SQL") {
-    // the same builders the session extension injects, registered on
-    // the running test session
-    graft.plans.GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    val row = spark.sql(
-      s"""SELECT token_id('spark')                             AS t,
-         |       cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
-         |       l2_dist(array(1.0D, 2.0D), array(4.0D, 6.0D)) AS l,
-         |       bpe_encode('customer')                        AS b,
-         |       repetition_stats(array('a', 'b', 'a', 'b'))   AS r,
-         |       shingle_hashes(array('a', 'b', 'a', 'b'), 2)  AS s,
-         |       simhash_bands(array(${Seq.fill(64)("1.0D").mkString(", ")}), 4) AS sb,
-         |       nfc_normalize('cafe\u0301')                   AS n""".stripMargin).head()
-    assert(row.getLong(0) == tokenIdRef("spark"))
-    assert(row.getDouble(1) == 1.0)
-    assert(row.getDouble(2) == 25.0) // 3² + 4²
-    assert(row.getSeq[String](3).toList == List("c", "u", "st", "o", "mer"))
-    // bigrams of [a b a b]: "a b"×2, "b a"×1 → (3, 2, 2)
-    val r = row.getStruct(4)
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((3L, 2L, 2L)))
-    // 2-shingles of [a b a b]: windows ab, ba, ab → 2 distinct hashes
-    assert(row.getSeq[Long](5).length == 2)
-    // all-ones vector: same band values as the Column-API expression
-    assert(row.getSeq[Long](6) ==
-      graft.operators.Dedup.simhashPlanes.take(32).map(_.sum >= 0)
-        .grouped(8).map(_.zipWithIndex.collect { case (true, t) => 1L << t }.sum)
-        .toSeq)
-    assert(row.getString(7) == "caf\u00e9")
-    // arity errors surface at analysis, like built-ins
-    intercept[Exception](spark.sql("SELECT token_id('a', 'b')").head())
   }
 }

@@ -320,48 +320,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(TextAnalysis.lmCachedDirs(spark) == Set(sf0001))
   }
 
-  test("optimizer rule moves a doc-level hash below the generator, same rows") {
-    import org.apache.spark.sql.catalyst.plans.logical.Generate
-    def trap = Tables.documents(spark, sf0001).select(
-      (graft.functions.Portable.tokenId(col("text")) % 100L).as("bucket"),
-      explode(graft.functions.Portable.tokenize(col("text"))).as("word"))
-    def hasTokenIdBelowGenerate(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-      plan.collect { case g: Generate => g.child }.exists(
-        _.expressions.exists(_.exists(_.isInstanceOf[graft.plans.TokenId])))
-    val baseline = trap.collect().toSeq
-    assert(!hasTokenIdBelowGenerate(trap.queryExecution.optimizedPlan),
-      "without the rule the hash is carried above the generator (the measured 5x trap)")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev :+ graft.plans.PushExpensiveProjectionsBelowGenerate
-    try {
-      assert(hasTokenIdBelowGenerate(trap.queryExecution.optimizedPlan),
-        s"the rule must compute the hash once per document, below the Generate:\n${trap.queryExecution.optimizedPlan}")
-      assert(trap.collect().toSeq == baseline, "the rewrite must not change a single row")
-    } finally spark.experimental.extraOptimizations = prev
-  }
-
-  test("optimizer rule leaves cheap projections alone") {
-    // over-firing would be its own regression: pushing trivial
-    // arithmetic below the Generate adds a carried column to every
-    // generated row for no savings
-    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Project}
-    val cheap = Tables.documents(spark, sf0001).select(
-      (col("doc_id") + 1L).as("next_id"),
-      explode(split(col("text"), " ")).as("word"))
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev :+ graft.plans.PushExpensiveProjectionsBelowGenerate
-    try {
-      import org.apache.spark.sql.catalyst.expressions.AttributeReference
-      val below = cheap.queryExecution.optimizedPlan
-        .collect { case g: Generate => g.child }
-        .collect { case p: Project => p }
-      assert(below.forall(_.projectList.forall(_.isInstanceOf[AttributeReference])),
-        "cheap arithmetic must stay above the generator")
-    } finally spark.experimental.extraOptimizations = prev
-  }
-
   test("q224 nprobe sweep: corpus side only ever joins broadcast probe frames") {
     // the sweep's big side (assigned members) must stream past
     // BROADCAST probe/centroid/size frames; a SortMergeJoin anywhere
@@ -1162,91 +1120,10 @@ class ScaleSpec extends AnyFunSuite {
     assert(q268 == want)
   }
 
-  test("a pinned reader's generation survives a retrain; release + recover sweeps it") {
-    // the last documented reader race, closed: a lease on the resolved
-    // generation defers the retrain's retire, the deferred tree stays
-    // bit-readable from the pinned root, and the next maintenance
-    // open's recover sweeps it once the lease is released or expires
-    import graft.operators.{KMeans, Quantize}
-    import graft.sources.IvfStore
-    val e = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cents = KMeans.fit(e)
-    val cb = Quantize.pqCodebook(e)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-lease").toString
-    IvfStore.write(Quantize.IvfAdcIndex(
-      cents,
-      KMeans.assign(e, cents).select(col("vec_id").as("n_id"), col("cluster")),
-      Quantize.pqCodesWith(cb, e)
-        .select(col("vec_id").as("n_id"), col("sub"), col("code")),
-      cb, e), path)
-    def f(n: String) = new java.io.File(s"$path/$n")
-    val q = e.filter(col("vec_id") < KMeans.EvalBlock)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    // --- flat pin: the never-retrained layout survives its first retrain
-    val flatLease = IvfStore.pin(spark, path)
-    assert(flatLease.genKey == "flat" && flatLease.root == path)
-    val gen1 = IvfStore.retrain(spark, path)
-    assert(f("lists").isDirectory && f("cents").isDirectory,
-      "flat tree must be deferred, not retired, while its lease is fresh")
-    IvfStore.release(spark, flatLease)
-    // --- generation pin across a retrain
-    val lease = IvfStore.pin(spark, path)
-    assert(lease.genKey == gen1 && lease.root == s"$path/$gen1")
-    val want = IvfStore.servedTop10(spark, lease.root, q)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-    val gen2 = IvfStore.retrain(spark, path)
-    assert(gen2 != gen1)
-    assert(f(gen1).isDirectory,
-      "retrain must defer the retire of a freshly leased generation")
-    assert(!f("lists").exists(),
-      "the RELEASED flat tree must be swept by retrain's recover pass")
-    // the pinned root still serves the exact pre-swap answer
-    val got = IvfStore.servedTop10(spark, lease.root, q)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-    assert(got == want, "pinned generation must stay bit-readable across a retrain")
-    // recover respects the fresh lease too
-    IvfStore.recover(spark, path)
-    assert(f(gen1).isDirectory, "recover must not sweep a freshly leased tree")
-    // release → the next maintenance sweep retires the deferred tree
-    IvfStore.release(spark, lease)
-    IvfStore.recover(spark, path)
-    assert(!f(gen1).exists(),
-      "recover must sweep a deferred tree once its lease is released")
-    assert(!f(s"_leases/$gen1").exists(), "empty lease dir must be pruned")
-    // renew on a swept lease loud-fails instead of silently serving garbage
-    intercept[IllegalStateException](IvfStore.renew(spark, lease))
-    // an EXPIRED lease (reader died without release) is swept the same
-    // way: backdate a fresh lease past the TTL, recover sweeps tree + lease
-    val lease2 = IvfStore.pin(spark, path)
-    assert(lease2.genKey == gen2)
-    val gen3 = IvfStore.retrain(spark, path)
-    assert(f(gen2).isDirectory)
-    assert(new java.io.File(lease2.leaseFile.toUri.getPath)
-      .setLastModified(System.currentTimeMillis() - IvfStore.LeaseTtlMs - 60000))
-    IvfStore.recover(spark, path)
-    assert(!f(gen2).exists(),
-      "recover must sweep a tree whose only lease expired")
-    // renew keeps a long scan alive: fresh lease on gen3, backdate, renew,
-    // and the tree survives the sweep
-    val lease3 = IvfStore.pin(spark, path)
-    assert(lease3.genKey == gen3)
-    IvfStore.retrain(spark, path)
-    assert(new java.io.File(lease3.leaseFile.toUri.getPath)
-      .setLastModified(System.currentTimeMillis() - IvfStore.LeaseTtlMs - 60000))
-    IvfStore.renew(spark, lease3)
-    IvfStore.recover(spark, path)
-    assert(f(gen3).isDirectory, "a renewed lease must keep its tree pinned")
-    IvfStore.release(spark, lease3)
-  }
-
-  test("compaction honors reader leases; a clean refusal releases the lock, a failure leaves it") {
-    // compact rewrites the LIVE tree's cells in place — unlike retrain
-    // there is no old generation to defer, so the lease machinery must
-    // gate compaction itself: explicit compact refuses (and, having
-    // mutated nothing, releases the maintenance lock) while commits
-    // still land, and a REAL mid-maintenance failure leaves the lock so
-    // commits keep loud-failing until a maintenance open completes
+  test("compaction releases the maintenance lock; a failed retrain leaves it") {
+    // a completed compact releases the lock it held; a REAL
+    // mid-maintenance failure leaves it, so commits keep loud-failing
+    // until a maintenance open completes
     import graft.operators.{KMeans, Quantize}
     import graft.sources.IvfStore
     import spark.implicits._
@@ -1261,22 +1138,12 @@ class ScaleSpec extends AnyFunSuite {
       Quantize.pqCodesWith(cb, e)
         .select(col("vec_id").as("n_id"), col("sub"), col("code")),
       cb, e), path)
-    val lease = IvfStore.pin(spark, path)
-    // explicit compact: refuse + release the lock
-    val ex = intercept[IllegalStateException](
-      IvfStore.compact(spark, path, maxFilesPerCell = 1))
-    assert(ex.getMessage.contains("lease"), s"refusal must name the lease: ${ex.getMessage}")
-    assert(!new java.io.File(s"$path/_maint.lock").exists(),
-      "a clean refusal must release the maintenance lock")
-    // a commit still lands on the leased tree
     val arrivals = e.limit(2).collect()
       .map(r => (r.getLong(0) + 500000L, r.getSeq[Double](1))).toSeq
     IvfStore.commitBatch(spark, path, arrivals.toDF("vec_id", "v"), "ingest-cl", 0L)
     assert(spark.read.parquet(s"$path/lists")
-      .filter(col("n_id") >= 500000L).count() == 2,
-      "a commit must land while the tree is leased")
-    IvfStore.release(spark, lease)
-    // released → compaction proceeds and hits the bound
+      .filter(col("n_id") >= 500000L).count() == 2, "the commit must land")
+    // compaction hits the bound and releases the lock
     val done = IvfStore.compact(spark, path, maxFilesPerCell = 1)
     assert(done.nonEmpty && !new java.io.File(s"$path/_maint.lock").exists())
     // a REAL maintenance failure (corrupted posting file blows up the
@@ -1290,9 +1157,9 @@ class ScaleSpec extends AnyFunSuite {
     intercept[Throwable](IvfStore.retrain(spark, path))
     assert(new java.io.File(s"$path/_maint.lock").exists(),
       "a mid-maintenance failure must leave the lock in place")
-    val ex2 = intercept[IllegalStateException](
+    val ex = intercept[IllegalStateException](
       IvfStore.commitBatch(spark, path, arrivals.toDF("vec_id", "v"), "ingest-cl", 1L))
-    assert(ex2.getMessage.contains("maintenance"),
+    assert(ex.getMessage.contains("maintenance"),
       "commits must keep refusing while the failed maintenance's lock stands")
     java.nio.file.Files.write(victim.toPath, saved)
     IvfStore.retrain(spark, path) // completes → releases

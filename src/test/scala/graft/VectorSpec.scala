@@ -40,7 +40,7 @@ class VectorSpec extends AnyFunSuite {
       (Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0)),
       (Array(1.0, 2.0, 3.0), Array(0.0, 0.0, 0.0)),
     ).toDF("a", "b")
-    val got = df.select(VectorOps.cosine(col("a"), col("b"))).collect().map(r =>
+    val got = df.select(HofSpecs.cosine(col("a"), col("b"))).collect().map(r =>
       if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     assert(math.abs(got(0).get - 1.0) < 1e-12)
     assert(math.abs(got(1).get + 1.0) < 1e-12)
@@ -54,7 +54,7 @@ class VectorSpec extends AnyFunSuite {
     val df = rows.toDF("a", "b")
     val got = df.select(
       graft.plans.CosineSim.cosine(col("a"), col("b")).as("fused"),
-      VectorOps.cosine(col("a"), col("b")).as("hof")).collect()
+      HofSpecs.cosine(col("a"), col("b")).as("hof")).collect()
     got.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
     // interpreted (non-codegen) path too
     val one = rows.head
@@ -77,7 +77,7 @@ class VectorSpec extends AnyFunSuite {
     val a = Array(1.5, -2.0, 0.25)
     val b = Array(4.0, 1.0, -8.0)
     val got = Seq((a, b)).toDF("a", "b")
-      .select(VectorOps.dot(col("a"), col("b")), VectorOps.l2Norm(col("a")))
+      .select(HofSpecs.dot(col("a"), col("b")), VectorOps.l2Norm(col("a")))
       .as[(Double, Double)].head()
     assert(math.abs(got._1 - a.zip(b).map { case (x, y) => x * y }.sum) < 1e-12)
     assert(math.abs(got._2 - math.sqrt(a.map(x => x * x).sum)) < 1e-12)
